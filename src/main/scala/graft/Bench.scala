@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Throughput surface: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query
   * wall-times. Queries are materialized through the `noop` sink —
@@ -273,7 +271,7 @@ object Bench {
     // pre-round-6 rows above were re-stamped in place, and the 42
     // round-9/10 entries below (which had NO row, so the flag rule
     // never saw them) frozen for the first time — all as fresh-JVM
-    // quiet-box medians of >=3 (tools/refreeze_r11.sh; canary
+    // quiet-box medians of >=3 (the round-11 refreeze script; canary
     // bracketed 2.77/2.47/2.21/2.48/2.24 vs frozen 1.761 = 1.26-1.57x
     // degraded-stable basis, so these are upper bounds; evidence in
     // BASELINE.md "Round-11 re-freeze").
@@ -408,16 +406,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warm-up: JIT + codegen infrastructure + parquet reader +
     // noop sink init. Without it the first timed query absorbs ~6s of

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 import graft.sources.Tables
 
@@ -31,24 +30,17 @@ import graft.sources.Tables
   * may deliver an earlier touch.
   */
 final class AttributionState(stateDir: String, lookback: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def ltPrior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "user_id BIGINT, ts TIMESTAMP, event_id BIGINT, event_type STRING"))
-    else spark.read.parquet(s"$stateDir/v$version/lt")
+  private def ltPrior(spark: SparkSession): DataFrame = state.prior(spark,
+    "user_id BIGINT, ts TIMESTAMP, event_id BIGINT, event_type STRING", "lt")
 
-  private def accPrior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "touch_type STRING, n_conversions BIGINT, cents BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version/acc")
+  private def accPrior(spark: SparkSession): DataFrame = state.prior(spark,
+    "touch_type STRING, n_conversions BIGINT, cents BIGINT", "acc")
 
   /** foreachBatch body; exactly-once under replay via the
     * batchId <= version guard. */
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
 
     // prior per-user touch as a pseudo event: value never read (it is
@@ -94,11 +86,8 @@ final class AttributionState(stateDir: String, lookback: String) {
     // Independent sub-store writes overlap (guide §2.6); the version
     // bump still happens only after both have committed.
     StreamUtil.inParallel(
-      () => StreamUtil.writeSharded(lt, s"$stateDir/v$batchId/lt", Seq("user_id")),
-      () => StreamUtil.writeGrid(acc, s"$stateDir/v$batchId/acc"))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+      () => StreamUtil.writeSharded(lt, state.at(batchId, "lt"), Seq("user_id")),
+      () => StreamUtil.writeGrid(acc, state.at(batchId, "acc")))
   }
 
   /** The attribution report over the accumulated state — same shape
@@ -144,22 +133,15 @@ object AttributionStream {
   * event-time-ordered replay like [[FunnelStream]]/[[AttributionState]].
   */
 final class MarkovAttrState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def priorCounts(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "prev STRING, curr STRING, n BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version/counts")
+  private def priorCounts(spark: SparkSession): DataFrame = state.prior(spark,
+    "prev STRING, curr STRING, n BIGINT", "counts")
 
-  private def priorFrontier(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "user_id BIGINT, last_st STRING, converted BOOLEAN"))
-    else spark.read.parquet(s"$stateDir/v$version/frontier")
+  private def priorFrontier(spark: SparkSession): DataFrame = state.prior(spark,
+    "user_id BIGINT, last_st STRING, converted BOOLEAN", "frontier")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val fr = priorFrontier(spark)
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
@@ -195,11 +177,8 @@ final class MarkovAttrState(stateDir: String) {
       .select(col("user_id"), col("last_st"),
         coalesce(col("converted"), lit(false)).as("converted"))
     StreamUtil.inParallel(
-      () => StreamUtil.writeGrid(counts, s"$stateDir/v$batchId/counts"),
-      () => StreamUtil.writeSharded(frontier, s"$stateDir/v$batchId/frontier", Seq("user_id")))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+      () => StreamUtil.writeGrid(counts, state.at(batchId, "counts")),
+      () => StreamUtil.writeSharded(frontier, state.at(batchId, "frontier"), Seq("user_id")))
   }
 
   /** Read face: counts ∪ the frontier's derived NULL terminals →

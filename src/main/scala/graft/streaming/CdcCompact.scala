@@ -40,11 +40,11 @@ final class CdcCompact(stateDir: String, extraCols: Seq[String] = Nil) {
   /** Recovered on construction so a restarted job (new instance, same
     * state dir + checkpoint) continues from the last committed
     * version instead of silently dropping prior state. */
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
   /** The last fully-committed batch id — the recovery-derived
     * high-water mark [[JdbcCdcPoll]] resumes its tail from. */
-  private[graft] def committedVersion: Long = version
+  private[graft] def committedVersion: Long = state.version
 
   private val outCols =
     (Seq("user_id", "event_id", "ts", "event_type", "value") ++ extraCols).map(col)
@@ -56,29 +56,26 @@ final class CdcCompact(stateDir: String, extraCols: Seq[String] = Nil) {
       .select(outCols: _*)
   }
 
-  /** foreachBatch body. Exactly-once under replay: if `batchId` is at
-    * or below the recovered version, `v$batchId` already exists on
-    * disk — that batch was fully merged before the crash, so it is
-    * skipped (re-merging would also have Spark read and overwrite the
-    * same `v$batchId` path in one job, which fails). Same guard as
-    * [[EngagementStream.LeaderboardState.merge]]. */
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  /** foreachBatch body. Exactly-once under replay: a `batchId` at or
+    * below the committed version was fully merged before the crash,
+    * so [[StreamUtil.VersionedState.commit]] skips it (re-merging
+    * would also have Spark read and overwrite the same `v$batchId`
+    * path in one job, which fails); a batch whose write was cut off
+    * left no commit marker, so recovery discarded it and it merges
+    * again. */
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val incoming = batch.select(outCols: _*)
     val merged =
-      if (version < 0) latestPerKey(incoming)
-      else latestPerKey(spark.read.parquet(s"$stateDir/v$version").unionByName(incoming))
-    merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+      if (state.version < 0) latestPerKey(incoming)
+      else latestPerKey(spark.read.parquet(state.at(state.version)).unionByName(incoming))
+    merged.write.mode("overwrite").parquet(state.at(batchId))
   }
 
   /** The compacted table at the current version — latest row per key
     * INCLUDING tombstones (the physical state). */
   def table(spark: SparkSession): DataFrame =
-    spark.read.parquet(s"$stateDir/v$version")
+    spark.read.parquet(state.at(state.version))
 
   /** The live view: keys whose latest row is a delete are dropped,
     * and the `op` bookkeeping column is hidden. Equals [[table]] when
@@ -220,7 +217,7 @@ object CdcCompact {
   * Long sign bit.
   */
 final class CdcCompactDrift(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
   private def latestPerKey(df: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts").desc, col("event_id").desc)
@@ -231,31 +228,29 @@ final class CdcCompactDrift(stateDir: String) {
 
   def merge(epoch: Long)(batch: Dataset[Row], batchId: Long): Unit = {
     val v = (epoch << 40) | batchId
-    if (v <= version) return
-    val spark = batch.sparkSession
-    val incoming = batch.toDF()
-    val merged =
-      if (version < 0) latestPerKey(incoming)
-      else {
-        val prior = spark.read.option("mergeSchema", "true")
-          .parquet(s"$stateDir/v$version")
-        val allFields = prior.schema.fields ++
-          incoming.schema.fields.filterNot(f => prior.columns.contains(f.name))
-        def align(df: DataFrame): DataFrame =
-          df.select(allFields.toSeq.map { f =>
-            if (df.columns.contains(f.name)) col(f.name)
-            else lit(null).cast(f.dataType).as(f.name)
-          }: _*)
-        latestPerKey(align(prior).unionByName(align(incoming)))
-      }
-    StreamUtil.writeSharded(merged, s"$stateDir/v$v", Seq("user_id"))
-    val prev = version
-    version = v
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    state.commit(v) {
+      val spark = batch.sparkSession
+      val incoming = batch.toDF()
+      val merged =
+        if (state.version < 0) latestPerKey(incoming)
+        else {
+          val prior = spark.read.option("mergeSchema", "true")
+            .parquet(state.at(state.version))
+          val allFields = prior.schema.fields ++
+            incoming.schema.fields.filterNot(f => prior.columns.contains(f.name))
+          def align(df: DataFrame): DataFrame =
+            df.select(allFields.toSeq.map { f =>
+              if (df.columns.contains(f.name)) col(f.name)
+              else lit(null).cast(f.dataType).as(f.name)
+            }: _*)
+          latestPerKey(align(prior).unionByName(align(incoming)))
+        }
+      StreamUtil.writeSharded(merged, state.at(v), Seq("user_id"))
+    }
   }
 
   def table(spark: SparkSession): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(s"$stateDir/v$version")
+    spark.read.option("mergeSchema", "true").parquet(state.at(state.version))
 }
 
 /** Versioned-parquet SCD2 dimension state: `merge` IS the batch
@@ -264,25 +259,17 @@ final class CdcCompactDrift(stateDir: String) {
   * parity by the strongest form of shared code (the stream twin has
   * NO derivation of its own). Replay-guarded like [[CdcCompact]]. */
 final class Scd2State(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](),
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "user_id BIGINT, version BIGINT, state STRING, " +
-          "valid_from TIMESTAMP, valid_to TIMESTAMP, is_current BOOLEAN"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "user_id BIGINT, version BIGINT, state STRING, " +
+    "valid_from TIMESTAMP, valid_to TIMESTAMP, is_current BOOLEAN")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val next = graft.operators.Engagement.scd2ApplyTransform(
       prior(spark), batch.toDF())
-    StreamUtil.writeSharded(next, s"$stateDir/v$batchId", Seq("user_id"))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeSharded(next, state.at(batchId), Seq("user_id"))
   }
 
   def table(spark: SparkSession): DataFrame =

@@ -26,11 +26,11 @@ import graft.operators.{Dedup, TextOps}
   * signatures + index probe + Jaccard verify) IS incremental; the
   * election is pair-graph-sized, not corpus-sized.
   *
-  * State (DELTA-APPEND parquet, [[StreamUtil.writeDelta]] — these
-  * tables grow with the CORPUS, so the versioned-rewrite layout the
-  * grid states use would re-write the whole index every batch,
-  * quadratic write volume over the stream's lifetime; each batch
-  * appends only its own partial):
+  * State (the DELTA-APPEND layout of [[StreamUtil.VersionedState]] —
+  * these tables grow with the CORPUS, so the versioned-rewrite
+  * layout the grid states use would re-write the whole index every
+  * batch, quadratic write volume over the stream's lifetime; each
+  * batch appends only its own partial):
   *  - `bands` (doc_id, band, band_hash): the LSH index, equi-join
   *    probed by each batch — 32 short rows per doc;
   *  - `sets`  (doc_id, sh): shingle sets for exact verification of
@@ -38,10 +38,7 @@ import graft.operators.{Dedup, TextOps}
   *  - `pairs` (doc_a, doc_b): the verified near-dup graph — each
   *    pair surfaces in exactly one batch (its later endpoint's), so
   *    deltas never duplicate;
-  *  - `meta`  (doc_id, pred_lang, quality): the stateless verdicts —
-  *    written LAST as the commit guard (a crashed batch's other
-  *    deltas stay invisible behind the `batch <= guard` read filter
-  *    and are overwritten on replay).
+  *  - `meta`  (doc_id, pred_lang, quality): the stateless verdicts.
   *
   * Scale: per batch the seen index is only equi-joined on
   * (band, band_hash) — queried, never self-joined; the union of
@@ -51,10 +48,11 @@ import graft.operators.{Dedup, TextOps}
   * operator row-for-row and shares its oracle.
   */
 final class CorpusFilterState(stateDir: String, threshold: Double) {
-  @volatile private var version: Long = StreamUtil.latestDelta(s"$stateDir/meta")
+  private val state = new StreamUtil.VersionedState(stateDir,
+    Seq("bands", "sets", "pairs", "meta"))
 
   private def part(spark: SparkSession, name: String, ddl: String): DataFrame =
-    StreamUtil.readDeltas(spark, s"$stateDir/$name", ddl, version)
+    state.prior(spark, ddl, name)
 
   private def bands(spark: SparkSession) =
     part(spark, "bands", "doc_id BIGINT, band INT, band_hash BIGINT")
@@ -65,8 +63,7 @@ final class CorpusFilterState(stateDir: String, threshold: Double) {
   private def meta(spark: SparkSession) =
     part(spark, "meta", "doc_id BIGINT, pred_lang STRING, quality DOUBLE")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val docs = batch.toDF()
     // Write the batch's signature deltas FIRST, then probe from the
@@ -74,26 +71,24 @@ final class CorpusFilterState(stateDir: String, threshold: Double) {
     // twice and the batch sets twice, so probing the in-flight plan
     // recomputed the minhash/shingle kernel per reference (the
     // sigTable materialization lesson). Prior-state reads still
-    // filter batch <= version (pre-update), so the new deltas stay
-    // invisible to this batch's seen-side; write order (bands, sets,
-    // pairs, meta-guard last) is unchanged, so crash replay is too.
+    // filter batch <= version (pre-commit), so the new deltas stay
+    // invisible to this batch's seen-side.
     val (batchBands, batchSets) = Dedup.batchSignatures(docs)
     // bands ∥ sets: independent jobs over the same rebalanced batch
     // scan (each evaluates its own kernel either way — overlapping
     // them trades idle job-tail time, not extra work; guide §2.6).
     StreamUtil.inParallel(
-      () => StreamUtil.writeDelta(batchBands, s"$stateDir/bands", batchId, Seq("doc_id")),
-      () => StreamUtil.writeDelta(batchSets, s"$stateDir/sets", batchId, Seq("doc_id")))
+      () => StreamUtil.writeSharded(batchBands, state.at(batchId, "bands"), Seq("doc_id")),
+      () => StreamUtil.writeSharded(batchSets, state.at(batchId, "sets"), Seq("doc_id")))
     val newPairs = Dedup.incrementalPairsFrom(
-      StreamUtil.readDeltaAt(spark, s"$stateDir/bands",
-        "doc_id BIGINT, band INT, band_hash BIGINT", batchId),
-      StreamUtil.readDeltaAt(spark, s"$stateDir/sets",
-        "doc_id BIGINT, sh ARRAY<STRING>", batchId),
+      StreamUtil.readDeltaAt(spark, state.at(batchId, "bands"),
+        "doc_id BIGINT, band INT, band_hash BIGINT"),
+      StreamUtil.readDeltaAt(spark, state.at(batchId, "sets"),
+        "doc_id BIGINT, sh ARRAY<STRING>"),
       bands(spark), sets(spark), threshold)
-    StreamUtil.writeDelta(newPairs, s"$stateDir/pairs", batchId, Seq("doc_a"))
-    StreamUtil.writeDelta(TextOps.langQualityTransform(docs),
-      s"$stateDir/meta", batchId, Seq("doc_id"))
-    version = batchId
+    StreamUtil.writeSharded(newPairs, state.at(batchId, "pairs"), Seq("doc_a"))
+    StreamUtil.writeSharded(TextOps.langQualityTransform(docs),
+      state.at(batchId, "meta"), Seq("doc_id"))
   }
 
   /** The election + keep/drop report over the drained state. The
@@ -103,7 +98,7 @@ final class CorpusFilterState(stateDir: String, threshold: Double) {
     * like every other memoized table. */
   def report(spark: SparkSession, minQuality: Double, langs: Seq[String]): DataFrame = {
     val labels = CorpusFilterStream.labelsCache
-      .getOrElseUpdate((spark, stateDir, version)) {
+      .getOrElseUpdate((spark, stateDir, state.version)) {
         Dedup.propagateMinLabels(spark,
           pairs(spark), maxIters = 20, who = "streamCorpusFilter")
       }
@@ -123,9 +118,7 @@ final class CorpusFilterState(stateDir: String, threshold: Double) {
   * discipline ([[CdcCompact]] 10a' semantics, the
   * [[HybridTombstoneState]] shape) applied to the ingest gate: 'u'
   * rows run the normal incremental screen; 'd' rows delta-append the
-  * doc_id to a fifth, tombstone store (written BEFORE meta, which
-  * stays the commit guard — every store lands before the guard, so a
-  * crash anywhere replays the whole batch). Serving masks the
+  * doc_id to a fifth, tombstone store. Serving masks the
   * verdict table (meta anti-join tomb) and the pair graph (BOTH
   * endpoints must be live) before the representative election.
   *
@@ -145,42 +138,38 @@ final class CorpusFilterState(stateDir: String, threshold: Double) {
   * are then masked at report; wasted probe work bounded by the
   * retraction rate, correctness unaffected. */
 final class CorpusFilterTombstoneState(stateDir: String, threshold: Double) {
-  StreamUtil.recoverCompaction(stateDir, CorpusFilterTombstoneState.storeNames)
-  @volatile private var version: Long = StreamUtil.latestDelta(s"$stateDir/meta")
+  private val state = new StreamUtil.VersionedState(stateDir,
+    CorpusFilterTombstoneState.storeNames)
 
   private def part(spark: SparkSession, name: String, ddl: String): DataFrame =
-    StreamUtil.readDeltas(spark, s"$stateDir/$name", ddl, version)
+    state.prior(spark, ddl, name)
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val docs = batch.toDF()
     val ups = docs.filter(col("op") === "u").drop("op")
     // Same write-first/probe-from-parquet restructure as
-    // [[CorpusFilterState.merge]]; write order (bands, sets, pairs,
-    // tomb, meta-guard last) unchanged.
+    // [[CorpusFilterState.merge]].
     val (batchBands, batchSets) = Dedup.batchSignatures(ups)
     // Same §2.6 overlap as the append-only face: bands ∥ sets, then
-    // pairs ∥ tomb (independent of each other); the meta GUARD stays
-    // strictly after every other store has committed.
+    // pairs ∥ tomb (independent of each other), then meta.
     StreamUtil.inParallel(
-      () => StreamUtil.writeDelta(batchBands, s"$stateDir/bands", batchId, Seq("doc_id")),
-      () => StreamUtil.writeDelta(batchSets, s"$stateDir/sets", batchId, Seq("doc_id")))
+      () => StreamUtil.writeSharded(batchBands, state.at(batchId, "bands"), Seq("doc_id")),
+      () => StreamUtil.writeSharded(batchSets, state.at(batchId, "sets"), Seq("doc_id")))
     val newPairs = Dedup.incrementalPairsFrom(
-      StreamUtil.readDeltaAt(spark, s"$stateDir/bands",
-        "doc_id BIGINT, band INT, band_hash BIGINT", batchId),
-      StreamUtil.readDeltaAt(spark, s"$stateDir/sets",
-        "doc_id BIGINT, sh ARRAY<STRING>", batchId),
+      StreamUtil.readDeltaAt(spark, state.at(batchId, "bands"),
+        "doc_id BIGINT, band INT, band_hash BIGINT"),
+      StreamUtil.readDeltaAt(spark, state.at(batchId, "sets"),
+        "doc_id BIGINT, sh ARRAY<STRING>"),
       part(spark, "bands", "doc_id BIGINT, band INT, band_hash BIGINT"),
       part(spark, "sets", "doc_id BIGINT, sh ARRAY<STRING>"), threshold)
     StreamUtil.inParallel(
-      () => StreamUtil.writeDelta(newPairs, s"$stateDir/pairs", batchId, Seq("doc_a")),
-      () => StreamUtil.writeDelta(
+      () => StreamUtil.writeSharded(newPairs, state.at(batchId, "pairs"), Seq("doc_a")),
+      () => StreamUtil.writeSharded(
         docs.filter(col("op") === "d").select(col("doc_id")).distinct(),
-        s"$stateDir/tomb", batchId, Seq("doc_id")))
-    StreamUtil.writeDelta(TextOps.langQualityTransform(ups),
-      s"$stateDir/meta", batchId, Seq("doc_id"))
-    version = batchId
+        state.at(batchId, "tomb"), Seq("doc_id")))
+    StreamUtil.writeSharded(TextOps.langQualityTransform(ups),
+      state.at(batchId, "meta"), Seq("doc_id"))
   }
 
   def report(spark: SparkSession, minQuality: Double, langs: Seq[String]): DataFrame = {
@@ -189,7 +178,7 @@ final class CorpusFilterTombstoneState(stateDir: String, threshold: Double) {
       .join(tomb.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"), "left_anti")
       .join(tomb.withColumnRenamed("doc_id", "doc_b"), Seq("doc_b"), "left_anti")
     val labels = CorpusFilterStream.labelsCache
-      .getOrElseUpdate((spark, stateDir, version)) {
+      .getOrElseUpdate((spark, stateDir, state.version)) {
         Dedup.propagateMinLabels(spark, livePairs,
           maxIters = 20, who = "streamCorpusFilterTombstone")
       }
@@ -209,7 +198,7 @@ final class CorpusFilterTombstoneState(stateDir: String, threshold: Double) {
     * round-12 verdict promise): every store minus the tombstoned docs
     * becomes ONE delta at the current version boundary, the tombstone
     * store truncates to an empty delta, and the swap commits through
-    * [[StreamUtil.compactDeltas]]'s marker protocol (crash before the
+    * [[StreamUtil.VersionedState.compact]]'s marker protocol (crash before the
     * marker leaves live state untouched; after it, the next
     * construction redoes the install idempotently). The masks below
     * are exactly [[report]]'s own serving masks — bands/sets/meta
@@ -224,7 +213,7 @@ final class CorpusFilterTombstoneState(stateDir: String, threshold: Double) {
     * retention. Compact at boundaries where retractions are known to
     * precede any re-ingest of the same key. */
   def compact(spark: SparkSession): Unit =
-    StreamUtil.compactDeltas(stateDir, version, compactionStores(spark))
+    state.compact(compactionStores(spark))
 
   private[graft] def compactionStores(
       spark: SparkSession): Seq[(String, DataFrame, Seq[String])] = {

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.operators.{Engagement, Router}
 import graft.sources.Tables
@@ -208,32 +209,22 @@ object EngagementStream {
     * aggregated scoreboard is rewritten per batch — the raw stream is
     * never re-read. */
   final class LeaderboardState(stateDir: String) {
-    /** Recovered on construction (same pattern as [[CdcCompact]]) so
-      * a restarted job keeps its cumulative scores. NOTE unlike the
-      * latest-per-key MERGE, a cumulative sum is NOT idempotent under
-      * batch replay — a production deployment stores the batchId
-      * high-water mark with the scoreboard (as done here via the
-      * version suffix) and skips batches already folded in. */
-    @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+    /** A cumulative sum is NOT idempotent under batch replay, so the
+      * committed version doubles as the batchId high-water mark that
+      * makes `merge` effectively-once across restarts
+      * ([[StreamUtil.VersionedState]]). */
+    private val state = new StreamUtil.VersionedState(stateDir)
 
-    /** Skip batches at or below the recovered high-water mark (the
-      * replayed-batch guard that makes `merge` effectively-once). */
-    private def alreadyMerged(batchId: Long): Boolean = batchId <= version
-
-    def merge(batchEvents: DataFrame, batchId: Long): Unit = {
-      if (alreadyMerged(batchId)) return
+    def merge(batchEvents: DataFrame, batchId: Long): Unit = state.commit(batchId) {
       val spark = batchEvents.sparkSession
       val partial = batchEvents.groupBy(col("user_id"))
         .agg(sum(col("value")).as("raw_score"), count("*").as("n_events"))
       val merged =
-        if (version < 0) partial
-        else spark.read.parquet(s"$stateDir/v$version").unionByName(partial)
+        if (state.version < 0) partial
+        else spark.read.parquet(state.at(state.version)).unionByName(partial)
           .groupBy(col("user_id"))
           .agg(sum(col("raw_score")).as("raw_score"), sum(col("n_events")).as("n_events"))
-      merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-      val prev = version
-      version = batchId
-      if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+      merged.write.mode("overwrite").parquet(state.at(batchId))
     }
 
     /** Top-N view over the current scoreboard — same shape as the
@@ -242,7 +233,7 @@ object EngagementStream {
       // rank-after-limit via the window-free array-rank projection
       // (see Engagement.rankTopN) — no global-window WARN.
       Engagement.rankTopN(
-        spark.read.parquet(s"$stateDir/v$version")
+        spark.read.parquet(state.at(state.version))
           .orderBy(col("raw_score").desc, col("user_id"))
           .limit(n))
   }
@@ -305,18 +296,17 @@ private[graft] object StreamUtil {
 
   /** Run INDEPENDENT Spark actions concurrently from driver threads
     * (optimization guide §2.6 "overlap independent jobs"): a state
-    * that writes several delta stores per batch used to submit each
-    * write job sequentially, so every job's tail (last task + commit
-    * + planning of the next) left the executor idle. The actions
-    * here are only grouped when no ordering constraint exists
-    * between them — commit-guard stores are still written strictly
-    * AFTER this returns, and an exception in any action propagates
-    * before the caller can reach its guard write, so crash/replay
-    * semantics are unchanged (partially-committed non-guard deltas
-    * are invisible behind the guard filter and idempotently
-    * overwritten on replay). Fresh threads per call: Spark's
-    * job-local properties are InheritableThreadLocal, so each action
-    * keeps the calling (micro-batch) thread's description/pool. */
+    * that writes several stores per batch used to submit each write
+    * job sequentially, so every job's tail (last task + commit +
+    * planning of the next) left the executor idle. The actions here
+    * are only grouped when no ordering constraint exists between
+    * them. Crash/replay semantics are unchanged: an exception in any
+    * action propagates out of the [[VersionedState.commit]] body, so
+    * the batch's commit markers are never created and recovery
+    * discards whatever subset of stores had landed. Fresh threads per
+    * call: Spark's job-local properties are InheritableThreadLocal,
+    * so each action keeps the calling (micro-batch) thread's
+    * description/pool. */
   def inParallel(actions: (() => Unit)*): Unit =
     if (actions.sizeIs <= 1) actions.foreach(_())
     else {
@@ -328,13 +318,6 @@ private[graft] object StreamUtil {
       if (!errs.isEmpty) throw errs.peek()
     }
 
-  def delete(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-    ()
-  }
-
   /** Hadoop conf for state-dir I/O that runs OUTSIDE a foreachBatch
     * (version recovery at construction): the session's conf when one
     * is live — carrying its object-store credentials/settings — else
@@ -344,21 +327,11 @@ private[graft] object StreamUtil {
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new org.apache.hadoop.conf.Configuration())
 
-  /** Latest committed state version: the highest `v<batchId>`
-    * directory under `stateDir`, or -1 when none. Listed through the
-    * Hadoop FileSystem API — the delete path above already was — so
-    * state dirs work on any supported store (HDFS, S3A, local), not
-    * just `java.io.File`'s local view. */
-  def latestVersion(stateDir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = p.getFileSystem(hadoopConf)
-    if (!fs.exists(p)) -1L
-    else fs.listStatus(p).iterator
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .collect { case s if s.matches("v\\d+") => s.drop(1).toLong }
-      .foldLeft(-1L)(math.max)
-  }
+  /** State dirs go through the Hadoop FileSystem API, so they work on
+    * any supported store (HDFS, S3A, local), not just
+    * `java.io.File`'s local view. */
+  private def fs(dir: String): org.apache.hadoop.fs.FileSystem =
+    new org.apache.hadoop.fs.Path(dir).getFileSystem(hadoopConf)
 
   /** Versioned-state writers — one per state CLASS (round-9: the
     * round-8 verdict flagged 48 `coalesce(1)` state writes as a
@@ -390,129 +363,200 @@ private[graft] object StreamUtil {
   def writeGrid(df: DataFrame, path: String): Unit =
     df.coalesce(1).write.mode("overwrite").parquet(path)
 
-  /** Delta-append layout for CORPUS-scale accumulations (an ingest
-    * index, per-document verdicts): the versioned-rewrite layout
-    * above re-writes the WHOLE accumulated table every micro-batch —
-    * fine for grid/entity states whose size plateaus, QUADRATIC
-    * write volume over the stream's lifetime for a state that grows
-    * with the corpus. Here each batch appends only its own partial
-    * under a `batch=<id>` partition directory; readers union the
-    * deltas through plain partition discovery and filter
-    * `batch <= guard`, so a crashed batch's half-written dir is
-    * invisible until its guard commits (callers write their GUARD
-    * table's delta LAST; a replayed batch lands in mode-overwrite
-    * dirs, so re-runs are idempotent). No version deletion: every
-    * delta stays live. */
-  def latestDelta(deltaDir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(deltaDir)
-    val fs = p.getFileSystem(hadoopConf)
-    if (!fs.exists(p)) -1L
-    else fs.listStatus(p).iterator
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .collect { case s if s.matches("batch=\\d+") => s.drop(6).toLong }
-      .foldLeft(-1L)(math.max)
+  /** ONE just-written delta (a [[VersionedState.at]] path), read back
+    * — the probe side of an incremental screen re-reads the parquet
+    * it wrote moments ago instead of recomputing the (expensive)
+    * expressions that produced it: the plan becomes a scan, the
+    * kernel runs once per batch instead of once per join side. */
+  def readDeltaAt(spark: SparkSession, path: String, ddl: String): DataFrame =
+    spark.read.schema(StructType.fromDDL(ddl)).parquet(path)
+
+  /** Zero-byte file whose atomic create commits one store's write of
+    * one version. `_`-prefixed, so Spark's readers skip it like
+    * `_SUCCESS`. */
+  private val CommitMarker = "_COMMIT"
+
+  /** The streaming state protocol, written once: recovery, the
+    * replayed-batch guard, the prior-state read, commit and pruning
+    * for every state class. Two layouts:
+    *
+    *  - versioned rewrite (`deltaStores` empty): each batch rewrites
+    *    the whole state as `v<N>` (or sub-stores `v<N>/<store>`), and
+    *    the prior version is deleted once `v<N>` has committed — for
+    *    grid/entity states whose size plateaus;
+    *  - delta-append (`deltaStores` = the store names, `""` = `dir`
+    *    itself): each batch appends only its own partial as
+    *    `<store>/batch=<N>`, and readers union every delta with
+    *    `batch <= version`. Corpus-scale accumulations use this: the
+    *    rewrite layout would re-write the whole index every batch,
+    *    quadratic write volume over the stream's lifetime.
+    *
+    * COMMIT RULE: version N counts as committed only once [[commit]]
+    * has atomically created its `_COMMIT` marker(s) — `v<N>/_COMMIT`,
+    * or `<store>/batch=<N>/_COMMIT` in every store — which it does
+    * after every store write of the batch has returned (the same
+    * atomic create-if-absent step as compaction's `_compact.COMMIT`).
+    * A driver killed at any instant, mid-job included, therefore
+    * leaves either a committed version or dirs with no (or not all)
+    * markers. Recovery, at construction only, first settles an
+    * interrupted compaction, then adopts the highest version marked
+    * in every store and deletes (and logs) every version dir above
+    * it — and, in the rewrite layout, the superseded ones below it.
+    * The replay of the lost batch then passes the `v <= version`
+    * guard and rewrites it. Per batch the protocol costs one marker
+    * create per store plus the prior-version delete; reads never
+    * probe markers.
+    *
+    * Versions are caller-supplied ids — the batch id, or any id
+    * increasing across the state's lifetime
+    * ([[CdcCompactDrift]]'s `(epoch << 40) | batchId`). */
+  final class VersionedState(dir: String, deltaStores: Seq[String] = Nil) {
+    private val delta = deltaStores.nonEmpty
+
+    private def storeDir(store: String) = if (store.isEmpty) dir else s"$dir/$store"
+
+    /** Where version `v` of `store` is written (and read). */
+    def at(v: Long, store: String = ""): String =
+      if (delta) s"${storeDir(store)}/batch=$v"
+      else if (store.isEmpty) s"$dir/v$v"
+      else s"$dir/v$v/$store"
+
+    private def markers(v: Long): Seq[org.apache.hadoop.fs.Path] =
+      (if (delta) deltaStores.map(at(v, _)) else Seq(at(v)))
+        .map(p => new org.apache.hadoop.fs.Path(p, CommitMarker))
+
+    @volatile private var committed: Long = recover()
+
+    /** The last committed version, -1 before the first commit. */
+    def version: Long = committed
+
+    private def recover(): Long = {
+      val f = fs(dir)
+      if (delta) {
+        if (f.exists(compactMarker(dir))) installCompaction(dir, deltaStores)
+        else f.delete(new org.apache.hadoop.fs.Path(compactStaging(dir)), true)
+      }
+      val (pattern, prefix) = if (delta) ("batch=\\d+", 6) else ("v\\d+", 1)
+      val listed = (if (delta) deltaStores.map(storeDir) else Seq(dir)).map { s =>
+        val p = new org.apache.hadoop.fs.Path(s)
+        if (!f.exists(p)) Seq.empty[(Long, org.apache.hadoop.fs.Path)]
+        else f.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath)
+          .collect { case d if d.getName.matches(pattern) => d.getName.drop(prefix).toLong -> d }
+          .sortBy(-_._1)
+      }
+      val v = listed.map(_.find { case (_, d) =>
+        f.exists(new org.apache.hadoop.fs.Path(d, CommitMarker)) }.fold(-1L)(_._1)).min
+      val log = org.slf4j.LoggerFactory.getLogger(getClass)
+      listed.flatten.filter { case (n, _) => n > v || (!delta && n < v) }.foreach { case (n, d) =>
+        log.warn(s"state $dir: recovery at committed version $v deletes " +
+          s"${if (n > v) "uncommitted" else "superseded"} $d")
+        f.delete(d, true)
+      }
+      v
+    }
+
+    /** The committed state of `store`: its `v<version>` dir, or the
+      * union of its committed deltas; the empty frame of `ddl` before
+      * the first commit. Delta reads take `ddl` as their EXPLICIT
+      * schema (plus the `batch` partition column), not inferred: a
+      * compacted store's truncated tombstone delta holds no parquet,
+      * which schema inference cannot read — and on a store with
+      * thousands of deltas the footer sampling is wasted listing work
+      * anyway. */
+    def prior(spark: SparkSession, ddl: String, store: String = ""): DataFrame =
+      if (committed < 0) spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(ddl))
+      else if (!delta) spark.read.parquet(at(committed, store))
+      else spark.read
+        .schema(StructType.fromDDL(ddl).add("batch", LongType))
+        .parquet(storeDir(store))
+        .filter(col("batch") <= committed)
+        .drop("batch")
+
+    /** Commits version `v`: a replayed `v` at or below [[version]] is
+      * skipped (the guard that makes a merge effectively-once);
+      * otherwise `write` must write every store of `v` to its [[at]]
+      * path, reading the prior state through [[prior]]. Once it has
+      * returned the markers are created, the version advances and, in
+      * the rewrite layout, the prior version is deleted. A failing
+      * write is rethrown naming the state dir and version. */
+    def commit(v: Long)(write: => Unit): Unit = if (v > committed) {
+      try write catch {
+        case scala.util.control.NonFatal(e) => throw new java.io.IOException(
+          s"state write failed: state dir $dir, batch $v: ${e.getMessage}", e)
+      }
+      val f = fs(dir)
+      markers(v).foreach(f.create(_, false).close())
+      val prev = committed
+      committed = v
+      if (!delta && prev >= 0) f.delete(new org.apache.hadoop.fs.Path(at(prev)), true)
+    }
+
+    /** Tombstone compaction for the delta-append layout: rewrite each
+      * store minus its tombstones as ONE delta at the committed
+      * version and truncate the tombstone store — the compaction
+      * every tombstone serving state documents ("until a compaction
+      * rewrites the delta stores minus tombstones"): without it the
+      * dead index entries accrue forever and every later batch probes
+      * them for work that serving will mask anyway.
+      *
+      * `stores` = (name, masked-content, shard keys) per store; the
+      * masked content MUST be exactly what the state's own report
+      * already reads (its serving masks), so the report is identical
+      * before and after by construction. Protocol, in the order the
+      * crash-safety argument needs:
+      *
+      *  1. REWRITE: each store's masked union is written, with its
+      *     commit marker, under `_compact/<name>/batch=<version>` —
+      *     the live stores are only READ. A crash here leaves live
+      *     state untouched; recovery discards the orphaned staging
+      *     dir.
+      *  2. COMMIT: one atomic marker-file create (`_compact.COMMIT`).
+      *     This is the single instant the compacted state becomes the
+      *     state of record.
+      *  3. INSTALL: per store, delete the live dir and rename the
+      *     staged dir into place; then drop the marker + staging
+      *     root. Idempotent per store (a store whose staging dir is
+      *     gone was installed before the crash), so recovery REPLAYS
+      *     the install from the marker — an interrupted multi-store
+      *     mutation must look either never-started or fully-redoable,
+      *     never half-applied.
+      *
+      * Readers are unchanged: each compacted store is an ordinary
+      * committed delta `batch=<version>` (the truncated tombstone
+      * store's is empty), so the `batch <= version` read and version
+      * recovery both see it. */
+    def compact(stores: Seq[(String, DataFrame, Seq[String])]): Unit =
+      if (committed >= 0) {
+        stageCompaction(dir, committed, stores)
+        fs(dir).create(compactMarker(dir), false).close()
+        installCompaction(dir, stores.map(_._1))
+      }
   }
 
-  def writeDelta(df: DataFrame, deltaDir: String, batchId: Long, keys: Seq[String]): Unit =
-    writeSharded(df, s"$deltaDir/batch=$batchId", keys)
-
-  /** Union of all deltas committed at or before `maxBatch`; empty
-    * frame of `ddl` when the state has never written. The schema is
-    * EXPLICIT (the caller's ddl + the `batch` partition column), not
-    * inferred: a compacted store's truncated tombstone delta is an
-    * empty directory, which schema inference cannot read — and on a
-    * store with thousands of deltas the footer sampling is wasted
-    * listing work anyway. */
-  def readDeltas(spark: SparkSession, deltaDir: String, ddl: String,
-                 maxBatch: Long): DataFrame =
-    if (maxBatch < 0 || latestDelta(deltaDir) < 0)
-      spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType.fromDDL(ddl))
-    else spark.read
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(ddl)
-        .add("batch", org.apache.spark.sql.types.LongType))
-      .parquet(deltaDir)
-      .filter(col("batch") <= maxBatch)
-      .drop("batch")
-
-  /** ONE just-written delta, read back by its batch id — the probe
-    * side of an incremental screen re-reads the parquet it wrote
-    * moments ago instead of recomputing the (expensive) expressions
-    * that produced it: the plan becomes a scan, the kernel runs once
-    * per batch instead of once per join side. */
-  def readDeltaAt(spark: SparkSession, deltaDir: String, ddl: String,
-                  batchId: Long): DataFrame =
-    spark.read
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
-      .parquet(s"$deltaDir/batch=$batchId")
-
-  // --- Tombstone compaction for delta-append stores (round 13) ---
+  // --- Tombstone compaction steps for delta-append stores (round 13) ---
 
   private def compactStaging(stateDir: String) = s"$stateDir/_compact"
   private def compactMarker(stateDir: String) =
     new org.apache.hadoop.fs.Path(s"$stateDir/_compact.COMMIT")
 
-  private def fs(stateDir: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(stateDir).getFileSystem(hadoopConf)
-
-  /** Rewrite each delta store minus its tombstones as ONE delta at
-    * the version boundary and truncate the tombstone store — the
-    * compaction every tombstone serving state documents ("until a
-    * compaction rewrites the delta stores minus tombstones"): without
-    * it the dead index entries accrue forever and every later batch
-    * probes them for work that serving will mask anyway.
-    *
-    * `stores` = (name, masked-content, shard keys) per store; the
-    * masked content MUST be exactly what the state's own report
-    * already reads (its serving masks), so the report is identical
-    * before and after by construction. Protocol, in the order the
-    * crash-safety argument needs:
-    *
-    *  1. REWRITE: each store's masked union is written under
-    *     `_compact/<name>/batch=<version>` — the live stores are only
-    *     READ. A crash here leaves live state untouched; recovery
-    *     discards the orphaned staging dir.
-    *  2. COMMIT: one atomic marker-file create (`_compact.COMMIT`).
-    *     This is the version bump — the single instant the compacted
-    *     state becomes the state of record.
-    *  3. INSTALL: per store, delete the live dir and rename the
-    *     staged dir into place; then drop the marker + staging root.
-    *     Idempotent per store (a store whose staging dir is gone was
-    *     installed before the crash), so recovery REPLAYS the install
-    *     from the marker — the min-over-stores lesson: an interrupted
-    *     multi-store mutation must look either never-started or
-    *     fully-redoable, never half-applied.
-    *
-    * Readers are unchanged: the compacted store is an ordinary delta
-    * dir whose single `batch=<version>` delta satisfies the same
-    * `batch <= guard` filter, and version recovery
-    * ([[latestDelta]], including min-over-stores guards) still sees
-    * `version` in every store because the truncated tombstone store
-    * keeps an EMPTY delta at the boundary. */
-  def compactDeltas(stateDir: String, version: Long,
-                    stores: Seq[(String, DataFrame, Seq[String])]): Unit = {
-    if (version < 0) return
-    stageCompaction(stateDir, version, stores)
-    fs(stateDir).create(compactMarker(stateDir), false).close()
-    installCompaction(stateDir, stores.map(_._1))
-  }
-
   private[graft] def stageCompaction(stateDir: String, version: Long,
       stores: Seq[(String, DataFrame, Seq[String])]): Unit = {
-    fs(stateDir).delete(new org.apache.hadoop.fs.Path(compactStaging(stateDir)), true)
+    val f = fs(stateDir)
+    f.delete(new org.apache.hadoop.fs.Path(compactStaging(stateDir)), true)
     // All staged rewrites run concurrently (guide §2.6): each store's
     // masked read is an independent job over a DIFFERENT live store,
     // and everything here is pre-marker — a crash mid-stage leaves
     // live state untouched and recovery discards the staging dir, no
     // matter which subset of stores had finished writing.
-    inParallel(stores.map { case (name, masked, keys) =>
-      () => writeDelta(masked, s"${compactStaging(stateDir)}/$name", version, keys)
+    val staged = stores.map { case (name, _, _) =>
+      s"${compactStaging(stateDir)}/$name/batch=$version" }
+    inParallel(stores.zip(staged).map { case ((_, masked, keys), path) =>
+      () => writeSharded(masked, path, keys)
     }: _*)
+    staged.foreach(p => f.create(new org.apache.hadoop.fs.Path(p, CommitMarker), false).close())
   }
 
-  private[graft] def installCompaction(stateDir: String,
-                                           storeNames: Seq[String]): Unit = {
+  private def installCompaction(stateDir: String, storeNames: Seq[String]): Unit = {
     val f = fs(stateDir)
     storeNames.foreach { n =>
       val stage = new org.apache.hadoop.fs.Path(s"${compactStaging(stateDir)}/$n")
@@ -526,20 +570,5 @@ private[graft] object StreamUtil {
     f.delete(compactMarker(stateDir), false)
     f.delete(new org.apache.hadoop.fs.Path(compactStaging(stateDir)), true)
     ()
-  }
-
-  /** Crash recovery for [[compactDeltas]] — every tombstone state
-    * constructor calls this BEFORE version recovery. Marker present:
-    * the rewrite committed, REDO the install (idempotent). Staging
-    * without a marker: an abandoned rewrite that never became the
-    * state of record — discard it; the live stores were never
-    * touched. */
-  def recoverCompaction(stateDir: String, storeNames: Seq[String]): Unit = {
-    val f = fs(stateDir)
-    if (f.exists(compactMarker(stateDir))) installCompaction(stateDir, storeNames)
-    else {
-      f.delete(new org.apache.hadoop.fs.Path(compactStaging(stateDir)), true)
-      ()
-    }
   }
 }

@@ -28,20 +28,14 @@ import graft.sources.Tables
   * (Kafka per-partition order + watermark-buffered reordering) gives
   * the production variant. */
 final class FunnelState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](),
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "user_id BIGINT, t_view TIMESTAMP, t_click TIMESTAMP, t_purchase TIMESTAMP"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "user_id BIGINT, t_view TIMESTAMP, t_click TIMESTAMP, t_purchase TIMESTAMP")
 
   /** foreachBatch body; exactly-once under replay via the
-    * batchId <= version guard (v$batchId on disk proves the batch
-    * was merged). */
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+    * batchId <= version guard. */
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val p = prior(spark)
 
@@ -76,10 +70,7 @@ final class FunnelState(stateDir: String) {
 
     // per-user funnel state is 4 columns × |users| — sharded by the
     // user_id hash so the per-batch rewrite scales with the cluster
-    StreamUtil.writeSharded(s3, s"$stateDir/v$batchId", Seq("user_id"))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeSharded(s3, state.at(batchId), Seq("user_id"))
   }
 
   /** The funnel report over the current state — same shape as the
@@ -105,17 +96,12 @@ final class FunnelState(stateDir: String) {
   * error therefore classifies correctly with no per-user event
   * lists. */
 final class ExclusionFunnelState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](),
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "user_id BIGINT, t_view TIMESTAMP, t_purchase TIMESTAMP, t_err TIMESTAMP"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "user_id BIGINT, t_view TIMESTAMP, t_purchase TIMESTAMP, t_err TIMESTAMP")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val p = prior(spark)
     val bv = batch.filter(col("event_type") === "view")
@@ -134,10 +120,7 @@ final class ExclusionFunnelState(stateDir: String) {
       .select(col("user_id"), col("t_view"),
         coalesce(least(col("t_purchase"), col("bp")), col("t_purchase"), col("bp")).as("t_purchase"),
         coalesce(least(col("t_err"), col("be")), col("t_err"), col("be")).as("t_err"))
-    StreamUtil.writeSharded(s2, s"$stateDir/v$batchId", Seq("user_id"))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeSharded(s2, state.at(batchId), Seq("user_id"))
   }
 
   /** Same output shape as the batch query. */

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Streaming faces for the graph-analytics family: the co-engagement
   * graph maintained INCREMENTALLY. The state is not the graph — it is
@@ -24,16 +23,12 @@ import org.apache.spark.sql.types.StructType
   *
   * Versioned-parquet + replay-guard discipline ([[CdcCompact]]). */
 final class UserItemState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "user_id BIGINT, item BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "user_id BIGINT, item BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     // NULL items kept: the batch twin's per-user item count includes
     // them (they only drop at the pair filter), and the ≤50 cap must
@@ -43,10 +38,7 @@ final class UserItemState(stateDir: String) {
         get_json_object(col("props"), "$.k").cast("long").as("item"))
       .distinct()
     val merged = prior(spark).unionByName(partial).distinct()
-    StreamUtil.writeSharded(merged, s"$stateDir/v$batchId", Seq("user_id", "item"))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeSharded(merged, state.at(batchId), Seq("user_id", "item"))
   }
 
   private def edges(spark: SparkSession): DataFrame =

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Streaming approximate-distinct (daily unique users) over HLL
   * sketch state — the scale path for "DAU on an unbounded stream":
@@ -20,16 +19,12 @@ import org.apache.spark.sql.types.StructType
   * batch or 10) and (b) ±5% of true exact distinct.
   */
 final class HllDistinctState(stateDir: String, lgConfigK: Int = 14) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "day TIMESTAMP, sk BINARY"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "day TIMESTAMP, sk BINARY")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = batch
       .select(date_trunc("day", col("ts")).as("day"), col("user_id"))
@@ -38,10 +33,7 @@ final class HllDistinctState(stateDir: String, lgConfigK: Int = 14) {
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("day"))
       .agg(hll_union_agg(col("sk"), lit(false)).as("sk"))
-    StreamUtil.writeGrid(merged, s"$stateDir/v$batchId")
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def estimates(spark: SparkSession): DataFrame =
@@ -100,22 +92,15 @@ object HllStream {
   * bounded sketch for the heavy tail, a key dictionary for the
   * queryable head. */
 final class CmsState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def priorCounters(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "j BIGINT, bucket BIGINT, c BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version/counters")
+  private def priorCounters(spark: SparkSession): DataFrame = state.prior(spark,
+    "j BIGINT, bucket BIGINT, c BIGINT", "counters")
 
-  private def priorItems(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](),
-        StructType.fromDDL("item BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version/items")
+  private def priorItems(spark: SparkSession): DataFrame = state.prior(spark,
+    "item BIGINT", "items")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val items = batch
       .select(get_json_object(col("props"), "$.k").cast("long").as("item"))
@@ -131,11 +116,8 @@ final class CmsState(stateDir: String) {
     // Independent sub-store writes overlap (guide §2.6); the version
     // bump still happens only after both have committed.
     StreamUtil.inParallel(
-      () => StreamUtil.writeGrid(counters, s"$stateDir/v$batchId/counters"),
-      () => StreamUtil.writeSharded(dict, s"$stateDir/v$batchId/items", Seq("item")))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+      () => StreamUtil.writeGrid(counters, state.at(batchId, "counters")),
+      () => StreamUtil.writeSharded(dict, state.at(batchId, "items"), Seq("item")))
   }
 
   def topItems(spark: SparkSession): DataFrame =
@@ -154,16 +136,12 @@ final class CmsState(stateDir: String) {
   * own [[graft.operators.Olap.kllWeeklyReport]].
   * Versioned-parquet + replay-guard discipline ([[CdcCompact]]). */
 final class KllDailyState(stateDir: String, k: Int = 200) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "week TIMESTAMP, day TIMESTAMP, sk BINARY"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "week TIMESTAMP, day TIMESTAMP, sk BINARY")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     graft.functions.GraftFunctions.register(spark)
     val partial = batch
@@ -174,10 +152,7 @@ final class KllDailyState(stateDir: String, k: Int = 200) {
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("week"), col("day"))
       .agg(call_function("graft_kll_merge", col("sk"), lit(k)).as("sk"))
-    StreamUtil.writeGrid(merged, s"$stateDir/v$batchId")
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def report(spark: SparkSession): DataFrame = {

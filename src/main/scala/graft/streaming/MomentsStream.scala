@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Streaming statistical moments: per event type, the additive
   * sufficient statistics `(n, Σx, Σx²)` maintained incrementally
@@ -32,16 +31,12 @@ import org.apache.spark.sql.types.StructType
   * Long path is exact and 4× cheaper.
   */
 final class MomentsState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "event_type STRING, n BIGINT, sum_c BIGINT, sumsq_c BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "event_type STRING, n BIGINT, sum_c BIGINT, sumsq_c BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val cents = round(col("value") * 100).cast("long")
     val partial = batch
@@ -64,10 +59,7 @@ final class MomentsState(stateDir: String) {
         raise_error(concat(lit("MomentsState Long overflow for event_type="),
           col("event_type"), lit(" — promote sumsq_c to DECIMAL(38,0)"))))
       .otherwise(lit(true)))
-    StreamUtil.writeGrid(guarded, s"$stateDir/v$batchId")
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeGrid(guarded, state.at(batchId))
   }
 
   /** Mean / sample stddev derived from the exact integer moments.
@@ -131,16 +123,12 @@ object MomentsStream {
   * the lateness horizon to the serving store.
   */
 final class RollupState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "day TIMESTAMP, event_type STRING, n BIGINT, cents BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "day TIMESTAMP, event_type STRING, n BIGINT, cents BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = batch
       .select(date_trunc("day", col("ts")).as("day"), col("event_type"),
@@ -150,10 +138,7 @@ final class RollupState(stateDir: String) {
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("day"), col("event_type"))
       .agg(sum(col("n")).as("n"), sum(col("cents")).as("cents"))
-    StreamUtil.writeGrid(merged, s"$stateDir/v$batchId")
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def view(spark: SparkSession): DataFrame =
@@ -209,16 +194,12 @@ object RollupStream {
   * [[RollupState]].
   */
 final class DailyModeState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "day TIMESTAMP, item BIGINT, n BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "day TIMESTAMP, item BIGINT, n BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = batch
       .select(date_trunc("day", col("ts")).as("day"),
@@ -228,10 +209,7 @@ final class DailyModeState(stateDir: String) {
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("day"), col("item"))
       .agg(sum(col("n")).as("n"))
-    StreamUtil.writeSharded(merged, s"$stateDir/v$batchId", Seq("day", "item"))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeSharded(merged, state.at(batchId), Seq("day", "item"))
   }
 
   def mode(spark: SparkSession): DataFrame =
@@ -254,16 +232,12 @@ final class DailyModeState(stateDir: String) {
   * data-scale, so the state write is hash-sharded on (source, tok).
   */
 final class DriftState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "source STRING, tok STRING, n BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "source STRING, tok STRING, n BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = batch
       .select(col("source"), explode(split(col("text"), " ")).as("tok"))
@@ -272,10 +246,7 @@ final class DriftState(stateDir: String) {
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("source"), col("tok"))
       .agg(sum(col("n")).as("n"))
-    StreamUtil.writeSharded(merged, s"$stateDir/v$batchId", Seq("source", "tok"))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeSharded(merged, state.at(batchId), Seq("source", "tok"))
   }
 
   def drift(spark: SparkSession): DataFrame =
@@ -306,16 +277,12 @@ object DriftStream {
   * |days| rows; late rows fold into their (old) day.
   */
 final class DailyCountState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "day TIMESTAMP, n BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "day TIMESTAMP, n BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = batch
       .select(date_trunc("day", col("ts")).as("day"))
@@ -324,10 +291,7 @@ final class DailyCountState(stateDir: String) {
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("day"))
       .agg(sum(col("n")).as("n"))
-    StreamUtil.writeGrid(merged, s"$stateDir/v$batchId")
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def changepoint(spark: SparkSession): DataFrame =
@@ -373,16 +337,12 @@ object DailyModeStream {
   * |types|×|days| rows.
   */
 final class DailyTypeCentsState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "event_type STRING, day TIMESTAMP, cents BIGINT, n BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "event_type STRING, day TIMESTAMP, cents BIGINT, n BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = batch
       .select(col("event_type"), date_trunc("day", col("ts")).as("day"),
@@ -392,10 +352,7 @@ final class DailyTypeCentsState(stateDir: String) {
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("event_type"), col("day"))
       .agg(sum(col("cents")).as("cents"), sum(col("n")).as("n"))
-    StreamUtil.writeGrid(merged, s"$stateDir/v$batchId")
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def ewma(spark: SparkSession): DataFrame =
@@ -482,16 +439,12 @@ object EwmaStream {
   * expression tree the batch operator runs.
   */
 final class SeasonalityCellState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "event_type STRING, dow BIGINT, hour BIGINT, n BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "event_type STRING, dow BIGINT, hour BIGINT, n BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = batch
       .select(col("event_type"),
@@ -502,10 +455,7 @@ final class SeasonalityCellState(stateDir: String) {
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("event_type"), col("dow"), col("hour"))
       .agg(sum(col("n")).as("n"))
-    StreamUtil.writeGrid(merged, s"$stateDir/v$batchId")
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def profile(spark: SparkSession): DataFrame =
@@ -523,16 +473,12 @@ final class SeasonalityCellState(stateDir: String) {
   * expression tree the batch operator runs.
   */
 final class ValueCountState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "event_type STRING, cents BIGINT, cnt BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "event_type STRING, cents BIGINT, cnt BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = batch
       .select(col("event_type"), expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
@@ -541,10 +487,7 @@ final class ValueCountState(stateDir: String) {
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("event_type"), col("cents"))
       .agg(sum(col("cnt")).as("cnt"))
-    StreamUtil.writeGrid(merged, s"$stateDir/v$batchId")
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def boxplot(spark: SparkSession): DataFrame =
@@ -584,16 +527,12 @@ object BoxplotStream {
   * through [[graft.operators.Behavior.percentileBandsFromCounts]].
   */
 final class DailyValueCountState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "day TIMESTAMP, cents BIGINT, cnt BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "day TIMESTAMP, cents BIGINT, cnt BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = batch
       .select(date_trunc("day", col("ts")).as("day"),
@@ -603,10 +542,7 @@ final class DailyValueCountState(stateDir: String) {
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("day"), col("cents"))
       .agg(sum(col("cnt")).as("cnt"))
-    StreamUtil.writeGrid(merged, s"$stateDir/v$batchId")
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def bands(spark: SparkSession): DataFrame =
@@ -634,16 +570,12 @@ object PercentileBandsStream {
   * construction.
   */
 final class DoclenBucketState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "bucket BIGINT, n_docs BIGINT, total_words BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "bucket BIGINT, n_docs BIGINT, total_words BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = batch
       .select(size(split(col("text"), " ")).cast("long").as("nw"))
@@ -653,10 +585,7 @@ final class DoclenBucketState(stateDir: String) {
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("bucket"))
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("total_words")).as("total_words"))
-    StreamUtil.writeGrid(merged, s"$stateDir/v$batchId")
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def histogram(spark: SparkSession): DataFrame =
@@ -688,26 +617,19 @@ object DoclenStream {
   * tokenizer-training pipeline already keeps.
   */
 final class VocabState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "tok STRING, cf BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "tok STRING, cf BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = batch
       .select(explode(split(col("text"), " ")).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("cf"))
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("tok")).agg(sum(col("cf")).as("cf"))
-    StreamUtil.writeSharded(merged, s"$stateDir/v$batchId", Seq("tok"))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeSharded(merged, state.at(batchId), Seq("tok"))
   }
 
   def zipf(spark: SparkSession): DataFrame =
@@ -744,16 +666,12 @@ object ZipfStream {
   * derived through [[graft.operators.Behavior.hhiFromItemCents]].
   */
 final class ItemCentsState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "event_type STRING, item BIGINT, cents BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "event_type STRING, item BIGINT, cents BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     // IDENTICAL extraction to the batch path — shared helper, not a
     // re-typed copy, so stream/batch parity is by construction even if
@@ -762,10 +680,7 @@ final class ItemCentsState(stateDir: String) {
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("event_type"), col("item"))
       .agg(sum(col("cents")).as("cents"))
-    StreamUtil.writeSharded(merged, s"$stateDir/v$batchId", Seq("event_type", "item"))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeSharded(merged, state.at(batchId), Seq("event_type", "item"))
   }
 
   def hhi(spark: SparkSession): DataFrame =
@@ -808,25 +723,18 @@ object SeasonalityStream {
   * Versioned-parquet + replay-guard discipline ([[ValueCountState]]).
   */
 final class BootstrapState(stateDir: String, b: Int = 32) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "b BIGINT, n_eff BIGINT, sum_c BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "b BIGINT, n_eff BIGINT, sum_c BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = graft.operators.Sampling.bootstrapPartial(batch.toDF(), b)
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("b"))
       .agg(sum(col("n_eff")).as("n_eff"), sum(col("sum_c")).as("sum_c"))
-    StreamUtil.writeGrid(merged, s"$stateDir/v$batchId")
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def report(spark: SparkSession): DataFrame =

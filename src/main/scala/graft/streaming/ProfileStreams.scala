@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Additive-sufficient-state streaming twins for the profiling
   * family — the [[ValueCountState]] discipline applied to two more
@@ -24,16 +23,12 @@ import org.apache.spark.sql.types.StructType
   * Both are replay-guarded and versioned like every state here.
   */
 final class UserSpanState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "user_id BIGINT, cohort TIMESTAMP, last_day TIMESTAMP"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "user_id BIGINT, cohort TIMESTAMP, last_day TIMESTAMP")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = batch
       .select(col("user_id"), date_trunc("day", col("ts")).as("day"))
@@ -45,10 +40,7 @@ final class UserSpanState(stateDir: String) {
               coalesce(col("b_first"), col("cohort"))).as("cohort"),
         greatest(coalesce(col("last_day"), col("b_last")),
                  coalesce(col("b_last"), col("last_day"))).as("last_day"))
-    StreamUtil.writeSharded(merged, s"$stateDir/v$batchId", Seq("user_id"))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeSharded(merged, state.at(batchId), Seq("user_id"))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -70,26 +62,19 @@ final class UserSpanState(stateDir: String) {
   * minutes past its review horizon out of the state; the flags only
   * ever need the recent window). */
 final class UserMinuteCountState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "user_id BIGINT, minute TIMESTAMP, n BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "user_id BIGINT, minute TIMESTAMP, n BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = batch
       .select(col("user_id"), date_trunc("minute", col("ts")).as("minute"))
       .groupBy(col("user_id"), col("minute")).agg(count(lit(1)).as("n"))
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("user_id"), col("minute")).agg(sum(col("n")).as("n"))
-    StreamUtil.writeSharded(merged, s"$stateDir/v$batchId", Seq("user_id", "minute"))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeSharded(merged, state.at(batchId), Seq("user_id", "minute"))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -102,16 +87,12 @@ final class UserMinuteCountState(stateDir: String) {
   * and the FRE report is the shared
   * [[graft.operators.TextOps.fleschFromSums]] read. */
 final class FleschState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "source STRING, n_docs BIGINT, n_sentences BIGINT, n_words BIGINT, n_syllables BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "source STRING, n_docs BIGINT, n_sentences BIGINT, n_words BIGINT, n_syllables BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = graft.operators.TextOps.fleschDocCounts(batch.toDF())
       .groupBy(col("source"))
@@ -123,10 +104,7 @@ final class FleschState(stateDir: String) {
         sum(col("n_sentences")).as("n_sentences"),
         sum(col("n_words")).as("n_words"),
         sum(col("n_syllables")).as("n_syllables"))
-    StreamUtil.writeGrid(merged, s"$stateDir/v$batchId")
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -138,25 +116,18 @@ final class FleschState(stateDir: String) {
   * (one new event re-weights every term), the counts can; report via
   * the shared [[graft.operators.Behavior.entropyFromUserTypeCounts]]. */
 final class UserTypeCountState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "user_id BIGINT, event_type STRING, c BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "user_id BIGINT, event_type STRING, c BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = batch.groupBy(col("user_id"), col("event_type"))
       .agg(count(lit(1)).as("c"))
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("user_id"), col("event_type")).agg(sum(col("c")).as("c"))
-    StreamUtil.writeSharded(merged, s"$stateDir/v$batchId", Seq("user_id", "event_type"))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeSharded(merged, state.at(batchId), Seq("user_id", "event_type"))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -172,17 +143,13 @@ final class UserTypeCountState(stateDir: String) {
   * history. The histogram is a pure read
   * ([[graft.operators.Retention.sessionsHistFromK]]). */
 final class SessionCountState(stateDir: String, gapMinutes: Int = 30) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
   private val gapUs = gapMinutes * 60L * 1000000L
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "user_id BIGINT, last_ts TIMESTAMP, k BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "user_id BIGINT, last_ts TIMESTAMP, k BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
@@ -203,10 +170,7 @@ final class SessionCountState(stateDir: String, gapMinutes: Int = 30) {
       .select(col("user_id"),
         coalesce(col("b_last"), col("last_ts")).as("last_ts"),
         (coalesce(col("k"), lit(0L)) + coalesce(col("b_k"), lit(0L))).as("k"))
-    StreamUtil.writeSharded(merged, s"$stateDir/v$batchId", Seq("user_id"))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeSharded(merged, state.at(batchId), Seq("user_id"))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -225,23 +189,16 @@ final class SessionCountState(stateDir: String, gapMinutes: Int = 30) {
   * ([[graft.operators.Behavior.affinityFromPresence]]), so
   * stream ≡ batch by shared derivation. */
 final class SessionAffinityState(stateDir: String, gapMinutes: Int = 30) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
   private val gapUs = gapMinutes * 60L * 1000000L
 
-  private def priorPresence(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "user_id BIGINT, sid BIGINT, event_type STRING"))
-    else spark.read.parquet(s"$stateDir/v$version/presence")
+  private def priorPresence(spark: SparkSession): DataFrame = state.prior(spark,
+    "user_id BIGINT, sid BIGINT, event_type STRING", "presence")
 
-  private def priorFrontier(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "user_id BIGINT, last_ts TIMESTAMP, cur_sid BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version/frontier")
+  private def priorFrontier(spark: SparkSession): DataFrame = state.prior(spark,
+    "user_id BIGINT, last_ts TIMESTAMP, cur_sid BIGINT", "frontier")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
@@ -273,11 +230,8 @@ final class SessionAffinityState(stateDir: String, gapMinutes: Int = 30) {
     // Independent sub-store writes overlap (guide §2.6); the version
     // bump still happens only after both have committed.
     StreamUtil.inParallel(
-      () => StreamUtil.writeSharded(presence, s"$stateDir/v$batchId/presence", Seq("user_id")),
-      () => StreamUtil.writeSharded(frontier, s"$stateDir/v$batchId/frontier", Seq("user_id")))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+      () => StreamUtil.writeSharded(presence, state.at(batchId, "presence"), Seq("user_id")),
+      () => StreamUtil.writeSharded(frontier, state.at(batchId, "frontier"), Seq("user_id")))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -287,25 +241,18 @@ final class SessionAffinityState(stateDir: String, gapMinutes: Int = 30) {
 }
 
 final class LabelCentroidState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "label BIGINT, dim BIGINT, n_vecs BIGINT, sum_q BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "label BIGINT, dim BIGINT, n_vecs BIGINT, sum_q BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = graft.operators.VectorOps.labelDimSums(batch)
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("label"), col("dim"))
       .agg(sum(col("n_vecs")).as("n_vecs"), sum(col("sum_q")).as("sum_q"))
-    StreamUtil.writeGrid(merged, s"$stateDir/v$batchId")
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -318,17 +265,13 @@ final class LabelCentroidState(stateDir: String) {
   * through the shared `cardFromGrid`. Distinct lang/source counts are
   * grid-key counts, so they too are exact under any batch split. */
 final class DatasetCardState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "lang STRING, source STRING, n_docs BIGINT, ws_tokens BIGINT, " +
-        "bpe_tokens BIGINT, n_chars BIGINT, min_chars BIGINT, max_chars BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "lang STRING, source STRING, n_docs BIGINT, ws_tokens BIGINT, " +
+    "bpe_tokens BIGINT, n_chars BIGINT, min_chars BIGINT, max_chars BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = graft.operators.CorpusQa.cardGrid(batch.toDF())
     val merged = prior(spark).unionByName(partial)
@@ -339,10 +282,7 @@ final class DatasetCardState(stateDir: String) {
         sum(col("n_chars")).as("n_chars"),
         min(col("min_chars")).as("min_chars"),
         max(col("max_chars")).as("max_chars"))
-    StreamUtil.writeGrid(merged, s"$stateDir/v$batchId")
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -362,26 +302,19 @@ final class DatasetCardState(stateDir: String) {
   * state is the sufficient grid and [[graft.operators.Stats
   * .ksFromCounts]] derives the pairwise distances at read time. */
 final class SourceLenState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "source STRING, len BIGINT, c BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "source STRING, len BIGINT, c BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = batch
       .select(col("source"), length(col("text")).cast("long").as("len"))
       .groupBy(col("source"), col("len")).agg(count(lit(1)).as("c"))
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("source"), col("len")).agg(sum(col("c")).as("c"))
-    StreamUtil.writeGrid(merged, s"$stateDir/v$batchId")
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -410,25 +343,18 @@ final class SourceLenState(stateDir: String) {
   * platform `cutoff` is the monitoring baseline boundary, known
   * configuration — the [[UserPrePostState]] convention. */
 final class PsiGridState(stateDir: String, cutoff: java.sql.Timestamp) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "event_type STRING, is_base BOOLEAN, bucket BIGINT, c BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "event_type STRING, is_base BOOLEAN, bucket BIGINT, c BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = graft.operators.Stats.psiGrid(batch.toDF(), cutoff)
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("event_type"), col("is_base"), col("bucket"))
       .agg(sum(col("c")).as("c"))
-    StreamUtil.writeGrid(merged, s"$stateDir/v$batchId")
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -442,16 +368,12 @@ final class PsiGridState(stateDir: String, cutoff: java.sql.Timestamp) {
   * [[graft.operators.Stats.mwFromCounts]] derives U/AUC at read
   * time. */
 final class TypeCentsState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "event_type STRING, cents BIGINT, c BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "event_type STRING, cents BIGINT, c BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = batch
       .select(col("event_type"),
@@ -459,10 +381,7 @@ final class TypeCentsState(stateDir: String) {
       .groupBy(col("event_type"), col("cents")).agg(count(lit(1)).as("c"))
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("event_type"), col("cents")).agg(sum(col("c")).as("c"))
-    StreamUtil.writeGrid(merged, s"$stateDir/v$batchId")
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -499,16 +418,12 @@ final class TypeCentsState(stateDir: String) {
   * operator's own distributed-rank derivation (parity by shared
   * code, including [[graft.operators.GlobalRank]]'s slice rank). */
 final class UserScoreState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "user_id BIGINT, score BIGINT, converted BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "user_id BIGINT, score BIGINT, converted BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = batch.groupBy(col("user_id"))
       .agg(sum(when(col("event_type") =!= "purchase", 1L).otherwise(0L)).as("score"),
@@ -516,10 +431,7 @@ final class UserScoreState(stateDir: String) {
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("user_id"))
       .agg(sum(col("score")).as("score"), max(col("converted")).as("converted"))
-    StreamUtil.writeSharded(merged, s"$stateDir/v$batchId", Seq("user_id"))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeSharded(merged, state.at(batchId), Seq("user_id"))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -537,16 +449,12 @@ final class UserScoreState(stateDir: String) {
   * [[graft.operators.GlobalRank]] slice rank — stream ≡ batch by
   * shared code. */
 final class UserRfmState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "user_id BIGINT, last_ts TIMESTAMP, freq BIGINT, cents BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "user_id BIGINT, last_ts TIMESTAMP, freq BIGINT, cents BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     // IDENTICAL extraction to the batch path (shared helper).
     val partial = graft.operators.Behavior.rfmPerUser(batch.toDF())
@@ -555,10 +463,7 @@ final class UserRfmState(stateDir: String) {
       .agg(max(col("last_ts")).as("last_ts"),
         sum(col("freq")).as("freq"),
         sum(col("cents")).as("cents"))
-    StreamUtil.writeSharded(merged, s"$stateDir/v$batchId", Seq("user_id"))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeSharded(merged, state.at(batchId), Seq("user_id"))
   }
 
   def reportRfm(spark: SparkSession): DataFrame =
@@ -585,26 +490,19 @@ final class UserRfmState(stateDir: String) {
   * Report = [[graft.operators.Experiments.cupedFromUsers]], the batch
   * operator's own derivation (parity by shared code). */
 final class UserPrePostState(stateDir: String, cutoff: java.sql.Timestamp) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "user_id BIGINT, pre_cents BIGINT, post_cents BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "user_id BIGINT, pre_cents BIGINT, post_cents BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = graft.operators.Experiments.userPrePost(batch.toDF(), cutoff)
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("user_id"))
       .agg(sum(col("pre_cents")).as("pre_cents"),
         sum(col("post_cents")).as("post_cents"))
-    StreamUtil.writeSharded(merged, s"$stateDir/v$batchId", Seq("user_id"))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeSharded(merged, state.at(batchId), Seq("user_id"))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -628,25 +526,18 @@ final class UserPrePostState(stateDir: String, cutoff: java.sql.Timestamp) {
   * derivation: cumulative prefix sums and every z derive at report
   * time. */
 final class ArmDayState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "arm BIGINT, day TIMESTAMP, n BIGINT, s1 BIGINT, s2 DECIMAL(38,0)"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "arm BIGINT, day TIMESTAMP, n BIGINT, s1 BIGINT, s2 DECIMAL(38,0)")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = graft.operators.Experiments.peekingGrid(batch.toDF())
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("arm"), col("day"))
       .agg(sum(col("n")).as("n"), sum(col("s1")).as("s1"), sum(col("s2")).as("s2"))
-    StreamUtil.writeGrid(merged, s"$stateDir/v$batchId")
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -657,25 +548,18 @@ final class ArmDayState(stateDir: String) {
   * .armCentsGrid]] merged additively; value-cardinality rows. Report
   * = the batch QTE derivation over the merged grid. */
 final class ArmCentsState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "arm BIGINT, cents BIGINT, cnt BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "arm BIGINT, cents BIGINT, cnt BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = graft.operators.Experiments.armCentsGrid(batch.toDF())
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("arm"), col("cents"))
       .agg(sum(col("cnt")).as("cnt"))
-    StreamUtil.writeGrid(merged, s"$stateDir/v$batchId")
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -692,25 +576,18 @@ final class ArmCentsState(stateDir: String) {
   * state (the classic streaming-conformal mistake this state shape
   * avoids by construction). */
 final class ConformalGridState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "event_type STRING, is_train BOOLEAN, cents BIGINT, cnt BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "event_type STRING, is_train BOOLEAN, cents BIGINT, cnt BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = graft.operators.Experiments.conformalGrid(batch.toDF())
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("event_type"), col("is_train"), col("cents"))
       .agg(sum(col("cnt")).as("cnt"))
-    StreamUtil.writeGrid(merged, s"$stateDir/v$batchId")
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -726,22 +603,15 @@ final class ConformalGridState(stateDir: String) {
   * operator's own regression including the distributed range-
   * partitioned cumsum. */
 final class CorpusHeapsState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def perDoc(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "doc_id BIGINT, t BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version/perdoc")
+  private def perDoc(spark: SparkSession): DataFrame = state.prior(spark,
+    "doc_id BIGINT, t BIGINT", "perdoc")
 
-  private def tokFirst(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "tok STRING, doc_id BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version/tokfirst")
+  private def tokFirst(spark: SparkSession): DataFrame = state.prior(spark,
+    "tok STRING, doc_id BIGINT", "tokfirst")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     // IDENTICAL tokenization to the batch path (shared helper).
     val toks = graft.operators.CorpusQa.heapsTokens(batch.toDF())
@@ -752,11 +622,8 @@ final class CorpusHeapsState(stateDir: String) {
       .unionByName(toks.groupBy(col("tok")).agg(min(col("doc_id")).as("doc_id")))
       .groupBy(col("tok")).agg(min(col("doc_id")).as("doc_id"))
     StreamUtil.inParallel(
-      () => StreamUtil.writeSharded(mergedPerDoc, s"$stateDir/v$batchId/perdoc", Seq("doc_id")),
-      () => StreamUtil.writeSharded(mergedTokFirst, s"$stateDir/v$batchId/tokfirst", Seq("tok")))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+      () => StreamUtil.writeSharded(mergedPerDoc, state.at(batchId, "perdoc"), Seq("doc_id")),
+      () => StreamUtil.writeSharded(mergedTokFirst, state.at(batchId, "tokfirst"), Seq("tok")))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -767,25 +634,18 @@ final class CorpusHeapsState(stateDir: String) {
   * per-batch counts, hash-sharded at |items| rows; report = the
   * batch Gini derivation over the same distributed rank. */
 final class ItemEngagementState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "item BIGINT, cnt BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "item BIGINT, cnt BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     // IDENTICAL extraction to the batch path (shared helper).
     val partial = graft.operators.Behavior.itemEngagementCounts(batch.toDF())
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("item")).agg(sum(col("cnt")).as("cnt"))
-    StreamUtil.writeSharded(merged, s"$stateDir/v$batchId", Seq("item"))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeSharded(merged, state.at(batchId), Seq("item"))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -1392,17 +1252,13 @@ object ProfileStreams {
   * [[graft.operators.TextOps.piiDensityFromCounts]] (parity by
   * shared code). Versioned-parquet + replay-guard discipline. */
 final class PiiSourceState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "source STRING, docs BIGINT, pii_docs BIGINT, n_emails BIGINT, " +
-          "n_phones BIGINT, n_ips BIGINT, n_chars BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "source STRING, docs BIGINT, pii_docs BIGINT, n_emails BIGINT, " +
+    "n_phones BIGINT, n_ips BIGINT, n_chars BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = graft.operators.TextOps.piiDensityCounts(batch.toDF())
     val merged = prior(spark).unionByName(partial)
@@ -1410,10 +1266,7 @@ final class PiiSourceState(stateDir: String) {
       .agg(sum(col("docs")).as("docs"), sum(col("pii_docs")).as("pii_docs"),
         sum(col("n_emails")).as("n_emails"), sum(col("n_phones")).as("n_phones"),
         sum(col("n_ips")).as("n_ips"), sum(col("n_chars")).as("n_chars"))
-    StreamUtil.writeGrid(merged, s"$stateDir/v$batchId")
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -1424,25 +1277,21 @@ final class PiiSourceState(stateDir: String) {
   * [[graft.operators.VectorOps.decontaminateSemanticVerdicts]]'s
   * twin. Each corpus vector arrives in exactly one micro-batch and
   * its verdict depends only on the (broadcast) eval side, so each
-  * batch APPENDS its own verdict delta ([[StreamUtil.writeDelta]] —
-  * the verdict table grows with the corpus; rewriting the
-  * accumulation per batch would be quadratic write volume) and a
-  * replayed batch overwrites its own delta dir. */
+  * batch APPENDS its own verdict delta (the delta-append layout of
+  * [[StreamUtil.VersionedState]] — the verdict table grows with the
+  * corpus; rewriting the accumulation per batch would be quadratic
+  * write volume). */
 final class SemanticVerdictState(stateDir: String, dir: String, nEval: Int) {
-  @volatile private var version: Long = StreamUtil.latestDelta(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir, Seq(""))
 
-  private def prior(spark: SparkSession): DataFrame =
-    StreamUtil.readDeltas(spark, stateDir,
-      "vec_id BIGINT, nearest_eval_id BIGINT, max_cosine DOUBLE, is_kept BOOLEAN",
-      version)
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "vec_id BIGINT, nearest_eval_id BIGINT, max_cosine DOUBLE, is_kept BOOLEAN")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val verdicts = graft.operators.VectorOps.decontaminateSemanticVerdicts(
       graft.operators.VectorOps.evalSide(spark, dir, nEval), batch.toDF())
-    StreamUtil.writeDelta(verdicts, stateDir, batchId, Seq("vec_id"))
-    version = batchId
+    StreamUtil.writeSharded(verdicts, state.at(batchId), Seq("vec_id"))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -1460,18 +1309,15 @@ final class SemanticVerdictState(stateDir: String, dir: String, nEval: Int) {
   * at ingest would be scored against a stale target model (the same
   * final-center argument as the conformal state). */
 final class DsirGridState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestDelta(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir, Seq(""))
 
-  private def prior(spark: SparkSession): DataFrame =
-    StreamUtil.readDeltas(spark, stateDir,
-      "doc_id BIGINT, lang STRING, bucket BIGINT, c BIGINT", version)
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "doc_id BIGINT, lang STRING, bucket BIGINT, c BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
-    StreamUtil.writeDelta(
-      graft.operators.CorpusQa.dsirDocBuckets(batch.toDF()), stateDir, batchId,
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
+    StreamUtil.writeSharded(
+      graft.operators.CorpusQa.dsirDocBuckets(batch.toDF()), state.at(batchId),
       Seq("doc_id"))
-    version = batchId
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -1486,34 +1332,26 @@ final class DsirGridState(stateDir: String) {
   * both the output AND the target/proposal models — the same
   * final-center argument as the append-only face, now also
   * retraction-correct (a weight scored against LMs that still count
-  * dead docs would silently bias the mixture). Replay guard = MIN
-  * over both delta stores (the [[HybridIndexState]] rule). */
+  * dead docs would silently bias the mixture). */
 final class DsirTombstoneState(stateDir: String) {
-  StreamUtil.recoverCompaction(stateDir, Seq("grid", "tomb"))
-  @volatile private var version: Long = math.min(
-    StreamUtil.latestDelta(s"$stateDir/grid"),
-    StreamUtil.latestDelta(s"$stateDir/tomb"))
+  private val state = new StreamUtil.VersionedState(stateDir, Seq("grid", "tomb"))
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val df = batch.toDF()
-    // grid ∥ tomb (guide §2.6): MIN-over-both replay guard, so a
-    // partial commit replays — the independent jobs can overlap.
+    // grid ∥ tomb (guide §2.6): independent jobs, so they overlap.
     StreamUtil.inParallel(
-      () => StreamUtil.writeDelta(
+      () => StreamUtil.writeSharded(
         graft.operators.CorpusQa.dsirDocBuckets(df.filter(col("op") === "u").drop("op")),
-        s"$stateDir/grid", batchId, Seq("doc_id")),
-      () => StreamUtil.writeDelta(
+        state.at(batchId, "grid"), Seq("doc_id")),
+      () => StreamUtil.writeSharded(
         df.filter(col("op") === "d").select(col("doc_id")).distinct(),
-        s"$stateDir/tomb", batchId, Seq("doc_id")))
-    version = batchId
+        state.at(batchId, "tomb"), Seq("doc_id")))
   }
 
   def report(spark: SparkSession): DataFrame = {
-    val tomb = StreamUtil.readDeltas(spark, s"$stateDir/tomb", "doc_id BIGINT", version)
+    val tomb = state.prior(spark, "doc_id BIGINT", "tomb")
     graft.operators.CorpusQa.dsirFromDocBuckets(
-      StreamUtil.readDeltas(spark, s"$stateDir/grid",
-        "doc_id BIGINT, lang STRING, bucket BIGINT, c BIGINT", version)
+      state.prior(spark, "doc_id BIGINT, lang STRING, bucket BIGINT, c BIGINT", "grid")
         .join(tomb, Seq("doc_id"), "left_anti"))
   }
 
@@ -1523,14 +1361,13 @@ final class DsirTombstoneState(stateDir: String) {
     * boundary, the tombstone store truncates. Same
     * delete-wins-within-horizon retention contract. */
   def compact(spark: SparkSession): Unit =
-    StreamUtil.compactDeltas(stateDir, version, compactionStores(spark))
+    state.compact(compactionStores(spark))
 
   private[graft] def compactionStores(
       spark: SparkSession): Seq[(String, DataFrame, Seq[String])] = {
-    val tomb = StreamUtil.readDeltas(spark, s"$stateDir/tomb", "doc_id BIGINT", version)
+    val tomb = state.prior(spark, "doc_id BIGINT", "tomb")
     Seq(
-      ("grid", StreamUtil.readDeltas(spark, s"$stateDir/grid",
-        "doc_id BIGINT, lang STRING, bucket BIGINT, c BIGINT", version)
+      ("grid", state.prior(spark, "doc_id BIGINT, lang STRING, bucket BIGINT, c BIGINT", "grid")
         .join(tomb, Seq("doc_id"), "left_anti"), Seq("doc_id")),
       ("tomb", tomb.limit(0), Seq("doc_id")))
   }
@@ -1546,24 +1383,17 @@ final class DsirTombstoneState(stateDir: String) {
   * would lock in early-corpus rules (the stale-model argument, BPE
   * edition). */
 final class WordFreqState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "word STRING, cnt BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "word STRING, cnt BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = graft.operators.TextOps.wordFreqTransform(batch.toDF())
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("word")).agg(sum(col("cnt")).as("cnt"))
-    StreamUtil.writeGrid(merged, s"$stateDir/v$batchId")
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -1575,25 +1405,18 @@ final class WordFreqState(stateDir: String) {
   * counts are sums of sums; the user dimension makes the distinct-
   * user read idempotent). Report = the batch k-anonymity derivation. */
 final class AnonymityGridState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "event_type STRING, dow BIGINT, cents_bucket BIGINT, user_id BIGINT, c BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "event_type STRING, dow BIGINT, cents_bucket BIGINT, user_id BIGINT, c BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = graft.operators.Experiments.anonymityGrid(batch.toDF())
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("event_type"), col("dow"), col("cents_bucket"), col("user_id"))
       .agg(sum(col("c")).as("c"))
-    StreamUtil.writeGrid(merged, s"$stateDir/v$batchId")
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -1606,26 +1429,19 @@ final class AnonymityGridState(stateDir: String) {
   * every per-source bill derive at report time through
   * [[graft.operators.TextOps.bpeFertilityFromGrid]]. */
 final class SourceWordState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "source STRING, word STRING, c BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "source STRING, word STRING, c BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = batch.select(col("source"),
       explode(split(col("text"), " ")).as("word"))
       .groupBy(col("source"), col("word")).agg(count(lit(1)).as("c"))
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("source"), col("word")).agg(sum(col("c")).as("c"))
-    StreamUtil.writeGrid(merged, s"$stateDir/v$batchId")
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -1640,49 +1456,33 @@ final class SourceWordState(stateDir: String) {
   * derive from the accrued index through the batch operator's own
   * fusion core ([[graft.operators.VectorOps.hybridFromIndex]]).
   * Both stores are append-only because docs are immutable and
-  * batches id-disjoint (the corpus-scale append discipline).
-  * Replay guard = MIN over BOTH delta stores: the state writes two
-  * tables per batch (post, then emb), so guarding on either one
-  * alone inverts the delta layer's "guard written LAST" rule for
-  * the other — a crash between the two writeDelta calls would leave
-  * post/batch=N committed with no emb/batch=N, and a post-seeded
-  * guard would skip the replay, silently losing that batch's
-  * embeddings. min() makes an interrupted batch look uncommitted,
-  * so it replays into the idempotent mode-overwrite delta dirs. */
+  * batches id-disjoint (the corpus-scale append discipline). */
 final class HybridIndexState(stateDir: String, nQueries: Int) {
-  @volatile private var version: Long = math.min(
-    StreamUtil.latestDelta(s"$stateDir/post"),
-    StreamUtil.latestDelta(s"$stateDir/emb"))
+  private val state = new StreamUtil.VersionedState(stateDir, Seq("post", "emb"))
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val df = batch.toDF()
     // Null-tolerant halves: the staging full-outer-joins docs to
     // embeddings, so a doc with no embedding (null embedding) still
     // feeds the sparse index, and an embedding with no doc (null
     // text) still feeds the vector store — matching the batch
     // operator, which reads the two tables independently.
-    // post ∥ emb (guide §2.6): the MIN-over-stores replay guard makes
-    // any partial commit look uncommitted regardless of which write
-    // lands first, so the two independent jobs can overlap.
+    // post ∥ emb (guide §2.6): independent jobs, so they overlap.
     StreamUtil.inParallel(
-      () => StreamUtil.writeDelta(
+      () => StreamUtil.writeSharded(
         graft.operators.VectorOps.hybridPostings(
           df.filter(col("text").isNotNull).select(col("doc_id"), col("text"))),
-        s"$stateDir/post", batchId, Seq("doc_id")),
-      () => StreamUtil.writeDelta(
+        state.at(batchId, "post"), Seq("doc_id")),
+      () => StreamUtil.writeSharded(
         df.filter(col("embedding").isNotNull)
           .select(col("doc_id").as("vec_id"), col("embedding")),
-        s"$stateDir/emb", batchId, Seq("vec_id")))
-    version = batchId
+        state.at(batchId, "emb"), Seq("vec_id")))
   }
 
   def report(spark: SparkSession): DataFrame =
     graft.operators.VectorOps.hybridFromIndex(
-      StreamUtil.readDeltas(spark, s"$stateDir/post",
-        "doc_id BIGINT, dl BIGINT, term STRING, tf BIGINT", version),
-      StreamUtil.readDeltas(spark, s"$stateDir/emb",
-        "vec_id BIGINT, embedding ARRAY<FLOAT>", version),
+      state.prior(spark, "doc_id BIGINT, dl BIGINT, term STRING, tf BIGINT", "post"),
+      state.prior(spark, "vec_id BIGINT, embedding ARRAY<FLOAT>", "emb"),
       nQueries)
 }
 
@@ -1702,9 +1502,7 @@ final class HybridIndexState(stateDir: String, nQueries: Int) {
   * removes the doc no matter the arrival order, which keeps every
   * store order-free and idempotent — the same commutativity
   * discipline as the additive grids, and what makes crash-replay
-  * safe without sequence numbers. Replay guard = MIN over all THREE
-  * delta stores (the [[HybridIndexState]] rule): an interrupted
-  * batch looks uncommitted and replays into mode-overwrite dirs.
+  * safe without sequence numbers.
   *
   * Scale shape: the tombstone set is retraction-scale (≪ corpus);
   * the masks are doc_id equi-anti-joins against delta stores that
@@ -1713,41 +1511,33 @@ final class HybridIndexState(stateDir: String, nQueries: Int) {
   * set and truncates the tombstone store — the serving read is
   * unchanged either way. */
 final class HybridTombstoneState(stateDir: String, nQueries: Int) {
-  StreamUtil.recoverCompaction(stateDir, Seq("post", "emb", "tomb"))
-  @volatile private var version: Long = Seq("post", "emb", "tomb")
-    .map(t => StreamUtil.latestDelta(s"$stateDir/$t")).min
+  private val state = new StreamUtil.VersionedState(stateDir, Seq("post", "emb", "tomb"))
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val df = batch.toDF()
     val ups = df.filter(col("op") === "u")
-    // post ∥ emb ∥ tomb (guide §2.6): the MIN-over-all-three replay
-    // guard makes any partial commit look uncommitted, so the three
-    // independent jobs can overlap.
+    // post ∥ emb ∥ tomb (guide §2.6): independent jobs, so they
+    // overlap.
     StreamUtil.inParallel(
-      () => StreamUtil.writeDelta(
+      () => StreamUtil.writeSharded(
         graft.operators.VectorOps.hybridPostings(
           ups.filter(col("text").isNotNull).select(col("doc_id"), col("text"))),
-        s"$stateDir/post", batchId, Seq("doc_id")),
-      () => StreamUtil.writeDelta(
+        state.at(batchId, "post"), Seq("doc_id")),
+      () => StreamUtil.writeSharded(
         ups.filter(col("embedding").isNotNull)
           .select(col("doc_id").as("vec_id"), col("embedding")),
-        s"$stateDir/emb", batchId, Seq("vec_id")),
-      () => StreamUtil.writeDelta(
+        state.at(batchId, "emb"), Seq("vec_id")),
+      () => StreamUtil.writeSharded(
         df.filter(col("op") === "d").select(col("doc_id")).distinct(),
-        s"$stateDir/tomb", batchId, Seq("doc_id")))
-    version = batchId
+        state.at(batchId, "tomb"), Seq("doc_id")))
   }
 
   def report(spark: SparkSession): DataFrame = {
-    val tomb = StreamUtil.readDeltas(spark, s"$stateDir/tomb",
-      "doc_id BIGINT", version)
+    val tomb = state.prior(spark, "doc_id BIGINT", "tomb")
     graft.operators.VectorOps.hybridFromIndex(
-      StreamUtil.readDeltas(spark, s"$stateDir/post",
-        "doc_id BIGINT, dl BIGINT, term STRING, tf BIGINT", version)
+      state.prior(spark, "doc_id BIGINT, dl BIGINT, term STRING, tf BIGINT", "post")
         .join(tomb, Seq("doc_id"), "left_anti"),
-      StreamUtil.readDeltas(spark, s"$stateDir/emb",
-        "vec_id BIGINT, embedding ARRAY<FLOAT>", version)
+      state.prior(spark, "vec_id BIGINT, embedding ARRAY<FLOAT>", "emb")
         .join(tomb.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_anti"),
       nQueries)
   }
@@ -1760,17 +1550,15 @@ final class HybridTombstoneState(stateDir: String, nQueries: Int) {
     * queries stop scoring dead postings. Same
     * delete-wins-within-horizon retention contract. */
   def compact(spark: SparkSession): Unit =
-    StreamUtil.compactDeltas(stateDir, version, compactionStores(spark))
+    state.compact(compactionStores(spark))
 
   private[graft] def compactionStores(
       spark: SparkSession): Seq[(String, DataFrame, Seq[String])] = {
-    val tomb = StreamUtil.readDeltas(spark, s"$stateDir/tomb", "doc_id BIGINT", version)
+    val tomb = state.prior(spark, "doc_id BIGINT", "tomb")
     Seq(
-      ("post", StreamUtil.readDeltas(spark, s"$stateDir/post",
-        "doc_id BIGINT, dl BIGINT, term STRING, tf BIGINT", version)
+      ("post", state.prior(spark, "doc_id BIGINT, dl BIGINT, term STRING, tf BIGINT", "post")
         .join(tomb, Seq("doc_id"), "left_anti"), Seq("doc_id")),
-      ("emb", StreamUtil.readDeltas(spark, s"$stateDir/emb",
-        "vec_id BIGINT, embedding ARRAY<FLOAT>", version)
+      ("emb", state.prior(spark, "vec_id BIGINT, embedding ARRAY<FLOAT>", "emb")
         .join(tomb.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_anti"),
         Seq("vec_id")),
       ("tomb", tomb.limit(0), Seq("doc_id")))
@@ -1789,44 +1577,40 @@ final class HybridTombstoneState(stateDir: String, nQueries: Int) {
   * accrue, and the report runs the SAME min-label component election
   * as the batch path. Under id-disjoint batching the accrued pair
   * set equals the batch pair set, so drained ≡ batch (the parity
-  * spec's contract). Pairs written LAST as the commit guard. */
+  * spec's contract). */
 final class SemanticIvfState(stateDir: String, cents: Array[Float],
                              threshold: Double, nProbe: Int) {
-  @volatile private var version: Long = StreamUtil.latestDelta(s"$stateDir/pairs")
+  private val state = new StreamUtil.VersionedState(stateDir, Seq("probe", "pairs"))
 
   private def probeDdl = "vec_id BIGINT, embedding ARRAY<FLOAT>, pcell INT"
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     // Write the probe delta FIRST, then screen from the just-written
     // parquet: the pair join references the batch probe twice (batch ×
     // (seen ∪ batch)), so probing the in-flight plan recomputed the
-    // per-row centroid scan per reference. `pairs` stays the guard
-    // store written LAST — crash replay is unchanged.
+    // per-row centroid scan per reference.
     val batchProbe = graft.operators.VectorOps.ivfProbeRows(
       batch.toDF().select(col("vec_id"), col("embedding")), cents, nProbe)
-    StreamUtil.writeDelta(batchProbe, s"$stateDir/probe", batchId, Seq("vec_id"))
-    val seen = StreamUtil.readDeltas(spark, s"$stateDir/probe", probeDdl, version)
+    StreamUtil.writeSharded(batchProbe, state.at(batchId, "probe"), Seq("vec_id"))
+    val seen = state.prior(spark, probeDdl, "probe")
     val newPairs = graft.operators.VectorOps.ivfPairsIncremental(
-      StreamUtil.readDeltaAt(spark, s"$stateDir/probe", probeDdl, batchId),
+      StreamUtil.readDeltaAt(spark, state.at(batchId, "probe"), probeDdl),
       seen, threshold)
-    StreamUtil.writeDelta(newPairs, s"$stateDir/pairs", batchId, Seq("vec_a"))
-    version = batchId
+    StreamUtil.writeSharded(newPairs, state.at(batchId, "pairs"), Seq("vec_a"))
   }
 
   def report(spark: SparkSession): DataFrame = {
     // memo-registered so GraftCaches.clearAll releases the persisted
     // label table (the CorpusFilterStream.labelsCache discipline)
     val labels = SemanticIvfState.labelsCache
-      .getOrElseUpdate((spark, stateDir, version)) {
+      .getOrElseUpdate((spark, stateDir, state.version)) {
         graft.operators.Dedup.propagateMinLabels(spark,
-          StreamUtil.readDeltas(spark, s"$stateDir/pairs",
-            "vec_a BIGINT, vec_b BIGINT", version)
+          state.prior(spark, "vec_a BIGINT, vec_b BIGINT", "pairs")
             .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")),
           maxIters = 60, who = "streamSemanticIvf")
       }
-    StreamUtil.readDeltas(spark, s"$stateDir/probe", probeDdl, version)
+    state.prior(spark, probeDdl, "probe")
       .select(col("vec_id")).distinct()
       .join(labels.withColumnRenamed("node", "vec_id"), Seq("vec_id"), "left")
       .select(col("vec_id"), coalesce(col("lbl"), col("vec_id")).as("cluster_rep"))
@@ -1852,22 +1636,15 @@ object SemanticIvfState {
   * retrain-as-data-arrives quality/language filter.
   * Versioned-parquet + replay-guard discipline ([[CdcCompact]]). */
 final class NbLangState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def priorGrid(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "lang STRING, tok STRING, cnt BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version/grid")
+  private def priorGrid(spark: SparkSession): DataFrame = state.prior(spark,
+    "lang STRING, tok STRING, cnt BIGINT", "grid")
 
-  private def priorDocs(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "lang STRING, n_docs BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version/priors")
+  private def priorDocs(spark: SparkSession): DataFrame = state.prior(spark,
+    "lang STRING, n_docs BIGINT", "priors")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val (pGrid, pPriors) = graft.operators.CorpusQa.nbTrainCounts(batch.toDF())
     val grid = priorGrid(spark).unionByName(pGrid)
@@ -1877,11 +1654,8 @@ final class NbLangState(stateDir: String) {
     // Independent sub-store writes overlap (guide §2.6); the version
     // bump still happens only after both have committed.
     StreamUtil.inParallel(
-      () => StreamUtil.writeSharded(grid, s"$stateDir/v$batchId/grid", Seq("lang", "tok")),
-      () => StreamUtil.writeGrid(priors, s"$stateDir/v$batchId/priors"))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+      () => StreamUtil.writeSharded(grid, state.at(batchId, "grid"), Seq("lang", "tok")),
+      () => StreamUtil.writeGrid(priors, state.at(batchId, "priors")))
   }
 
   /** Evaluation face: confusion matrix of the trained model over the

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 import graft.operators.Sequences
 
@@ -27,16 +26,12 @@ import graft.operators.Sequences
   */
 final class DfaState(stateDir: String, step: (Column, Column) => Column,
                      shift: Int, outCol: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "user_id BIGINT, acc BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "user_id BIGINT, acc BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = Sequences.codedEvents(batch)
       .groupBy(col("user_id"))
@@ -48,10 +43,7 @@ final class DfaState(stateDir: String, step: (Column, Column) => Column,
           coalesce(col("codes"), lit(Array.empty[Long])),
           coalesce(col("acc"), lit(0L)),
           step).as("acc"))
-    StreamUtil.writeSharded(merged, s"$stateDir/v$batchId", Seq("user_id"))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeSharded(merged, state.at(batchId), Seq("user_id"))
   }
 
   /** Same histogram shape (and oracle) as the batch twin. */

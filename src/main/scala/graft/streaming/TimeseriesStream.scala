@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Streaming twins for the [[graft.operators.Timeseries]] family —
   * three more members of the state-merge family, each keeping the
@@ -26,26 +25,19 @@ import org.apache.spark.sql.types.StructType
   * discipline ([[CdcCompact]]).
   */
 final class TypeDailyCountState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "event_type STRING, day TIMESTAMP, x BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "event_type STRING, day TIMESTAMP, x BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = batch
       .select(col("event_type"), date_trunc("day", col("ts")).as("day"))
       .groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("x"))
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("event_type"), col("day")).agg(sum(col("x")).as("x"))
-    StreamUtil.writeGrid(merged, s"$stateDir/v$batchId")
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -158,16 +150,12 @@ final class TypeDailyCountState(stateDir: String) {
   * that back-dates an item's launch re-dates every share correctly
   * at read time (a per-batch "first seen" would be wrong forever). */
 final class ItemDayCountState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "item BIGINT, day TIMESTAMP, n BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "item BIGINT, day TIMESTAMP, n BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = batch
       .select(get_json_object(col("props"), "$.k").cast("long").as("item"),
@@ -176,10 +164,7 @@ final class ItemDayCountState(stateDir: String) {
       .groupBy(col("item"), col("day")).agg(count(lit(1)).as("n"))
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("item"), col("day")).agg(sum(col("n")).as("n"))
-    StreamUtil.writeSharded(merged, s"$stateDir/v$batchId", Seq("item", "day"))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeSharded(merged, state.at(batchId), Seq("item", "day"))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -193,16 +178,12 @@ final class ItemDayCountState(stateDir: String) {
 }
 
 final class DailyVolRevState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def prior(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "day TIMESTAMP, x BIGINT, y BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version")
+  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+    "day TIMESTAMP, x BIGINT, y BIGINT")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = batch
       .select(date_trunc("day", col("ts")).as("day"),
@@ -211,10 +192,7 @@ final class DailyVolRevState(stateDir: String) {
       .agg(count(lit(1)).as("x"), sum(col("cents")).as("y"))
     val merged = prior(spark).unionByName(partial)
       .groupBy(col("day")).agg(sum(col("x")).as("x"), sum(col("y")).as("y"))
-    StreamUtil.writeGrid(merged, s"$stateDir/v$batchId")
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -227,22 +205,15 @@ final class DailyVolRevState(stateDir: String) {
 }
 
 final class SurvivalState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def priorUsers(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "user_id BIGINT, v_day TIMESTAMP, any_p TIMESTAMP"))
-    else spark.read.parquet(s"$stateDir/v$version/users")
+  private def priorUsers(spark: SparkSession): DataFrame = state.prior(spark,
+    "user_id BIGINT, v_day TIMESTAMP, any_p TIMESTAMP", "users")
 
-  private def priorHorizon(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "h TIMESTAMP"))
-    else spark.read.parquet(s"$stateDir/v$version/horizon")
+  private def priorHorizon(spark: SparkSession): DataFrame = state.prior(spark,
+    "h TIMESTAMP", "horizon")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val partial = batch
       .select(col("user_id"), col("event_type"), date_trunc("day", col("ts")).as("day"))
@@ -261,11 +232,8 @@ final class SurvivalState(stateDir: String) {
     // Independent sub-store writes overlap (guide §2.6); the version
     // bump still happens only after both have committed.
     StreamUtil.inParallel(
-      () => StreamUtil.writeSharded(users, s"$stateDir/v$batchId/users", Seq("user_id")),
-      () => StreamUtil.writeGrid(horizon, s"$stateDir/v$batchId/horizon"))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+      () => StreamUtil.writeSharded(users, state.at(batchId, "users"), Seq("user_id")),
+      () => StreamUtil.writeGrid(horizon, state.at(batchId, "horizon")))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -287,22 +255,15 @@ final class SurvivalState(stateDir: String) {
   * the EARLIER event's day with the earlier event's value, the batch
   * lead-gap semantics. Report via the shared `twaFromDaily`. */
 final class TwaState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def priorDaily(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "day TIMESTAMP, n_intervals BIGINT, cw DECIMAL(38,0), sw DECIMAL(38,0)"))
-    else spark.read.parquet(s"$stateDir/v$version/daily")
+  private def priorDaily(spark: SparkSession): DataFrame = state.prior(spark,
+    "day TIMESTAMP, n_intervals BIGINT, cw DECIMAL(38,0), sw DECIMAL(38,0)", "daily")
 
-  private def priorLast(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "user_id BIGINT, p_ts TIMESTAMP, p_eid BIGINT, p_cents BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version/last")
+  private def priorLast(spark: SparkSession): DataFrame = state.prior(spark,
+    "user_id BIGINT, p_ts TIMESTAMP, p_eid BIGINT, p_cents BIGINT", "last")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
@@ -344,11 +305,8 @@ final class TwaState(stateDir: String) {
       .select(col("user_id"), col("s.ts").as("p_ts"),
         col("s.eid").as("p_eid"), col("s.c").as("p_cents"))
     StreamUtil.inParallel(
-      () => StreamUtil.writeGrid(daily, s"$stateDir/v$batchId/daily"),
-      () => StreamUtil.writeSharded(last, s"$stateDir/v$batchId/last", Seq("user_id")))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+      () => StreamUtil.writeGrid(daily, state.at(batchId, "daily")),
+      () => StreamUtil.writeSharded(last, state.at(batchId, "last"), Seq("user_id")))
   }
 
   def report(spark: SparkSession): DataFrame =

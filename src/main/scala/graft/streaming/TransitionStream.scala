@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Streaming twins for the per-user-order family that [[graft
   * .operators.Behavior.transitionsTransform]] heads, plus the EXACT
@@ -26,22 +25,15 @@ import org.apache.spark.sql.types.StructType
   * discipline of [[CdcCompact]] (idempotent under crash replay).
   */
 final class TransitionState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def priorPairs(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "prev_type STRING, curr_type STRING, n BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version/pairs")
+  private def priorPairs(spark: SparkSession): DataFrame = state.prior(spark,
+    "prev_type STRING, curr_type STRING, n BIGINT", "pairs")
 
-  private def priorLast(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "user_id BIGINT, p_ts TIMESTAMP, p_eid BIGINT, p_type STRING"))
-    else spark.read.parquet(s"$stateDir/v$version/last")
+  private def priorLast(spark: SparkSession): DataFrame = state.prior(spark,
+    "user_id BIGINT, p_ts TIMESTAMP, p_eid BIGINT, p_type STRING", "last")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val b = batch.select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
@@ -77,11 +69,8 @@ final class TransitionState(stateDir: String) {
     // bump (and prior-version delete) still happens only after BOTH
     // have committed, so recovery semantics are unchanged.
     StreamUtil.inParallel(
-      () => StreamUtil.writeGrid(pairs, s"$stateDir/v$batchId/pairs"),
-      () => StreamUtil.writeSharded(last, s"$stateDir/v$batchId/last", Seq("user_id")))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+      () => StreamUtil.writeGrid(pairs, state.at(batchId, "pairs")),
+      () => StreamUtil.writeSharded(last, state.at(batchId, "last"), Seq("user_id")))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -121,22 +110,15 @@ final class TransitionState(stateDir: String) {
   * rows — the honest cost of exactness; the sketch twin is the
   * constant-memory 100 TB default. */
 final class DistinctDailyState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def priorPairs(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "day TIMESTAMP, user_id BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version/pairs")
+  private def priorPairs(spark: SparkSession): DataFrame = state.prior(spark,
+    "day TIMESTAMP, user_id BIGINT", "pairs")
 
-  private def priorCounts(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "day TIMESTAMP, n_events BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version/counts")
+  private def priorCounts(spark: SparkSession): DataFrame = state.prior(spark,
+    "day TIMESTAMP, n_events BIGINT", "counts")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val days = batch.select(date_trunc("day", col("ts")).as("day"), col("user_id"))
     // one distinct over the union, not distinct-union-distinct: the
@@ -148,11 +130,8 @@ final class DistinctDailyState(stateDir: String) {
       .unionByName(days.groupBy(col("day")).agg(count(lit(1)).as("n_events")))
       .groupBy(col("day")).agg(sum(col("n_events")).as("n_events"))
     StreamUtil.inParallel(
-      () => StreamUtil.writeGrid(pairs, s"$stateDir/v$batchId/pairs"),
-      () => StreamUtil.writeGrid(counts, s"$stateDir/v$batchId/counts"))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+      () => StreamUtil.writeGrid(pairs, state.at(batchId, "pairs")),
+      () => StreamUtil.writeGrid(counts, state.at(batchId, "counts")))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -187,22 +166,15 @@ final class DistinctDailyState(stateDir: String) {
   * `bucketizeGapUs`), so stream ≡ batch by construction under
   * time-ordered replay. */
 final class IntereventState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def priorBuckets(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "bucket BIGINT, n_gaps BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version/buckets")
+  private def priorBuckets(spark: SparkSession): DataFrame = state.prior(spark,
+    "bucket BIGINT, n_gaps BIGINT", "buckets")
 
-  private def priorLast(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "user_id BIGINT, p_ts TIMESTAMP, p_eid BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version/last")
+  private def priorLast(spark: SparkSession): DataFrame = state.prior(spark,
+    "user_id BIGINT, p_ts TIMESTAMP, p_eid BIGINT", "last")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val b = batch.select(col("user_id"), col("ts"), col("event_id"))
@@ -228,11 +200,8 @@ final class IntereventState(stateDir: String) {
           .otherwise(pS).as("s"))
       .select(col("user_id"), col("s.ts").as("p_ts"), col("s.eid").as("p_eid"))
     StreamUtil.inParallel(
-      () => StreamUtil.writeGrid(buckets, s"$stateDir/v$batchId/buckets"),
-      () => StreamUtil.writeSharded(last, s"$stateDir/v$batchId/last", Seq("user_id")))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+      () => StreamUtil.writeGrid(buckets, state.at(batchId, "buckets")),
+      () => StreamUtil.writeSharded(last, state.at(batchId, "last"), Seq("user_id")))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -256,23 +225,16 @@ final class IntereventState(stateDir: String) {
   * DistinctDailyState class); a watermark would bound it by closing
   * frontiers past the horizon. */
 final class PeakSessionState(stateDir: String, gapMinutes: Int = 30) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
   private val gapUs = gapMinutes * 60L * 1000000L
 
-  private def priorClosed(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "s_ts TIMESTAMP, e_ts TIMESTAMP"))
-    else spark.read.parquet(s"$stateDir/v$version/closed")
+  private def priorClosed(spark: SparkSession): DataFrame = state.prior(spark,
+    "s_ts TIMESTAMP, e_ts TIMESTAMP", "closed")
 
-  private def priorOpen(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "user_id BIGINT, o_sts TIMESTAMP, o_lts TIMESTAMP"))
-    else spark.read.parquet(s"$stateDir/v$version/open")
+  private def priorOpen(spark: SparkSession): DataFrame = state.prior(spark,
+    "user_id BIGINT, o_sts TIMESTAMP, o_lts TIMESTAMP", "open")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val sess = graft.operators.Retention.sessionIntervals(batch, gapMinutes)
     val w = Window.partitionBy(col("user_id")).orderBy(col("s_ts"))
@@ -298,11 +260,8 @@ final class PeakSessionState(stateDir: String, gapMinutes: Int = 30) {
       .join(sess.select(col("user_id")).distinct(), Seq("user_id"), "left_anti")
     val open = openKept.unionByName(openBatch)
     StreamUtil.inParallel(
-      () => StreamUtil.writeSharded(closed, s"$stateDir/v$batchId/closed", Seq("s_ts")),
-      () => StreamUtil.writeSharded(open, s"$stateDir/v$batchId/open", Seq("user_id")))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+      () => StreamUtil.writeSharded(closed, state.at(batchId, "closed"), Seq("s_ts")),
+      () => StreamUtil.writeSharded(open, state.at(batchId, "open"), Seq("user_id")))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -330,28 +289,18 @@ final class PeakSessionState(stateDir: String, gapMinutes: Int = 30) {
   * [[graft.operators.Graph.sccFromEdges]], so the coloring/peeling
   * derivation is shared code. */
 final class ItemEdgeState(stateDir: String) {
-  @volatile private var version: Long = StreamUtil.latestVersion(stateDir)
+  private val state = new StreamUtil.VersionedState(stateDir)
 
-  private def priorEdges(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "a BIGINT, b BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version/edges")
+  private def priorEdges(spark: SparkSession): DataFrame = state.prior(spark,
+    "a BIGINT, b BIGINT", "edges")
 
-  private def priorItems(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "item BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version/items")
+  private def priorItems(spark: SparkSession): DataFrame = state.prior(spark,
+    "item BIGINT", "items")
 
-  private def priorLast(spark: SparkSession): DataFrame =
-    if (version < 0)
-      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(
-        "user_id BIGINT, p_ts TIMESTAMP, p_eid BIGINT, p_item BIGINT"))
-    else spark.read.parquet(s"$stateDir/v$version/last")
+  private def priorLast(spark: SparkSession): DataFrame = state.prior(spark,
+    "user_id BIGINT, p_ts TIMESTAMP, p_eid BIGINT, p_item BIGINT", "last")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = {
-    if (batchId <= version) return
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     // null-item events are transparent (the batch operator filters
@@ -385,12 +334,9 @@ final class ItemEdgeState(stateDir: String) {
       .select(col("user_id"), col("s.ts").as("p_ts"),
         col("s.eid").as("p_eid"), col("s.it").as("p_item"))
     StreamUtil.inParallel(
-      () => StreamUtil.writeGrid(edges, s"$stateDir/v$batchId/edges"),
-      () => StreamUtil.writeGrid(items, s"$stateDir/v$batchId/items"),
-      () => StreamUtil.writeSharded(last, s"$stateDir/v$batchId/last", Seq("user_id")))
-    val prev = version
-    version = batchId
-    if (prev >= 0) StreamUtil.delete(spark, s"$stateDir/v$prev")
+      () => StreamUtil.writeGrid(edges, state.at(batchId, "edges")),
+      () => StreamUtil.writeGrid(items, state.at(batchId, "items")),
+      () => StreamUtil.writeSharded(last, state.at(batchId, "last"), Seq("user_id")))
   }
 
   def report(spark: SparkSession): DataFrame =

@@ -23,9 +23,8 @@ class BatchOperatorsSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAl
   }
 
   test("every declared query runs and returns rows") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val df = fn(spark, sf)
-      assert(df.count() > 0, s"query $name returned no rows")
+    QuerySweep.entries.foreach { e =>
+      assert(e.rows > 0, s"query ${e.name} returned no rows")
     }
   }
 

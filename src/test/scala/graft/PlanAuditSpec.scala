@@ -31,12 +31,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * streaming entries' micro-batch replays (their functions run the
   * stream and return the batch result table) — the audit then checks
   * the batch plan those entries hand back, which is exactly the plan
-  * a downstream consumer runs against the sink table.
+  * a downstream consumer runs against the sink table. The calls are
+  * made once per test JVM by [[QuerySweep]], shared with
+  * BatchOperatorsSpec's row gate.
   */
 class PlanAuditSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   override def afterAll(): Unit = GraftCaches.clearAll()
 
-  import TestSession._
 
   /** Queries whose BNLJ build side is intentionally more than one
     * row but BOUNDED by construction — each bound is a parameter or
@@ -125,9 +126,9 @@ class PlanAuditSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     import org.apache.spark.sql.execution.window.WindowExec
     val offenders = scala.collection.mutable.ListBuffer.empty[String]
     val sawAllowlisted = scala.collection.mutable.Set.empty[String]
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val plan = fn(spark, sf).queryExecution.sparkPlan
-      plan.collectWithSubqueries {
+    QuerySweep.entries.foreach { e =>
+      val name = e.name
+      e.plan.collectWithSubqueries {
         case w: WindowExec if w.partitionSpec.isEmpty =>
           // Per-BRANCH bounding walk (round-10 advice: the old
           // pre-order headOption saw only the LEFTMOST bound, so a
@@ -185,9 +186,9 @@ class PlanAuditSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   test("no CartesianProduct and no wide BroadcastNestedLoopJoin in any query plan") {
     val offenders = scala.collection.mutable.ListBuffer.empty[String]
     val sawAllowlistedBnlj = scala.collection.mutable.Set.empty[String]
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val plan = fn(spark, sf).queryExecution.sparkPlan
-      plan.collectWithSubqueries {
+    QuerySweep.entries.foreach { e =>
+      val name = e.name
+      e.plan.collectWithSubqueries {
         case c: CartesianProductExec =>
           offenders += s"$name: CartesianProduct\n${c.simpleString(3)}"
         case b: BroadcastNestedLoopJoinExec =>

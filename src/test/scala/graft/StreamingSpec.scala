@@ -1051,9 +1051,11 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     * instance die), reveal the rest, restart with a FRESH operator
     * instance on the same state/checkpoint dirs, drain, and hand back
     * the final report. Proves (a) the checkpoint's file log skips
-    * already-processed files, (b) `StreamUtil.latestVersion` recovery
-    * gives the new instance the old high-water mark, so replayed
-    * batch ids are no-ops — together: exactly-once across a restart. */
+    * already-processed files, (b) `StreamUtil.VersionedState`
+    * recovery gives the new instance the last committed version as
+    * its high-water mark, so replayed batch ids are no-ops — together:
+    * exactly-once across a restart (for a restart between batches;
+    * the crash-injection specs below cover a crash inside one). */
   private def resumeAcrossRestart(
       prefix: String, timeOrdered: Boolean,
       mkMerge: String => (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit)
@@ -1561,5 +1563,182 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     val resumed = new MarkovAttrState(s"$work/state")
     resumed.merge(batch((1L, 7L, "2024-01-03 10:00:00", "view")), 2)
     assert(report(resumed) == want)
+  }
+
+  // --- crash injection: a state write killed at any instant ---
+
+  /** A committed version dir's commit marker, as the helper writes it. */
+  private def marked(dir: String): Boolean = new java.io.File(dir, "_COMMIT").exists()
+
+  /** What a killed driver leaves in a version dir it had started:
+    * only the output committer's `_temporary/` tree. */
+  private def plantTemporaryOnly(dir: String): Unit = {
+    val t = new java.io.File(s"$dir/_temporary/0/_temporary/attempt_0")
+    assert(t.mkdirs())
+    assert(new java.io.File(t, "part-00000.snappy.parquet").createNewFile())
+  }
+
+  /** Copies the version dir `from` to `to`, by default minus its
+    * commit marker: a store write that had fully landed when the
+    * driver died before committing it. */
+  private def copyVersion(from: String, to: String, marker: Boolean = false): Unit = {
+    import java.nio.file.{Files => JFiles, Paths}
+    JFiles.createDirectories(Paths.get(to))
+    new java.io.File(from).listFiles()
+      .filter(f => marker || !f.getName.contains("_COMMIT"))
+      .foreach(f => JFiles.copy(f.toPath, Paths.get(to, f.getName)))
+  }
+
+  test("versioned state helper: crashed writes in both layouts recover to the last commit and replay") {
+    import org.apache.spark.sql.functions.col
+    import graft.streaming.StreamUtil
+    import spark.implicits._
+    val work = GraftCaches.trackTempDir("graft_crash_helper_")
+    val ddl = "k BIGINT, n BIGINT"
+    def part(b: Long) = Seq((b, b + 1), (b + 10, 2 * b + 1)).toDF("k", "n")
+    /** A two-store accumulation, in either layout: `a` holds each
+      * batch's rows, `b` their doubled counts. */
+    final class TwoStore(dir: String, delta: Boolean) {
+      val st = new StreamUtil.VersionedState(dir, if (delta) Seq("a", "b") else Nil)
+      def merge(b: Long): Unit = st.commit(b) {
+        // a rewrite carries the prior version forward; a delta holds
+        // only the batch's own rows
+        def next(df: org.apache.spark.sql.DataFrame, s: String) =
+          if (delta) df else st.prior(spark, ddl, s).unionByName(df)
+        StreamUtil.writeGrid(next(part(b), "a"), st.at(b, "a"))
+        StreamUtil.writeGrid(
+          next(part(b).select(col("k"), (col("n") * 2).as("n")), "b"), st.at(b, "b"))
+      }
+      def report: Seq[(Long, Long)] = Seq("a", "b").flatMap(s =>
+        st.prior(spark, ddl, s).orderBy("k").as[(Long, Long)].collect().toSeq)
+    }
+    for (delta <- Seq(false, true)) {
+      val clean = new TwoStore(s"$work/clean_$delta", delta)
+      (0L to 3L).foreach(clean.merge)
+      val want = clean.report
+      assert(want.size == 16)
+      val dir = s"$work/crash_$delta"
+      val st = new TwoStore(dir, delta)
+      st.merge(0); st.merge(1)
+      // batch 2 dies mid-commit: the write of `a` lands, then the
+      // body fails — the helper names the state dir and batch
+      val err = intercept[java.io.IOException](st.st.commit(2) {
+        StreamUtil.writeGrid(part(2), st.st.at(2, "a"))
+        throw new IllegalStateException("executor lost")
+      })
+      assert(err.getMessage.contains(dir) && err.getMessage.contains("batch 2"), err.getMessage)
+      assert(err.getCause.getMessage == "executor lost")
+      assert(st.st.version == 1L)
+      // and planted on top of it: a `_temporary`-only store dir of
+      // the same batch (rewrite: `v2/b`; delta: `b/batch=2`)
+      plantTemporaryOnly(st.st.at(2, "b"))
+      val restarted = new TwoStore(dir, delta)
+      assert(restarted.st.version == 1L)
+      Seq("a", "b").foreach(s => assert(!new java.io.File(restarted.st.at(2, s)).exists()))
+      (2L to 3L).foreach(restarted.merge)
+      restarted.merge(1) // a replay at or below the commit is a no-op
+      assert(restarted.report == want, s"delta=$delta")
+      if (!delta) assert(new java.io.File(dir).list().sorted.toSeq == Seq("v3"))
+    }
+    // a rewrite-layout `v<N>` holding data files but no marker
+    val single = s"$work/single"
+    def sum(st: StreamUtil.VersionedState, b: Long): Unit = st.commit(b) {
+      StreamUtil.writeGrid(st.prior(spark, ddl).unionByName(part(b))
+        .groupBy("k").sum("n").toDF("k", "n"), st.at(b))
+    }
+    val ref = new StreamUtil.VersionedState(s"$work/single_ref")
+    (0L to 2L).foreach(sum(ref, _))
+    val s1 = new StreamUtil.VersionedState(single)
+    sum(s1, 0)
+    copyVersion(ref.at(2), s1.at(1)) // wrong rows, well-formed parquet
+    val s2 = new StreamUtil.VersionedState(single)
+    assert(s2.version == 0L)
+    (1L to 2L).foreach(sum(s2, _))
+    assert(s2.prior(spark, ddl).orderBy("k").collect().toSeq ==
+      ref.prior(spark, ddl).orderBy("k").collect().toSeq)
+  }
+
+  test("crash injection: leaderboard state recovers a _temporary-only version and replays the batch") {
+    import graft.streaming.EngagementStream.LeaderboardState
+    import spark.implicits._
+    val work = GraftCaches.trackTempDir("graft_crash_lb_")
+    val b0 = Seq((1L, 2.5), (2L, 1.0), (1L, 0.5)).toDF("user_id", "value")
+    val b1 = Seq((2L, 4.0), (3L, 1.5)).toDF("user_id", "value")
+    val clean = new LeaderboardState(s"$work/clean")
+    clean.merge(b0, 0); clean.merge(b1, 1)
+    val want = clean.topN(spark).collect().toSeq
+    assert(want.size == 3)
+    val lb = new LeaderboardState(s"$work/crash")
+    lb.merge(b0, 0)
+    // batch 1's scoreboard write killed: v1 holds only `_temporary/`
+    plantTemporaryOnly(s"$work/crash/v1")
+    val restarted = new LeaderboardState(s"$work/crash")
+    restarted.merge(b1, 1)
+    assert(restarted.topN(spark).collect().toSeq == want)
+    assert(marked(s"$work/crash/v1") && !new java.io.File(s"$work/crash/v0").exists())
+  }
+
+  test("crash injection: CDC compaction with deletes drops an unmarked version and re-merges") {
+    import org.apache.spark.sql.functions.{col, to_timestamp}
+    import graft.streaming.CdcCompact
+    import spark.implicits._
+    val work = GraftCaches.trackTempDir("graft_crash_cdc_")
+    def batch(rows: (Long, Long, String, String, Double, String)*) =
+      rows.toSeq.toDF("user_id", "event_id", "tss", "event_type", "value", "op")
+        .withColumn("ts", to_timestamp(col("tss"))).drop("tss")
+    val b0 = batch((1L, 1L, "2024-01-01 10:00:00", "view", 1.0, "upsert"),
+      (2L, 2L, "2024-01-01 10:01:00", "click", 2.0, "upsert"),
+      (3L, 3L, "2024-01-01 10:02:00", "view", 3.0, "upsert"))
+    val b1 = batch((2L, 4L, "2024-01-02 10:00:00", "error", 0.0, "delete"),
+      (3L, 5L, "2024-01-02 10:01:00", "purchase", 9.0, "upsert"),
+      (4L, 6L, "2024-01-02 10:02:00", "view", 1.0, "upsert"))
+    def live(c: CdcCompact) = c.live(spark).orderBy("user_id").collect().toSeq
+    val clean = new CdcCompact(s"$work/clean", extraCols = Seq("op"))
+    clean.merge(b0, 0); clean.merge(b1, 1)
+    val want = live(clean)
+    assert(want.map(_.getAs[Long]("user_id")) == Seq(1L, 3L, 4L))
+    val cdc = new CdcCompact(s"$work/crash", extraCols = Seq("op"))
+    cdc.merge(b0, 0)
+    // batch 1's v1 had its data files written — here the batch-0
+    // table's, a well-formed but wrong version — and no marker
+    copyVersion(s"$work/crash/v0", s"$work/crash/v1")
+    val restarted = new CdcCompact(s"$work/crash", extraCols = Seq("op"))
+    assert(restarted.committedVersion == 0L)
+    restarted.merge(b1, 1)
+    assert(restarted.committedVersion == 1L)
+    assert(live(restarted) == want)
+  }
+
+  test("crash injection: corpus filter state replays a batch whose meta delta was half-written") {
+    import org.apache.spark.sql.functions.{col, lit}
+    import graft.streaming.CorpusFilterState
+    import spark.implicits._
+    val work = GraftCaches.trackTempDir("graft_crash_cf_")
+    def docs(rows: (Long, String)*) =
+      rows.toSeq.toDF("doc_id", "text")
+        .select(col("doc_id"), col("text"), lit("en").as("lang"),
+          lit("s").as("source"), lit(0L).as("n_chars"))
+    val b0 = docs((1L, "a b c d"), (2L, "p q r s"))
+    val b1 = docs((5L, "b c d e"), (9L, "a b c d e"), (7L, "w x y z"))
+    def report(st: CorpusFilterState) =
+      st.report(spark, 0.0, Seq("en", "und")).orderBy("doc_id").collect().toSeq
+    val clean = new CorpusFilterState(s"$work/clean", threshold = 0.5)
+    clean.merge(b0, 0); clean.merge(b1, 1)
+    val want = report(clean)
+    assert(want.map(_.getAs[Long]("doc_id")) == Seq(1L, 2L, 5L, 7L, 9L))
+    val st = new CorpusFilterState(s"$work/crash", threshold = 0.5)
+    st.merge(b0, 0)
+    // batch 1: bands, sets and pairs landed in full and the driver
+    // died while marking them (only bands got its marker); meta/batch=1
+    // was cut off after one doc's verdict
+    Seq("bands", "sets", "pairs").foreach(s => copyVersion(
+      s"$work/clean/$s/batch=1", s"$work/crash/$s/batch=1", marker = s == "bands"))
+    spark.read.parquet(s"$work/clean/meta/batch=1").filter(col("doc_id") === 5L)
+      .write.parquet(s"$work/crash/meta/batch=1")
+    val restarted = new CorpusFilterState(s"$work/crash", threshold = 0.5)
+    restarted.merge(b1, 1)
+    assert(report(restarted) == want)
+    Seq("bands", "sets", "pairs", "meta").foreach(s =>
+      assert(marked(s"$work/crash/$s/batch=1"), s))
   }
 }
