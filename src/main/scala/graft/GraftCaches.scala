@@ -3,13 +3,15 @@ package graft
 import scala.collection.concurrent.TrieMap
 
 /** Central registry for session-lifetime memoized state (persisted
-  * DataFrames, streaming fan-out temp dirs).
+  * DataFrames, drained streaming states and their temp dirs).
   *
   * Operators that feed both sides of a self-join materialize shared
   * tables (persist + eager count — see Dedup.sigTable's rationale)
   * and memoize them per (session, input) so downstream consumers
-  * (clustering over the pair list, routed counts over one streaming
-  * run) reuse the work. That is the right warehouse-scale design —
+  * (clustering over the pair list) reuse the work; every streaming
+  * state is drained once per (session, drain recipe) and shared by
+  * its report faces ([[graft.streaming.StreamUtil.drained]]). That
+  * is the right warehouse-scale design —
   * but the memoized blocks outlive the query that built them, which
   * contaminated the round-2 single-session bench (tail queries ran
   * 5-70x over their isolated times against a cache-full JVM).
@@ -18,7 +20,9 @@ import scala.collection.concurrent.TrieMap
   * one [[clearAll]] call releases everything: the bench calls it
   * between queries, specs call it after suites. Temp directories
   * created for streaming replays register through [[trackTempDir]]
-  * and are deleted on the same hook.
+  * and are deleted on the same hook, together with the memo of the
+  * drained states that live in them — so the first face called after
+  * a clear drains again instead of reading a deleted dir.
   */
 object GraftCaches {
 

@@ -106,15 +106,10 @@ object AttributionStream {
     * attribution state machine (oracle: same SQL as
     * `attribution_last_touch`). */
   def streamAttribution(spark: SparkSession, dir: String, nFiles: Int = 4,
-                        lookback: String = "INTERVAL 7 DAYS"): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_attr_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new AttributionState(s"$work/state", lookback)
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.report(spark)
-  }
+                        lookback: String = "INTERVAL 7 DAYS"): DataFrame =
+    StreamUtil.drained(spark, "graft_attr_", dir, nFiles, lookback)(
+      StreamSources.timeOrdered(spark, dir, nFiles, _), new AttributionState(_, lookback))(
+      _.merge).report(spark)
 }
 
 /** Streaming Markov (removal-effect) attribution —
@@ -198,13 +193,8 @@ object MarkovAttrStream {
   /** Queries entry (oracle: same SQL as `markov_attribution`):
     * time-ordered replay through the incremental journey-chain state. */
   def streamMarkovAttribution(spark: SparkSession, dir: String,
-                              nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_smattr_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new MarkovAttrState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.report(spark)
-  }
+                              nFiles: Int = 4): DataFrame =
+    StreamUtil.drained(spark, "graft_smattr_", dir, nFiles)(
+      StreamSources.timeOrdered(spark, dir, nFiles, _), new MarkovAttrState(_))(_.merge)
+      .report(spark)
 }

@@ -174,15 +174,10 @@ object CdcCompact {
     * time-ordered replay. Repeated apply over ordered batches equals
     * the full-log rebuild (apply is associative on time-split
     * batches), so the oracle is `cdc_scd2`'s full-log SQL. */
-  def streamScd2(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_scd2_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new Scd2State(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.table(spark)
-  }
+  def streamScd2(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    StreamUtil.drained(spark, "graft_scd2_", dir, nFiles)(
+      StreamSources.timeOrdered(spark, dir, nFiles, _), new Scd2State(_))(_.merge)
+      .table(spark)
 }
 
 /** CDC compaction under ADDITIVE schema drift — the day-2 reality of

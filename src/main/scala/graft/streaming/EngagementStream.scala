@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{LongType, StructType}
@@ -22,8 +22,9 @@ import graft.sources.Tables
   * checks the streaming results against the batch DuckDB oracles.
   * Event-time + watermark replaces the reference's processing time
   * (deterministic, replayable); `foreachBatch` materializes each
-  * micro-batch once and feeds all three sinks from it, instead of
-  * running three independent streaming queries over the same input.
+  * micro-batch once ([[FanoutSinks]]) and feeds all three sinks from
+  * it, instead of running three independent streaming queries over
+  * the same input.
   */
 object EngagementStream {
 
@@ -238,61 +239,88 @@ object EngagementStream {
           .limit(n))
   }
 
-  /** End-to-end fan-out mirroring process.py's three sinks: each
-    * micro-batch is enriched ONCE (cached), then written to
+  /** The three sinks of process.py's fan-out behind one `merge`:
+    * each micro-batch is persisted ONCE and written to
     * (1) an enriched-events analytics store (ClickHouse analog),
     * (2) the cumulative leaderboard (Redis analog), and
     * (3) per-route partitions (the external/multi-destination
-    * analog, via [[Router.writeRouted]]).
-    * Returns the output root containing `enriched/`, `leaderboard/`,
-    * `routed/`. */
-  def runFanout(spark: SparkSession, dir: String, outDir: String): LeaderboardState = {
-    val customer = Tables.customer(spark, dir)
-    val lb = new LeaderboardState(s"$outDir/leaderboard")
-    val events = StreamSources.events(spark, dir)
-    StreamSources.runForeachBatch(events, (batch, batchId) => {
-      val enriched = Engagement.enrichTransform(batch, customer).persist()
-      enriched.write.mode("append").parquet(s"$outDir/enriched")
-      lb.merge(batch, batchId)
-      Router.writeRouted(batch, s"$outDir/routed", mode = "append")
-      enriched.unpersist()
-      ()
-    })
-    lb
+    * analog, via [[Router.writeRouted]]),
+    * under `outDir`'s `enriched/`, `leaderboard/` and `routed/`. */
+  final class FanoutSinks(customer: DataFrame, val outDir: String) {
+    val leaderboard = new LeaderboardState(s"$outDir/leaderboard")
+
+    def merge(batch: DataFrame, batchId: Long): Unit = {
+      // three sinks read the batch: without the persist each one
+      // re-scans the micro-batch from its source files
+      batch.persist()
+      try {
+        Engagement.enrichTransform(batch, customer)
+          .write.mode("append").parquet(s"$outDir/enriched")
+        leaderboard.merge(batch, batchId)
+        Router.writeRouted(batch, s"$outDir/routed", mode = "append")
+      } finally batch.unpersist()
+    }
   }
 
-  /** Memoized fan-out per (session, input dir), so the routed-counts
-    * and leaderboard query entries (and specs) can share one streaming
-    * run instead of re-processing the input per entry. Keyed by
-    * session (a later session must not see DataFrames bound to a
-    * stopped one) and cleared via [[graft.GraftCaches.clearAll]] —
-    * the temp output tree is tracked and deleted on the same hook. */
-  private val fanoutCache =
-    graft.GraftCaches.memo[(SparkSession, String), (String, LeaderboardState)](_ => ())
+  /** End-to-end fan-out of the events stream into [[FanoutSinks]]
+    * under `outDir`; returns the drained leaderboard. */
+  def runFanout(spark: SparkSession, dir: String, outDir: String): LeaderboardState = {
+    val sinks = new FanoutSinks(Tables.customer(spark, dir), outDir)
+    StreamSources.runForeachBatch(StreamSources.events(spark, dir), sinks.merge)
+    sinks.leaderboard
+  }
 
-  def fanout(spark: SparkSession, dir: String): (String, LeaderboardState) =
-    fanoutCache.getOrElseUpdate((spark, dir)) {
-      val out = graft.GraftCaches.trackTempDir("graft_fanout_")
-      (out, runFanout(spark, dir, out))
-    }
+  /** The fan-out of `dir`, drained once ([[StreamUtil.drained]]) and
+    * shared by the routed-counts and leaderboard faces (and specs). */
+  def fanout(spark: SparkSession, dir: String): FanoutSinks =
+    StreamUtil.drained(spark, "graft_fanout_", dir)(
+      _ => StreamSources.events(spark, dir), new FanoutSinks(Tables.customer(spark, dir), _))(
+      _.merge)
 
   /** SURVEY §2 #7's streaming variant: multi-sink routing driven
     * through the real engine; returns per-route counts read back from
     * the physical routed partitions (same oracle as `event_router`). */
-  def streamRouter(spark: SparkSession, dir: String): DataFrame = {
-    val (out, _) = fanout(spark, dir)
-    Router.routedCounts(spark, s"$out/routed")
-  }
+  def streamRouter(spark: SparkSession, dir: String): DataFrame =
+    Router.routedCounts(spark, s"${fanout(spark, dir).outDir}/routed")
 
   /** Leaderboard after the full stream has been consumed — equal to
     * the batch top-N (same oracle as `leaderboard_topn`). */
-  def streamLeaderboard(spark: SparkSession, dir: String): DataFrame = {
-    val (_, lb) = fanout(spark, dir)
-    lb.topN(spark)
-  }
+  def streamLeaderboard(spark: SparkSession, dir: String): DataFrame =
+    fanout(spark, dir).leaderboard.topN(spark)
 }
 
 private[graft] object StreamUtil {
+
+  /** Committed drains, one per (session, recipe) — see [[drained]]. */
+  private val drains = graft.GraftCaches.memo[(SparkSession, Seq[Any]), Any](_ => ())
+
+  /** A streaming state drained ONCE per recipe and shared by its
+    * report faces — the paper's fan-out (materialize once, feed every
+    * sink) applied to the query registry: the faces are reads over one
+    * committed state, so each face of a recipe reads the same drain
+    * instead of replaying the same input into a private copy.
+    *
+    * The recipe is `prefix` (the temp-dir prefix; one per state kind
+    * and recipe shape) plus every argument that changes the staged
+    * input or the state: the input dir, file count, session gap,
+    * thresholds. On a miss it creates a tracked temp dir `work`, stages
+    * and opens the stream `input(work)`, builds `state(s"$work/state")`,
+    * runs `merge` over every micro-batch to completion and keeps the
+    * committed state. [[graft.GraftCaches.clearAll]] drops the memo
+    * and deletes the dir together, so a face called after a clear
+    * drains again (the bench clears between queries, so every bench
+    * timing still pays a full drain). A drain that throws is not
+    * kept. */
+  def drained[S](spark: SparkSession, prefix: String, recipe: Any*)(
+      input: String => DataFrame, state: String => S)(
+      merge: S => (Dataset[Row], Long) => Unit): S =
+    drains.getOrElseUpdate((spark, prefix +: recipe)) {
+      val work = graft.GraftCaches.trackTempDir(prefix)
+      val stream = input(work)
+      val s = state(s"$work/state")
+      StreamSources.runForeachBatch(stream, merge(s))
+      s
+    }.asInstanceOf[S]
 
   /** Run INDEPENDENT Spark actions concurrently from driver threads
     * (optimization guide §2.6 "overlap independent jobs"): a state

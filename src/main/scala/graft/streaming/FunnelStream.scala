@@ -169,25 +169,15 @@ object FunnelStream {
   /** Queries entry: drain the time-ordered replay through the state
     * machine and emit the final funnel report (oracle: same SQL as
     * `funnel_conversion`). */
-  def streamFunnel(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_funnel_")
-    stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new FunnelState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.counts(spark)
-  }
+  def streamFunnel(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    StreamUtil.drained(spark, "graft_funnel_", dir, nFiles)(
+      StreamSources.timeOrdered(spark, dir, nFiles, _), new FunnelState(_))(_.merge)
+      .counts(spark)
 
   /** Queries entry: the exclusion funnel drained through the same
     * time-ordered replay (oracle: same SQL as `funnel_excluding`). */
-  def streamFunnelExcluding(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_fexcl_")
-    stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new ExclusionFunnelState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.report(spark)
-  }
+  def streamFunnelExcluding(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    StreamUtil.drained(spark, "graft_fexcl_", dir, nFiles)(
+      StreamSources.timeOrdered(spark, dir, nFiles, _), new ExclusionFunnelState(_))(_.merge)
+      .report(spark)
 }

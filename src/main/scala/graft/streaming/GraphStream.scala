@@ -90,81 +90,47 @@ final class UserItemState(stateDir: String) {
 
 object GraphStream {
 
-  /** Queries entry (oracle: same SQL as `pagerank_items`): the event
-    * stream drained through the presence state — no staging needed,
-    * set union merges in any delivery order. */
-  def streamPagerank(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sgraph_")
-    val state = new UserItemState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.reportPagerank(spark)
-  }
+  /** The presence state behind all eight faces below: the event
+    * stream drained once per input ([[StreamUtil.drained]]) — no
+    * staging needed, set union merges in any delivery order. */
+  private def presence(spark: SparkSession, dir: String) =
+    StreamUtil.drained(spark, "graft_sgraph_", dir)(
+      _ => StreamSources.events(spark, dir), new UserItemState(_))(_.merge)
 
-  /** Queries entry (oracle: same SQL as `katz_centrality`): the SAME
-    * presence state, second face. */
-  def streamKatz(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_skatz_")
-    val state = new UserItemState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.reportKatz(spark)
-  }
+  /** Queries entry (oracle: same SQL as `pagerank_items`). */
+  def streamPagerank(spark: SparkSession, dir: String): DataFrame =
+    presence(spark, dir).reportPagerank(spark)
 
-  /** Queries entry (oracle: same SQL as `degree_assortativity`): the
-    * SAME presence state, third face. */
-  def streamAssortativity(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sassort_")
-    val state = new UserItemState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.reportAssortativity(spark)
-  }
+  /** Queries entry (oracle: same SQL as `katz_centrality`). */
+  def streamKatz(spark: SparkSession, dir: String): DataFrame =
+    presence(spark, dir).reportKatz(spark)
+
+  /** Queries entry (oracle: same SQL as `degree_assortativity`). */
+  def streamAssortativity(spark: SparkSession, dir: String): DataFrame =
+    presence(spark, dir).reportAssortativity(spark)
 
   /** Queries entry (rows-only, like `k_core` itself — the peel/round
     * count is data-dependent, not a fixed unrolled CTE; gated by the
-    * stream≡batch parity spec + k_core's property spec): the SAME
-    * presence state, fourth face. */
-  def streamKCore(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_skcore_")
-    val state = new UserItemState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.reportKCore(spark)
-  }
+    * stream≡batch parity spec + k_core's property spec). */
+  def streamKCore(spark: SparkSession, dir: String): DataFrame =
+    presence(spark, dir).reportKCore(spark)
 
-  /** Queries entry (oracle: same SQL as `ppr_items`): the SAME
-    * presence state, fifth face. */
-  def streamPpr(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sppr_")
-    val state = new UserItemState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.reportPpr(spark)
-  }
+  /** Queries entry (oracle: same SQL as `ppr_items`). */
+  def streamPpr(spark: SparkSession, dir: String): DataFrame =
+    presence(spark, dir).reportPpr(spark)
 
-  /** Queries entry (oracle: same SQL as `random_walks`): the SAME
-    * presence state, sixth face. */
-  def streamRandomWalks(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_swalk_")
-    val state = new UserItemState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.reportRandomWalks(spark)
-  }
+  /** Queries entry (oracle: same SQL as `random_walks`). */
+  def streamRandomWalks(spark: SparkSession, dir: String): DataFrame =
+    presence(spark, dir).reportRandomWalks(spark)
 
-  /** Queries entry (oracle: same SQL as `harmonic_centrality`): the
-    * SAME presence state, seventh face. */
-  def streamHarmonic(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sharm_")
-    val state = new UserItemState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.reportHarmonic(spark)
-  }
+  /** Queries entry (oracle: same SQL as `harmonic_centrality`). */
+  def streamHarmonic(spark: SparkSession, dir: String): DataFrame =
+    presence(spark, dir).reportHarmonic(spark)
 
   /** Queries entry (rows-only like `betweenness_centrality` itself —
     * the depth-peeled backward recurrence has no fixed relational
     * unrolling; gated by the stream≡batch parity spec + the batch
-    * operator's Brandes-reference spec): the SAME presence state,
-    * eighth face. */
-  def streamBetweenness(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sbetw_")
-    val state = new UserItemState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.reportBetweenness(spark)
-  }
+    * operator's Brandes-reference spec). */
+  def streamBetweenness(spark: SparkSession, dir: String): DataFrame =
+    presence(spark, dir).reportBetweenness(spark)
 }

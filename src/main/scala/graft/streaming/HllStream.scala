@@ -47,12 +47,9 @@ object HllStream {
 
   /** Queries entry (rows-only): daily `est_users` after draining the
     * staged corpus through the real streaming engine. */
-  def streamApproxDistinct(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_hll_")
-    val state = new HllDistinctState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.estimates(spark)
-  }
+  def streamApproxDistinct(spark: SparkSession, dir: String): DataFrame =
+    StreamUtil.drained(spark, "graft_hll_", dir)(
+      _ => StreamSources.events(spark, dir), new HllDistinctState(_))(_.merge).estimates(spark)
 
   /** Queries entry (rows-only): weekly p50/p95/p99 from the merged
     * per-day KLL state after draining the staged corpus — the
@@ -60,24 +57,18 @@ object HllStream {
     * associative/commutative but RANDOMIZED (compaction coin flips),
     * so unlike the HLL/CMS twins the parity spec asserts rank-error
     * bounds, not byte equality. */
-  def streamKllQuantiles(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_kll_")
-    val state = new KllDailyState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.report(spark)
-  }
+  def streamKllQuantiles(spark: SparkSession, dir: String): DataFrame =
+    StreamUtil.drained(spark, "graft_kll_", dir)(
+      _ => StreamSources.events(spark, dir), new KllDailyState(_))(_.merge).report(spark)
 
   /** Queries entry (oracle: same SQL as `cms_top_items`): the CMS
     * counter grid is plain Long addition, so the sketch a stream
     * maintains equals the sketch a batch build produces — the
     * deterministic-hash design makes that an exact equality, checked
     * by the shared DuckDB oracle. */
-  def streamCms(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_scms_")
-    val state = new CmsState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.topItems(spark)
-  }
+  def streamCms(spark: SparkSession, dir: String): DataFrame =
+    StreamUtil.drained(spark, "graft_scms_", dir)(
+      _ => StreamSources.events(spark, dir), new CmsState(_))(_.merge).topItems(spark)
 }
 
 /** Streaming Count–Min state — [[graft.operators.Sketches]]' twin:

@@ -89,26 +89,24 @@ final class MomentsState(stateDir: String) {
 
 object MomentsStream {
 
+  /** The per-type moments state behind both faces below, drained once per
+    * input ([[StreamUtil.drained]]). */
+  private def moments(spark: SparkSession, dir: String) =
+    StreamUtil.drained(spark, "graft_moments_", dir)(
+      _ => StreamSources.events(spark, dir), new MomentsState(_))(_.merge)
+
+  /** Queries entry (oracle: same SQL as `anova_f_cents`): the shared
+    * per-type moments state. */
+  def streamAnova(spark: SparkSession, dir: String): DataFrame =
+    moments(spark, dir).reportAnova(spark)
+
   /** Queries entry: the full feed replayed through the incremental
     * moments state, reported as per-type n/mean/sd (oracle: the same
     * formula over the whole corpus in one pass — additive state makes
     * batch boundaries invisible, no ordering staging needed).
     */
-  /** Queries entry (oracle: same SQL as `anova_f_cents`): the SAME
-    * per-type moments state as `stream_moments`, second face. */
-  def streamAnova(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sanova_")
-    val state = new MomentsState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.reportAnova(spark)
-  }
-
-  def streamMoments(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_moments_")
-    val state = new MomentsState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.report(spark)
-  }
+  def streamMoments(spark: SparkSession, dir: String): DataFrame =
+    moments(spark, dir).report(spark)
 }
 
 /** Streaming incremental rollup — [[graft.operators.Olap
@@ -157,24 +155,22 @@ final class RollupState(stateDir: String) {
 
 object RollupStream {
 
+  /** The daily rollup state behind both faces below, drained once per
+    * input ([[StreamUtil.drained]]). */
+  private def rollup(spark: SparkSession, dir: String) =
+    StreamUtil.drained(spark, "graft_rollup_", dir)(
+      _ => StreamSources.events(spark, dir), new RollupState(_))(_.merge)
+
   /** Queries entry: oracle = the same full recompute that gates
     * `incremental_rollup` (additivity makes batch boundaries
     * invisible). */
-  def streamRollup(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_rollup_")
-    val state = new RollupState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.view(spark)
-  }
+  def streamRollup(spark: SparkSession, dir: String): DataFrame =
+    rollup(spark, dir).view(spark)
 
-  /** Queries entry (oracle: same SQL as `pivot_type_dow`): the SAME
-    * daily rollup state, second face. */
-  def streamPivotTypeDow(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_spivot_")
-    val state = new RollupState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.pivotTypeDow(spark)
-  }
+  /** Queries entry (oracle: same SQL as `pivot_type_dow`): the shared
+    * daily rollup state. */
+  def streamPivotTypeDow(spark: SparkSession, dir: String): DataFrame =
+    rollup(spark, dir).pivotTypeDow(spark)
 }
 
 /** Streaming daily modal item —
@@ -258,12 +254,9 @@ object DriftStream {
   /** Queries entry: oracle = the same SQL that gates
     * `source_drift_tv` (sufficient-count state + shared TV
     * derivation make batch boundaries invisible). */
-  def streamSourceDrift(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_drift_")
-    val state = new DriftState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.documents(spark, dir), state.merge)
-    state.drift(spark)
-  }
+  def streamSourceDrift(spark: SparkSession, dir: String): DataFrame =
+    StreamUtil.drained(spark, "graft_drift_", dir)(
+      _ => StreamSources.documents(spark, dir), new DriftState(_))(_.merge).drift(spark)
 }
 
 /** Streaming changepoint state —
@@ -303,12 +296,9 @@ object ChangepointStream {
   /** Queries entry: oracle = the same SQL that gates
     * `changepoint_cusum` (sufficient-count state + shared CUSUM
     * derivation make batch boundaries invisible). */
-  def streamChangepoint(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_cusum_")
-    val state = new DailyCountState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.changepoint(spark)
-  }
+  def streamChangepoint(spark: SparkSession, dir: String): DataFrame =
+    StreamUtil.drained(spark, "graft_cusum_", dir)(
+      _ => StreamSources.events(spark, dir), new DailyCountState(_))(_.merge).changepoint(spark)
 }
 
 object DailyModeStream {
@@ -316,12 +306,9 @@ object DailyModeStream {
   /** Queries entry: oracle = the same SQL that gates
     * `mode_daily_item` (sufficient-count state + shared mode
     * derivation make batch boundaries invisible). */
-  def streamModeDaily(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_mode_")
-    val state = new DailyModeState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.mode(spark)
-  }
+  def streamModeDaily(spark: SparkSession, dir: String): DataFrame =
+    StreamUtil.drained(spark, "graft_mode_", dir)(
+      _ => StreamSources.events(spark, dir), new DailyModeState(_))(_.merge).mode(spark)
 }
 
 /** Streaming EWMA state —
@@ -383,50 +370,36 @@ final class DailyTypeCentsState(stateDir: String) {
 
 object EwmaStream {
 
+  /** The daily-cents state behind the five faces below, drained once per
+    * input ([[StreamUtil.drained]]). */
+  private def dailyCents(spark: SparkSession, dir: String) =
+    StreamUtil.drained(spark, "graft_ewma_", dir)(
+      _ => StreamSources.events(spark, dir), new DailyTypeCentsState(_))(_.merge)
+
   /** Queries entry: oracle = the same SQL that gates `ewma_daily`
     * (sufficient-state daily cents + shared dyadic derivation make
     * batch boundaries invisible). */
-  def streamEwma(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_ewma_")
-    val state = new DailyTypeCentsState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.ewma(spark)
-  }
+  def streamEwma(spark: SparkSession, dir: String): DataFrame =
+    dailyCents(spark, dir).ewma(spark)
 
   /** Queries entry (oracle: same SQL as `holt_linear_trend`). */
-  def streamHolt(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_holt_")
-    val state = new DailyTypeCentsState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.holt(spark)
-  }
+  def streamHolt(spark: SparkSession, dir: String): DataFrame =
+    dailyCents(spark, dir).holt(spark)
 
-  /** Queries entry (oracle: same SQL as `grubbs_daily`): the SAME
-    * daily-cents state, third face. */
-  def streamGrubbs(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sgrub_")
-    val state = new DailyTypeCentsState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.grubbs(spark)
-  }
+  /** Queries entry (oracle: same SQL as `grubbs_daily`): the shared
+    * daily-cents state. */
+  def streamGrubbs(spark: SparkSession, dir: String): DataFrame =
+    dailyCents(spark, dir).grubbs(spark)
 
-  /** Queries entry (oracle: same SQL as `jackknife_ratio`): the SAME
-    * daily-cents state, fifth face. */
-  def streamJackknife(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sjack_")
-    val state = new DailyTypeCentsState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.jackknifeRatio(spark)
-  }
+  /** Queries entry (oracle: same SQL as `jackknife_ratio`): the shared
+    * daily-cents state. */
+  def streamJackknife(spark: SparkSession, dir: String): DataFrame =
+    dailyCents(spark, dir).jackknifeRatio(spark)
 
   /** Queries entry (oracle: same SQL as `page_hinkley_daily`): the
-    * SAME daily-cents state, fourth face. */
-  def streamPageHinkley(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sph_")
-    val state = new DailyTypeCentsState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.pageHinkley(spark)
-  }
+    * shared daily-cents state. */
+  def streamPageHinkley(spark: SparkSession, dir: String): DataFrame =
+    dailyCents(spark, dir).pageHinkley(spark)
 }
 
 /** Streaming seasonality state —
@@ -501,24 +474,22 @@ final class ValueCountState(stateDir: String) {
 
 object BoxplotStream {
 
+  /** The value-count state behind both faces below, drained once per
+    * input ([[StreamUtil.drained]]). */
+  private def valueCounts(spark: SparkSession, dir: String) =
+    StreamUtil.drained(spark, "graft_boxplot_", dir)(
+      _ => StreamSources.events(spark, dir), new ValueCountState(_))(_.merge)
+
   /** Queries entry: oracle = the same SQL that gates `boxplot_stats`
     * (additive value counts + shared counting-sort quantile
     * derivation make batch boundaries invisible). */
-  def streamBoxplot(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_boxplot_")
-    val state = new ValueCountState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.boxplot(spark)
-  }
+  def streamBoxplot(spark: SparkSession, dir: String): DataFrame =
+    valueCounts(spark, dir).boxplot(spark)
 
   /** Queries entry: oracle = the same SQL that gates
     * `winsorized_stats`, derived from the same additive grid. */
-  def streamWinsorized(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_winsor_")
-    val state = new ValueCountState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.winsorized(spark)
-  }
+  def streamWinsorized(spark: SparkSession, dir: String): DataFrame =
+    valueCounts(spark, dir).winsorized(spark)
 }
 
 /** Streaming percentile-band state — the per-day-keyed sibling of
@@ -553,12 +524,9 @@ object PercentileBandsStream {
 
   /** Queries entry: oracle = the same SQL that gates
     * `percentile_bands_daily`. */
-  def streamPercentileBands(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_bands_")
-    val state = new DailyValueCountState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.bands(spark)
-  }
+  def streamPercentileBands(spark: SparkSession, dir: String): DataFrame =
+    StreamUtil.drained(spark, "graft_bands_", dir)(
+      _ => StreamSources.events(spark, dir), new DailyValueCountState(_))(_.merge).bands(spark)
 }
 
 /** Streaming document-length-histogram state: a histogram is ALREADY
@@ -601,12 +569,9 @@ object DoclenStream {
 
   /** Queries entry: oracle = the same SQL that gates
     * `doclen_histogram`. */
-  def streamDoclen(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_doclen_")
-    val state = new DoclenBucketState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.documents(spark, dir), state.merge)
-    state.histogram(spark)
-  }
+  def streamDoclen(spark: SparkSession, dir: String): DataFrame =
+    StreamUtil.drained(spark, "graft_doclen_", dir)(
+      _ => StreamSources.documents(spark, dir), new DoclenBucketState(_))(_.merge).histogram(spark)
 }
 
 /** Streaming Zipf-fit state — the additive (tok, cf) VOCABULARY is
@@ -643,21 +608,19 @@ final class VocabState(stateDir: String) {
 
 object ZipfStream {
 
+  /** The vocabulary state behind both faces below, drained once per
+    * input ([[StreamUtil.drained]]). */
+  private def vocab(spark: SparkSession, dir: String) =
+    StreamUtil.drained(spark, "graft_zipf_", dir)(
+      _ => StreamSources.documents(spark, dir), new VocabState(_))(_.merge)
+
   /** Queries entry: oracle = the same SQL that gates `zipf_slope`. */
-  def streamZipfSlope(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_zipf_")
-    val state = new VocabState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.documents(spark, dir), state.merge)
-    state.zipf(spark)
-  }
+  def streamZipfSlope(spark: SparkSession, dir: String): DataFrame =
+    vocab(spark, dir).zipf(spark)
 
   /** Queries entry (oracle: same SQL as `vocab_coverage_curve`). */
-  def streamVocabCoverage(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_vcov_")
-    val state = new VocabState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.documents(spark, dir), state.merge)
-    state.coverage(spark)
-  }
+  def streamVocabCoverage(spark: SparkSession, dir: String): DataFrame =
+    vocab(spark, dir).coverage(spark)
 }
 
 /** Streaming HHI state — the additive (event_type, item, cents)
@@ -690,12 +653,9 @@ final class ItemCentsState(stateDir: String) {
 object HhiStream {
 
   /** Queries entry: oracle = the same SQL that gates `revenue_hhi`. */
-  def streamRevenueHhi(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_hhi_")
-    val state = new ItemCentsState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.hhi(spark)
-  }
+  def streamRevenueHhi(spark: SparkSession, dir: String): DataFrame =
+    StreamUtil.drained(spark, "graft_hhi_", dir)(
+      _ => StreamSources.events(spark, dir), new ItemCentsState(_))(_.merge).hhi(spark)
 }
 
 object SeasonalityStream {
@@ -703,12 +663,9 @@ object SeasonalityStream {
   /** Queries entry: oracle = the same SQL that gates
     * `seasonality_profile` (additive cell counts + shared
     * share/deviation derivation make batch boundaries invisible). */
-  def streamSeasonality(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_season_")
-    val state = new SeasonalityCellState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.profile(spark)
-  }
+  def streamSeasonality(spark: SparkSession, dir: String): DataFrame =
+    StreamUtil.drained(spark, "graft_season_", dir)(
+      _ => StreamSources.events(spark, dir), new SeasonalityCellState(_))(_.merge).profile(spark)
 }
 
 /** Streaming Poisson-bootstrap state —
@@ -744,10 +701,7 @@ final class BootstrapState(stateDir: String, b: Int = 32) {
 object BootstrapStream {
 
   /** Queries entry (oracle: same SQL as `bootstrap_mean_ci`). */
-  def streamBootstrap(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sboot_")
-    val state = new BootstrapState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.report(spark)
-  }
+  def streamBootstrap(spark: SparkSession, dir: String): DataFrame =
+    StreamUtil.drained(spark, "graft_sboot_", dir)(
+      _ => StreamSources.events(spark, dir), new BootstrapState(_))(_.merge).report(spark)
 }

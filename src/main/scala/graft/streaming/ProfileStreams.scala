@@ -654,174 +654,151 @@ final class ItemEngagementState(stateDir: String) {
 
 object ProfileStreams {
 
+  /** The per-user RFM state behind stream_rfm_segments,
+    * stream_user_revenue_percentile and stream_hill: the raw event
+    * stream (order-free additive state, no staging), drained once per
+    * input ([[StreamUtil.drained]]). */
+  private def rfm(spark: SparkSession, dir: String) =
+    StreamUtil.drained(spark, "graft_srfm_", dir)(
+      _ => StreamSources.events(spark, dir), new UserRfmState(_))(_.merge)
+
+  /** The per-user CUPED (pre, post) state behind stream_ab_cuped,
+    * stream_ab_srm and stream_stratified_ate, drained like [[rfm]];
+    * the fixed pre/post cutoff derives from the batch table. */
+  private def prePost(spark: SparkSession, dir: String) =
+    StreamUtil.drained(spark, "graft_scuped_", dir)(
+      _ => StreamSources.events(spark, dir), new UserPrePostState(_,
+        graft.operators.Experiments.preCutoff(graft.sources.Tables.events(spark, dir))))(
+      _.merge)
+
+  /** The (event_type, cents) support grid behind stream_mann_whitney,
+    * stream_benford, stream_kruskal, stream_levene and
+    * stream_offpolicy, drained like [[rfm]]. */
+  private def typeCents(spark: SparkSession, dir: String) =
+    StreamUtil.drained(spark, "graft_smw_", dir)(
+      _ => StreamSources.events(spark, dir), new TypeCentsState(_))(_.merge)
+
+  /** The per-user span state behind stream_rolling_retention and
+    * stream_capture_recapture, drained like [[rfm]]. */
+  private def userSpan(spark: SparkSession, dir: String) =
+    StreamUtil.drained(spark, "graft_uspan_", dir)(
+      _ => StreamSources.events(spark, dir), new UserSpanState(_))(_.merge)
+
+  /** The dataset-card grid behind stream_dataset_card and
+    * stream_cramers_v: the documents corpus staged as `nFiles` files,
+    * drained once per (input, nFiles). */
+  private def card(spark: SparkSession, dir: String, nFiles: Int) =
+    StreamUtil.drained(spark, "graft_scard_", dir, nFiles)(
+      StreamSources.staged(graft.sources.Tables.documents(spark, dir), nFiles, _),
+      new DatasetCardState(_))(_.merge)
+
+  /** The (source, len) grid behind stream_ks_doclen, stream_neyman and
+    * stream_wasserstein_doclen, drained like [[card]]. */
+  private def sourceLen(spark: SparkSession, dir: String, nFiles: Int) =
+    StreamUtil.drained(spark, "graft_sks_", dir, nFiles)(
+      StreamSources.staged(graft.sources.Tables.documents(spark, dir), nFiles, _),
+      new SourceLenState(_))(_.merge)
+
   /** Queries entry (oracle: same SQL as `dataset_card`): the
     * documents corpus staged as 4 files and replayed one per
     * micro-batch through the additive card grid. */
-  def streamDatasetCard(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_scard_")
-    graft.sources.Tables.documents(spark, dir).repartition(nFiles)
-      .write.mode("overwrite").parquet(s"$work/input")
-    val state = new DatasetCardState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.parquetStream(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.report(spark)
-  }
+  def streamDatasetCard(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    card(spark, dir, nFiles).report(spark)
 
   /** Queries entry (oracle: same SQL as `decile_lift`) — order-free
     * additive per-user (score, converted) state, so the raw events
     * stream needs no staged time ordering. */
-  def streamDecileLift(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sdlift_")
-    val state = new UserScoreState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.report(spark)
-  }
+  def streamDecileLift(spark: SparkSession, dir: String): DataFrame =
+    StreamUtil.drained(spark, "graft_sdlift_", dir)(
+      _ => StreamSources.events(spark, dir), new UserScoreState(_))(_.merge).report(spark)
 
   /** Queries entry (oracle: same SQL as `rfm_segments`) — order-free
     * additive per-user RFM state, so the raw events stream needs no
     * staged time ordering. */
-  def streamRfmSegments(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_srfm_")
-    val state = new UserRfmState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.reportRfm(spark)
-  }
+  def streamRfmSegments(spark: SparkSession, dir: String): DataFrame =
+    rfm(spark, dir).reportRfm(spark)
 
   /** Queries entry (oracle: same SQL as `user_revenue_percentile`):
-    * the SAME RFM state, second face. */
-  def streamUserRevenuePercentile(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_surp_")
-    val state = new UserRfmState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.reportRevenuePercentile(spark)
-  }
+    * the shared RFM state. */
+  def streamUserRevenuePercentile(spark: SparkSession, dir: String): DataFrame =
+    rfm(spark, dir).reportRevenuePercentile(spark)
 
   /** Queries entry (oracle: same SQL as `heaps_law_fit`): the
     * documents corpus staged as 4 files and replayed one per
     * micro-batch through the min/sum-merge heaps rollup state. */
-  def streamHeapsLawFit(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sheaps_")
-    graft.sources.Tables.documents(spark, dir).repartition(nFiles)
-      .write.mode("overwrite").parquet(s"$work/input")
-    val state = new CorpusHeapsState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.parquetStream(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.report(spark)
-  }
+  def streamHeapsLawFit(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    StreamUtil.drained(spark, "graft_sheaps_", dir, nFiles)(
+      StreamSources.staged(graft.sources.Tables.documents(spark, dir), nFiles, _),
+      new CorpusHeapsState(_))(_.merge).report(spark)
 
   /** Queries entry (oracle: same SQL as `engagement_gini`) —
     * order-free additive per-item counts. */
-  def streamEngagementGini(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sgini_")
-    val state = new ItemEngagementState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.report(spark)
-  }
+  def streamEngagementGini(spark: SparkSession, dir: String): DataFrame =
+    StreamUtil.drained(spark, "graft_sgini_", dir)(
+      _ => StreamSources.events(spark, dir), new ItemEngagementState(_))(_.merge).report(spark)
 
   /** Queries entry (oracle: same SQL as `ab_cuped`) — order-free
     * additive per-user (pre, post) sums. */
-  def streamAbCuped(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_scuped_")
-    val cutoff = graft.operators.Experiments.preCutoff(graft.sources.Tables.events(spark, dir))
-    val state = new UserPrePostState(s"$work/state", cutoff)
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.report(spark)
-  }
+  def streamAbCuped(spark: SparkSession, dir: String): DataFrame =
+    prePost(spark, dir).report(spark)
 
-  /** Queries entry (oracle: same SQL as `ab_srm_check`): the SAME
-    * per-user CUPED state, second face — its key set is the unit
+  /** Queries entry (oracle: same SQL as `ab_srm_check`): the shared
+    * per-user CUPED state — its key set is the unit
     * census the SRM gate counts. */
-  def streamAbSrm(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_ssrm_")
-    val cutoff = graft.operators.Experiments.preCutoff(graft.sources.Tables.events(spark, dir))
-    val state = new UserPrePostState(s"$work/state", cutoff)
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.reportSrm(spark)
-  }
+  def streamAbSrm(spark: SparkSession, dir: String): DataFrame =
+    prePost(spark, dir).reportSrm(spark)
 
   /** Queries entry (oracle: same SQL as `qte_deciles`) — order-free
     * additive per-arm value grid. */
-  def streamQte(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sqte_")
-    val state = new ArmCentsState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.report(spark)
-  }
+  def streamQte(spark: SparkSession, dir: String): DataFrame =
+    StreamUtil.drained(spark, "graft_sqte_", dir)(
+      _ => StreamSources.events(spark, dir), new ArmCentsState(_))(_.merge).report(spark)
 
-  /** Queries entry (oracle: same SQL as `stratified_ate`): the SAME
-    * per-user CUPED state, third face — strata re-rank at report. */
-  def streamStratifiedAte(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_ssate_")
-    val cutoff = graft.operators.Experiments.preCutoff(graft.sources.Tables.events(spark, dir))
-    val state = new UserPrePostState(s"$work/state", cutoff)
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.reportStratifiedAte(spark)
-  }
+  /** Queries entry (oracle: same SQL as `stratified_ate`): the shared
+    * per-user CUPED state — strata re-rank at report. */
+  def streamStratifiedAte(spark: SparkSession, dir: String): DataFrame =
+    prePost(spark, dir).reportStratifiedAte(spark)
 
   /** Queries entry (oracle: same SQL as `ab_peeking_curve`) — order-
     * free additive per-(arm, day) moments; the cumulative prefix
     * sums and every daily z derive at report time. */
-  def streamPeeking(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_speek_")
-    val state = new ArmDayState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.report(spark)
-  }
+  def streamPeeking(spark: SparkSession, dir: String): DataFrame =
+    StreamUtil.drained(spark, "graft_speek_", dir)(
+      _ => StreamSources.events(spark, dir), new ArmDayState(_))(_.merge).report(spark)
 
   /** Queries entry (oracle: same SQL as `conformal_interval`) —
     * order-free additive counting grid; center and residual ranks
     * both derive at report time. */
-  def streamConformal(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sconf_")
-    val state = new ConformalGridState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.report(spark)
-  }
+  def streamConformal(spark: SparkSession, dir: String): DataFrame =
+    StreamUtil.drained(spark, "graft_sconf_", dir)(
+      _ => StreamSources.events(spark, dir), new ConformalGridState(_))(_.merge).report(spark)
 
-  /** Queries entry (oracle: same SQL as `hill_tail_index`): the SAME
-    * per-user RFM state as `stream_rfm_segments`, third face. */
-  def streamHill(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_shill_")
-    val state = new UserRfmState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.reportHill(spark)
-  }
+  /** Queries entry (oracle: same SQL as `hill_tail_index`): the shared
+    * per-user RFM state. */
+  def streamHill(spark: SparkSession, dir: String): DataFrame =
+    rfm(spark, dir).reportHill(spark)
 
   /** Queries entry (oracle: same SQL as `dsir_importance`): the
     * documents corpus staged as 4 files, the hashed-feature grid
     * delta-appended one micro-batch at a time, every weight derived
     * at report time against the FINAL bucket LMs. */
-  def streamDsir(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sdsir_")
-    val corpus = graft.sources.Tables.documents(spark, dir)
-    corpus.repartition(StreamSources.stagingFiles(nFiles, corpus.count()))
-      .write.mode("overwrite").parquet(s"$work/input")
-    val state = new DsirGridState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.parquetStream(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.report(spark)
-  }
+  def streamDsir(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    StreamUtil.drained(spark, "graft_sdsir_", dir, nFiles)({ work =>
+      val corpus = graft.sources.Tables.documents(spark, dir)
+      StreamSources.staged(corpus, StreamSources.stagingFiles(nFiles, corpus.count()), work)
+    }, new DsirGridState(_))(_.merge).report(spark)
 
   /** Queries entry (oracle: the dsir SQL over the live corpus): the
     * retraction face — upserts for every doc plus a delete op for
     * each `doc_id % 7 == 3`; the masked grid re-derives bucket LMs
     * and every weight over the live corpus only. */
-  def streamDsirTombstone(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sdsirt_")
-    val docs = graft.sources.Tables.documents(spark, dir)
-    docs.withColumn("op", lit("u"))
-      .unionByName(docs.filter(col("doc_id") % 7 === 3).withColumn("op", lit("d")))
-      .repartition(StreamSources.stagingFiles(nFiles, docs.count()))
-      .write.mode("overwrite").parquet(s"$work/input")
-    val state = new DsirTombstoneState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.parquetStream(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.report(spark)
-  }
+  def streamDsirTombstone(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    StreamUtil.drained(spark, "graft_sdsirt_", dir, nFiles)({ work =>
+      val docs = graft.sources.Tables.documents(spark, dir)
+      StreamSources.staged(docs.withColumn("op", lit("u"))
+        .unionByName(docs.filter(col("doc_id") % 7 === 3).withColumn("op", lit("d"))),
+        StreamSources.stagingFiles(nFiles, docs.count()), work)
+    }, new DsirTombstoneState(_))(_.merge).report(spark)
 
   /** Queries entry (oracle: `stream_dsir_tombstone`'s — the dsir SQL
     * over the live corpus): the retraction face with a MID-STREAM
@@ -857,48 +834,29 @@ object ProfileStreams {
     * stream≡batch and straight-Scala reference specs): the documents
     * corpus staged as 4 files through the additive word-frequency
     * dict; all merge rules learn at report time over the final dict. */
-  def streamBpeTrain(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sbpe_")
-    graft.sources.Tables.documents(spark, dir).repartition(nFiles)
-      .write.mode("overwrite").parquet(s"$work/input")
-    val state = new WordFreqState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.parquetStream(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.report(spark)
-  }
+  def streamBpeTrain(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    StreamUtil.drained(spark, "graft_sbpe_", dir, nFiles)(
+      StreamSources.staged(graft.sources.Tables.documents(spark, dir), nFiles, _),
+      new WordFreqState(_))(_.merge).report(spark)
 
-  /** Queries entry (oracle: same SQL as `offpolicy_eval`): the SAME
-    * cents-support state as `stream_mann_whitney`, another face. */
-  def streamOffpolicy(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sops_")
-    val state = new TypeCentsState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.reportOffpolicy(spark)
-  }
+  /** Queries entry (oracle: same SQL as `offpolicy_eval`): the shared
+    * cents-support state. */
+  def streamOffpolicy(spark: SparkSession, dir: String): DataFrame =
+    typeCents(spark, dir).reportOffpolicy(spark)
 
   /** Queries entry (oracle: same SQL as `k_anonymity_check`) —
     * order-free additive QI×user grid. */
-  def streamKAnonymity(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_skanon_")
-    val state = new AnonymityGridState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.report(spark)
-  }
+  def streamKAnonymity(spark: SparkSession, dir: String): DataFrame =
+    StreamUtil.drained(spark, "graft_skanon_", dir)(
+      _ => StreamSources.events(spark, dir), new AnonymityGridState(_))(_.merge).report(spark)
 
   /** Queries entry (rows-only like `bpe_fertility_by_source`; gated
     * by the stream≡batch parity spec): staged corpus through the
     * additive (source, word) grid. */
-  def streamBpeFertility(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sbpef_")
-    graft.sources.Tables.documents(spark, dir).repartition(nFiles)
-      .write.mode("overwrite").parquet(s"$work/input")
-    val state = new SourceWordState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.parquetStream(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.report(spark)
-  }
+  def streamBpeFertility(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    StreamUtil.drained(spark, "graft_sbpef_", dir, nFiles)(
+      StreamSources.staged(graft.sources.Tables.documents(spark, dir), nFiles, _),
+      new SourceWordState(_))(_.merge).report(spark)
 
   /** Queries entry (oracle: same SQL as `hybrid_rrf_topk`): documents
     * FULL-OUTER joined with their embeddings (the batch operator
@@ -911,19 +869,13 @@ object ProfileStreams {
     * micro-batch and serving re-derives everything from the final
     * index. */
   def streamHybridRrf(spark: SparkSession, dir: String, nQueries: Int = 3,
-                      nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_shyb_")
-    val corpus = graft.sources.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-      .join(graft.sources.Tables.embeddings(spark, dir)
-        .select(col("vec_id").as("doc_id"), col("embedding")), Seq("doc_id"), "full_outer")
-    corpus.repartition(StreamSources.stagingFiles(nFiles, corpus.count()))
-      .write.mode("overwrite").parquet(s"$work/input")
-    val state = new HybridIndexState(s"$work/state", nQueries)
-    StreamSources.runForeachBatch(
-      StreamSources.parquetStream(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.report(spark)
-  }
+                      nFiles: Int = 4): DataFrame =
+    StreamUtil.drained(spark, "graft_shyb_", dir, nQueries, nFiles)({ work =>
+      val corpus = graft.sources.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+        .join(graft.sources.Tables.embeddings(spark, dir)
+          .select(col("vec_id").as("doc_id"), col("embedding")), Seq("doc_id"), "full_outer")
+      StreamSources.staged(corpus, StreamSources.stagingFiles(nFiles, corpus.count()), work)
+    }, new HybridIndexState(_, nQueries))(_.merge).report(spark)
 
   /** Queries entry (oracle: the hybrid fusion SQL over the tombstone-
     * compacted live corpus): the retraction face — the staged stream
@@ -1017,214 +969,127 @@ object ProfileStreams {
     * (the offline-trained-model convention). */
   def streamSemanticIvf(spark: SparkSession, dir: String, threshold: Double = 0.3,
                         nProbe: Int = 2, seed: Long = 7L, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_ssiv_")
-    val n = graft.sources.Tables.embeddings(spark, dir).count()
-    val nCells = math.max(8L, n / 512L).toInt
-    val cents = graft.operators.VectorOps.trainIvfCentroids(spark, dir, nCells, seed)
-    graft.sources.Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"))
-      .repartition(StreamSources.stagingFiles(nFiles, n))
-      .write.mode("overwrite").parquet(s"$work/input")
-    val state = new SemanticIvfState(s"$work/state", cents, threshold, nProbe)
-    StreamSources.runForeachBatch(
-      StreamSources.parquetStream(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.report(spark)
+    lazy val n = graft.sources.Tables.embeddings(spark, dir).count()
+    StreamUtil.drained(spark, "graft_ssiv_", dir, threshold, nProbe, seed, nFiles)(
+      StreamSources.staged(graft.sources.Tables.embeddings(spark, dir)
+        .select(col("vec_id"), col("embedding")), StreamSources.stagingFiles(nFiles, n), _),
+      new SemanticIvfState(_, graft.operators.VectorOps.trainIvfCentroids(
+        spark, dir, math.max(8L, n / 512L).toInt, seed), threshold, nProbe))(_.merge)
+      .report(spark)
   }
 
   /** Queries entry (oracle: same SQL as `mann_whitney_u`) — order-
     * free additive counts, so the raw events stream needs no staged
     * time ordering. */
-  def streamMannWhitney(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_smw_")
-    val state = new TypeCentsState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.report(spark)
-  }
+  def streamMannWhitney(spark: SparkSession, dir: String): DataFrame =
+    typeCents(spark, dir).report(spark)
 
   /** Queries entry (oracle: same SQL as `benford_first_digit`): the
-    * SAME cents-support state, second face. */
-  def streamBenford(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sbenf_")
-    val state = new TypeCentsState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.reportBenford(spark)
-  }
+    * shared cents-support state. */
+  def streamBenford(spark: SparkSession, dir: String): DataFrame =
+    typeCents(spark, dir).reportBenford(spark)
 
-  /** Queries entry (oracle: same SQL as `kruskal_wallis`): the SAME
-    * cents-support state, third face. */
-  def streamKruskal(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_skw_")
-    val state = new TypeCentsState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.reportKruskal(spark)
-  }
+  /** Queries entry (oracle: same SQL as `kruskal_wallis`): the shared
+    * cents-support state. */
+  def streamKruskal(spark: SparkSession, dir: String): DataFrame =
+    typeCents(spark, dir).reportKruskal(spark)
 
   /** Queries entry (oracle: same SQL as `levene_brown_forsythe`):
-    * the SAME cents-support state, fourth face. */
-  def streamLevene(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_slev_")
-    val state = new TypeCentsState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.reportLevene(spark)
-  }
+    * the shared cents-support state. */
+  def streamLevene(spark: SparkSession, dir: String): DataFrame =
+    typeCents(spark, dir).reportLevene(spark)
 
   /** Queries entry (oracle: same SQL as `cramers_v_source_lang`):
-    * the SAME card grid as stream_dataset_card, second face. */
-  def streamCramersV(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_scrv_")
-    graft.sources.Tables.documents(spark, dir).repartition(nFiles)
-      .write.mode("overwrite").parquet(s"$work/input")
-    val state = new DatasetCardState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.parquetStream(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.reportCramersV(spark)
-  }
+    * the shared card grid. */
+  def streamCramersV(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    card(spark, dir, nFiles).reportCramersV(spark)
 
   /** Queries entry (oracle: same SQL as `bot_burst_screen`): the
     * additive (user, minute) burst grid drained from the unstaged
     * event stream (counts merge in any delivery order), reported
     * through the batch rollup. */
-  def streamBotScreen(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sbot_")
-    val state = new UserMinuteCountState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.report(spark)
-  }
+  def streamBotScreen(spark: SparkSession, dir: String): DataFrame =
+    StreamUtil.drained(spark, "graft_sbot_", dir)(
+      _ => StreamSources.events(spark, dir), new UserMinuteCountState(_))(_.merge).report(spark)
 
   /** Queries entry (oracle: same SQL as `flesch_reading_ease`): the
     * document stream drained through the additive per-source
     * readability sums. */
-  def streamFlesch(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sfre_")
-    graft.sources.Tables.documents(spark, dir).repartition(nFiles)
-      .write.mode("overwrite").parquet(s"$work/input")
-    val state = new FleschState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.parquetStream(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.report(spark)
-  }
+  def streamFlesch(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    StreamUtil.drained(spark, "graft_sfre_", dir, nFiles)(
+      StreamSources.staged(graft.sources.Tables.documents(spark, dir), nFiles, _),
+      new FleschState(_))(_.merge).report(spark)
 
   /** Queries entry (oracle: same SQL as `ks_doclen_sources`). */
   def streamKsDoclen(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
-    drainedLenState(spark, dir, "graft_sks_", nFiles).report(spark)
+    sourceLen(spark, dir, nFiles).report(spark)
 
   /** Queries entry (oracle: same SQL as `neyman_allocation`). */
   def streamNeyman(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
-    drainedLenState(spark, dir, "graft_sney_", nFiles).reportNeyman(spark)
+    sourceLen(spark, dir, nFiles).reportNeyman(spark)
 
   /** Queries entry (oracle: same SQL as `wasserstein_doclen`): the
-    * SAME additive length grid, third face. */
+    * shared additive length grid. */
   def streamWassersteinDoclen(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
-    drainedLenState(spark, dir, "graft_sw1_", nFiles).reportW1(spark)
+    sourceLen(spark, dir, nFiles).reportW1(spark)
 
   /** Queries entry (oracle: same SQL as `psi_value_drift`) —
     * order-free additive PSI grid; the fixed baseline cutoff is
     * derived once from the batch table (configuration standing in
     * for the monitoring boundary, the stream_ab_cuped convention). */
-  def streamPsiDrift(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_spsi_")
-    val cutoff = graft.operators.Experiments.preCutoff(graft.sources.Tables.events(spark, dir))
-    val state = new PsiGridState(s"$work/state", cutoff)
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.report(spark)
-  }
-
-  private def drainedLenState(spark: SparkSession, dir: String,
-                              prefix: String, nFiles: Int): SourceLenState = {
-    val work = graft.GraftCaches.trackTempDir(prefix)
-    graft.sources.Tables.documents(spark, dir).repartition(nFiles)
-      .write.mode("overwrite").parquet(s"$work/input")
-    val state = new SourceLenState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.parquetStream(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state
-  }
+  def streamPsiDrift(spark: SparkSession, dir: String): DataFrame =
+    StreamUtil.drained(spark, "graft_spsi_", dir)(
+      _ => StreamSources.events(spark, dir), new PsiGridState(_,
+        graft.operators.Experiments.preCutoff(graft.sources.Tables.events(spark, dir))))(
+      _.merge).report(spark)
 
   /** Queries entry (oracle: same SQL as `rolling_retention`). */
-  def streamRollingRetention(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_uspan_")
-    val state = new UserSpanState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.report(spark)
-  }
+  def streamRollingRetention(spark: SparkSession, dir: String): DataFrame =
+    userSpan(spark, dir).report(spark)
 
   /** Queries entry (oracle: same SQL as `user_type_entropy`): the
     * event stream drained through the additive (user, type) count
     * grid — no staging needed. */
-  def streamUserTypeEntropy(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_suent_")
-    val state = new UserTypeCountState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.report(spark)
-  }
+  def streamUserTypeEntropy(spark: SparkSession, dir: String): DataFrame =
+    StreamUtil.drained(spark, "graft_suent_", dir)(
+      _ => StreamSources.events(spark, dir), new UserTypeCountState(_))(_.merge).report(spark)
 
   /** Queries entry (oracle: same SQL as `sessions_per_user`): the
     * time-ordered replay drained through the per-user (last_ts, k)
     * session-count frontier. */
-  def streamSessionsPerUser(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sspu_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new SessionCountState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.report(spark)
-  }
+  def streamSessionsPerUser(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    StreamUtil.drained(spark, "graft_sspu_", dir, nFiles)(
+      StreamSources.timeOrdered(spark, dir, nFiles, _), new SessionCountState(_))(_.merge)
+      .report(spark)
 
   /** Queries entry (oracle: same SQL as `session_type_affinity`):
     * the time-ordered replay drained through the stable-session-id
     * presence state. */
-  def streamSessionAffinity(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_saff_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new SessionAffinityState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.report(spark)
-  }
+  def streamSessionAffinity(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    StreamUtil.drained(spark, "graft_saff_", dir, nFiles)(
+      StreamSources.timeOrdered(spark, dir, nFiles, _), new SessionAffinityState(_))(_.merge)
+      .report(spark)
 
   /** Queries entry (oracle: same SQL as `capture_recapture`): the
-    * SAME per-user span state as stream_rolling_retention, second
-    * face. */
-  def streamCaptureRecapture(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_scapt_")
-    val state = new UserSpanState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.reportCapture(spark)
-  }
+    * shared per-user span state. */
+  def streamCaptureRecapture(spark: SparkSession, dir: String): DataFrame =
+    userSpan(spark, dir).reportCapture(spark)
 
   /** Queries entry (oracle: same SQL as `label_centroids`): the
     * embedding corpus staged as 4 files and replayed one file per
     * micro-batch. */
-  def streamLabelCentroids(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_lcent_")
-    graft.sources.Tables.embeddings(spark, dir).repartition(nFiles)
-      .write.mode("overwrite").parquet(s"$work/input")
-    val state = new LabelCentroidState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.parquetStream(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.report(spark)
-  }
+  def streamLabelCentroids(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    StreamUtil.drained(spark, "graft_lcent_", dir, nFiles)(
+      StreamSources.staged(graft.sources.Tables.embeddings(spark, dir), nFiles, _),
+      new LabelCentroidState(_))(_.merge).report(spark)
 
   /** Queries entry (oracle: same SQL as `pii_density`): the documents
     * corpus staged as 4 files and replayed one per micro-batch through
     * the additive per-source PII grid. */
-  def streamPiiDensity(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_spii_")
-    graft.sources.Tables.documents(spark, dir).repartition(nFiles)
-      .write.mode("overwrite").parquet(s"$work/input")
-    val state = new PiiSourceState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.parquetStream(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.report(spark)
-  }
+  def streamPiiDensity(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    StreamUtil.drained(spark, "graft_spii_", dir, nFiles)(
+      StreamSources.staged(graft.sources.Tables.documents(spark, dir), nFiles, _),
+      new PiiSourceState(_))(_.merge).report(spark)
 
   /** Queries entry (oracle: same SQL as `decontaminate_semantic`):
     * the corpus embeddings staged as 4 files and screened one
@@ -1232,16 +1097,10 @@ object ProfileStreams {
     * daily-ingest contamination gate. Verdicts are per-vector and
     * STATELESS given the eval set, so the state is append-only. */
   def streamDecontaminateSemantic(spark: SparkSession, dir: String,
-                                  nEval: Int = 20, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sdecon_")
-    graft.operators.VectorOps.corpusSide(spark, dir, nEval).repartition(nFiles)
-      .write.mode("overwrite").parquet(s"$work/input")
-    val state = new SemanticVerdictState(s"$work/state", dir, nEval)
-    StreamSources.runForeachBatch(
-      StreamSources.parquetStream(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.report(spark)
-  }
+                                  nEval: Int = 20, nFiles: Int = 4): DataFrame =
+    StreamUtil.drained(spark, "graft_sdecon_", dir, nEval, nFiles)(
+      StreamSources.staged(graft.operators.VectorOps.corpusSide(spark, dir, nEval), nFiles, _),
+      new SemanticVerdictState(_, dir, nEval))(_.merge).report(spark)
 }
 
 /** Additive per-source PII grid —

@@ -57,15 +57,9 @@ final class DfaState(stateDir: String, step: (Column, Column) => Column,
 object SequenceCountStream {
 
   private def run(spark: SparkSession, dir: String, prefix: String,
-                  state: String => DfaState, nFiles: Int): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir(prefix)
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val st = state(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      st.merge)
-    st.histogram(spark)
-  }
+                  state: String => DfaState, nFiles: Int): DataFrame =
+    StreamUtil.drained(spark, prefix, dir, nFiles)(
+      StreamSources.timeOrdered(spark, dir, nFiles, _), state)(_.merge).histogram(spark)
 
   /** Queries entry: time-ordered replay through the incremental
     * sequence-count DFA (oracle: same recursive-CTE SQL as

@@ -50,12 +50,9 @@ object StreamIncrementalDedup {
     val work = graft.GraftCaches.trackTempDir("graft_incdedup_")
     stageBatchDocs(spark, dir, s"$work/input", nFiles, batchPct, salt)
 
-    val schema = spark.read.parquet(s"$work/input").schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1") // micro-batch = one staged file
-      .parquet(s"$work/input")
     StreamSources.runForeachBatch(
-      stream,
+      // micro-batch = one staged file
+      StreamSources.parquetStream(spark, s"$work/input", maxFilesPerTrigger = 1),
       (batch, batchId) =>
         // one partition dir per micro-batch, overwritten on replay —
         // a re-run batch replaces its own output instead of

@@ -26,35 +26,22 @@ object StreamSources {
 
   private val nameCtr = new AtomicInteger(0)
 
-  /** The events table as an unbounded stream. Same schema-adaptive ts
-    * normalization as [[graft.sources.Tables.events]]; the schema is
-    * taken from a metadata-only batch read (file-source streams
-    * require an explicit schema). `maxFilesPerTrigger` bounds each
-    * micro-batch so multi-file inputs exercise real incremental
-    * processing. */
+  /** The events table as an unbounded stream: [[eventsFrom]] over
+    * `events.parquet`. `maxFilesPerTrigger` bounds each micro-batch
+    * so multi-file inputs exercise real incremental processing. */
   def events(spark: SparkSession, dir: String, maxFilesPerTrigger: Int = 0): DataFrame =
     eventsFrom(spark, s"$dir/events.parquet", maxFilesPerTrigger)
 
-  /** Same as [[events]] but over an arbitrary events-shaped parquet
-    * path (used by specs/queries that stage multi-file or
-    * sentinel-augmented inputs). `extraCols` carries staged
-    * changelog columns (e.g. the CDC `op` row-kind) through the
+  /** Any events-shaped parquet path as a [[parquetStream]], with the
+    * same schema-adaptive ts normalization as
+    * [[graft.sources.Tables.events]] (used by specs/queries that stage
+    * multi-file or sentinel-augmented inputs). `extraCols` carries
+    * staged changelog columns (e.g. the CDC `op` row-kind) through the
     * projection. */
   def eventsFrom(spark: SparkSession, path: String, maxFilesPerTrigger: Int = 0,
                  extraCols: Seq[String] = Nil): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(path).schema
-    var reader = spark.readStream.schema(schema)
-    if (maxFilesPerTrigger > 0)
-      reader = reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-    // For a non-glob path the file source injects basePath = the path
-    // itself, which partition discovery rejects when it is a single
-    // FILE. Turning the last character into a trivial one-char glob
-    // ([x]) keeps the match identical while routing around that
-    // injection.
-    val streamPath =
-      if (new java.io.File(path).isFile) s"${path.init}[${path.last}]" else path
-    graft.sources.Tables.normalizeTs(reader.parquet(streamPath))
+    graft.sources.Tables.normalizeTs(parquetStream(spark, path, maxFilesPerTrigger))
       .select((Seq("event_id", "ts", "user_id", "event_type", "value", "props")
         ++ extraCols).map(col): _*)
   }
@@ -85,33 +72,46 @@ object StreamSources {
         col("event_type"), col("value"), col("props"))
   }
 
-  /** The documents table as an unbounded stream (no timestamp
-    * normalization needed — the table has no nanos column); same
-    * schema-from-batch-read and single-file-glob routing as
-    * [[eventsFrom]]. */
-  def documents(spark: SparkSession, dir: String, maxFilesPerTrigger: Int = 0): DataFrame = {
-    val path = s"$dir/documents.parquet"
-    val schema = spark.read.parquet(path).schema
-    var reader = spark.readStream.schema(schema)
-    if (maxFilesPerTrigger > 0)
-      reader = reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-    val streamPath =
-      if (new java.io.File(path).isFile) s"${path.init}[${path.last}]" else path
-    reader.parquet(streamPath)
-  }
+  /** The documents table as an unbounded [[parquetStream]] (no
+    * timestamp normalization needed — the table has no nanos column). */
+  def documents(spark: SparkSession, dir: String, maxFilesPerTrigger: Int = 0): DataFrame =
+    parquetStream(spark, s"$dir/documents.parquet", maxFilesPerTrigger)
 
-  /** Any parquet table as an unbounded stream (no normalization) —
-    * same schema-from-batch-read and single-file-glob routing as
-    * [[eventsFrom]]; used for staged embeddings replays. */
+  /** The one parquet file-stream reader: any parquet table as an
+    * unbounded stream, its schema taken from a metadata-only batch read
+    * (file-source streams require an explicit schema).
+    * `maxFilesPerTrigger` > 0 bounds each micro-batch to that many
+    * files. */
   def parquetStream(spark: SparkSession, path: String,
                     maxFilesPerTrigger: Int = 0): DataFrame = {
     val schema = spark.read.parquet(path).schema
     var reader = spark.readStream.schema(schema)
     if (maxFilesPerTrigger > 0)
       reader = reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
+    // For a non-glob path the file source injects basePath = the path
+    // itself, which partition discovery rejects when it is a single
+    // FILE. Turning the last character into a trivial one-char glob
+    // ([x]) keeps the match identical while routing around that
+    // injection.
     val streamPath =
       if (new java.io.File(path).isFile) s"${path.init}[${path.last}]" else path
     reader.parquet(streamPath)
+  }
+
+  /** `df` staged as `nFiles` parquet files under `<work>/input` and
+    * replayed one file per micro-batch — the staged input of a
+    * [[StreamUtil.drained]] recipe. */
+  def staged(df: DataFrame, nFiles: Int, work: String): DataFrame = {
+    df.repartition(nFiles).write.mode("overwrite").parquet(s"$work/input")
+    parquetStream(df.sparkSession, s"$work/input", maxFilesPerTrigger = 1)
+  }
+
+  /** The events table staged time-ordered under `<work>/input`
+    * ([[FunnelStream.stageTimeOrdered]]) and replayed one file per
+    * micro-batch — the ordered delivery the frontier states need. */
+  def timeOrdered(spark: SparkSession, dir: String, nFiles: Int, work: String): DataFrame = {
+    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
+    eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1)
   }
 
   /** Staged-replay batch sizing for the delta-append corpus states:

@@ -315,273 +315,135 @@ final class TwaState(stateDir: String) {
 
 object TimeseriesStream {
 
+  /** The (type, day) count state behind the seventeen faces below:
+    * the time-ordered replay, drained once per (input, nFiles)
+    * ([[StreamUtil.drained]]). */
+  private def typeDaily(spark: SparkSession, dir: String, nFiles: Int) =
+    StreamUtil.drained(spark, "graft_stdaily_", dir, nFiles)(
+      StreamSources.timeOrdered(spark, dir, nFiles, _), new TypeDailyCountState(_))(_.merge)
+
+  /** The daily (x, y) state behind stream_rolling_corr and
+    * stream_ma_crossover, drained like [[typeDaily]]. */
+  private def volRev(spark: SparkSession, dir: String, nFiles: Int) =
+    StreamUtil.drained(spark, "graft_svolrev_", dir, nFiles)(
+      StreamSources.timeOrdered(spark, dir, nFiles, _), new DailyVolRevState(_))(_.merge)
+
   /** Queries entry (oracle: same SQL as `time_weighted_value`). */
-  def streamTimeWeighted(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_stwa_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new TwaState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.report(spark)
-  }
+  def streamTimeWeighted(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    StreamUtil.drained(spark, "graft_stwa_", dir, nFiles)(
+      StreamSources.timeOrdered(spark, dir, nFiles, _), new TwaState(_))(_.merge).report(spark)
 
-  /** Queries entry (oracle: same SQL as `acf_daily`). */
-  def streamAcf(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sacf_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new TypeDailyCountState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.report(spark)
-  }
+  /** Queries entry (oracle: same SQL as `acf_daily`): the shared
+    * (type, day) count state. */
+  def streamAcf(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    typeDaily(spark, dir, nFiles).report(spark)
 
-  /** Queries entry (oracle: same SQL as `type_mix_drift`): the SAME
-    * (type, day) count state as stream_acf, second face. */
-  def streamTypeMixDrift(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_smix_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new TypeDailyCountState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.reportMixDrift(spark)
-  }
+  /** Queries entry (oracle: same SQL as `type_mix_drift`): the shared
+    * (type, day) count state. */
+  def streamTypeMixDrift(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    typeDaily(spark, dir, nFiles).reportMixDrift(spark)
 
-  /** Queries entry (oracle: same SQL as `chi2_type_dow`): the SAME
-    * (type, day) count state as stream_acf / stream_type_mix_drift,
-    * third face. */
-  def streamChi2TypeDow(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_schi2_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new TypeDailyCountState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.reportChi2Dow(spark)
-  }
+  /** Queries entry (oracle: same SQL as `chi2_type_dow`): the shared
+    * (type, day) count state. */
+  def streamChi2TypeDow(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    typeDaily(spark, dir, nFiles).reportChi2Dow(spark)
 
   /** Queries entry (oracle: same SQL as `fano_factor_daily`): the
-    * SAME (type, day) count state, fourth face. */
-  def streamFano(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sfano_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new TypeDailyCountState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.reportFano(spark)
-  }
+    * shared (type, day) count state. */
+  def streamFano(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    typeDaily(spark, dir, nFiles).reportFano(spark)
 
   /** Queries entry (oracle: same SQL as `spearman_daily_pairs`): the
-    * SAME (type, day) count state, fifth face. */
-  def streamSpearman(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sspear_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new TypeDailyCountState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.reportSpearman(spark)
-  }
+    * shared (type, day) count state. */
+  def streamSpearman(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    typeDaily(spark, dir, nFiles).reportSpearman(spark)
 
-  /** Queries entry (oracle: same SQL as `runs_test_daily`): the SAME
-    * (type, day) count state, sixth face. */
-  def streamRunsTest(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sruns_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new TypeDailyCountState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.reportRuns(spark)
-  }
+  /** Queries entry (oracle: same SQL as `runs_test_daily`): the shared
+    * (type, day) count state. */
+  def streamRunsTest(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    typeDaily(spark, dir, nFiles).reportRuns(spark)
 
   /** Queries entry (oracle: same SQL as `kendall_tau_daily`): the
-    * SAME (type, day) count state, seventh face. */
-  def streamKendall(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_skend_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new TypeDailyCountState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.reportKendall(spark)
-  }
+    * shared (type, day) count state. */
+  def streamKendall(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    typeDaily(spark, dir, nFiles).reportKendall(spark)
 
-  /** Queries entry (oracle: same SQL as `ljung_box_daily`): the SAME
-    * (type, day) count state, eighth face. */
-  def streamLjungBox(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_slb_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new TypeDailyCountState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.reportLjungBox(spark)
-  }
+  /** Queries entry (oracle: same SQL as `ljung_box_daily`): the shared
+    * (type, day) count state. */
+  def streamLjungBox(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    typeDaily(spark, dir, nFiles).reportLjungBox(spark)
 
-  /** Queries entry (oracle: same SQL as `mutual_info_type_dow`):
-    * the SAME (type, day) count state, tenth face. */
-  def streamMutualInfo(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_smi_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new TypeDailyCountState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.reportMutualInfo(spark)
-  }
+  /** Queries entry (oracle: same SQL as `mutual_info_type_dow`): the
+    * shared (type, day) count state. */
+  def streamMutualInfo(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    typeDaily(spark, dir, nFiles).reportMutualInfo(spark)
 
   /** Queries entry (oracle: same SQL as `jarque_bera_daily`): the
-    * SAME (type, day) count state, eleventh face. */
-  def streamJarqueBera(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sjb_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new TypeDailyCountState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.reportJarqueBera(spark)
-  }
+    * shared (type, day) count state. */
+  def streamJarqueBera(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    typeDaily(spark, dir, nFiles).reportJarqueBera(spark)
 
-  /** Queries entry (oracle: same SQL as `theil_sen_trend`): the SAME
-    * (type, day) count state, twelfth face. */
-  def streamTheilSen(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sthsen_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new TypeDailyCountState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.reportTheilSen(spark)
-  }
+  /** Queries entry (oracle: same SQL as `theil_sen_trend`): the shared
+    * (type, day) count state. */
+  def streamTheilSen(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    typeDaily(spark, dir, nFiles).reportTheilSen(spark)
 
   /** Queries entry (oracle: same SQL as `seasonal_strength`): the
-    * SAME (type, day) count state, thirteenth face. */
-  def streamSeasonalStrength(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sseas_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new TypeDailyCountState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.reportSeasonalStrength(spark)
-  }
+    * shared (type, day) count state. */
+  def streamSeasonalStrength(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    typeDaily(spark, dir, nFiles).reportSeasonalStrength(spark)
 
   /** Queries entry (oracle: same SQL as `wilcoxon_signed_rank`): the
-    * SAME (type, day) count state, fourteenth face. */
-  def streamWilcoxon(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_swsr_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new TypeDailyCountState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.reportWilcoxon(spark)
-  }
+    * shared (type, day) count state. */
+  def streamWilcoxon(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    typeDaily(spark, dir, nFiles).reportWilcoxon(spark)
 
   /** Queries entry (oracle: same SQL as `cross_correlation_daily`):
-    * the SAME (type, day) count state, fifteenth face. */
-  def streamCcf(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sccf_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new TypeDailyCountState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.reportCcf(spark)
-  }
+    * the shared (type, day) count state. */
+  def streamCcf(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    typeDaily(spark, dir, nFiles).reportCcf(spark)
 
-  /** Queries entry (oracle: same SQL as `friedman_daily`): the SAME
-    * (type, day) count state, seventeenth face. */
-  def streamFriedman(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sfried_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new TypeDailyCountState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.reportFriedman(spark)
-  }
+  /** Queries entry (oracle: same SQL as `friedman_daily`): the shared
+    * (type, day) count state. */
+  def streamFriedman(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    typeDaily(spark, dir, nFiles).reportFriedman(spark)
 
-  /** Queries entry (oracle: same SQL as `pacf_daily`): the SAME
-    * (type, day) count state, sixteenth face. */
-  def streamPacf(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_spacf_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new TypeDailyCountState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.reportPacf(spark)
-  }
+  /** Queries entry (oracle: same SQL as `pacf_daily`): the shared
+    * (type, day) count state. */
+  def streamPacf(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    typeDaily(spark, dir, nFiles).reportPacf(spark)
 
-  /** Queries entry (oracle: same SQL as `dow_residual_outliers`):
-    * the SAME (type, day) count state, ninth face. */
-  def streamDowResidual(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sdowr_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new TypeDailyCountState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.reportDowResidual(spark)
-  }
+  /** Queries entry (oracle: same SQL as `dow_residual_outliers`): the
+    * shared (type, day) count state. */
+  def streamDowResidual(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    typeDaily(spark, dir, nFiles).reportDowResidual(spark)
 
   /** Queries entry (oracle: same SQL as `item_adoption`). */
-  def streamItemAdoption(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sadopt_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new ItemDayCountState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.report(spark)
-  }
+  def streamItemAdoption(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    StreamUtil.drained(spark, "graft_sadopt_", dir, nFiles)(
+      StreamSources.timeOrdered(spark, dir, nFiles, _), new ItemDayCountState(_))(_.merge)
+      .report(spark)
 
-  /** Queries entry (oracle: same SQL as `heavy_changers`): the SAME
-    * (item, day) count state, second face — order-free additive
-    * counts, so no staged time ordering is needed. */
-  def streamHeavyChangers(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_shvychg_")
-    val state = new ItemDayCountState(s"$work/state")
-    StreamSources.runForeachBatch(StreamSources.events(spark, dir), state.merge)
-    state.reportHeavyChangers(spark)
-  }
+  /** Queries entry (oracle: same SQL as `heavy_changers`): the
+    * (item, day) count state of stream_item_adoption, drained from
+    * the unstaged event stream — order-free additive counts need no
+    * staged time ordering, so this recipe is its own drain. */
+  def streamHeavyChangers(spark: SparkSession, dir: String): DataFrame =
+    StreamUtil.drained(spark, "graft_shvychg_", dir)(
+      _ => StreamSources.events(spark, dir), new ItemDayCountState(_))(_.merge)
+      .reportHeavyChangers(spark)
 
   /** Queries entry (oracle: same SQL as `rolling_corr_daily`). */
-  def streamRollingCorr(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_scorr_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new DailyVolRevState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.report(spark)
-  }
+  def streamRollingCorr(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    volRev(spark, dir, nFiles).report(spark)
 
-  /** Queries entry (oracle: same SQL as `ma_crossover`): the SAME
-    * daily (x, y) state as stream_rolling_corr, second face. */
-  def streamMaCrossover(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_smacx_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new DailyVolRevState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.reportMaCrossover(spark)
-  }
+  /** Queries entry (oracle: same SQL as `ma_crossover`): the shared
+    * daily (x, y) state. */
+  def streamMaCrossover(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    volRev(spark, dir, nFiles).reportMaCrossover(spark)
 
   /** Queries entry (oracle: same SQL as `survival_km`). */
-  def streamSurvival(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_ssurv_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new SurvivalState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.report(spark)
-  }
+  def streamSurvival(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    StreamUtil.drained(spark, "graft_ssurv_", dir, nFiles)(
+      StreamSources.timeOrdered(spark, dir, nFiles, _), new SurvivalState(_))(_.merge).report(spark)
 }

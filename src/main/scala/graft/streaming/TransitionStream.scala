@@ -351,121 +351,74 @@ object TransitionStream {
     * window + frontier stitching reproduce every consecutive hop
     * exactly once; distinct union absorbs any overlap), so the
     * drained stream's SCC labeling equals the batch operator's. */
-  def streamSccItems(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sscc_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new ItemEdgeState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.report(spark)
-  }
+  def streamSccItems(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    StreamUtil.drained(spark, "graft_sscc_", dir, nFiles)(
+      StreamSources.timeOrdered(spark, dir, nFiles, _), new ItemEdgeState(_))(_.merge)
+      .report(spark)
+
+  /** The (prev, curr, n) pair state behind stream_transitions,
+    * stream_markov, stream_absorption and stream_first_passage: the
+    * time-ordered replay, drained once per (input, nFiles)
+    * ([[StreamUtil.drained]]). */
+  private def transitions(spark: SparkSession, dir: String, nFiles: Int) =
+    StreamUtil.drained(spark, "graft_trans_", dir, nFiles)(
+      StreamSources.timeOrdered(spark, dir, nFiles, _), new TransitionState(_))(_.merge)
+
+  /** The per-(user, day) presence state behind stream_distinct_daily,
+    * stream_user_lifecycle and stream_dau_wau_mau, drained like
+    * [[transitions]]. */
+  private def days(spark: SparkSession, dir: String, nFiles: Int) =
+    StreamUtil.drained(spark, "graft_ddaily_", dir, nFiles)(
+      StreamSources.timeOrdered(spark, dir, nFiles, _), new DistinctDailyState(_))(_.merge)
+
+  /** The session state behind stream_peak_concurrency and
+    * stream_session_duration, drained like [[transitions]]. */
+  private def sessions(spark: SparkSession, dir: String, nFiles: Int) =
+    StreamUtil.drained(spark, "graft_speak_", dir, nFiles)(
+      StreamSources.timeOrdered(spark, dir, nFiles, _), new PeakSessionState(_))(_.merge)
 
   /** Queries entry (oracle: same SQL as `event_transitions`). */
-  def streamTransitions(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_trans_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new TransitionState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.report(spark)
-  }
+  def streamTransitions(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    transitions(spark, dir, nFiles).report(spark)
 
   /** Queries entry (oracle: same SQL as `distinct_daily`). */
-  def streamDistinctDaily(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_ddaily_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new DistinctDailyState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.report(spark)
-  }
-
-  private def drainedDayState(spark: SparkSession, dir: String,
-                              prefix: String, nFiles: Int): DistinctDailyState = {
-    val work = graft.GraftCaches.trackTempDir(prefix)
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new DistinctDailyState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state
-  }
+  def streamDistinctDaily(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    days(spark, dir, nFiles).report(spark)
 
   /** Queries entry (oracle: same SQL as `markov_stationary`): the
-    * SAME (prev, curr, n) pair state as stream_transitions, second
-    * face. */
-  def streamMarkov(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_smkv_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new TransitionState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.reportMarkov(spark)
-  }
+    * shared transition-pair state. */
+  def streamMarkov(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    transitions(spark, dir, nFiles).reportMarkov(spark)
 
   /** Queries entry (oracle: same SQL as `absorption_steps`): the
-    * SAME transition-pair state, third face. */
-  def streamAbsorption(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sabs_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new TransitionState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.reportAbsorption(spark)
-  }
+    * shared transition-pair state. */
+  def streamAbsorption(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    transitions(spark, dir, nFiles).reportAbsorption(spark)
 
   /** Queries entry (oracle: same SQL as `first_passage_matrix`): the
-    * SAME transition-pair state, fourth face. */
-  def streamFirstPassage(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sfpm_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new TransitionState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.reportFirstPassage(spark)
-  }
+    * shared transition-pair state. */
+  def streamFirstPassage(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    transitions(spark, dir, nFiles).reportFirstPassage(spark)
 
   /** Queries entry (oracle: same SQL as `interevent_histogram`). */
-  def streamInterevent(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_sgap_")
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new IntereventState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state.report(spark)
-  }
+  def streamInterevent(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
+    StreamUtil.drained(spark, "graft_sgap_", dir, nFiles)(
+      StreamSources.timeOrdered(spark, dir, nFiles, _), new IntereventState(_))(_.merge)
+      .report(spark)
 
   /** Queries entry (oracle: same SQL as `peak_concurrency`). */
   def streamPeakConcurrency(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
-    drainedSessionState(spark, dir, "graft_speak_", nFiles).report(spark)
+    sessions(spark, dir, nFiles).report(spark)
 
   /** Queries entry (oracle: same SQL as `session_duration`). */
   def streamSessionDuration(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
-    drainedSessionState(spark, dir, "graft_sdur_", nFiles).reportDurations(spark)
-
-  private def drainedSessionState(spark: SparkSession, dir: String,
-                                  prefix: String, nFiles: Int): PeakSessionState = {
-    val work = graft.GraftCaches.trackTempDir(prefix)
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
-    val state = new PeakSessionState(s"$work/state")
-    StreamSources.runForeachBatch(
-      StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
-    state
-  }
+    sessions(spark, dir, nFiles).reportDurations(spark)
 
   /** Queries entry (oracle: same SQL as `user_lifecycle`). */
   def streamUserLifecycle(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
-    drainedDayState(spark, dir, "graft_slife_", nFiles).reportLifecycle(spark)
+    days(spark, dir, nFiles).reportLifecycle(spark)
 
   /** Queries entry (oracle: same SQL as `dau_wau_mau`). */
   def streamDauWauMau(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
-    drainedDayState(spark, dir, "graft_sdau_", nFiles).reportDauWauMau(spark)
+    days(spark, dir, nFiles).reportDauWauMau(spark)
 }

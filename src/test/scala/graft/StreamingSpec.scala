@@ -2,7 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{EngagementStream, KafkaConfig}
+import org.apache.spark.sql.streaming.StreamingQueryListener
+
+import graft.streaming.{EngagementStream, KafkaConfig, TimeseriesStream}
 
 /** Stream/batch parity: every streaming operator must produce exactly
   * the result of its batch twin after draining the same input — the
@@ -73,7 +75,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   test("stream_router counts equal event_router; physical route partitions exist") {
     assert(rows("stream_router") == rows("event_router"))
-    val (out, _) = EngagementStream.fanout(spark, sf)
+    val out = EngagementStream.fanout(spark, sf).outDir
     val routes = new java.io.File(s"$out/routed").listFiles()
       .filter(_.isDirectory).map(_.getName).toSet
     assert(routes == Set("route=analytics", "route=billing", "route=crm", "route=ops"),
@@ -81,11 +83,79 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   }
 
   test("fanout enriched sink holds every event exactly once") {
-    val (out, _) = EngagementStream.fanout(spark, sf)
+    val out = EngagementStream.fanout(spark, sf).outDir
     val enriched = spark.read.parquet(s"$out/enriched")
     val nEvents = graft.sources.Tables.events(spark, sf).count()
     assert(enriched.count() == nEvents)
     assert(enriched.select("event_id").distinct().count() == nEvents)
+  }
+
+  test("fan-out reads each micro-batch from its source once") {
+    val inputRows = new java.util.concurrent.atomic.AtomicLong()
+    val terminated = new java.util.concurrent.CountDownLatch(1)
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        inputRows.addAndGet(e.progress.numInputRows)
+      def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        terminated.countDown()
+    }
+    spark.streams.addListener(listener)
+    try {
+      EngagementStream.runFanout(spark, sf, GraftCaches.trackTempDir("graft_fanout_spec_"))
+      // the bus delivers a query's progress events before its
+      // termination, so after this every progress has been counted
+      assert(terminated.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.streams.removeListener(listener)
+    // three sinks read each batch; the source is scanned once per batch
+    assert(inputRows.get == graft.sources.Tables.events(spark, sf).count())
+  }
+
+  /** Streaming queries started while `f` runs, with its result (the
+    * listener's `onQueryStarted` runs synchronously inside `start()`,
+    * so the count is exact when `f` returns). */
+  private def queriesStarted[A](f: => A): (A, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = n.incrementAndGet()
+      def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try { val a = f; (a, n.get) } finally spark.streams.removeListener(listener)
+  }
+
+  private def sortedRows(df: => org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("shared drain: two faces of one state start one streaming query and equal their batch twins") {
+    GraftCaches.clearAll()
+    val ((acf, fano), started) = queriesStarted(
+      (sortedRows(TimeseriesStream.streamAcf(spark, sf)),
+        sortedRows(TimeseriesStream.streamFano(spark, sf))))
+    assert(started == 1, s"$started streaming queries for two faces of one drain")
+    assert(acf == sortedRows(SparkEntry.queries("acf_daily")(spark, sf)))
+    assert(fano == sortedRows(SparkEntry.queries("fano_factor_daily")(spark, sf)))
+  }
+
+  test("shared drain: after GraftCaches.clearAll the next face drains again") {
+    val (_, first) = queriesStarted(sortedRows(TimeseriesStream.streamFano(spark, sf)))
+    GraftCaches.clearAll()
+    // a memo that outlived the clear would read the deleted state dir
+    val (again, second) = queriesStarted(sortedRows(TimeseriesStream.streamFano(spark, sf)))
+    assert(first <= 1 && second == 1, s"first=$first second=$second")
+    assert(again == sortedRows(SparkEntry.queries("fano_factor_daily")(spark, sf)))
+  }
+
+  test("shared drain: the same face with a different nFiles drains its own state") {
+    GraftCaches.clearAll()
+    val (_, four) = queriesStarted(sortedRows(TimeseriesStream.streamFano(spark, sf)))
+    val (two, other) = queriesStarted(
+      sortedRows(TimeseriesStream.streamFano(spark, sf, nFiles = 2)))
+    val (_, repeat) = queriesStarted(
+      sortedRows(TimeseriesStream.streamChi2TypeDow(spark, sf, nFiles = 2)))
+    assert((four, other, repeat) == ((1, 1, 0)))
+    assert(two == sortedRows(SparkEntry.queries("fano_factor_daily")(spark, sf)))
   }
 
   test("stream_dedup drops a full replay across micro-batches") {

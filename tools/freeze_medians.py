@@ -1,8 +1,8 @@
 #!/usr/bin/env python3
 """Summarize a scale_run.sh measurement log into per-query medians.
 
-Input: the output of tools/refreeze.sh (or any scale_run.sh log) — lines
-of "<query> <seconds|TIMEOUT|FAIL>" interleaved with "## ..." section
+Input: a tools/scale_run.sh log — lines of
+"<query> <seconds|TIMEOUT|FAIL>" interleaved with "## ..." section
 headers. Every occurrence of a query name is one fresh-JVM run; the
 median over all its runs is the freeze candidate.
 
