@@ -64,31 +64,36 @@ final class CorpusFilterState(stateDir: String, threshold: Double) {
     part(spark, "meta", "doc_id BIGINT, pred_lang STRING, quality DOUBLE")
 
   def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val docs = batch.toDF()
-    // Write the batch's signature deltas FIRST, then probe from the
-    // just-written parquet: the probe joins reference the batch bands
-    // twice and the batch sets twice, so probing the in-flight plan
-    // recomputed the minhash/shingle kernel per reference (the
-    // sigTable materialization lesson). Prior-state reads still
-    // filter batch <= version (pre-commit), so the new deltas stay
-    // invisible to this batch's seen-side.
-    val (batchBands, batchSets) = Dedup.batchSignatures(docs)
-    // bands ∥ sets: independent jobs over the same rebalanced batch
-    // scan (each evaluates its own kernel either way — overlapping
-    // them trades idle job-tail time, not extra work; guide §2.6).
-    StreamUtil.inParallel(
-      () => StreamUtil.writeSharded(batchBands, state.at(batchId, "bands"), Seq("doc_id")),
-      () => StreamUtil.writeSharded(batchSets, state.at(batchId, "sets"), Seq("doc_id")))
-    val newPairs = Dedup.incrementalPairsFrom(
-      StreamUtil.readDeltaAt(spark, state.at(batchId, "bands"),
-        "doc_id BIGINT, band INT, band_hash BIGINT"),
-      StreamUtil.readDeltaAt(spark, state.at(batchId, "sets"),
-        "doc_id BIGINT, sh ARRAY<STRING>"),
-      bands(spark), sets(spark), threshold)
-    StreamUtil.writeSharded(newPairs, state.at(batchId, "pairs"), Seq("doc_a"))
-    StreamUtil.writeSharded(TextOps.langQualityTransform(docs),
-      state.at(batchId, "meta"), Seq("doc_id"))
+    // the signature kernel and the verdicts each read the batch:
+    // without the persist each one re-scans it from its source file
+    batch.persist()
+    try {
+      val spark = batch.sparkSession
+      val docs = batch.toDF()
+      // Write the batch's signature deltas FIRST, then probe from the
+      // just-written parquet: the probe joins reference the batch bands
+      // twice and the batch sets twice, so probing the in-flight plan
+      // recomputed the minhash/shingle kernel per reference (the
+      // sigTable materialization lesson). Prior-state reads still
+      // filter batch <= version (pre-commit), so the new deltas stay
+      // invisible to this batch's seen-side.
+      val (batchBands, batchSets) = Dedup.batchSignatures(docs)
+      // bands ∥ sets: independent jobs over the same rebalanced batch
+      // scan (each evaluates its own kernel either way — overlapping
+      // them trades idle job-tail time, not extra work; guide §2.6).
+      StreamUtil.inParallel(
+        () => StreamUtil.writeSharded(batchBands, state.at(batchId, "bands"), Seq("doc_id")),
+        () => StreamUtil.writeSharded(batchSets, state.at(batchId, "sets"), Seq("doc_id")))
+      val newPairs = Dedup.incrementalPairsFrom(
+        StreamUtil.readDeltaAt(spark, state.at(batchId, "bands"),
+          "doc_id BIGINT, band INT, band_hash BIGINT"),
+        StreamUtil.readDeltaAt(spark, state.at(batchId, "sets"),
+          "doc_id BIGINT, sh ARRAY<STRING>"),
+        bands(spark), sets(spark), threshold)
+      StreamUtil.writeSharded(newPairs, state.at(batchId, "pairs"), Seq("doc_a"))
+      StreamUtil.writeSharded(TextOps.langQualityTransform(docs),
+        state.at(batchId, "meta"), Seq("doc_id"))
+    } finally batch.unpersist()
   }
 
   /** The election + keep/drop report over the drained state. The
@@ -145,31 +150,36 @@ final class CorpusFilterTombstoneState(stateDir: String, threshold: Double) {
     state.prior(spark, ddl, name)
 
   def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val docs = batch.toDF()
-    val ups = docs.filter(col("op") === "u").drop("op")
-    // Same write-first/probe-from-parquet restructure as
-    // [[CorpusFilterState.merge]].
-    val (batchBands, batchSets) = Dedup.batchSignatures(ups)
-    // Same §2.6 overlap as the append-only face: bands ∥ sets, then
-    // pairs ∥ tomb (independent of each other), then meta.
-    StreamUtil.inParallel(
-      () => StreamUtil.writeSharded(batchBands, state.at(batchId, "bands"), Seq("doc_id")),
-      () => StreamUtil.writeSharded(batchSets, state.at(batchId, "sets"), Seq("doc_id")))
-    val newPairs = Dedup.incrementalPairsFrom(
-      StreamUtil.readDeltaAt(spark, state.at(batchId, "bands"),
-        "doc_id BIGINT, band INT, band_hash BIGINT"),
-      StreamUtil.readDeltaAt(spark, state.at(batchId, "sets"),
-        "doc_id BIGINT, sh ARRAY<STRING>"),
-      part(spark, "bands", "doc_id BIGINT, band INT, band_hash BIGINT"),
-      part(spark, "sets", "doc_id BIGINT, sh ARRAY<STRING>"), threshold)
-    StreamUtil.inParallel(
-      () => StreamUtil.writeSharded(newPairs, state.at(batchId, "pairs"), Seq("doc_a")),
-      () => StreamUtil.writeSharded(
-        docs.filter(col("op") === "d").select(col("doc_id")).distinct(),
-        state.at(batchId, "tomb"), Seq("doc_id")))
-    StreamUtil.writeSharded(TextOps.langQualityTransform(ups),
-      state.at(batchId, "meta"), Seq("doc_id"))
+    // persisted once, like [[CorpusFilterState.merge]]'s batch: the
+    // upserts' kernel, the tombstones and the verdicts all read it
+    batch.persist()
+    try {
+      val spark = batch.sparkSession
+      val docs = batch.toDF()
+      val ups = docs.filter(col("op") === "u").drop("op")
+      // Same write-first/probe-from-parquet restructure as
+      // [[CorpusFilterState.merge]].
+      val (batchBands, batchSets) = Dedup.batchSignatures(ups)
+      // Same §2.6 overlap as the append-only face: bands ∥ sets, then
+      // pairs ∥ tomb (independent of each other), then meta.
+      StreamUtil.inParallel(
+        () => StreamUtil.writeSharded(batchBands, state.at(batchId, "bands"), Seq("doc_id")),
+        () => StreamUtil.writeSharded(batchSets, state.at(batchId, "sets"), Seq("doc_id")))
+      val newPairs = Dedup.incrementalPairsFrom(
+        StreamUtil.readDeltaAt(spark, state.at(batchId, "bands"),
+          "doc_id BIGINT, band INT, band_hash BIGINT"),
+        StreamUtil.readDeltaAt(spark, state.at(batchId, "sets"),
+          "doc_id BIGINT, sh ARRAY<STRING>"),
+        part(spark, "bands", "doc_id BIGINT, band INT, band_hash BIGINT"),
+        part(spark, "sets", "doc_id BIGINT, sh ARRAY<STRING>"), threshold)
+      StreamUtil.inParallel(
+        () => StreamUtil.writeSharded(newPairs, state.at(batchId, "pairs"), Seq("doc_a")),
+        () => StreamUtil.writeSharded(
+          docs.filter(col("op") === "d").select(col("doc_id")).distinct(),
+          state.at(batchId, "tomb"), Seq("doc_id")))
+      StreamUtil.writeSharded(TextOps.langQualityTransform(ups),
+        state.at(batchId, "meta"), Seq("doc_id"))
+    } finally batch.unpersist()
   }
 
   def report(spark: SparkSession, minQuality: Double, langs: Seq[String]): DataFrame = {

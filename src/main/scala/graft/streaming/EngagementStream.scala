@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{LongType, StructType}
@@ -205,27 +205,18 @@ object EngagementStream {
   }
 
   /** Cumulative leaderboard state (the Redis ZINCRBY analog,
-    * process.py:79-95): per micro-batch, partial per-user scores are
-    * merged into a versioned parquet scoreboard. Only the (small)
-    * aggregated scoreboard is rewritten per batch — the raw stream is
-    * never re-read. */
+    * process.py:79-95): per micro-batch, the partial per-user scores
+    * are committed as one delta ([[StreamUtil.AdditiveState]]) and
+    * summed at read — the raw stream is never re-read, and a batch
+    * neither reads nor rewrites the scoreboard. */
   final class LeaderboardState(stateDir: String) {
-    /** A cumulative sum is NOT idempotent under batch replay, so the
-      * committed version doubles as the batchId high-water mark that
-      * makes `merge` effectively-once across restarts
-      * ([[StreamUtil.VersionedState]]). */
-    private val state = new StreamUtil.VersionedState(stateDir)
+    private val state = new StreamUtil.AdditiveState(stateDir,
+      "user_id BIGINT, raw_score DOUBLE, n_events BIGINT", Seq("user_id"),
+      StreamUtil.sums("raw_score", "n_events"))
 
-    def merge(batchEvents: DataFrame, batchId: Long): Unit = state.commit(batchId) {
-      val spark = batchEvents.sparkSession
-      val partial = batchEvents.groupBy(col("user_id"))
+    def merge(batchEvents: DataFrame, batchId: Long): Unit = state.merge(batchId) {
+      batchEvents.groupBy(col("user_id"))
         .agg(sum(col("value")).as("raw_score"), count("*").as("n_events"))
-      val merged =
-        if (state.version < 0) partial
-        else spark.read.parquet(state.at(state.version)).unionByName(partial)
-          .groupBy(col("user_id"))
-          .agg(sum(col("raw_score")).as("raw_score"), sum(col("n_events")).as("n_events"))
-      merged.write.mode("overwrite").parquet(state.at(batchId))
     }
 
     /** Top-N view over the current scoreboard — same shape as the
@@ -234,7 +225,7 @@ object EngagementStream {
       // rank-after-limit via the window-free array-rank projection
       // (see Engagement.rankTopN) — no global-window WARN.
       Engagement.rankTopN(
-        spark.read.parquet(state.at(state.version))
+        state.read(spark)
           .orderBy(col("raw_score").desc, col("user_id"))
           .limit(n))
   }
@@ -411,13 +402,15 @@ private[graft] object StreamUtil {
     *  - versioned rewrite (`deltaStores` empty): each batch rewrites
     *    the whole state as `v<N>` (or sub-stores `v<N>/<store>`), and
     *    the prior version is deleted once `v<N>` has committed — for
-    *    grid/entity states whose size plateaus;
+    *    states whose merge is not a per-key combine of deltas
+    *    (frontiers, latest-per-key, several stores of one version);
     *  - delta-append (`deltaStores` = the store names, `""` = `dir`
     *    itself): each batch appends only its own partial as
     *    `<store>/batch=<N>`, and readers union every delta with
-    *    `batch <= version`. Corpus-scale accumulations use this: the
+    *    `batch <= version`. Corpus-scale accumulations use this (the
     *    rewrite layout would re-write the whole index every batch,
-    *    quadratic write volume over the stream's lifetime.
+    *    quadratic write volume over the stream's lifetime), and so
+    *    does every per-key additive state, through [[AdditiveState]].
     *
     * COMMIT RULE: version N counts as committed only once [[commit]]
     * has atomically created its `_COMMIT` marker(s) — `v<N>/_COMMIT`,
@@ -559,6 +552,81 @@ private[graft] object StreamUtil {
         fs(dir).create(compactMarker(dir), false).close()
         installCompaction(dir, stores.map(_._1))
       }
+  }
+
+  /** The store an [[AdditiveState]] commits its deltas to. Named, not
+    * `""`: [[installCompaction]] deletes `<dir>/<store>` before its
+    * rename, so installing a compacted `""` store would delete the
+    * state dir itself, `_compact` staging included. */
+  private val AdditiveStore = "delta"
+
+  /** Committed deltas an [[AdditiveState]] keeps before it folds them
+    * into one: a read unions at most this many, and the fold costs
+    * about one whole-state rewrite per this many batches. */
+  val MaxAdditiveDeltas = 8
+
+  /** `sum` as the combiner of each named measure. */
+  def sums(names: String*): Seq[(String, Column => Column)] =
+    names.map(_ -> (sum(_: Column)))
+
+  /** Per-key additive state — a count, sum, max or sketch per key, the
+    * leaderboard's `ZINCRBY` shape — on [[VersionedState]]'s
+    * delta-append layout:
+    *
+    *  - [[merge]] commits only the batch's partial, as
+    *    `<dir>/delta/batch=<N>` under the helper's replay guard and
+    *    commit marker: one write and no prior read, so a batch costs
+    *    what the batch holds, not what the state holds;
+    *  - [[read]] combines the committed deltas with one
+    *    `groupBy(keys).agg(combiners)`; no `measures` makes the state
+    *    a distinct key set;
+    *  - once more than [[MaxAdditiveDeltas]] deltas have committed,
+    *    [[merge]] folds them into one through [[VersionedState.compact]]
+    *    (staged, then committed by one marker, then installed), whose
+    *    content is exactly [[read]]'s.
+    *
+    * `ddl` is the state's schema: each partial is reconciled to it
+    * by name (`Dataset.to`), and [[read]] returns its columns in its
+    * order. Each combiner (`sum`, `max`, `hll_union_agg(_, lit(false))`,
+    * `graft_kll_merge(_, lit(k))`) must be associative and commutative:
+    * a read combines whatever deltas are committed, in any grouping. */
+  final class AdditiveState(dir: String, ddl: String, keys: Seq[String],
+      measures: Seq[(String, Column => Column)]) {
+    private val state = new VersionedState(dir, Seq(AdditiveStore))
+    private val schema = StructType.fromDDL(ddl)
+
+    /** Committed deltas, counted once after recovery and kept by [[merge]]. */
+    private var deltas: Int = {
+      val store = new org.apache.hadoop.fs.Path(s"$dir/$AdditiveStore")
+      val f = fs(dir)
+      if (!f.exists(store)) 0
+      else f.listStatus(store).count(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
+    }
+
+    /** The last committed batch, -1 before the first commit. */
+    def version: Long = state.version
+
+    /** Commits `partial` as batch `batchId`'s delta; a replayed batch
+      * at or below [[version]] is skipped without evaluating it. */
+    def merge(batchId: Long)(partial: => DataFrame): Unit = if (batchId > state.version) {
+      val p = partial
+      state.commit(batchId)(p.to(schema).write.parquet(state.at(batchId, AdditiveStore)))
+      deltas += 1
+      if (deltas > MaxAdditiveDeltas) {
+        state.compact(Seq((AdditiveStore, read(p.sparkSession), keys)))
+        deltas = 1
+      }
+    }
+
+    /** The state: every committed delta combined per key. */
+    def read(spark: SparkSession): DataFrame = {
+      val all = state.prior(spark, ddl, AdditiveStore)
+      val combined = measures.map { case (m, combine) => combine(col(m)).as(m) } match {
+        case Seq() => all.distinct()
+        case aggs => all.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+      }
+      combined.select(schema.fieldNames.toSeq.map(col): _*)
+    }
   }
 
   // --- Tombstone compaction steps for delta-append stores (round 13) ---

@@ -21,29 +21,27 @@ import org.apache.spark.sql.functions._
   * bounded by distinct (user, item) pairs — the same cardinality the
   * batch query's first aggregate materializes.
   *
-  * Versioned-parquet + replay-guard discipline ([[CdcCompact]]). */
+  * Each batch commits its distinct pairs as one delta behind the
+  * replay guard, and a read takes the distinct union
+  * ([[StreamUtil.AdditiveState]] with no measures). */
 final class UserItemState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "user_id BIGINT, item BIGINT",
+    Seq("user_id", "item"), Nil)
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "user_id BIGINT, item BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
     // NULL items kept: the batch twin's per-user item count includes
     // them (they only drop at the pair filter), and the ≤50 cap must
     // see the identical count
-    val partial = batch
+    batch
       .select(col("user_id"),
         get_json_object(col("props"), "$.k").cast("long").as("item"))
       .distinct()
-    val merged = prior(spark).unionByName(partial).distinct()
-    StreamUtil.writeSharded(merged, state.at(batchId), Seq("user_id", "item"))
   }
 
   private def edges(spark: SparkSession): DataFrame =
     graft.operators.Behavior
-      .coEngagementFromItems(prior(spark), maxItems = 50, minSupport = 1L)
+      .coEngagementFromItems(state.read(spark), maxItems = 50, minSupport = 1L)
       .orderBy(col("n_users").desc, col("item_a"), col("item_b"))
       .limit(800)
       .select(col("item_a"), col("item_b"))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Streaming approximate-distinct (daily unique users) over HLL
@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * invisible by construction. The same sketch-column discipline as
   * [[graft.operators.Olap]] `hllSketchDaily` (reference: the daily
   * rollups its ClickHouse sink serves, `src/process.py:43-76`);
-  * state versioning/replay-guard is the [[ValueCountState]] pattern.
+  * per-batch sketch deltas behind the replay guard are the
+  * [[ValueCountState]] pattern.
   *
   * Approximate by construction → no DuckDB oracle (rows-only);
   * spec-gated instead on (a) EXACT equality with the one-shot batch
@@ -19,25 +20,19 @@ import org.apache.spark.sql.functions._
   * batch or 10) and (b) ±5% of true exact distinct.
   */
 final class HllDistinctState(stateDir: String, lgConfigK: Int = 14) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "day TIMESTAMP, sk BINARY",
+    Seq("day"), Seq("sk" -> (hll_union_agg(_: Column, lit(false)))))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "day TIMESTAMP, sk BINARY")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = batch
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    batch
       .select(date_trunc("day", col("ts")).as("day"), col("user_id"))
       .groupBy(col("day"))
       .agg(hll_sketch_agg(col("user_id"), lit(lgConfigK)).as("sk"))
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("day"))
-      .agg(hll_union_agg(col("sk"), lit(false)).as("sk"))
-    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def estimates(spark: SparkSession): DataFrame =
-    prior(spark)
+    state.read(spark)
       .select(col("day"),
         round(hll_sketch_estimate(col("sk"))).cast("long").as("est_users"))
       .orderBy(col("day"))
@@ -124,30 +119,25 @@ final class CmsState(stateDir: String) {
   * Exact weekly percentiles on an unbounded stream would need
   * per-key value multisets (state grows with events); this state is
   * O(weeks · days) sketches forever. Report is the batch operator's
-  * own [[graft.operators.Olap.kllWeeklyReport]].
-  * Versioned-parquet + replay-guard discipline ([[CdcCompact]]). */
+  * own [[graft.operators.Olap.kllWeeklyReport]]. Each batch commits
+  * its sketches as one delta behind the replay guard, and a read
+  * merges the deltas per (week, day) ([[StreamUtil.AdditiveState]]). */
 final class KllDailyState(stateDir: String, k: Int = 200) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "week TIMESTAMP, day TIMESTAMP, sk BINARY",
+    Seq("week", "day"), Seq("sk" -> (call_function("graft_kll_merge", _: Column, lit(k)))))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "week TIMESTAMP, day TIMESTAMP, sk BINARY")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    graft.functions.GraftFunctions.register(spark)
-    val partial = batch
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    graft.functions.GraftFunctions.register(batch.sparkSession)
+    batch
       .select(date_trunc("week", col("ts")).as("week"),
         date_trunc("day", col("ts")).as("day"), col("value"))
       .groupBy(col("week"), col("day"))
       .agg(call_function("graft_kll_agg", col("value"), lit(k)).as("sk"))
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("week"), col("day"))
-      .agg(call_function("graft_kll_merge", col("sk"), lit(k)).as("sk"))
-    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def report(spark: SparkSession): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    graft.operators.Olap.kllWeeklyReport(prior(spark), k)
+    graft.operators.Olap.kllWeeklyReport(state.read(spark), k)
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Streaming statistical moments: per event type, the additive
@@ -17,11 +17,11 @@ import org.apache.spark.sql.functions._
   * expression shape the DuckDB oracle mirrors literally. A per-batch
   * float accumulation would drift; integer moments cannot.
   *
-  * State is |event types| rows, versioned per batch with the
-  * [[graft.streaming.CdcCompact]]-family `batchId ≤ version` replay
-  * guard (a cumulative sum is not idempotent under micro-batch
-  * replay). Merging is a full-outer coalesce-add, so types appearing
-  * for the first time mid-stream just materialize.
+  * State is one |event types|-row delta per batch
+  * ([[StreamUtil.AdditiveState]]) behind the `batchId ≤ version`
+  * replay guard (a cumulative sum is not idempotent under micro-batch
+  * replay); a read sums the deltas per type, so types appearing for
+  * the first time mid-stream just materialize.
   *
   * Scale: per batch the stream collapses map-side to |types| moment
   * rows; the state read/write is metadata-scale. Σx² headroom: cents
@@ -31,35 +31,30 @@ import org.apache.spark.sql.functions._
   * Long path is exact and 4× cheaper.
   */
 final class MomentsState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  // Loud-fail overflow invariant (round-5 advice): the scaladoc's
+  // ~9·10⁸-rows-per-type Σx² ceiling was documented but unenforced —
+  // past it the state would corrupt silently. A Long overflow of a
+  // sum of positives shows up as a negative (or an n beyond the
+  // documented ceiling). Each combined measure carries the whole
+  // check, so it survives column pruning, and every read of the
+  // state raises it — the compaction's read included.
+  private val guarded: Column => Column = c =>
+    when(sum(col("sumsq_c")) < 0 || sum(col("sum_c")) < 0 || sum(col("n")) > 900000000L,
+      raise_error(concat(lit("MomentsState Long overflow for event_type="),
+        col("event_type"), lit(" — promote sumsq_c to DECIMAL(38,0)"))))
+      .otherwise(sum(c))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "event_type STRING, n BIGINT, sum_c BIGINT, sumsq_c BIGINT")
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "event_type STRING, n BIGINT, sum_c BIGINT, sumsq_c BIGINT",
+    Seq("event_type"), Seq("n" -> guarded, "sum_c" -> guarded, "sumsq_c" -> guarded))
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
     val cents = round(col("value") * 100).cast("long")
-    val partial = batch
+    batch
       .select(col("event_type"), cents.as("c"))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("c")).as("sum_c"),
            sum(col("c") * col("c")).as("sumsq_c"))
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("event_type"))
-      .agg(sum(col("n")).as("n"), sum(col("sum_c")).as("sum_c"),
-           sum(col("sumsq_c")).as("sumsq_c"))
-    // Loud-fail overflow invariant (round-5 advice): the scaladoc's
-    // ~9·10⁸-rows-per-type Σx² ceiling was documented but unenforced —
-    // past it the state would corrupt silently. A Long overflow of a
-    // sum of positives shows up as a negative (or an n beyond the
-    // documented ceiling); raise_error inside the filter condition
-    // survives column pruning and costs one comparison per state row.
-    val guarded = merged.filter(
-      when(col("sumsq_c") < 0 || col("sum_c") < 0 || col("n") > 900000000L,
-        raise_error(concat(lit("MomentsState Long overflow for event_type="),
-          col("event_type"), lit(" — promote sumsq_c to DECIMAL(38,0)"))))
-      .otherwise(lit(true)))
-    StreamUtil.writeGrid(guarded, state.at(batchId))
   }
 
   /** Mean / sample stddev derived from the exact integer moments.
@@ -69,7 +64,7 @@ final class MomentsState(stateDir: String) {
     * divide-by-zero Infinity.
     */
   def report(spark: SparkSession): DataFrame =
-    prior(spark)
+    state.read(spark)
       .select(col("event_type"), col("n"),
         round((col("sum_c") / 100.0) / col("n"), 4).as("mean"),
         when(col("n") > 1,
@@ -84,7 +79,7 @@ final class MomentsState(stateDir: String) {
     * state stores sumsq_c as BIGINT; the rollup's DECIMAL(38,9)
     * terms widen it before any cross-type arithmetic. */
   def reportAnova(spark: SparkSession): DataFrame =
-    graft.operators.Stats.anovaFromMoments(prior(spark))
+    graft.operators.Stats.anovaFromMoments(state.read(spark))
 }
 
 object MomentsStream {
@@ -112,42 +107,37 @@ object MomentsStream {
 /** Streaming incremental rollup — [[graft.operators.Olap
   * .incrementalRollup]]'s streaming twin, closing the
   * materialized-view-maintenance story across batch and stream: the
-  * per-(day, event_type) daily rollup maintained by merging each
-  * micro-batch's partial aggregate into versioned state (additive
-  * Long metrics, [[MomentsState]]'s replay guard). Late rows for any
+  * per-(day, event_type) daily rollup maintained by committing each
+  * micro-batch's partial aggregate as a delta and summing the deltas
+  * at read (additive Long metrics, [[MomentsState]]'s replay guard).
+  * Late rows for any
   * old day fold in exactly like the batch operator's delta MERGE —
   * there is no watermark cut-off because the state keys on day, not
   * on open windows; a deployment bounds state by archiving days past
   * the lateness horizon to the serving store.
   */
 final class RollupState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "day TIMESTAMP, event_type STRING, n BIGINT, cents BIGINT",
+    Seq("day", "event_type"), StreamUtil.sums("n", "cents"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "day TIMESTAMP, event_type STRING, n BIGINT, cents BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = batch
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    batch
       .select(date_trunc("day", col("ts")).as("day"), col("event_type"),
         expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
       .groupBy(col("day"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"))
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("day"), col("event_type"))
-      .agg(sum(col("n")).as("n"), sum(col("cents")).as("cents"))
-    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def view(spark: SparkSession): DataFrame =
-    prior(spark).orderBy(col("day"), col("event_type"))
+    state.read(spark).orderBy(col("day"), col("event_type"))
 
   /** SECOND face: the wide type × day-of-week pivot — dow is a pure
     * function of the rollup's day key, so the BI pivot is a read
     * over the same additive daily grid. */
   def pivotTypeDow(spark: SparkSession): DataFrame =
     graft.operators.Olap.pivotFromTypeDow(
-      prior(spark)
+      state.read(spark)
         .select(col("event_type"),
           (dayofweek(col("day")) - 1).cast("long").as("dow"), col("n"))
         .groupBy(col("event_type"), col("dow")).agg(sum(col("n")).as("n")))
@@ -190,26 +180,20 @@ object RollupStream {
   * [[RollupState]].
   */
 final class DailyModeState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "day TIMESTAMP, item BIGINT, n BIGINT",
+    Seq("day", "item"), StreamUtil.sums("n"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "day TIMESTAMP, item BIGINT, n BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = batch
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    batch
       .select(date_trunc("day", col("ts")).as("day"),
         get_json_object(col("props"), "$.k").cast("long").as("item"))
       .groupBy(col("day"), col("item"))
       .agg(count(lit(1)).as("n"))
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("day"), col("item"))
-      .agg(sum(col("n")).as("n"))
-    StreamUtil.writeSharded(merged, state.at(batchId), Seq("day", "item"))
   }
 
   def mode(spark: SparkSession): DataFrame =
-    graft.operators.Behavior.modeFromDailyCounts(prior(spark))
+    graft.operators.Behavior.modeFromDailyCounts(state.read(spark))
 }
 
 /** Streaming corpus-drift state —
@@ -228,25 +212,19 @@ final class DailyModeState(stateDir: String) {
   * data-scale, so the state write is hash-sharded on (source, tok).
   */
 final class DriftState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "source STRING, tok STRING, n BIGINT",
+    Seq("source", "tok"), StreamUtil.sums("n"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "source STRING, tok STRING, n BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = batch
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    batch
       .select(col("source"), explode(split(col("text"), " ")).as("tok"))
       .groupBy(col("source"), col("tok"))
       .agg(count(lit(1)).as("n"))
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("source"), col("tok"))
-      .agg(sum(col("n")).as("n"))
-    StreamUtil.writeSharded(merged, state.at(batchId), Seq("source", "tok"))
   }
 
   def drift(spark: SparkSession): DataFrame =
-    graft.operators.TextOps.sourceDriftFromCounts(prior(spark))
+    graft.operators.TextOps.sourceDriftFromCounts(state.read(spark))
 }
 
 object DriftStream {
@@ -270,25 +248,19 @@ object DriftStream {
   * |days| rows; late rows fold into their (old) day.
   */
 final class DailyCountState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "day TIMESTAMP, n BIGINT",
+    Seq("day"), StreamUtil.sums("n"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "day TIMESTAMP, n BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = batch
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    batch
       .select(date_trunc("day", col("ts")).as("day"))
       .groupBy(col("day"))
       .agg(count(lit(1)).as("n"))
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("day"))
-      .agg(sum(col("n")).as("n"))
-    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def changepoint(spark: SparkSession): DataFrame =
-    graft.operators.Behavior.changepointFromDaily(prior(spark))
+    graft.operators.Behavior.changepointFromDaily(state.read(spark))
 }
 
 object ChangepointStream {
@@ -324,48 +296,42 @@ object DailyModeStream {
   * |types|×|days| rows.
   */
 final class DailyTypeCentsState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "event_type STRING, day TIMESTAMP, cents BIGINT, n BIGINT",
+    Seq("event_type", "day"), StreamUtil.sums("cents", "n"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "event_type STRING, day TIMESTAMP, cents BIGINT, n BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = batch
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    batch
       .select(col("event_type"), date_trunc("day", col("ts")).as("day"),
         expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
       .groupBy(col("event_type"), col("day"))
       .agg(sum(col("cents")).as("cents"), count(lit(1)).as("n"))
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("event_type"), col("day"))
-      .agg(sum(col("cents")).as("cents"), sum(col("n")).as("n"))
-    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def ewma(spark: SparkSession): DataFrame =
-    graft.operators.Behavior.ewmaFromDaily(prior(spark))
+    graft.operators.Behavior.ewmaFromDaily(state.read(spark))
 
   /** The SAME daily-cents state serves Holt's level+trend smoother —
     * one state, two smoother faces. */
   def holt(spark: SparkSession): DataFrame =
-    graft.operators.Timeseries.holtFromDaily(prior(spark))
+    graft.operators.Timeseries.holtFromDaily(state.read(spark))
 
   /** Third face: the Grubbs daily-outlier screen over the same
     * additive sums. */
   def grubbs(spark: SparkSession): DataFrame =
-    graft.operators.Stats.grubbsFromDaily(prior(spark))
+    graft.operators.Stats.grubbsFromDaily(state.read(spark))
 
   /** Fifth face: the jackknife ratio-SE read — leave-day-out blocks
     * over the same (Σcents, n) grid. */
   def jackknifeRatio(spark: SparkSession): DataFrame =
-    graft.operators.Stats.jackknifeRatioFromDaily(prior(spark))
+    graft.operators.Stats.jackknifeRatioFromDaily(state.read(spark))
 
   /** Fourth face: the Page–Hinkley drift monitor — the (Σcents, n)
     * grid added round 9 carries the daily means the running-mean
     * recursion needs (the recursion itself cannot merge across
     * out-of-order batches; the grid can). */
   def pageHinkley(spark: SparkSession): DataFrame =
-    graft.operators.Stats.pageHinkleyFromDaily(prior(spark))
+    graft.operators.Stats.pageHinkleyFromDaily(state.read(spark))
 }
 
 object EwmaStream {
@@ -412,27 +378,21 @@ object EwmaStream {
   * expression tree the batch operator runs.
   */
 final class SeasonalityCellState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "event_type STRING, dow BIGINT, hour BIGINT, n BIGINT",
+    Seq("event_type", "dow", "hour"), StreamUtil.sums("n"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "event_type STRING, dow BIGINT, hour BIGINT, n BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = batch
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    batch
       .select(col("event_type"),
         expr("(unix_micros(ts) div 86400000000 + 4) % 7").as("dow"),
         hour(col("ts")).cast("long").as("hour"))
       .groupBy(col("event_type"), col("dow"), col("hour"))
       .agg(count(lit(1)).as("n"))
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("event_type"), col("dow"), col("hour"))
-      .agg(sum(col("n")).as("n"))
-    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def profile(spark: SparkSession): DataFrame =
-    graft.operators.Behavior.seasonalityFromCells(prior(spark))
+    graft.operators.Behavior.seasonalityFromCells(state.read(spark))
 }
 
 /** Streaming box-plot state —
@@ -446,30 +406,24 @@ final class SeasonalityCellState(stateDir: String) {
   * expression tree the batch operator runs.
   */
 final class ValueCountState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "event_type STRING, cents BIGINT, cnt BIGINT",
+    Seq("event_type", "cents"), StreamUtil.sums("cnt"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "event_type STRING, cents BIGINT, cnt BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = batch
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    batch
       .select(col("event_type"), expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
       .groupBy(col("event_type"), col("cents"))
       .agg(count(lit(1)).as("cnt"))
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("event_type"), col("cents"))
-      .agg(sum(col("cnt")).as("cnt"))
-    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def boxplot(spark: SparkSession): DataFrame =
-    graft.operators.Behavior.boxplotFromCounts(prior(spark))
+    graft.operators.Behavior.boxplotFromCounts(state.read(spark))
 
   /** The SAME grid serves the winsorized/trimmed report — one state,
     * two robust-stat faces. */
   def winsorized(spark: SparkSession): DataFrame =
-    graft.operators.Behavior.winsorizedFromCounts(prior(spark))
+    graft.operators.Behavior.winsorizedFromCounts(state.read(spark))
 }
 
 object BoxplotStream {
@@ -498,26 +452,20 @@ object BoxplotStream {
   * through [[graft.operators.Behavior.percentileBandsFromCounts]].
   */
 final class DailyValueCountState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "day TIMESTAMP, cents BIGINT, cnt BIGINT",
+    Seq("day", "cents"), StreamUtil.sums("cnt"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "day TIMESTAMP, cents BIGINT, cnt BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = batch
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    batch
       .select(date_trunc("day", col("ts")).as("day"),
         expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
       .groupBy(col("day"), col("cents"))
       .agg(count(lit(1)).as("cnt"))
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("day"), col("cents"))
-      .agg(sum(col("cnt")).as("cnt"))
-    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def bands(spark: SparkSession): DataFrame =
-    graft.operators.Behavior.percentileBandsFromCounts(prior(spark))
+    graft.operators.Behavior.percentileBandsFromCounts(state.read(spark))
 }
 
 object PercentileBandsStream {
@@ -538,26 +486,20 @@ object PercentileBandsStream {
   * construction.
   */
 final class DoclenBucketState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "bucket BIGINT, n_docs BIGINT, total_words BIGINT",
+    Seq("bucket"), StreamUtil.sums("n_docs", "total_words"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "bucket BIGINT, n_docs BIGINT, total_words BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = batch
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    batch
       .select(size(split(col("text"), " ")).cast("long").as("nw"))
       .select(expr("CAST(floor(log2(nw + 1)) AS BIGINT)").as("bucket"), col("nw"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_docs"), sum(col("nw")).as("total_words"))
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("bucket"))
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("total_words")).as("total_words"))
-    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def histogram(spark: SparkSession): DataFrame =
-    prior(spark)
+    state.read(spark)
       .select(col("bucket"),
         expr("CAST(pow(2, bucket) AS BIGINT) - 1").as("words_lo"),
         expr("CAST(pow(2, bucket + 1) AS BIGINT) - 2").as("words_hi"),
@@ -582,28 +524,23 @@ object DoclenStream {
   * tokenizer-training pipeline already keeps.
   */
 final class VocabState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "tok STRING, cf BIGINT",
+    Seq("tok"), StreamUtil.sums("cf"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "tok STRING, cf BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = batch
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    batch
       .select(explode(split(col("text"), " ")).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("cf"))
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("tok")).agg(sum(col("cf")).as("cf"))
-    StreamUtil.writeSharded(merged, state.at(batchId), Seq("tok"))
   }
 
   def zipf(spark: SparkSession): DataFrame =
-    graft.operators.TextOps.zipfFromVocab(prior(spark))
+    graft.operators.TextOps.zipfFromVocab(state.read(spark))
 
   /** The SAME (tok, cf) vocabulary state serves the coverage curve —
     * one vocab state, two read-time faces. */
   def coverage(spark: SparkSession): DataFrame =
-    graft.operators.TextOps.coverageFromVocab(prior(spark))
+    graft.operators.TextOps.coverageFromVocab(state.read(spark))
 }
 
 object ZipfStream {
@@ -629,25 +566,19 @@ object ZipfStream {
   * derived through [[graft.operators.Behavior.hhiFromItemCents]].
   */
 final class ItemCentsState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "event_type STRING, item BIGINT, cents BIGINT",
+    Seq("event_type", "item"), StreamUtil.sums("cents"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "event_type STRING, item BIGINT, cents BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
     // IDENTICAL extraction to the batch path — shared helper, not a
     // re-typed copy, so stream/batch parity is by construction even if
     // ANSI mode ever changes cast semantics.
-    val partial = graft.operators.Behavior.itemCentsGrid(batch.toDF())
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("event_type"), col("item"))
-      .agg(sum(col("cents")).as("cents"))
-    StreamUtil.writeSharded(merged, state.at(batchId), Seq("event_type", "item"))
+    graft.operators.Behavior.itemCentsGrid(batch.toDF())
   }
 
   def hhi(spark: SparkSession): DataFrame =
-    graft.operators.Behavior.hhiFromItemCents(prior(spark))
+    graft.operators.Behavior.hhiFromItemCents(state.read(spark))
 }
 
 object HhiStream {
@@ -677,25 +608,19 @@ object SeasonalityStream {
   * aggregate per batch. This is the streaming shape of the
   * uncertainty pipes in Chamandy et al. 2012: the estimator's
   * resamples advance with the stream, no buffering, no replay.
-  * Versioned-parquet + replay-guard discipline ([[ValueCountState]]).
+  * Per-batch deltas behind the replay guard ([[ValueCountState]]).
   */
 final class BootstrapState(stateDir: String, b: Int = 32) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "b BIGINT, n_eff BIGINT, sum_c BIGINT",
+    Seq("b"), StreamUtil.sums("n_eff", "sum_c"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "b BIGINT, n_eff BIGINT, sum_c BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = graft.operators.Sampling.bootstrapPartial(batch.toDF(), b)
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("b"))
-      .agg(sum(col("n_eff")).as("n_eff"), sum(col("sum_c")).as("sum_c"))
-    StreamUtil.writeGrid(merged, state.at(batchId))
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    graft.operators.Sampling.bootstrapPartial(batch.toDF(), b)
   }
 
   def report(spark: SparkSession): DataFrame =
-    graft.operators.Sampling.bootstrapReport(prior(spark))
+    graft.operators.Sampling.bootstrapReport(state.read(spark))
 }
 
 object BootstrapStream {

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Additive-sufficient-state streaming twins for the profiling
@@ -20,37 +20,29 @@ import org.apache.spark.sql.functions._
   *    in micro-batches exactly as an ingest pipeline would deliver
   *    it.
   *
-  * Both are replay-guarded and versioned like every state here.
+  * Both are replay-guarded [[StreamUtil.AdditiveState]]s: each batch
+  * commits its partial, and the read combines them.
   */
 final class UserSpanState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "user_id BIGINT, cohort TIMESTAMP, last_day TIMESTAMP",
+    Seq("user_id"), Seq("cohort" -> (min(_: Column)), "last_day" -> (max(_: Column))))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "user_id BIGINT, cohort TIMESTAMP, last_day TIMESTAMP")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = batch
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    batch
       .select(col("user_id"), date_trunc("day", col("ts")).as("day"))
       .groupBy(col("user_id"))
-      .agg(min(col("day")).as("b_first"), max(col("day")).as("b_last"))
-    val merged = prior(spark).join(partial, Seq("user_id"), "full_outer")
-      .select(col("user_id"),
-        least(coalesce(col("cohort"), col("b_first")),
-              coalesce(col("b_first"), col("cohort"))).as("cohort"),
-        greatest(coalesce(col("last_day"), col("b_last")),
-                 coalesce(col("b_last"), col("last_day"))).as("last_day"))
-    StreamUtil.writeSharded(merged, state.at(batchId), Seq("user_id"))
+      .agg(min(col("day")).as("cohort"), max(col("day")).as("last_day"))
   }
 
   def report(spark: SparkSession): DataFrame =
-    graft.operators.Retention.reportFromUsers(prior(spark))
+    graft.operators.Retention.reportFromUsers(state.read(spark))
 
   /** SECOND face: the capture–recapture audience estimate — half
     * membership is integer logic on the same (cohort, last_day)
     * span, so the Chapman read shares the state untouched. */
   def reportCapture(spark: SparkSession): DataFrame =
-    graft.operators.Retention.captureFromUsers(prior(spark))
+    graft.operators.Retention.captureFromUsers(state.read(spark))
 }
 
 /** Additive (user, minute, n) burst grid for the streaming bot
@@ -62,23 +54,18 @@ final class UserSpanState(stateDir: String) {
   * minutes past its review horizon out of the state; the flags only
   * ever need the recent window). */
 final class UserMinuteCountState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "user_id BIGINT, minute TIMESTAMP, n BIGINT",
+    Seq("user_id", "minute"), StreamUtil.sums("n"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "user_id BIGINT, minute TIMESTAMP, n BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = batch
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    batch
       .select(col("user_id"), date_trunc("minute", col("ts")).as("minute"))
       .groupBy(col("user_id"), col("minute")).agg(count(lit(1)).as("n"))
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("user_id"), col("minute")).agg(sum(col("n")).as("n"))
-    StreamUtil.writeSharded(merged, state.at(batchId), Seq("user_id", "minute"))
   }
 
   def report(spark: SparkSession): DataFrame =
-    graft.operators.Behavior.botFromMinutes(prior(spark))
+    graft.operators.Behavior.botFromMinutes(state.read(spark))
 }
 
 /** Additive per-source readability sums for the streaming Flesch
@@ -87,28 +74,19 @@ final class UserMinuteCountState(stateDir: String) {
   * and the FRE report is the shared
   * [[graft.operators.TextOps.fleschFromSums]] read. */
 final class FleschState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "source STRING, n_docs BIGINT, n_sentences BIGINT, n_words BIGINT, n_syllables BIGINT",
+    Seq("source"), StreamUtil.sums("n_docs", "n_sentences", "n_words", "n_syllables"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "source STRING, n_docs BIGINT, n_sentences BIGINT, n_words BIGINT, n_syllables BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = graft.operators.TextOps.fleschDocCounts(batch.toDF())
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    graft.operators.TextOps.fleschDocCounts(batch.toDF())
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_sent")).as("n_sentences"),
         sum(col("n_words")).as("n_words"), sum(col("n_syll")).as("n_syllables"))
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("source"))
-      .agg(sum(col("n_docs")).as("n_docs"),
-        sum(col("n_sentences")).as("n_sentences"),
-        sum(col("n_words")).as("n_words"),
-        sum(col("n_syllables")).as("n_syllables"))
-    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def report(spark: SparkSession): DataFrame =
-    graft.operators.TextOps.fleschFromSums(prior(spark))
+    graft.operators.TextOps.fleschFromSums(state.read(spark))
 }
 
 /** Additive (user_id, event_type, c) count grid for the streaming
@@ -116,22 +94,17 @@ final class FleschState(stateDir: String) {
   * (one new event re-weights every term), the counts can; report via
   * the shared [[graft.operators.Behavior.entropyFromUserTypeCounts]]. */
 final class UserTypeCountState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "user_id BIGINT, event_type STRING, c BIGINT",
+    Seq("user_id", "event_type"), StreamUtil.sums("c"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "user_id BIGINT, event_type STRING, c BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = batch.groupBy(col("user_id"), col("event_type"))
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    batch.groupBy(col("user_id"), col("event_type"))
       .agg(count(lit(1)).as("c"))
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("user_id"), col("event_type")).agg(sum(col("c")).as("c"))
-    StreamUtil.writeSharded(merged, state.at(batchId), Seq("user_id", "event_type"))
   }
 
   def report(spark: SparkSession): DataFrame =
-    graft.operators.Behavior.entropyFromUserTypeCounts(prior(spark))
+    graft.operators.Behavior.entropyFromUserTypeCounts(state.read(spark))
 }
 
 /** Per-user session-count frontier for the streaming sessions-per-
@@ -241,22 +214,16 @@ final class SessionAffinityState(stateDir: String, gapMinutes: Int = 30) {
 }
 
 final class LabelCentroidState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "label BIGINT, dim BIGINT, n_vecs BIGINT, sum_q BIGINT",
+    Seq("label", "dim"), StreamUtil.sums("n_vecs", "sum_q"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "label BIGINT, dim BIGINT, n_vecs BIGINT, sum_q BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = graft.operators.VectorOps.labelDimSums(batch)
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("label"), col("dim"))
-      .agg(sum(col("n_vecs")).as("n_vecs"), sum(col("sum_q")).as("sum_q"))
-    StreamUtil.writeGrid(merged, state.at(batchId))
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    graft.operators.VectorOps.labelDimSums(batch)
   }
 
   def report(spark: SparkSession): DataFrame =
-    graft.operators.VectorOps.centroidsFromSums(prior(spark))
+    graft.operators.VectorOps.centroidsFromSums(state.read(spark))
 }
 
 /** Dataset-card state over a DOCUMENTS stream: the per-(lang, source)
@@ -265,34 +232,24 @@ final class LabelCentroidState(stateDir: String) {
   * through the shared `cardFromGrid`. Distinct lang/source counts are
   * grid-key counts, so they too are exact under any batch split. */
 final class DatasetCardState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
-
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+  private val state = new StreamUtil.AdditiveState(stateDir,
     "lang STRING, source STRING, n_docs BIGINT, ws_tokens BIGINT, " +
-    "bpe_tokens BIGINT, n_chars BIGINT, min_chars BIGINT, max_chars BIGINT")
+    "bpe_tokens BIGINT, n_chars BIGINT, min_chars BIGINT, max_chars BIGINT",
+    Seq("lang", "source"), StreamUtil.sums("n_docs", "ws_tokens", "bpe_tokens", "n_chars") ++
+      Seq("min_chars" -> (min(_: Column)), "max_chars" -> (max(_: Column))))
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = graft.operators.CorpusQa.cardGrid(batch.toDF())
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("lang"), col("source"))
-      .agg(sum(col("n_docs")).as("n_docs"),
-        sum(col("ws_tokens")).as("ws_tokens"),
-        sum(col("bpe_tokens")).as("bpe_tokens"),
-        sum(col("n_chars")).as("n_chars"),
-        min(col("min_chars")).as("min_chars"),
-        max(col("max_chars")).as("max_chars"))
-    StreamUtil.writeGrid(merged, state.at(batchId))
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    graft.operators.CorpusQa.cardGrid(batch.toDF())
   }
 
   def report(spark: SparkSession): DataFrame =
-    graft.operators.CorpusQa.cardFromGrid(prior(spark))
+    graft.operators.CorpusQa.cardFromGrid(state.read(spark))
 
   /** The SAME card grid serves Cramér's V — n_docs per (source,
     * lang) cell is one of its additive sums; second face. */
   def reportCramersV(spark: SparkSession): DataFrame =
     graft.operators.Stats.cramersFromObs(
-      prior(spark).select(col("source"), col("lang"), col("n_docs").as("n")))
+      state.read(spark).select(col("source"), col("lang"), col("n_docs").as("n")))
 }
 
 /** Additive (source, len) document-length grid for the streaming KS
@@ -302,35 +259,30 @@ final class DatasetCardState(stateDir: String) {
   * state is the sufficient grid and [[graft.operators.Stats
   * .ksFromCounts]] derives the pairwise distances at read time. */
 final class SourceLenState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "source STRING, len BIGINT, c BIGINT",
+    Seq("source", "len"), StreamUtil.sums("c"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "source STRING, len BIGINT, c BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = batch
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    batch
       .select(col("source"), length(col("text")).cast("long").as("len"))
       .groupBy(col("source"), col("len")).agg(count(lit(1)).as("c"))
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("source"), col("len")).agg(sum(col("c")).as("c"))
-    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def report(spark: SparkSession): DataFrame =
-    graft.operators.Stats.ksFromCounts(prior(spark))
+    graft.operators.Stats.ksFromCounts(state.read(spark))
 
   /** The SAME length grid serves the Neyman sampling design — one
     * state, two design faces (drift test + allocation). */
   def reportNeyman(spark: SparkSession): DataFrame =
-    graft.operators.Stats.neymanFromCounts(prior(spark))
+    graft.operators.Stats.neymanFromCounts(state.read(spark))
 
   /** Third face: Wasserstein-1 between the per-source length ECDFs —
     * the KS face's integral companion, same sufficient grid (a
     * per-batch W1 cannot merge: one new length shifts every later
     * cumulative gap, so the distance derives whole-grid at read). */
   def reportW1(spark: SparkSession): DataFrame =
-    graft.operators.Stats.w1FromCounts(prior(spark))
+    graft.operators.Stats.w1FromCounts(state.read(spark))
 }
 
 /** Additive (event_type, is_base, bucket) PSI grid —
@@ -343,22 +295,16 @@ final class SourceLenState(stateDir: String) {
   * platform `cutoff` is the monitoring baseline boundary, known
   * configuration — the [[UserPrePostState]] convention. */
 final class PsiGridState(stateDir: String, cutoff: java.sql.Timestamp) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "event_type STRING, is_base BOOLEAN, bucket BIGINT, c BIGINT",
+    Seq("event_type", "is_base", "bucket"), StreamUtil.sums("c"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "event_type STRING, is_base BOOLEAN, bucket BIGINT, c BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = graft.operators.Stats.psiGrid(batch.toDF(), cutoff)
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("event_type"), col("is_base"), col("bucket"))
-      .agg(sum(col("c")).as("c"))
-    StreamUtil.writeGrid(merged, state.at(batchId))
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    graft.operators.Stats.psiGrid(batch.toDF(), cutoff)
   }
 
   def report(spark: SparkSession): DataFrame =
-    graft.operators.Stats.psiFromGrid(prior(spark))
+    graft.operators.Stats.psiFromGrid(state.read(spark))
 }
 
 /** Additive (event_type, cents) value-support grid for the streaming
@@ -368,45 +314,40 @@ final class PsiGridState(stateDir: String, cutoff: java.sql.Timestamp) {
   * [[graft.operators.Stats.mwFromCounts]] derives U/AUC at read
   * time. */
 final class TypeCentsState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "event_type STRING, cents BIGINT, c BIGINT",
+    Seq("event_type", "cents"), StreamUtil.sums("c"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "event_type STRING, cents BIGINT, c BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = batch
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    batch
       .select(col("event_type"),
         expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
       .groupBy(col("event_type"), col("cents")).agg(count(lit(1)).as("c"))
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("event_type"), col("cents")).agg(sum(col("c")).as("c"))
-    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def report(spark: SparkSession): DataFrame =
-    graft.operators.Stats.mwFromCounts(prior(spark))
+    graft.operators.Stats.mwFromCounts(state.read(spark))
 
   /** The SAME cents-support grid serves the Benford screen (digits
     * derive from the values; type rolls up) — second face. */
   def reportBenford(spark: SparkSession): DataFrame =
     graft.operators.Stats.benfordFromCents(
-      prior(spark).groupBy(col("cents")).agg(sum(col("c")).as("c")))
+      state.read(spark).groupBy(col("cents")).agg(sum(col("c")).as("c")))
 
   /** Off-policy face: IPS/SNIPS counterfactual evaluation — per-type
     * sufficient stats are a rollup of the same cents-support grid. */
   def reportOffpolicy(spark: SparkSession): DataFrame =
-    graft.operators.Experiments.offpolicyFromGrid(prior(spark))
+    graft.operators.Experiments.offpolicyFromGrid(state.read(spark))
 
   /** Third face: the k-group Kruskal–Wallis omnibus — pooled ranks
     * are a whole-support read over the same additive grid. */
   def reportKruskal(spark: SparkSession): DataFrame =
-    graft.operators.Stats.kwFromCounts(prior(spark))
+    graft.operators.Stats.kwFromCounts(state.read(spark))
 
   /** Fourth face: the Brown–Forsythe variance-homogeneity screen —
     * per-type medians and z-moments read off the same grid. */
   def reportLevene(spark: SparkSession): DataFrame =
-    graft.operators.Stats.leveneFromCounts(prior(spark))
+    graft.operators.Stats.leveneFromCounts(state.read(spark))
 }
 
 /** Per-user (score, converted) state for the streaming decile-lift
@@ -418,24 +359,18 @@ final class TypeCentsState(stateDir: String) {
   * operator's own distributed-rank derivation (parity by shared
   * code, including [[graft.operators.GlobalRank]]'s slice rank). */
 final class UserScoreState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "user_id BIGINT, score BIGINT, converted BIGINT",
+    Seq("user_id"), StreamUtil.sums("score") :+ ("converted" -> (max(_: Column))))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "user_id BIGINT, score BIGINT, converted BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = batch.groupBy(col("user_id"))
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    batch.groupBy(col("user_id"))
       .agg(sum(when(col("event_type") =!= "purchase", 1L).otherwise(0L)).as("score"),
         max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("converted"))
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("user_id"))
-      .agg(sum(col("score")).as("score"), max(col("converted")).as("converted"))
-    StreamUtil.writeSharded(merged, state.at(batchId), Seq("user_id"))
   }
 
   def report(spark: SparkSession): DataFrame =
-    graft.operators.Behavior.decileFromUsers(prior(spark))
+    graft.operators.Behavior.decileFromUsers(state.read(spark))
 }
 
 /** Per-user (last_ts, freq, cents) RFM state — every column merges
@@ -449,35 +384,27 @@ final class UserScoreState(stateDir: String) {
   * [[graft.operators.GlobalRank]] slice rank — stream ≡ batch by
   * shared code. */
 final class UserRfmState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "user_id BIGINT, last_ts TIMESTAMP, freq BIGINT, cents BIGINT",
+    Seq("user_id"), ("last_ts" -> (max(_: Column))) +: StreamUtil.sums("freq", "cents"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "user_id BIGINT, last_ts TIMESTAMP, freq BIGINT, cents BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
     // IDENTICAL extraction to the batch path (shared helper).
-    val partial = graft.operators.Behavior.rfmPerUser(batch.toDF())
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("user_id"))
-      .agg(max(col("last_ts")).as("last_ts"),
-        sum(col("freq")).as("freq"),
-        sum(col("cents")).as("cents"))
-    StreamUtil.writeSharded(merged, state.at(batchId), Seq("user_id"))
+    graft.operators.Behavior.rfmPerUser(batch.toDF())
   }
 
   def reportRfm(spark: SparkSession): DataFrame =
-    graft.operators.Behavior.rfmFromUsers(prior(spark))
+    graft.operators.Behavior.rfmFromUsers(state.read(spark))
 
   def reportRevenuePercentile(spark: SparkSession): DataFrame =
     graft.operators.Behavior.revenuePercentileFromUsers(
-      prior(spark).select(col("user_id"), col("cents")))
+      state.read(spark).select(col("user_id"), col("cents")))
 
   /** Third face: the Hill tail-index estimator — a bounded top-k
     * read over the same per-user monetary state. */
   def reportHill(spark: SparkSession): DataFrame =
     graft.operators.Stats.hillFromUsers(
-      prior(spark).select(col("user_id"), col("cents")))
+      state.read(spark).select(col("user_id"), col("cents")))
 }
 
 /** Per-user (pre_cents, post_cents) CUPED state — both columns are
@@ -490,34 +417,27 @@ final class UserRfmState(stateDir: String) {
   * Report = [[graft.operators.Experiments.cupedFromUsers]], the batch
   * operator's own derivation (parity by shared code). */
 final class UserPrePostState(stateDir: String, cutoff: java.sql.Timestamp) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "user_id BIGINT, pre_cents BIGINT, post_cents BIGINT",
+    Seq("user_id"), StreamUtil.sums("pre_cents", "post_cents"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "user_id BIGINT, pre_cents BIGINT, post_cents BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = graft.operators.Experiments.userPrePost(batch.toDF(), cutoff)
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("user_id"))
-      .agg(sum(col("pre_cents")).as("pre_cents"),
-        sum(col("post_cents")).as("post_cents"))
-    StreamUtil.writeSharded(merged, state.at(batchId), Seq("user_id"))
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    graft.operators.Experiments.userPrePost(batch.toDF(), cutoff)
   }
 
   def report(spark: SparkSession): DataFrame =
-    graft.operators.Experiments.cupedFromUsers(prior(spark))
+    graft.operators.Experiments.cupedFromUsers(state.read(spark))
 
   /** Second face: the sample-ratio-mismatch gate over the same
     * per-user state (the state's key set IS the unit census). */
   def reportSrm(spark: SparkSession): DataFrame =
-    graft.operators.Experiments.srmFromUsers(prior(spark).select(col("user_id")))
+    graft.operators.Experiments.srmFromUsers(state.read(spark).select(col("user_id")))
 
   /** Third face: the post-stratified ATE — stratum ranks derive at
     * report time over the merged grid (a stratum frozen at ingest
     * would shift as later users land). */
   def reportStratifiedAte(spark: SparkSession): DataFrame =
-    graft.operators.Experiments.stratifiedAteFromUsers(prior(spark))
+    graft.operators.Experiments.stratifiedAteFromUsers(state.read(spark))
 }
 
 /** Per-(arm, day) moments grid — [[graft.operators.Experiments
@@ -526,44 +446,32 @@ final class UserPrePostState(stateDir: String, cutoff: java.sql.Timestamp) {
   * derivation: cumulative prefix sums and every z derive at report
   * time. */
 final class ArmDayState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "arm BIGINT, day TIMESTAMP, n BIGINT, s1 BIGINT, s2 DECIMAL(38,0)",
+    Seq("arm", "day"), StreamUtil.sums("n", "s1", "s2"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "arm BIGINT, day TIMESTAMP, n BIGINT, s1 BIGINT, s2 DECIMAL(38,0)")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = graft.operators.Experiments.peekingGrid(batch.toDF())
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("arm"), col("day"))
-      .agg(sum(col("n")).as("n"), sum(col("s1")).as("s1"), sum(col("s2")).as("s2"))
-    StreamUtil.writeGrid(merged, state.at(batchId))
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    graft.operators.Experiments.peekingGrid(batch.toDF())
   }
 
   def report(spark: SparkSession): DataFrame =
-    graft.operators.Experiments.peekingFromGrid(prior(spark))
+    graft.operators.Experiments.peekingFromGrid(state.read(spark))
 }
 
 /** Per-arm value counting grid — [[graft.operators.Experiments
   * .armCentsGrid]] merged additively; value-cardinality rows. Report
   * = the batch QTE derivation over the merged grid. */
 final class ArmCentsState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "arm BIGINT, cents BIGINT, cnt BIGINT",
+    Seq("arm", "cents"), StreamUtil.sums("cnt"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "arm BIGINT, cents BIGINT, cnt BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = graft.operators.Experiments.armCentsGrid(batch.toDF())
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("arm"), col("cents"))
-      .agg(sum(col("cnt")).as("cnt"))
-    StreamUtil.writeGrid(merged, state.at(batchId))
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    graft.operators.Experiments.armCentsGrid(batch.toDF())
   }
 
   def report(spark: SparkSession): DataFrame =
-    graft.operators.Experiments.qteFromGrid(prior(spark))
+    graft.operators.Experiments.qteFromGrid(state.read(spark))
 }
 
 /** Split-conformal counting-grid state — per (event_type, is_train,
@@ -576,22 +484,16 @@ final class ArmCentsState(stateDir: String) {
   * state (the classic streaming-conformal mistake this state shape
   * avoids by construction). */
 final class ConformalGridState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "event_type STRING, is_train BOOLEAN, cents BIGINT, cnt BIGINT",
+    Seq("event_type", "is_train", "cents"), StreamUtil.sums("cnt"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "event_type STRING, is_train BOOLEAN, cents BIGINT, cnt BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = graft.operators.Experiments.conformalGrid(batch.toDF())
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("event_type"), col("is_train"), col("cents"))
-      .agg(sum(col("cnt")).as("cnt"))
-    StreamUtil.writeGrid(merged, state.at(batchId))
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    graft.operators.Experiments.conformalGrid(batch.toDF())
   }
 
   def report(spark: SparkSession): DataFrame =
-    graft.operators.Experiments.conformalFromGrid(prior(spark))
+    graft.operators.Experiments.conformalFromGrid(state.read(spark))
 }
 
 /** Heaps'-law corpus state: TWO merged rollups — per-doc token
@@ -634,22 +536,17 @@ final class CorpusHeapsState(stateDir: String) {
   * per-batch counts, hash-sharded at |items| rows; report = the
   * batch Gini derivation over the same distributed rank. */
 final class ItemEngagementState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "item BIGINT, cnt BIGINT",
+    Seq("item"), StreamUtil.sums("cnt"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "item BIGINT, cnt BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
     // IDENTICAL extraction to the batch path (shared helper).
-    val partial = graft.operators.Behavior.itemEngagementCounts(batch.toDF())
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("item")).agg(sum(col("cnt")).as("cnt"))
-    StreamUtil.writeSharded(merged, state.at(batchId), Seq("item"))
+    graft.operators.Behavior.itemEngagementCounts(batch.toDF())
   }
 
   def report(spark: SparkSession): DataFrame =
-    graft.operators.Behavior.giniFromCounts(prior(spark))
+    graft.operators.Behavior.giniFromCounts(state.read(spark))
 }
 
 object ProfileStreams {
@@ -1109,27 +1006,20 @@ object ProfileStreams {
   * chars) is a sum, so the state merges exactly under any batching;
   * |sources| rows total. Report is the shared
   * [[graft.operators.TextOps.piiDensityFromCounts]] (parity by
-  * shared code). Versioned-parquet + replay-guard discipline. */
+  * shared code). Replay-guarded per-batch deltas
+  * ([[StreamUtil.AdditiveState]]). */
 final class PiiSourceState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
-
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
+  private val state = new StreamUtil.AdditiveState(stateDir,
     "source STRING, docs BIGINT, pii_docs BIGINT, n_emails BIGINT, " +
-    "n_phones BIGINT, n_ips BIGINT, n_chars BIGINT")
+    "n_phones BIGINT, n_ips BIGINT, n_chars BIGINT",
+    Seq("source"), StreamUtil.sums("docs", "pii_docs", "n_emails", "n_phones", "n_ips", "n_chars"))
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = graft.operators.TextOps.piiDensityCounts(batch.toDF())
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("source"))
-      .agg(sum(col("docs")).as("docs"), sum(col("pii_docs")).as("pii_docs"),
-        sum(col("n_emails")).as("n_emails"), sum(col("n_phones")).as("n_phones"),
-        sum(col("n_ips")).as("n_ips"), sum(col("n_chars")).as("n_chars"))
-    StreamUtil.writeGrid(merged, state.at(batchId))
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    graft.operators.TextOps.piiDensityCounts(batch.toDF())
   }
 
   def report(spark: SparkSession): DataFrame =
-    graft.operators.TextOps.piiDensityFromCounts(prior(spark))
+    graft.operators.TextOps.piiDensityFromCounts(state.read(spark))
 }
 
 /** Append-only semantic-decontamination verdict state —
@@ -1242,21 +1132,16 @@ final class DsirTombstoneState(stateDir: String) {
   * would lock in early-corpus rules (the stale-model argument, BPE
   * edition). */
 final class WordFreqState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "word STRING, cnt BIGINT",
+    Seq("word"), StreamUtil.sums("cnt"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "word STRING, cnt BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = graft.operators.TextOps.wordFreqTransform(batch.toDF())
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("word")).agg(sum(col("cnt")).as("cnt"))
-    StreamUtil.writeGrid(merged, state.at(batchId))
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    graft.operators.TextOps.wordFreqTransform(batch.toDF())
   }
 
   def report(spark: SparkSession): DataFrame =
-    graft.operators.TextOps.bpeTrainFromVocab(prior(spark))
+    graft.operators.TextOps.bpeTrainFromVocab(state.read(spark))
 }
 
 /** QI-cell × user grid — [[graft.operators.Experiments
@@ -1264,22 +1149,16 @@ final class WordFreqState(stateDir: String) {
   * counts are sums of sums; the user dimension makes the distinct-
   * user read idempotent). Report = the batch k-anonymity derivation. */
 final class AnonymityGridState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "event_type STRING, dow BIGINT, cents_bucket BIGINT, user_id BIGINT, c BIGINT",
+    Seq("event_type", "dow", "cents_bucket", "user_id"), StreamUtil.sums("c"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "event_type STRING, dow BIGINT, cents_bucket BIGINT, user_id BIGINT, c BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = graft.operators.Experiments.anonymityGrid(batch.toDF())
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("event_type"), col("dow"), col("cents_bucket"), col("user_id"))
-      .agg(sum(col("c")).as("c"))
-    StreamUtil.writeGrid(merged, state.at(batchId))
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    graft.operators.Experiments.anonymityGrid(batch.toDF())
   }
 
   def report(spark: SparkSession): DataFrame =
-    graft.operators.Experiments.kAnonymityFromGrid(prior(spark))
+    graft.operators.Experiments.kAnonymityFromGrid(state.read(spark))
 }
 
 /** Per-(source, word) count grid — ONE additive state serving the
@@ -1288,23 +1167,18 @@ final class AnonymityGridState(stateDir: String) {
   * every per-source bill derive at report time through
   * [[graft.operators.TextOps.bpeFertilityFromGrid]]. */
 final class SourceWordState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "source STRING, word STRING, c BIGINT",
+    Seq("source", "word"), StreamUtil.sums("c"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "source STRING, word STRING, c BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = batch.select(col("source"),
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    batch.select(col("source"),
       explode(split(col("text"), " ")).as("word"))
       .groupBy(col("source"), col("word")).agg(count(lit(1)).as("c"))
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("source"), col("word")).agg(sum(col("c")).as("c"))
-    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def report(spark: SparkSession): DataFrame =
-    graft.operators.TextOps.bpeFertilityFromGrid(prior(spark))
+    graft.operators.TextOps.bpeFertilityFromGrid(state.read(spark))
 }
 
 /** Streaming hybrid-retrieval index — the serve-while-ingesting

@@ -21,38 +21,36 @@ import org.apache.spark.sql.functions._
   *    conditional mins and the one-row horizon max merge exactly;
   *    report = `Timeseries.survivalFromUsers`.
   *
-  * All three follow the versioned-parquet + replayed-batch-guard
-  * discipline ([[CdcCompact]]).
+  * All three keep the replayed-batch guard ([[CdcCompact]]). The two
+  * count grids are [[StreamUtil.AdditiveState]]s: each batch commits
+  * its partial as a delta, and a read sums the deltas. The survival
+  * state's per-user conditional mins and its horizon are two stores
+  * of one version, so it stays a versioned rewrite.
   */
 final class TypeDailyCountState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "event_type STRING, day TIMESTAMP, x BIGINT",
+    Seq("event_type", "day"), StreamUtil.sums("x"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "event_type STRING, day TIMESTAMP, x BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = batch
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    batch
       .select(col("event_type"), date_trunc("day", col("ts")).as("day"))
       .groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("x"))
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("event_type"), col("day")).agg(sum(col("x")).as("x"))
-    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def report(spark: SparkSession): DataFrame =
-    graft.operators.Timeseries.acfFromDaily(prior(spark))
+    graft.operators.Timeseries.acfFromDaily(state.read(spark))
 
   /** The SAME (type, day, x) grid serves the mix-drift report — one
     * state, two daily-composition faces. */
   def reportMixDrift(spark: SparkSession): DataFrame =
-    graft.operators.Timeseries.mixDriftFromDaily(prior(spark))
+    graft.operators.Timeseries.mixDriftFromDaily(state.read(spark))
 
   /** THIRD face: day-of-week is a pure function of the day, so the
     * daily grid is a sufficient statistic for the χ² contingency
     * cells — no new state, the same additive counts. */
   def reportChi2Dow(spark: SparkSession): DataFrame =
-    graft.operators.Stats.chi2FromObs(prior(spark)
+    graft.operators.Stats.chi2FromObs(state.read(spark)
       .select(col("event_type"),
         (dayofweek(col("day")) - 1).cast("long").as("dow"), col("x"))
       .groupBy(col("event_type"), col("dow")).agg(sum(col("x")).as("n")))
@@ -60,39 +58,39 @@ final class TypeDailyCountState(stateDir: String) {
   /** FOURTH face: the burstiness (Fano) read over the same grid. */
   def reportFano(spark: SparkSession): DataFrame =
     graft.operators.Stats.fanoFromDaily(
-      prior(spark).select(col("event_type"), col("day"), col("x").as("n")))
+      state.read(spark).select(col("event_type"), col("day"), col("x").as("n")))
 
   /** FIFTH face: Spearman rank correlation between the type series —
     * rank space is a whole-series read, the counts stay additive. */
   def reportSpearman(spark: SparkSession): DataFrame =
     graft.operators.Stats.spearmanFromDaily(
-      prior(spark).select(col("event_type"), col("day"), col("x").as("n")))
+      state.read(spark).select(col("event_type"), col("day"), col("x").as("n")))
 
   /** SIXTH face: the Wald–Wolfowitz runs test — run boundaries are a
     * whole-series read (a late day can split or merge runs). */
   def reportRuns(spark: SparkSession): DataFrame =
     graft.operators.Stats.runsFromDaily(
-      prior(spark).select(col("event_type"), col("day"), col("x").as("n")))
+      state.read(spark).select(col("event_type"), col("day"), col("x").as("n")))
 
   /** SEVENTH face: Kendall τ-b between the type series. */
   def reportKendall(spark: SparkSession): DataFrame =
     graft.operators.Stats.kendallFromDaily(
-      prior(spark).select(col("event_type"), col("day"), col("x").as("n")))
+      state.read(spark).select(col("event_type"), col("day"), col("x").as("n")))
 
   /** EIGHTH face: the Ljung–Box portmanteau over the ACF. */
   def reportLjungBox(spark: SparkSession): DataFrame =
-    graft.operators.Timeseries.ljungBoxFromDaily(prior(spark))
+    graft.operators.Timeseries.ljungBoxFromDaily(state.read(spark))
 
   /** NINTH face: the day-of-week residual outlier screen — the
     * per-dow history is a whole-grid read, the counts are additive. */
   def reportDowResidual(spark: SparkSession): DataFrame =
     graft.operators.Stats.dowResidualFromDaily(
-      prior(spark).select(col("event_type"), col("day"), col("x").as("n")))
+      state.read(spark).select(col("event_type"), col("day"), col("x").as("n")))
 
   /** TENTH face: type↔weekday mutual information over the same
     * grid (dow derives from the day, the chi2FromObs route). */
   def reportMutualInfo(spark: SparkSession): DataFrame =
-    graft.operators.Stats.miFromObs(prior(spark)
+    graft.operators.Stats.miFromObs(state.read(spark)
       .select(col("event_type"),
         (dayofweek(col("day")) - 1).cast("long").as("dow"), col("x"))
       .groupBy(col("event_type"), col("dow")).agg(sum(col("x")).as("n")))
@@ -102,47 +100,47 @@ final class TypeDailyCountState(stateDir: String) {
     * four), but the daily counts stay additive. */
   def reportJarqueBera(spark: SparkSession): DataFrame =
     graft.operators.Timeseries.jarqueBeraFromDaily(
-      prior(spark).select(col("event_type"), col("day"), col("x").as("n")))
+      state.read(spark).select(col("event_type"), col("day"), col("x").as("n")))
 
   /** TWELFTH face: the Theil–Sen robust trend — every pairwise slope
     * touches two days, so per-batch medians cannot merge; the grid
     * can. */
   def reportTheilSen(spark: SparkSession): DataFrame =
     graft.operators.Timeseries.theilSenFromDaily(
-      prior(spark).select(col("event_type"), col("day"), col("x").as("n")))
+      state.read(spark).select(col("event_type"), col("day"), col("x").as("n")))
 
   /** THIRTEENTH face: the seasonal-strength η² of dow on the daily
     * counts — between/within sums are whole-grid reads, the counts
     * merge. */
   def reportSeasonalStrength(spark: SparkSession): DataFrame =
     graft.operators.Stats.seasonalStrengthFromDaily(
-      prior(spark).select(col("event_type"), col("day"), col("x").as("n")))
+      state.read(spark).select(col("event_type"), col("day"), col("x").as("n")))
 
   /** FOURTEENTH face: the Wilcoxon signed-rank z between type pairs —
     * signed ranks are whole-series reads (a late day re-ranks every
     * |d|), the counts merge. */
   def reportWilcoxon(spark: SparkSession): DataFrame =
     graft.operators.Stats.wilcoxonFromDaily(
-      prior(spark).select(col("event_type"), col("day"), col("x").as("n")))
+      state.read(spark).select(col("event_type"), col("day"), col("x").as("n")))
 
   /** FIFTEENTH face: the lagged cross-correlation between type
     * pairs — every lag overlap is a whole-series read, the counts
     * merge. */
   def reportCcf(spark: SparkSession): DataFrame =
     graft.operators.Timeseries.ccfFromDaily(
-      prior(spark).select(col("event_type"), col("day"), col("x").as("n")))
+      state.read(spark).select(col("event_type"), col("day"), col("x").as("n")))
 
   /** SIXTEENTH face: the PACF — the Durbin–Levinson recursion is a
     * whole-correlogram read, the counts merge. */
   def reportPacf(spark: SparkSession): DataFrame =
-    graft.operators.Timeseries.pacfFromDaily(prior(spark))
+    graft.operators.Timeseries.pacfFromDaily(state.read(spark))
 
   /** SEVENTEENTH face: the Friedman repeated-measures test — does
     * the type activity ORDERING hold day after day; within-day ranks
     * are a whole-grid read, the counts stay additive. */
   def reportFriedman(spark: SparkSession): DataFrame =
     graft.operators.Stats.friedmanFromDailyCounts(
-      prior(spark).select(col("day"), col("event_type"), col("x")))
+      state.read(spark).select(col("day"), col("event_type"), col("x")))
 }
 
 /** Additive (item, day, n) engagement grid for the adoption profile —
@@ -150,58 +148,48 @@ final class TypeDailyCountState(stateDir: String) {
   * that back-dates an item's launch re-dates every share correctly
   * at read time (a per-batch "first seen" would be wrong forever). */
 final class ItemDayCountState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "item BIGINT, day TIMESTAMP, n BIGINT",
+    Seq("item", "day"), StreamUtil.sums("n"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "item BIGINT, day TIMESTAMP, n BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = batch
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    batch
       .select(get_json_object(col("props"), "$.k").cast("long").as("item"),
         date_trunc("day", col("ts")).as("day"))
       .filter(col("item").isNotNull)
       .groupBy(col("item"), col("day")).agg(count(lit(1)).as("n"))
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("item"), col("day")).agg(sum(col("n")).as("n"))
-    StreamUtil.writeSharded(merged, state.at(batchId), Seq("item", "day"))
   }
 
   def report(spark: SparkSession): DataFrame =
-    graft.operators.Behavior.adoptionFromCounts(prior(spark))
+    graft.operators.Behavior.adoptionFromCounts(state.read(spark))
 
   /** SECOND face: the heavy-changers share-delta screen — the period
     * cut is a min over the same grid, so a late back-dating batch
     * re-dates the halves correctly at read time. */
   def reportHeavyChangers(spark: SparkSession): DataFrame =
-    graft.operators.Timeseries.heavyChangersFromDaily(prior(spark))
+    graft.operators.Timeseries.heavyChangersFromDaily(state.read(spark))
 }
 
 final class DailyVolRevState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "day TIMESTAMP, x BIGINT, y BIGINT",
+    Seq("day"), StreamUtil.sums("x", "y"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "day TIMESTAMP, x BIGINT, y BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = batch
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    batch
       .select(date_trunc("day", col("ts")).as("day"),
         expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
       .groupBy(col("day"))
       .agg(count(lit(1)).as("x"), sum(col("cents")).as("y"))
-    val merged = prior(spark).unionByName(partial)
-      .groupBy(col("day")).agg(sum(col("x")).as("x"), sum(col("y")).as("y"))
-    StreamUtil.writeGrid(merged, state.at(batchId))
   }
 
   def report(spark: SparkSession): DataFrame =
-    graft.operators.Timeseries.corrFromDaily(prior(spark))
+    graft.operators.Timeseries.corrFromDaily(state.read(spark))
 
   /** The SAME (day, x, y) grid serves the crossover signal — one
     * state, two daily-series faces (the ValueCountState pattern). */
   def reportMaCrossover(spark: SparkSession): DataFrame =
-    graft.operators.Timeseries.maFromDaily(prior(spark).select(col("day"), col("y")))
+    graft.operators.Timeseries.maFromDaily(state.read(spark).select(col("day"), col("y")))
 }
 
 final class SurvivalState(stateDir: String) {
@@ -418,20 +406,22 @@ object TimeseriesStream {
   def streamDowResidual(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
     typeDaily(spark, dir, nFiles).reportDowResidual(spark)
 
-  /** Queries entry (oracle: same SQL as `item_adoption`). */
-  def streamItemAdoption(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
-    StreamUtil.drained(spark, "graft_sadopt_", dir, nFiles)(
-      StreamSources.timeOrdered(spark, dir, nFiles, _), new ItemDayCountState(_))(_.merge)
-      .report(spark)
-
-  /** Queries entry (oracle: same SQL as `heavy_changers`): the
-    * (item, day) count state of stream_item_adoption, drained from
-    * the unstaged event stream — order-free additive counts need no
-    * staged time ordering, so this recipe is its own drain. */
-  def streamHeavyChangers(spark: SparkSession, dir: String): DataFrame =
-    StreamUtil.drained(spark, "graft_shvychg_", dir)(
+  /** The (item, day) count state behind the two faces below, drained
+    * once per input ([[StreamUtil.drained]]) from the unstaged event
+    * stream: order-free additive counts need no staged time ordering. */
+  private def itemDays(spark: SparkSession, dir: String) =
+    StreamUtil.drained(spark, "graft_itemday_", dir)(
       _ => StreamSources.events(spark, dir), new ItemDayCountState(_))(_.merge)
-      .reportHeavyChangers(spark)
+
+  /** Queries entry (oracle: same SQL as `item_adoption`): the shared
+    * (item, day) count state. */
+  def streamItemAdoption(spark: SparkSession, dir: String): DataFrame =
+    itemDays(spark, dir).report(spark)
+
+  /** Queries entry (oracle: same SQL as `heavy_changers`): the shared
+    * (item, day) count state. */
+  def streamHeavyChangers(spark: SparkSession, dir: String): DataFrame =
+    itemDays(spark, dir).reportHeavyChangers(spark)
 
   /** Queries entry (oracle: same SQL as `rolling_corr_daily`). */
   def streamRollingCorr(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =

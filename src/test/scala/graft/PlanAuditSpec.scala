@@ -98,13 +98,10 @@ class PlanAuditSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     * global-ordering needs swap in the RangePartitioner slice-locate
     * pattern (SURVEY §2 row 19). */
   private val unpartitionedWindowAllowlist: Map[String, String] = Map(
-    // stream_zipf_slope (the state's other face) no longer needs an
-    // entry: its rank-filter plans a TakeOrderedAndProject(topN)
-    // BELOW the window, which the limit rule recognizes as bounded.
-    "stream_vocab_coverage" -> ("the window's input is the materialized VocabState parquet " +
-      "(tok, cf) — vocab-bounded because every micro-batch merge re-aggregates " +
-      "groupBy(tok); the bounding aggregate ran in earlier batches, so the final " +
-      "read-back plan legitimately shows a scan, not an aggregate"),
+    // Empty. The VocabState faces (stream_zipf_slope,
+    // stream_vocab_coverage) need no entry: their read combines the
+    // state's deltas with a groupBy(tok), an aggregate BELOW the
+    // window, which the rule recognizes as planning-scale.
   )
 
   /** Grouping-key names that mark an aggregate as DATA-scale: one

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
-import graft.streaming.{EngagementStream, KafkaConfig, TimeseriesStream}
+import graft.streaming.{CorpusFilterStream, EngagementStream, KafkaConfig, TimeseriesStream}
 
 /** Stream/batch parity: every streaming operator must produce exactly
   * the result of its batch twin after draining the same input — the
@@ -90,7 +90,9 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     assert(enriched.select("event_id").distinct().count() == nEvents)
   }
 
-  test("fan-out reads each micro-batch from its source once") {
+  /** Summed progress `numInputRows` of the one streaming query `f`
+    * runs: the rows its micro-batches read from their source. */
+  private def streamInputRows(f: => Unit): Long = {
     val inputRows = new java.util.concurrent.atomic.AtomicLong()
     val terminated = new java.util.concurrent.CountDownLatch(1)
     val listener = new StreamingQueryListener {
@@ -102,13 +104,26 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     }
     spark.streams.addListener(listener)
     try {
-      EngagementStream.runFanout(spark, sf, GraftCaches.trackTempDir("graft_fanout_spec_"))
+      f
       // the bus delivers a query's progress events before its
       // termination, so after this every progress has been counted
       assert(terminated.await(60, java.util.concurrent.TimeUnit.SECONDS))
     } finally spark.streams.removeListener(listener)
+    inputRows.get
+  }
+
+  test("fan-out reads each micro-batch from its source once") {
+    val inputRows = streamInputRows(
+      EngagementStream.runFanout(spark, sf, GraftCaches.trackTempDir("graft_fanout_spec_")))
     // three sinks read each batch; the source is scanned once per batch
-    assert(inputRows.get == graft.sources.Tables.events(spark, sf).count())
+    assert(inputRows == graft.sources.Tables.events(spark, sf).count())
+  }
+
+  test("corpus filter stream reads each micro-batch from its source once") {
+    val inputRows = streamInputRows(
+      CorpusFilterStream.streamCorpusFilter(spark, sf).collect())
+    // signatures and verdicts read each batch; the source is scanned once per batch
+    assert(inputRows == graft.sources.Tables.documents(spark, sf).count())
   }
 
   /** Streaming queries started while `f` runs, with its result (the
@@ -1740,12 +1755,12 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     assert(want.size == 3)
     val lb = new LeaderboardState(s"$work/crash")
     lb.merge(b0, 0)
-    // batch 1's scoreboard write killed: v1 holds only `_temporary/`
-    plantTemporaryOnly(s"$work/crash/v1")
+    // batch 1's delta write killed: delta/batch=1 holds only `_temporary/`
+    plantTemporaryOnly(s"$work/crash/delta/batch=1")
     val restarted = new LeaderboardState(s"$work/crash")
     restarted.merge(b1, 1)
     assert(restarted.topN(spark).collect().toSeq == want)
-    assert(marked(s"$work/crash/v1") && !new java.io.File(s"$work/crash/v0").exists())
+    assert(marked(s"$work/crash/delta/batch=1") && marked(s"$work/crash/delta/batch=0"))
   }
 
   test("crash injection: CDC compaction with deletes drops an unmarked version and re-merges") {
@@ -1810,5 +1825,127 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     assert(report(restarted) == want)
     Seq("bands", "sets", "pairs", "meta").foreach(s =>
       assert(marked(s"$work/crash/$s/batch=1"), s))
+  }
+
+  // --- additive state: per-batch deltas, folded past a bound ---
+
+  /** A per-key sum and max over `(k, n, top)` batches. */
+  private def additive(dir: String) = new graft.streaming.StreamUtil.AdditiveState(dir,
+    "k BIGINT, n BIGINT, top BIGINT", Seq("k"),
+    graft.streaming.StreamUtil.sums("n") :+
+      ("top" -> (org.apache.spark.sql.functions.max(_: org.apache.spark.sql.Column))))
+
+  private def additiveBatch(b: Long) = {
+    import spark.implicits._
+    Seq((b % 3, b + 1, b), (7L, 1L, -b)).toDF("k", "n", "top")
+  }
+
+  private def additiveRows(st: graft.streaming.StreamUtil.AdditiveState) =
+    st.read(spark).orderBy("k").collect().toSeq
+
+  test("additive state: a delta killed mid-write is discarded and its batch replays") {
+    val work = GraftCaches.trackTempDir("graft_crash_add_")
+    val clean = additive(s"$work/clean")
+    (0L to 3L).foreach(b => clean.merge(b)(additiveBatch(b)))
+    val want = additiveRows(clean)
+    val st = additive(s"$work/crash")
+    (0L to 1L).foreach(b => st.merge(b)(additiveBatch(b)))
+    // batch 2's delta landed with batch 3's rows (well-formed, wrong)
+    // and no marker; batch 3's holds only `_temporary/`
+    copyVersion(s"$work/clean/delta/batch=3", s"$work/crash/delta/batch=2")
+    plantTemporaryOnly(s"$work/crash/delta/batch=3")
+    val restarted = additive(s"$work/crash")
+    assert(restarted.version == 1L)
+    assert(deltaDirs(s"$work/crash/delta") == Set("batch=0", "batch=1"))
+    restarted.merge(1)(sys.error("a replayed batch's partial is never evaluated"))
+    (2L to 3L).foreach(b => restarted.merge(b)(additiveBatch(b)))
+    assert(additiveRows(restarted) == want)
+    assert(deltaDirs(s"$work/crash/delta").forall(d => marked(s"$work/crash/delta/$d")))
+  }
+
+  test("additive state: a compaction killed before its commit marker leaves the live deltas") {
+    import graft.streaming.StreamUtil
+    val dir = GraftCaches.trackTempDir("graft_crash_addstage_") + "/state"
+    val st = additive(dir)
+    (0L to 3L).foreach(b => st.merge(b)(additiveBatch(b)))
+    val want = additiveRows(st)
+    StreamUtil.stageCompaction(dir, st.version, Seq(("delta", st.read(spark), Seq("k"))))
+    assert(marked(s"$dir/_compact/delta/batch=3"))
+    val restarted = additive(dir)
+    assert(!new java.io.File(s"$dir/_compact").exists())
+    assert(deltaDirs(s"$dir/delta") == (0 to 3).map(b => s"batch=$b").toSet)
+    assert(additiveRows(restarted) == want)
+  }
+
+  test("additive state: a compaction killed after its commit marker is installed on restart") {
+    import graft.streaming.StreamUtil
+    val work = GraftCaches.trackTempDir("graft_crash_addinst_")
+    val dir = s"$work/state"
+    val st = additive(dir)
+    (0L to 3L).foreach(b => st.merge(b)(additiveBatch(b)))
+    val want = additiveRows(st)
+    StreamUtil.stageCompaction(dir, st.version, Seq(("delta", st.read(spark), Seq("k"))))
+    assert(new java.io.File(s"$dir/_compact.COMMIT").createNewFile())
+    val restarted = additive(dir)
+    assert(deltaDirs(s"$dir/delta") == Set("batch=3") && marked(s"$dir/delta/batch=3"))
+    assert(!new java.io.File(s"$dir/_compact").exists())
+    assert(!new java.io.File(s"$dir/_compact.COMMIT").exists())
+    assert(restarted.version == 3L)
+    assert(additiveRows(restarted) == want)
+    // the installed delta carries on like any other
+    val clean = additive(s"$work/clean")
+    (0L to 4L).foreach(b => clean.merge(b)(additiveBatch(b)))
+    restarted.merge(4)(additiveBatch(4))
+    assert(additiveRows(restarted) == additiveRows(clean))
+  }
+
+  test("additive state: more than the bound's worth of deltas fold into one, read unchanged") {
+    import org.apache.spark.sql.functions.{max, sum}
+    import graft.streaming.StreamUtil
+    val dir = GraftCaches.trackTempDir("graft_addfold_") + "/state"
+    val n = StreamUtil.MaxAdditiveDeltas.toLong
+    def want(upTo: Long) = (0L to upTo).map(additiveBatch).reduce(_ unionByName _)
+      .groupBy("k").agg(sum("n").as("n"), max("top").as("top")).orderBy("k").collect().toSeq
+    val st = additive(dir)
+    (0L until n).foreach(b => st.merge(b)(additiveBatch(b)))
+    assert(deltaDirs(s"$dir/delta").size == n, "at the bound nothing folds")
+    st.merge(n)(additiveBatch(n))
+    assert(deltaDirs(s"$dir/delta") == Set(s"batch=$n"))
+    assert(additiveRows(st) == want(n))
+    // a restarted state counts the folded delta as one
+    val restarted = additive(dir)
+    (n + 1 until 2 * n).foreach(b => restarted.merge(b)(additiveBatch(b)))
+    assert(deltaDirs(s"$dir/delta").size == n)
+    restarted.merge(2 * n)(additiveBatch(2 * n))
+    assert(deltaDirs(s"$dir/delta") == Set(s"batch=${2 * n}"))
+    assert(additiveRows(restarted) == want(2 * n))
+  }
+
+  test("moments state: a read whose sumsq_c overflows fails loudly") {
+    import graft.streaming.{MomentsState, StreamUtil}
+    import spark.implicits._
+    // 2.3e7 is 2.3e9 cents, whose square (5.29e18) fits a Long: each
+    // batch's sumsq_c does, the two batches' sum does not
+    def batch(v: Double) = Seq(("x", v)).toDF("event_type", "value")
+    def messages(t: Throwable) =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try for (mode <- Seq("false", "true")) {
+      spark.conf.set("spark.sql.ansi.enabled", mode)
+      val state = new MomentsState(GraftCaches.trackTempDir("graft_momovf_") + "/state")
+      state.merge(batch(2.3e7), 0)
+      state.merge(batch(2.3e7), 1)
+      val msg = messages(intercept[Exception](state.report(spark).collect()))
+      if (mode == "true") assert(msg.contains("ARITHMETIC_OVERFLOW"), msg)
+      else {
+        // the sum wraps silently; the state's own guard names the type
+        assert(msg.contains("MomentsState Long overflow for event_type=x"), msg)
+        // and the fold past the delta bound reads through the same guard
+        (2L until StreamUtil.MaxAdditiveDeltas.toLong).foreach(b => state.merge(batch(1.0), b))
+        val fold = messages(intercept[Exception](
+          state.merge(batch(1.0), StreamUtil.MaxAdditiveDeltas.toLong)))
+        assert(fold.contains("MomentsState Long overflow for event_type=x"), fold)
+      }
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 }

@@ -2,7 +2,10 @@
 # Run a graft main class directly (no sbt lock contention).
 # Usage: tools/run_main.sh <MainClass> [args...]
 # Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_DRIVER_MEM honored.
+# The heap defaults to half of MemTotal, clamped to 2-8g (the rule the
+# test suite's JVM is sized by).
 set -euo pipefail
+HEAP="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}"
 MAIN="$1"; shift
 CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 OPENS=""
@@ -16,6 +19,6 @@ done
 exec java $OPENS ${SPARK_EXTRA_JAVA_OPTS:-} \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -Xmx"${SPARK_DRIVER_MEM:-24g}" \
+  -Xmx"$HEAP" \
   -XX:ReservedCodeCacheSize=1g \
   -cp "$CP" "$MAIN" "$@"

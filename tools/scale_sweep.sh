@@ -2,23 +2,17 @@
 # Scale-curve sweep harness (round-8 verdict task 1): measures the
 # 12 heaviest queries at 10x and 100x of sf0.1, one fresh JVM per
 # (query, scale), 600 s cap, results as JSON lines. Both scale points
-# are measured by THIS harness in the same session window (48g heap,
-# 32 cores), so the 100x/10x ratios are apples-to-apples regardless of
-# how earlier rounds' 10x tables were taken.
+# are measured by THIS harness in the same session window (same heap
+# and cores), so the 100x/10x ratios are apples-to-apples regardless
+# of how earlier rounds' 10x tables were taken. Each JVM runs through
+# tools/run_main.sh: SPARK_DRIVER_MEM sets the heap (default: half of
+# MemTotal, clamped to 2-8g) and SPARK_GRAFT_CPUS the cores (default:
+# every CPU of the host).
 #
 # Usage: tools/scale_sweep.sh [gen|run|all]
 set -u
-CLASSES=/root/repo/target/scala-2.13/classes
-CP="$CLASSES:/opt/spark/jars/*"
-OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-JFLAGS="$OPENS -Xmx48g -XX:ReservedCodeCacheSize=1g -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC"
+RUN="$(dirname "$0")/run_main.sh"
+CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
 SRC=/root/testdata/sf0.1
 D10=/tmp/graft_scale10
 D100=/tmp/graft_scale100
@@ -32,7 +26,7 @@ gen() {
     set -- $spec
     if [ ! -d "$1/events.parquet" ]; then
       echo "=== ScaleGen $2x -> $1"
-      java $JFLAGS -cp "$CP" graft.ScaleGen "$SRC" "$1" "$2" 2>/dev/null
+      "$RUN" graft.ScaleGen "$SRC" "$1" "$2" 2>/dev/null
     fi
   done
 }
@@ -44,8 +38,8 @@ run() {
       set -- $spec
       scale=$1; dir=$2
       t0=$(date +%s.%N)
-      out=$(SPARK_GRAFT_SF_DIR="$dir" SPARK_GRAFT_CPUS=32 \
-            timeout 600 java $JFLAGS -cp "$CP" graft.Bench "$q" 2>/dev/null)
+      out=$(SPARK_GRAFT_SF_DIR="$dir" SPARK_GRAFT_CPUS="$CPUS" \
+            timeout 600 "$RUN" graft.Bench "$q" 2>/dev/null)
       rc=$?
       t1=$(date +%s.%N)
       sec=$(echo "$out" | grep -o "\"$q\":[0-9.eE+-]*" | head -1 | cut -d: -f2)
