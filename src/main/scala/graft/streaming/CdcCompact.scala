@@ -35,6 +35,13 @@ import org.apache.spark.sql.functions._
   * with real MERGE INTO (Delta/Iceberg) instead of
   * versioned-directory swaps, and tombstones age out after a
   * retention horizon.
+  *
+  * It stays on the rewrite layout, not an [[StreamUtil
+  * .AdditiveState]]: last-write-wins WITH deletes is not a per-key
+  * combine of deltas the read could fold, and `engagement_stream`
+  * runs it — up to [[StreamUtil.MaxAdditiveDeltas]] deltas on disk
+  * would grow its state bytes past the one compacted version kept
+  * today.
   */
 final class CdcCompact(stateDir: String, extraCols: Seq[String] = Nil) {
   /** Recovered on construction so a restarted job (new instance, same
@@ -209,7 +216,8 @@ object CdcCompact {
   * 1-second trigger for 34,000 years) before epochs could overlap —
   * the round-9 advisor flagged the old 10⁶ stride as reachable by a
   * long-lived deploy — and 2²³ epochs (one per deploy) before the
-  * Long sign bit.
+  * Long sign bit. Like [[CdcCompact]] it stays a versioned rewrite:
+  * last-write-wins with deletes is not a per-key additive combine.
   */
 final class CdcCompactDrift(stateDir: String) {
   private val state = new StreamUtil.VersionedState(stateDir)
@@ -252,7 +260,9 @@ final class CdcCompactDrift(stateDir: String) {
   * incremental operator ([[graft.operators.Engagement
   * .scd2ApplyTransform]]) applied per micro-batch — stream/batch
   * parity by the strongest form of shared code (the stream twin has
-  * NO derivation of its own). Replay-guarded like [[CdcCompact]]. */
+  * NO derivation of its own). Replay-guarded like [[CdcCompact]],
+  * and a versioned rewrite for the same reason: closing a version
+  * row replaces it, which no per-key additive combine expresses. */
 final class Scd2State(stateDir: String) {
   private val state = new StreamUtil.VersionedState(stateDir)
 

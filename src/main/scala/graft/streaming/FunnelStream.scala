@@ -13,11 +13,12 @@ import graft.sources.Tables
   * maintained incrementally across micro-batches.
   *
   * State = one row per user: (first view, first gated click, first
-  * gated purchase) — three timestamps, constant size, merged per
-  * batch with conditional mins (the [[CdcCompact]] versioned-parquet
-  * MERGE pattern, replay-guarded the same way). A batch's clicks are
-  * gated against the MERGED first-view (state ∪ this batch), so
-  * same-batch view→click chains resolve correctly.
+  * gated purchase) — three timestamps, constant size, combined by a
+  * per-column min ([[StreamUtil.AdditiveState]]). A batch's clicks
+  * are gated against the MERGED first-view (committed state ∪ this
+  * batch), so same-batch view→click chains resolve correctly; the
+  * gates are the order-dependent step, and they live in the batch's
+  * partial, which reads the committed state.
   *
   * Correctness rests on event-time-ordered delivery: a stage-k event
   * discarded today is never re-validated by a stage-(k-1) event
@@ -28,55 +29,33 @@ import graft.sources.Tables
   * (Kafka per-partition order + watermark-buffered reordering) gives
   * the production variant. */
 final class FunnelState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
-
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "user_id BIGINT, t_view TIMESTAMP, t_click TIMESTAMP, t_purchase TIMESTAMP")
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "user_id BIGINT, t_view TIMESTAMP, t_click TIMESTAMP, t_purchase TIMESTAMP",
+    Seq("user_id"), StreamUtil.mins("t_view", "t_click", "t_purchase"))
 
   /** foreachBatch body; exactly-once under replay via the
     * batchId <= version guard. */
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val p = prior(spark)
-
-    // stage 1: merged first-view per user
-    val bv = batch.filter(col("event_type") === "view")
-      .groupBy(col("user_id")).agg(min(col("ts")).as("bv"))
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    // every batch user, with its committed stages and its batch first
+    // view; a user with no qualifying event keeps an all-null row,
+    // which `n_users` counts
     val users = batch.select(col("user_id")).distinct()
-    val s1 = p.join(bv, Seq("user_id"), "full_outer")
-      .join(users, Seq("user_id"), "full_outer")
-      .select(col("user_id"),
-        coalesce(least(col("t_view"), col("bv")), col("t_view"), col("bv")).as("t_view"),
-        col("t_click"), col("t_purchase"))
-
+      .join(state.read(batch.sparkSession), Seq("user_id"), "left")
+      .join(FunnelStream.firstOf(batch, "view", "bv"), Seq("user_id"), "left")
     // stage 2: batch clicks gated on the MERGED first-view
-    val bc = batch.filter(col("event_type") === "click")
-      .join(s1.select(col("user_id"), col("t_view").as("gate")), Seq("user_id"))
-      .filter(col("ts") > col("gate"))
-      .groupBy(col("user_id")).agg(min(col("ts")).as("bc"))
-    val s2 = s1.join(bc, Seq("user_id"), "left")
-      .select(col("user_id"), col("t_view"),
-        coalesce(least(col("t_click"), col("bc")), col("t_click"), col("bc")).as("t_click"),
-        col("t_purchase"))
-
+    val s1 = users.join(FunnelStream.firstAfter(batch, "click", "bc",
+      users.select(col("user_id"), least(col("t_view"), col("bv")).as("gate"))), Seq("user_id"), "left")
     // stage 3: batch purchases gated on the merged first-click
-    val bp = batch.filter(col("event_type") === "purchase")
-      .join(s2.select(col("user_id"), col("t_click").as("gate")), Seq("user_id"))
-      .filter(col("ts") > col("gate"))
-      .groupBy(col("user_id")).agg(min(col("ts")).as("bp"))
-    val s3 = s2.join(bp, Seq("user_id"), "left")
-      .select(col("user_id"), col("t_view"), col("t_click"),
-        coalesce(least(col("t_purchase"), col("bp")), col("t_purchase"), col("bp")).as("t_purchase"))
-
-    // per-user funnel state is 4 columns × |users| — sharded by the
-    // user_id hash so the per-batch rewrite scales with the cluster
-    StreamUtil.writeSharded(s3, state.at(batchId), Seq("user_id"))
+    s1.join(FunnelStream.firstAfter(batch, "purchase", "bp",
+        s1.select(col("user_id"), least(col("t_click"), col("bc")).as("gate"))), Seq("user_id"), "left")
+      .select(col("user_id"), col("bv").as("t_view"), col("bc").as("t_click"),
+        col("bp").as("t_purchase"))
   }
 
   /** The funnel report over the current state — same shape as the
     * batch query. */
   def counts(spark: SparkSession): DataFrame =
-    prior(spark).agg(
+    state.read(spark).agg(
       count(col("t_view")).as("reached_view"),
       count(col("t_click")).as("reached_click"),
       count(col("t_purchase")).as("reached_purchase"),
@@ -94,39 +73,30 @@ final class FunnelState(stateDir: String) {
   * qualifying error lands at/after t_purchase, no error is inside
   * the interval. A late purchase arriving AFTER an already-recorded
   * error therefore classifies correctly with no per-user event
-  * lists. */
+  * lists. The three mins are an [[StreamUtil.AdditiveState]]; the
+  * post-view gates read the committed first-view. */
 final class ExclusionFunnelState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "user_id BIGINT, t_view TIMESTAMP, t_purchase TIMESTAMP, t_err TIMESTAMP",
+    Seq("user_id"), StreamUtil.mins("t_view", "t_purchase", "t_err"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "user_id BIGINT, t_view TIMESTAMP, t_purchase TIMESTAMP, t_err TIMESTAMP")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val p = prior(spark)
-    val bv = batch.filter(col("event_type") === "view")
-      .groupBy(col("user_id")).agg(min(col("ts")).as("bv"))
-    val s1 = p.join(bv, Seq("user_id"), "full_outer")
-      .select(col("user_id"),
-        coalesce(least(col("t_view"), col("bv")), col("t_view"), col("bv")).as("t_view"),
-        col("t_purchase"), col("t_err"))
-    def gatedMin(tpe: String, name: String) = batch
-      .filter(col("event_type") === tpe)
-      .join(s1.select(col("user_id"), col("t_view").as("gate")), Seq("user_id"))
-      .filter(col("ts") > col("gate"))
-      .groupBy(col("user_id")).agg(min(col("ts")).as(name))
-    val s2 = s1.join(gatedMin("purchase", "bp"), Seq("user_id"), "left")
-      .join(gatedMin("error", "be"), Seq("user_id"), "left")
-      .select(col("user_id"), col("t_view"),
-        coalesce(least(col("t_purchase"), col("bp")), col("t_purchase"), col("bp")).as("t_purchase"),
-        coalesce(least(col("t_err"), col("be")), col("t_err"), col("be")).as("t_err"))
-    StreamUtil.writeSharded(s2, state.at(batchId), Seq("user_id"))
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    val bv = FunnelStream.firstOf(batch, "view", "bv")
+    // the merged first-view of every batch user that has one
+    val gate = batch.select(col("user_id")).distinct()
+      .join(state.read(batch.sparkSession), Seq("user_id"), "left")
+      .join(bv, Seq("user_id"), "left")
+      .select(col("user_id"), least(col("t_view"), col("bv")).as("gate"))
+      .filter(col("gate").isNotNull)
+    gate.join(bv, Seq("user_id"), "left")
+      .join(FunnelStream.firstAfter(batch, "purchase", "t_purchase", gate), Seq("user_id"), "left")
+      .join(FunnelStream.firstAfter(batch, "error", "t_err", gate), Seq("user_id"), "left")
+      .select(col("user_id"), col("bv").as("t_view"), col("t_purchase"), col("t_err"))
   }
 
   /** Same output shape as the batch query. */
-  def report(spark: SparkSession): DataFrame = {
-    val s = prior(spark)
-    s.agg(
+  def report(spark: SparkSession): DataFrame =
+    state.read(spark).agg(
         count(col("t_view")).as("users_view"),
         count(col("t_purchase")).as("converted"),
         coalesce(sum(when(col("t_purchase").isNotNull && col("t_err").isNotNull &&
@@ -136,10 +106,20 @@ final class ExclusionFunnelState(stateDir: String) {
         expr("""CASE WHEN converted > 0 THEN
                |  round(CAST(converted - excluded AS DOUBLE) / converted, 6)
                |END""".stripMargin).as("clean_rate"))
-  }
 }
 
 object FunnelStream {
+
+  /** Each user's first `tpe` event of `events`, as `name`. */
+  private[streaming] def firstOf(events: DataFrame, tpe: String, name: String): DataFrame =
+    events.filter(col("event_type") === tpe)
+      .groupBy(col("user_id")).agg(min(col("ts")).as(name))
+
+  /** Each `gate` user's first batch `tpe` event strictly after its
+    * `gate` timestamp, as `name`. */
+  private[streaming] def firstAfter(batch: DataFrame, tpe: String, name: String,
+      gate: DataFrame): DataFrame =
+    firstOf(batch.join(gate, Seq("user_id")).filter(col("ts") > col("gate")), tpe, name)
 
   /** Stage events as `nFiles` time-range-partitioned parquet files
     * with strictly increasing mod-times: micro-batch k contains only

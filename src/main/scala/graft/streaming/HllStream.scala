@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import StreamUtil.AdditiveState.Store
+
 /** Streaming approximate-distinct (daily unique users) over HLL
   * sketch state — the scale path for "DAU on an unbounded stream":
   * exact distinct needs per-key user sets (state grows with users),
@@ -67,48 +69,32 @@ object HllStream {
 }
 
 /** Streaming Count–Min state — [[graft.operators.Sketches]]' twin:
-  * the d×w counter grid is additive (Long sums), so the per-batch
-  * merge is a grid union + re-sum and batch boundaries are invisible
-  * in the estimates; the candidate dictionary (the sketch answers
-  * point queries, it cannot enumerate keys) is the idempotent
-  * distinct-item presence set, vocab-like and hash-sharded on write.
-  * Versioned-parquet + replay-guard discipline ([[CdcCompact]]).
+  * the d×w counter grid is additive (Long sums), so batch boundaries
+  * are invisible in the estimates; the candidate dictionary (the
+  * sketch answers point queries, it cannot enumerate keys) is the
+  * idempotent distinct-item presence set. Both are stores of one
+  * [[StreamUtil.AdditiveState]]: each batch commits its own counter
+  * grid and item set as deltas of one version.
   *
   * This pair is exactly what a production streaming counter keeps:
   * bounded sketch for the heavy tail, a key dictionary for the
   * queryable head. */
 final class CmsState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir, Seq(
+    Store("counters", "j BIGINT, bucket BIGINT, c BIGINT",
+      Seq("j", "bucket"), StreamUtil.sums("c")),
+    Store("items", "item BIGINT", Seq("item"), Nil)))
 
-  private def priorCounters(spark: SparkSession): DataFrame = state.prior(spark,
-    "j BIGINT, bucket BIGINT, c BIGINT", "counters")
-
-  private def priorItems(spark: SparkSession): DataFrame = state.prior(spark,
-    "item BIGINT", "items")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.mergeStores(batchId) {
     val items = batch
       .select(get_json_object(col("props"), "$.k").cast("long").as("item"))
-    val partial = graft.operators.Sketches.cmsCountersTransform(items)
-    val counters = priorCounters(spark).unionByName(partial)
-      .groupBy(col("j"), col("bucket")).agg(sum(col("c")).as("c"))
-    // one distinct over the union (the outer distinct's map-side
-    // partial agg dedupes the batch side pre-exchange; the inner
-    // distinct was a second exchange for nothing — guide §2.4)
-    val dict = priorItems(spark)
-      .unionByName(items.filter(col("item").isNotNull))
-      .distinct()
-    // Independent sub-store writes overlap (guide §2.6); the version
-    // bump still happens only after both have committed.
-    StreamUtil.inParallel(
-      () => StreamUtil.writeGrid(counters, state.at(batchId, "counters")),
-      () => StreamUtil.writeSharded(dict, state.at(batchId, "items"), Seq("item")))
+    Map("counters" -> graft.operators.Sketches.cmsCountersTransform(items),
+      "items" -> items.filter(col("item").isNotNull).distinct())
   }
 
   def topItems(spark: SparkSession): DataFrame =
     graft.operators.Sketches.cmsTopFromState(
-      priorCounters(spark), priorItems(spark))
+      state.read(spark, "counters"), state.read(spark, "items"))
 }
 
 /** Streaming KLL quantile state — `kll_quantiles_daily`'s twin: one

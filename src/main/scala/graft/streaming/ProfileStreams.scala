@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import StreamUtil.AdditiveState.Store
+
 /** Additive-sufficient-state streaming twins for the profiling
   * family — the [[ValueCountState]] discipline applied to two more
   * state shapes:
@@ -113,23 +115,23 @@ final class UserTypeCountState(stateDir: String) {
   * continues the frontier session (gap ≤ timeout) or opens session
   * k+1, and batch-internal boundaries count with the ordinary lag
   * rule, so TWO columns of per-user state replace the whole event
-  * history. The histogram is a pure read
-  * ([[graft.operators.Retention.sessionsHistFromK]]). */
+  * history. An [[StreamUtil.AdditiveState]]: `k` sums, and `last_ts`
+  * is a max — the batch's last event, which under that contract is
+  * never earlier than the committed one. The histogram is a pure
+  * read ([[graft.operators.Retention.sessionsHistFromK]]). */
 final class SessionCountState(stateDir: String, gapMinutes: Int = 30) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "user_id BIGINT, last_ts TIMESTAMP, k BIGINT",
+    Seq("user_id"), StreamUtil.maxes("last_ts") ++ StreamUtil.sums("k"))
   private val gapUs = gapMinutes * 60L * 1000000L
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "user_id BIGINT, last_ts TIMESTAMP, k BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val partial = batch
+    batch
       .select(col("user_id"), col("ts"), col("event_id"))
       .withColumn("prev", lag(col("ts"), 1).over(w))
-      .join(prior(spark), Seq("user_id"), "left")
+      .join(state.read(batch.sparkSession), Seq("user_id"), "left")
       .select(col("user_id"), col("ts"),
         when(col("prev").isNotNull,
           when(unix_micros(col("ts")) - unix_micros(col("prev")) > gapUs, 1L).otherwise(0L))
@@ -138,41 +140,36 @@ final class SessionCountState(stateDir: String, gapMinutes: Int = 30) {
             unix_micros(col("ts")) - unix_micros(col("last_ts")) > gapUs, 1L).otherwise(0L))
         .as("new_s"))
       .groupBy(col("user_id"))
-      .agg(max(col("ts")).as("b_last"), sum(col("new_s")).as("b_k"))
-    val merged = prior(spark).join(partial, Seq("user_id"), "full_outer")
-      .select(col("user_id"),
-        coalesce(col("b_last"), col("last_ts")).as("last_ts"),
-        (coalesce(col("k"), lit(0L)) + coalesce(col("b_k"), lit(0L))).as("k"))
-    StreamUtil.writeSharded(merged, state.at(batchId), Seq("user_id"))
+      .agg(max(col("ts")).as("last_ts"), sum(col("new_s")).as("k"))
   }
 
   def report(spark: SparkSession): DataFrame =
     graft.operators.Retention.sessionsHistFromK(
-      prior(spark).select(col("user_id"), col("k")))
+      state.read(spark).select(col("user_id"), col("k")))
 }
 
 /** Session-affinity state: per-user STABLE session ids assigned
   * incrementally under time-ordered delivery — state is the distinct
   * (user_id, sid, event_type) presence set (idempotent union; a
   * batch that re-adds a continuing session's types is a no-op) plus
-  * a (last_ts, cur_sid) frontier per user. A batch's first session
-  * either continues `cur_sid` (gap ≤ timeout — its types union into
-  * the same sid) or opens `cur_sid`+1; the affinity report is the
-  * batch rollup over the presence rows
+  * a (last_ts, cur_sid) frontier per user, two stores of one
+  * [[StreamUtil.AdditiveState]]; the frontier combines by `max`,
+  * since a batch's last event and session id never precede the
+  * committed ones. A batch's first session either continues
+  * `cur_sid` (gap ≤ timeout — its types union into the same sid) or
+  * opens `cur_sid`+1; the affinity report is the batch rollup over
+  * the presence rows
   * ([[graft.operators.Behavior.affinityFromPresence]]), so
   * stream ≡ batch by shared derivation. */
 final class SessionAffinityState(stateDir: String, gapMinutes: Int = 30) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir, Seq(
+    Store("presence", "user_id BIGINT, sid BIGINT, event_type STRING",
+      Seq("user_id", "sid", "event_type"), Nil),
+    Store("frontier", "user_id BIGINT, last_ts TIMESTAMP, cur_sid BIGINT",
+      Seq("user_id"), StreamUtil.maxes("last_ts", "cur_sid"))))
   private val gapUs = gapMinutes * 60L * 1000000L
 
-  private def priorPresence(spark: SparkSession): DataFrame = state.prior(spark,
-    "user_id BIGINT, sid BIGINT, event_type STRING", "presence")
-
-  private def priorFrontier(spark: SparkSession): DataFrame = state.prior(spark,
-    "user_id BIGINT, last_ts TIMESTAMP, cur_sid BIGINT", "frontier")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.mergeStores(batchId) {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val labeled = batch
@@ -184,7 +181,7 @@ final class SessionAffinityState(stateDir: String, gapMinutes: Int = 30) {
         sum(col("new_s")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
     val firstMin = labeled.filter(col("seq") === 1L)
       .groupBy(col("user_id")).agg(min(col("ts")).as("first_ts"))
-    val offsets = firstMin.join(priorFrontier(spark), Seq("user_id"), "left")
+    val offsets = firstMin.join(state.read(batch.sparkSession, "frontier"), Seq("user_id"), "left")
       .select(col("user_id"),
         when(col("cur_sid").isNotNull &&
           unix_micros(col("first_ts")) - unix_micros(col("last_ts")) <= gapUs,
@@ -193,23 +190,14 @@ final class SessionAffinityState(stateDir: String, gapMinutes: Int = 30) {
     val withSid = labeled.join(offsets, Seq("user_id"))
       .select(col("user_id"), (col("offset") + col("seq")).as("sid"),
         col("event_type"), col("ts"))
-    val presence = priorPresence(spark)
-      .unionByName(withSid.select(col("user_id"), col("sid"), col("event_type")))
-      .distinct()
-    val newFrontier = withSid.groupBy(col("user_id"))
-      .agg(max(col("ts")).as("last_ts"), max(col("sid")).as("cur_sid"))
-    val frontier = priorFrontier(spark).join(newFrontier, Seq("user_id"), "left_anti")
-      .unionByName(newFrontier)
-    // Independent sub-store writes overlap (guide §2.6); the version
-    // bump still happens only after both have committed.
-    StreamUtil.inParallel(
-      () => StreamUtil.writeSharded(presence, state.at(batchId, "presence"), Seq("user_id")),
-      () => StreamUtil.writeSharded(frontier, state.at(batchId, "frontier"), Seq("user_id")))
+    Map("presence" -> withSid.select(col("user_id"), col("sid"), col("event_type")).distinct(),
+      "frontier" -> withSid.groupBy(col("user_id"))
+        .agg(max(col("ts")).as("last_ts"), max(col("sid")).as("cur_sid")))
   }
 
   def report(spark: SparkSession): DataFrame =
     graft.operators.Behavior.affinityFromPresence(
-      priorPresence(spark).select(col("user_id"),
+      state.read(spark, "presence").select(col("user_id"),
         col("sid").as("session_seq"), col("event_type")))
 }
 
@@ -499,37 +487,28 @@ final class ConformalGridState(stateDir: String) {
 /** Heaps'-law corpus state: TWO merged rollups — per-doc token
   * counts (doc_id, t), a sum of per-batch counts, and per-token
   * first-seen doc (tok, doc_id), a min of per-batch mins — both
-  * exact under any batching/replay order; |docs| + |vocab| rows,
-  * each hash-sharded. Report =
+  * exact under any batching/replay order; |docs| + |vocab| rows, two
+  * stores of one [[StreamUtil.AdditiveState]]. Report =
   * [[graft.operators.CorpusQa.heapsFromRollups]], the batch
   * operator's own regression including the distributed range-
   * partitioned cumsum. */
 final class CorpusHeapsState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir, Seq(
+    Store("perdoc", "doc_id BIGINT, t BIGINT",
+      Seq("doc_id"), StreamUtil.sums("t")),
+    Store("tokfirst", "tok STRING, doc_id BIGINT",
+      Seq("tok"), StreamUtil.mins("doc_id"))))
 
-  private def perDoc(spark: SparkSession): DataFrame = state.prior(spark,
-    "doc_id BIGINT, t BIGINT", "perdoc")
-
-  private def tokFirst(spark: SparkSession): DataFrame = state.prior(spark,
-    "tok STRING, doc_id BIGINT", "tokfirst")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.mergeStores(batchId) {
     // IDENTICAL tokenization to the batch path (shared helper).
     val toks = graft.operators.CorpusQa.heapsTokens(batch.toDF())
-    val mergedPerDoc = perDoc(spark)
-      .unionByName(toks.groupBy(col("doc_id")).agg(count(lit(1)).as("t")))
-      .groupBy(col("doc_id")).agg(sum(col("t")).as("t"))
-    val mergedTokFirst = tokFirst(spark)
-      .unionByName(toks.groupBy(col("tok")).agg(min(col("doc_id")).as("doc_id")))
-      .groupBy(col("tok")).agg(min(col("doc_id")).as("doc_id"))
-    StreamUtil.inParallel(
-      () => StreamUtil.writeSharded(mergedPerDoc, state.at(batchId, "perdoc"), Seq("doc_id")),
-      () => StreamUtil.writeSharded(mergedTokFirst, state.at(batchId, "tokfirst"), Seq("tok")))
+    Map("perdoc" -> toks.groupBy(col("doc_id")).agg(count(lit(1)).as("t")),
+      "tokfirst" -> toks.groupBy(col("tok")).agg(min(col("doc_id")).as("doc_id")))
   }
 
   def report(spark: SparkSession): DataFrame =
-    graft.operators.CorpusQa.heapsFromRollups(perDoc(spark), tokFirst(spark))
+    graft.operators.CorpusQa.heapsFromRollups(
+      state.read(spark, "perdoc"), state.read(spark, "tokfirst"))
 }
 
 /** Per-item engagement count state (props.$.k), additive sums of
@@ -1360,42 +1339,30 @@ object SemanticIvfState {
 /** Streaming Naive-Bayes training state —
   * [[graft.operators.CorpusQa.nbLangClassifierTransform]]'s twin:
   * the classifier's sufficient statistics are two ADDITIVE count
-  * grids (per-(class, token) counts — vocab-scale, hash-sharded on
-  * write — and per-class doc priors), so the model trains
+  * grids (per-(class, token) counts and per-class doc priors, two
+  * stores of one [[StreamUtil.AdditiveState]]), so the model trains
   * incrementally with one map-side-combinable aggregate per batch;
   * the evaluation face re-reads the staged corpus and scores it
   * through the SAME `nbConfusionFromState` derivation the batch
   * operator runs. This is the online shape of every
-  * retrain-as-data-arrives quality/language filter.
-  * Versioned-parquet + replay-guard discipline ([[CdcCompact]]). */
+  * retrain-as-data-arrives quality/language filter. */
 final class NbLangState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir, Seq(
+    Store("grid", "lang STRING, tok STRING, cnt BIGINT",
+      Seq("lang", "tok"), StreamUtil.sums("cnt")),
+    Store("priors", "lang STRING, n_docs BIGINT",
+      Seq("lang"), StreamUtil.sums("n_docs"))))
 
-  private def priorGrid(spark: SparkSession): DataFrame = state.prior(spark,
-    "lang STRING, tok STRING, cnt BIGINT", "grid")
-
-  private def priorDocs(spark: SparkSession): DataFrame = state.prior(spark,
-    "lang STRING, n_docs BIGINT", "priors")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val (pGrid, pPriors) = graft.operators.CorpusQa.nbTrainCounts(batch.toDF())
-    val grid = priorGrid(spark).unionByName(pGrid)
-      .groupBy(col("lang"), col("tok")).agg(sum(col("cnt")).as("cnt"))
-    val priors = priorDocs(spark).unionByName(pPriors)
-      .groupBy(col("lang")).agg(sum(col("n_docs")).as("n_docs"))
-    // Independent sub-store writes overlap (guide §2.6); the version
-    // bump still happens only after both have committed.
-    StreamUtil.inParallel(
-      () => StreamUtil.writeSharded(grid, state.at(batchId, "grid"), Seq("lang", "tok")),
-      () => StreamUtil.writeGrid(priors, state.at(batchId, "priors")))
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.mergeStores(batchId) {
+    val (grid, priors) = graft.operators.CorpusQa.nbTrainCounts(batch.toDF())
+    Map("grid" -> grid, "priors" -> priors)
   }
 
   /** Evaluation face: confusion matrix of the trained model over the
     * given corpus (the staged input the stream just drained). */
   def confusion(spark: SparkSession, docsPath: String): DataFrame =
     graft.operators.CorpusQa.nbConfusionFromState(
-      priorGrid(spark), priorDocs(spark), spark.read.parquet(docsPath))
+      state.read(spark, "grid"), state.read(spark, "priors"), spark.read.parquet(docsPath))
 }
 
 object NbLangStream {

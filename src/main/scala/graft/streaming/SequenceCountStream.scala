@@ -22,7 +22,9 @@ import graft.operators.Sequences
   * an earlier event, because a DFA mid-state cannot be rewound.
   * State is |users| rows of two BIGINTs — the smallest state table
   * in the streaming family; replay-guarded and versioned like every
-  * state here.
+  * state here. It stays a versioned rewrite, not an
+  * [[StreamUtil.AdditiveState]]: a DFA fold is not commutative, so
+  * no combine of per-batch deltas can stand in for it.
   */
 final class DfaState(stateDir: String, step: (Column, Column) => Column,
                      shift: Int, outCol: String) {

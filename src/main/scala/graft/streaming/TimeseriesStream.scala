@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import StreamUtil.AdditiveState.Store
+
 /** Streaming twins for the [[graft.operators.Timeseries]] family —
   * three more members of the state-merge family, each keeping the
   * SUFFICIENT state its statistic needs and deriving the report
@@ -21,11 +23,10 @@ import org.apache.spark.sql.functions._
   *    conditional mins and the one-row horizon max merge exactly;
   *    report = `Timeseries.survivalFromUsers`.
   *
-  * All three keep the replayed-batch guard ([[CdcCompact]]). The two
-  * count grids are [[StreamUtil.AdditiveState]]s: each batch commits
-  * its partial as a delta, and a read sums the deltas. The survival
-  * state's per-user conditional mins and its horizon are two stores
-  * of one version, so it stays a versioned rewrite.
+  * All three are [[StreamUtil.AdditiveState]]s behind its replayed-
+  * batch guard: each batch commits its partial as a delta, and a read
+  * combines the deltas — sums for the count grids; per-user mins and
+  * a keyless horizon max, two stores of one version, for survival.
   */
 final class TypeDailyCountState(stateDir: String) {
   private val state = new StreamUtil.AdditiveState(stateDir,
@@ -193,44 +194,26 @@ final class DailyVolRevState(stateDir: String) {
 }
 
 final class SurvivalState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir, Seq(
+    Store("users", "user_id BIGINT, v_day TIMESTAMP, any_p TIMESTAMP",
+      Seq("user_id"), StreamUtil.mins("v_day", "any_p")),
+    // keyless: one global row, the stream's latest day
+    Store("horizon", "h TIMESTAMP", Nil, StreamUtil.maxes("h"))))
 
-  private def priorUsers(spark: SparkSession): DataFrame = state.prior(spark,
-    "user_id BIGINT, v_day TIMESTAMP, any_p TIMESTAMP", "users")
-
-  private def priorHorizon(spark: SparkSession): DataFrame = state.prior(spark,
-    "h TIMESTAMP", "horizon")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = batch
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.mergeStores(batchId) {
+    val days = batch
       .select(col("user_id"), col("event_type"), date_trunc("day", col("ts")).as("day"))
-      .groupBy(col("user_id"))
-      .agg(min(when(col("event_type") === "view", col("day"))).as("b_v"),
-        min(when(col("event_type") === "purchase", col("day"))).as("b_p"))
-    // least(...) of a NULL and a value is the value only via
-    // coalesce-wrapping: conditional mins may legitimately be NULL
-    val users = priorUsers(spark).join(partial, Seq("user_id"), "full_outer")
-      .select(col("user_id"),
-        least(coalesce(col("v_day"), col("b_v")), coalesce(col("b_v"), col("v_day"))).as("v_day"),
-        least(coalesce(col("any_p"), col("b_p")), coalesce(col("b_p"), col("any_p"))).as("any_p"))
-    val bh = batch.agg(date_trunc("day", max(col("ts"))).as("h"))
-    val horizon = priorHorizon(spark).unionByName(bh)
-      .agg(max(col("h")).as("h"))
-    // Independent sub-store writes overlap (guide §2.6); the version
-    // bump still happens only after both have committed.
-    StreamUtil.inParallel(
-      () => StreamUtil.writeSharded(users, state.at(batchId, "users"), Seq("user_id")),
-      () => StreamUtil.writeGrid(horizon, state.at(batchId, "horizon")))
+    Map("users" -> days.groupBy(col("user_id"))
+        .agg(min(when(col("event_type") === "view", col("day"))).as("v_day"),
+          min(when(col("event_type") === "purchase", col("day"))).as("any_p")),
+      "horizon" -> days.agg(max(col("day")).as("h")))
   }
 
   def report(spark: SparkSession): DataFrame =
-    // re-aggregate the one-row horizon at read time: the stored
-    // parquet IS one row, but a scan can't prove that to the plan
-    // audit — the max() makes the broadcast side a provable one-row
-    // aggregate (the isOneRowBuild shape), at the cost of nothing
+    // the horizon read is a global aggregate, which the plan audit
+    // accepts as a provably one-row broadcast side (isOneRowBuild)
     graft.operators.Timeseries.survivalFromUsers(
-      priorUsers(spark), priorHorizon(spark).agg(max(col("h")).as("h")))
+      state.read(spark, "users"), state.read(spark, "horizon"))
 }
 
 /** Streaming time-weighted average — the SECOND cross-batch-pair
@@ -238,67 +221,47 @@ final class SurvivalState(stateDir: String) {
   * micro-batch boundary (user's last event in batch k held until
   * their first event in batch k+1) exists in no single batch, so the
   * state is the additive daily `(n_intervals, cw, sw)` sufficient
-  * sums PLUS a per-user `(ts, event_id, cents)` frontier that
-  * reconstructs exactly the boundary interval — weight accrues to
-  * the EARLIER event's day with the earlier event's value, the batch
-  * lead-gap semantics. Report via the shared `twaFromDaily`. */
+  * sums PLUS a per-user `(ts, event_id, cents)` frontier (a struct
+  * max) that reconstructs exactly the boundary interval — weight
+  * accrues to the EARLIER event's day with the earlier event's value,
+  * the batch lead-gap semantics. Both are stores of one
+  * [[StreamUtil.AdditiveState]]; the boundary interval is the batch
+  * partial's read of the committed frontier. Report via the shared
+  * `twaFromDaily`. */
 final class TwaState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val dec = "decimal(38,0)"
+  private val state = new StreamUtil.AdditiveState(stateDir, Seq(
+    Store("daily", s"day TIMESTAMP, n_intervals BIGINT, cw $dec, sw $dec",
+      Seq("day"), StreamUtil.sums("n_intervals", "cw", "sw")),
+    Store("last", "user_id BIGINT, last STRUCT<ts: TIMESTAMP, event_id: BIGINT, cents: BIGINT>",
+      Seq("user_id"), StreamUtil.maxes("last"))))
 
-  private def priorDaily(spark: SparkSession): DataFrame = state.prior(spark,
-    "day TIMESTAMP, n_intervals BIGINT, cw DECIMAL(38,0), sw DECIMAL(38,0)", "daily")
-
-  private def priorLast(spark: SparkSession): DataFrame = state.prior(spark,
-    "user_id BIGINT, p_ts TIMESTAMP, p_eid BIGINT, p_cents BIGINT", "last")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.mergeStores(batchId) {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val dec = "decimal(38,0)"
     val b = batch
       .select(col("user_id"), col("ts"), col("event_id"),
         expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
       .withColumn("rn", row_number().over(w))
       .withColumn("w_us", lead(unix_micros(col("ts")), 1).over(w) - unix_micros(col("ts")))
     val inBatch = b.filter(col("w_us").isNotNull)
-      .groupBy(date_trunc("day", col("ts")).as("day"))
-      .agg(count(lit(1)).as("n_intervals"),
-        sum(col("cents").cast(dec) * col("w_us")).as("cw"),
-        sum(col("w_us").cast(dec)).as("sw"))
-    val boundary = priorLast(spark)
+      .select(date_trunc("day", col("ts")).as("day"), col("cents"), col("w_us"))
+    val boundary = state.read(batch.sparkSession, "last")
       .join(b.filter(col("rn") === 1).select(col("user_id"), col("ts")), Seq("user_id"))
-      .select(date_trunc("day", col("p_ts")).as("day"), col("p_cents").as("cents"),
-        (unix_micros(col("ts")) - unix_micros(col("p_ts"))).as("w_us"))
-      .groupBy(col("day"))
-      .agg(count(lit(1)).as("n_intervals"),
-        sum(col("cents").cast(dec) * col("w_us")).as("cw"),
-        sum(col("w_us").cast(dec)).as("sw"))
-    val daily = priorDaily(spark).unionByName(inBatch).unionByName(boundary)
-      .groupBy(col("day"))
-      .agg(sum(col("n_intervals")).as("n_intervals"),
-        sum(col("cw")).cast(dec).as("cw"), sum(col("sw")).cast(dec).as("sw"))
-    val bLast = b.groupBy(col("user_id"))
-      .agg(max(struct(col("ts"), col("event_id"), col("cents"))).as("s"))
-      .select(col("user_id"), col("s.ts").as("b_ts"),
-        col("s.event_id").as("b_eid"), col("s.cents").as("b_cents"))
-    val pS = struct(col("p_ts").as("ts"), col("p_eid").as("eid"), col("p_cents").as("c"))
-    val bS = struct(col("b_ts").as("ts"), col("b_eid").as("eid"), col("b_cents").as("c"))
-    val last = priorLast(spark).join(bLast, Seq("user_id"), "full_outer")
-      .select(col("user_id"),
-        when(col("b_ts").isNull, pS)
-          .when(col("p_ts").isNull, bS)
-          .when(struct(col("b_ts"), col("b_eid")) >= struct(col("p_ts"), col("p_eid")), bS)
-          .otherwise(pS).as("s"))
-      .select(col("user_id"), col("s.ts").as("p_ts"),
-        col("s.eid").as("p_eid"), col("s.c").as("p_cents"))
-    StreamUtil.inParallel(
-      () => StreamUtil.writeGrid(daily, state.at(batchId, "daily")),
-      () => StreamUtil.writeSharded(last, state.at(batchId, "last"), Seq("user_id")))
+      .select(date_trunc("day", col("last.ts")).as("day"), col("last.cents").as("cents"),
+        (unix_micros(col("ts")) - unix_micros(col("last.ts"))).as("w_us"))
+    Map(
+      "daily" -> inBatch.unionByName(boundary)
+        .groupBy(col("day"))
+        .agg(count(lit(1)).as("n_intervals"),
+          sum(col("cents").cast(dec) * col("w_us")).as("cw"),
+          sum(col("w_us").cast(dec)).as("sw")),
+      "last" -> b.groupBy(col("user_id"))
+        .agg(max(struct(col("ts"), col("event_id"), col("cents"))).as("last")))
   }
 
   def report(spark: SparkSession): DataFrame =
-    graft.operators.Timeseries.twaFromDaily(priorDaily(spark))
+    graft.operators.Timeseries.twaFromDaily(state.read(spark, "daily"))
 }
 
 object TimeseriesStream {

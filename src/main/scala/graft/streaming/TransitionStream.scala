@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import StreamUtil.AdditiveState.Store
+
 /** Streaming twins for the per-user-order family that [[graft
   * .operators.Behavior.transitionsTransform]] heads, plus the EXACT
   * distinct-users counterpart of [[HllStream]]'s approximate sketch.
@@ -11,7 +13,7 @@ import org.apache.spark.sql.functions._
   * [[TransitionState]] is the interesting one: transition counting is
   * NOT purely additive — the pair that spans a micro-batch boundary
   * (user's last event in batch k, first event in batch k+1) exists in
-  * no single batch — so the state carries two tables: the additive
+  * no single batch — so the state carries two stores: the additive
   * `(prev, curr, n)` counts AND a per-user `(ts, event_id,
   * event_type)` frontier whose join against each new batch's
   * first-per-user rows reconstructs exactly the boundary pairs. Under
@@ -21,56 +23,39 @@ import org.apache.spark.sql.functions._
   * replay's range partitioning makes them impossible at µs
   * resolution).
   *
-  * Both states follow the versioned-parquet + replayed-batch-guard
-  * discipline of [[CdcCompact]] (idempotent under crash replay).
+  * Both stores are one [[StreamUtil.AdditiveState]]: the counts sum,
+  * and the frontier is latest-per-user, `max(struct(ts, event_id,
+  * …))`. The boundary pairs are the one order-dependent step, and
+  * they live in the batch's partial, which reads the committed
+  * frontier; the shared version keeps a replayed batch from
+  * stitching against its own frontier.
   */
 final class TransitionState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir, Seq(
+    Store("pairs", "prev_type STRING, curr_type STRING, n BIGINT",
+      Seq("prev_type", "curr_type"), StreamUtil.sums("n")),
+    Store("last", "user_id BIGINT, last STRUCT<ts: TIMESTAMP, event_id: BIGINT, event_type: STRING>",
+      Seq("user_id"), StreamUtil.maxes("last"))))
 
-  private def priorPairs(spark: SparkSession): DataFrame = state.prior(spark,
-    "prev_type STRING, curr_type STRING, n BIGINT", "pairs")
+  private def priorPairs(spark: SparkSession): DataFrame = state.read(spark, "pairs")
 
-  private def priorLast(spark: SparkSession): DataFrame = state.prior(spark,
-    "user_id BIGINT, p_ts TIMESTAMP, p_eid BIGINT, p_type STRING", "last")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.mergeStores(batchId) {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val b = batch.select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       .withColumn("rn", row_number().over(w))
       .withColumn("prev_type", lag(col("event_type"), 1).over(w))
     val inBatch = b.filter(col("prev_type").isNotNull)
-      .groupBy(col("prev_type"), col("event_type").as("curr_type"))
-      .agg(count(lit(1)).as("n"))
-    val boundary = priorLast(spark)
+      .select(col("prev_type"), col("event_type").as("curr_type"))
+    // the pair spanning the boundary: the committed frontier's type
+    // before each batch user's first event
+    val boundary = state.read(batch.sparkSession, "last")
       .join(b.filter(col("rn") === 1).select(col("user_id"), col("event_type")), Seq("user_id"))
-      .groupBy(col("p_type").as("prev_type"), col("event_type").as("curr_type"))
-      .agg(count(lit(1)).as("n"))
-    val pairs = priorPairs(spark).unionByName(inBatch).unionByName(boundary)
-      .groupBy(col("prev_type"), col("curr_type"))
-      .agg(sum(col("n")).as("n"))
-    // per-user frontier: the (ts, event_id)-max event, batch vs prior
-    val bLast = b.groupBy(col("user_id"))
-      .agg(max(struct(col("ts"), col("event_id"), col("event_type"))).as("s"))
-      .select(col("user_id"), col("s.ts").as("b_ts"),
-        col("s.event_id").as("b_eid"), col("s.event_type").as("b_type"))
-    // CASE branches must agree on struct FIELD NAMES, not just types
-    val pS = struct(col("p_ts").as("ts"), col("p_eid").as("eid"), col("p_type").as("tp"))
-    val bS = struct(col("b_ts").as("ts"), col("b_eid").as("eid"), col("b_type").as("tp"))
-    val last = priorLast(spark).join(bLast, Seq("user_id"), "full_outer")
-      .select(col("user_id"),
-        when(col("b_ts").isNull, pS)
-          .when(col("p_ts").isNull, bS)
-          .when(struct(col("b_ts"), col("b_eid")) >= struct(col("p_ts"), col("p_eid")), bS)
-          .otherwise(pS).as("s"))
-      .select(col("user_id"), col("s.ts").as("p_ts"),
-        col("s.eid").as("p_eid"), col("s.tp").as("p_type"))
-    // Independent sub-store writes overlap (guide §2.6); the version
-    // bump (and prior-version delete) still happens only after BOTH
-    // have committed, so recovery semantics are unchanged.
-    StreamUtil.inParallel(
-      () => StreamUtil.writeGrid(pairs, state.at(batchId, "pairs")),
-      () => StreamUtil.writeSharded(last, state.at(batchId, "last"), Seq("user_id")))
+      .select(col("last.event_type").as("prev_type"), col("event_type").as("curr_type"))
+    Map(
+      "pairs" -> inBatch.unionByName(boundary)
+        .groupBy(col("prev_type"), col("curr_type")).agg(count(lit(1)).as("n")),
+      "last" -> b.groupBy(col("user_id"))
+        .agg(max(struct(col("ts"), col("event_id"), col("event_type"))).as("last")))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -110,28 +95,18 @@ final class TransitionState(stateDir: String) {
   * rows — the honest cost of exactness; the sketch twin is the
   * constant-memory 100 TB default. */
 final class DistinctDailyState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir, Seq(
+    Store("pairs", "day TIMESTAMP, user_id BIGINT", Seq("day", "user_id"), Nil),
+    Store("counts", "day TIMESTAMP, n_events BIGINT", Seq("day"), StreamUtil.sums("n_events"))))
 
-  private def priorPairs(spark: SparkSession): DataFrame = state.prior(spark,
-    "day TIMESTAMP, user_id BIGINT", "pairs")
+  private def priorPairs(spark: SparkSession): DataFrame = state.read(spark, "pairs")
 
-  private def priorCounts(spark: SparkSession): DataFrame = state.prior(spark,
-    "day TIMESTAMP, n_events BIGINT", "counts")
+  private def priorCounts(spark: SparkSession): DataFrame = state.read(spark, "counts")
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.mergeStores(batchId) {
     val days = batch.select(date_trunc("day", col("ts")).as("day"), col("user_id"))
-    // one distinct over the union, not distinct-union-distinct: the
-    // outer distinct's map-side partial aggregation already dedupes
-    // the batch side before the exchange, so the inner distinct was
-    // a second exchange for nothing (guide §2.4) — same result set
-    val pairs = priorPairs(spark).unionByName(days).distinct()
-    val counts = priorCounts(spark)
-      .unionByName(days.groupBy(col("day")).agg(count(lit(1)).as("n_events")))
-      .groupBy(col("day")).agg(sum(col("n_events")).as("n_events"))
-    StreamUtil.inParallel(
-      () => StreamUtil.writeGrid(pairs, state.at(batchId, "pairs")),
-      () => StreamUtil.writeGrid(counts, state.at(batchId, "counts")))
+    Map("pairs" -> days.distinct(),
+      "counts" -> days.groupBy(col("day")).agg(count(lit(1)).as("n_events")))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -166,46 +141,28 @@ final class DistinctDailyState(stateDir: String) {
   * `bucketizeGapUs`), so stream ≡ batch by construction under
   * time-ordered replay. */
 final class IntereventState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir, Seq(
+    Store("buckets", "bucket BIGINT, n_gaps BIGINT", Seq("bucket"), StreamUtil.sums("n_gaps")),
+    Store("last", "user_id BIGINT, last STRUCT<ts: TIMESTAMP, event_id: BIGINT>",
+      Seq("user_id"), StreamUtil.maxes("last"))))
 
-  private def priorBuckets(spark: SparkSession): DataFrame = state.prior(spark,
-    "bucket BIGINT, n_gaps BIGINT", "buckets")
-
-  private def priorLast(spark: SparkSession): DataFrame = state.prior(spark,
-    "user_id BIGINT, p_ts TIMESTAMP, p_eid BIGINT", "last")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.mergeStores(batchId) {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val b = batch.select(col("user_id"), col("ts"), col("event_id"))
       .withColumn("rn", row_number().over(w))
     val inBatch = graft.operators.Behavior.gapBucketCounts(b)
     val boundary = graft.operators.Behavior.bucketizeGapUs(
-      priorLast(spark)
+      state.read(batch.sparkSession, "last")
         .join(b.filter(col("rn") === 1).select(col("user_id"), col("ts")), Seq("user_id"))
-        .select((unix_micros(col("ts")) - unix_micros(col("p_ts"))).as("gap_us")))
+        .select((unix_micros(col("ts")) - unix_micros(col("last.ts"))).as("gap_us")))
       .groupBy(col("bucket")).agg(count(lit(1)).as("n_gaps"))
-    val buckets = priorBuckets(spark).unionByName(inBatch).unionByName(boundary)
-      .groupBy(col("bucket")).agg(sum(col("n_gaps")).as("n_gaps"))
-    val bLast = b.groupBy(col("user_id"))
-      .agg(max(struct(col("ts"), col("event_id"))).as("s"))
-      .select(col("user_id"), col("s.ts").as("b_ts"), col("s.event_id").as("b_eid"))
-    val pS = struct(col("p_ts").as("ts"), col("p_eid").as("eid"))
-    val bS = struct(col("b_ts").as("ts"), col("b_eid").as("eid"))
-    val last = priorLast(spark).join(bLast, Seq("user_id"), "full_outer")
-      .select(col("user_id"),
-        when(col("b_ts").isNull, pS)
-          .when(col("p_ts").isNull, bS)
-          .when(struct(col("b_ts"), col("b_eid")) >= struct(col("p_ts"), col("p_eid")), bS)
-          .otherwise(pS).as("s"))
-      .select(col("user_id"), col("s.ts").as("p_ts"), col("s.eid").as("p_eid"))
-    StreamUtil.inParallel(
-      () => StreamUtil.writeGrid(buckets, state.at(batchId, "buckets")),
-      () => StreamUtil.writeSharded(last, state.at(batchId, "last"), Seq("user_id")))
+    Map("buckets" -> inBatch.unionByName(boundary),
+      "last" -> b.groupBy(col("user_id"))
+        .agg(max(struct(col("ts"), col("event_id"))).as("last")))
   }
 
   def report(spark: SparkSession): DataFrame =
-    graft.operators.Behavior.intereventFromBuckets(priorBuckets(spark))
+    graft.operators.Behavior.intereventFromBuckets(state.read(spark, "buckets"))
 }
 
 /** Peak session concurrency on an unbounded stream — the SESSION
@@ -223,7 +180,13 @@ final class IntereventState(stateDir: String) {
   * construction under time-ordered replay. State is |closed
   * sessions| rows — the honest cost of exact session accounting (the
   * DistinctDailyState class); a watermark would bound it by closing
-  * frontiers past the horizon. */
+  * frontiers past the horizon.
+  *
+  * It stays on the rewrite layout, not an [[StreamUtil.AdditiveState]]:
+  * `closed` is a MULTISET — two users' equal intervals are two
+  * sessions — which no per-key combine keeps (a distinct key set
+  * would merge them), and the open frontier is replaced, not
+  * combined, when a session closes. */
 final class PeakSessionState(stateDir: String, gapMinutes: Int = 30) {
   private val state = new StreamUtil.VersionedState(stateDir)
   private val gapUs = gapMinutes * 60L * 1000000L
@@ -281,27 +244,21 @@ final class PeakSessionState(stateDir: String, gapMinutes: Int = 30) {
   * distinct directed (item → next item) graph maintained across
   * micro-batches. Unlike [[TransitionState]]'s counts, the state is
   * a SET (distinct union = idempotent, so replays and boundary
-  * re-derivations cannot corrupt it), bounded by |items|² — grid
-  * class, versioned-rewrite layout. In-batch hops come from the same
-  * (ts, event_id) window as the batch operator; cross-batch hops are
+  * re-derivations cannot corrupt it), bounded by |items|². In-batch
+  * hops come from the same (ts, event_id) window as the batch
+  * operator; cross-batch hops are
   * stitched from the per-user frontier (last non-null-item event),
   * the [[TransitionState]] discipline at item grain. The report runs
   * [[graft.operators.Graph.sccFromEdges]], so the coloring/peeling
   * derivation is shared code. */
 final class ItemEdgeState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir, Seq(
+    Store("edges", "a BIGINT, b BIGINT", Seq("a", "b"), Nil),
+    Store("items", "item BIGINT", Seq("item"), Nil),
+    Store("last", "user_id BIGINT, last STRUCT<ts: TIMESTAMP, event_id: BIGINT, item: BIGINT>",
+      Seq("user_id"), StreamUtil.maxes("last"))))
 
-  private def priorEdges(spark: SparkSession): DataFrame = state.prior(spark,
-    "a BIGINT, b BIGINT", "edges")
-
-  private def priorItems(spark: SparkSession): DataFrame = state.prior(spark,
-    "item BIGINT", "items")
-
-  private def priorLast(spark: SparkSession): DataFrame = state.prior(spark,
-    "user_id BIGINT, p_ts TIMESTAMP, p_eid BIGINT, p_item BIGINT", "last")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.mergeStores(batchId) {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     // null-item events are transparent (the batch operator filters
     // them BEFORE its lead window), so filter first, then window
@@ -313,35 +270,18 @@ final class ItemEdgeState(stateDir: String) {
       .withColumn("prev_item", lag(col("item"), 1).over(w))
     val inBatch = b.filter(col("prev_item").isNotNull)
       .select(col("prev_item").as("a"), col("item").as("b"))
-    val boundary = priorLast(spark)
+    val boundary = state.read(batch.sparkSession, "last")
       .join(b.filter(col("rn") === 1).select(col("user_id"), col("item")), Seq("user_id"))
-      .select(col("p_item").as("a"), col("item").as("b"))
-    val edges = priorEdges(spark).unionByName(inBatch).unionByName(boundary)
-      .distinct()
-    val items = priorItems(spark).unionByName(b.select(col("item"))).distinct()
-    val bLast = b.groupBy(col("user_id"))
-      .agg(max(struct(col("ts"), col("event_id"), col("item"))).as("s"))
-      .select(col("user_id"), col("s.ts").as("b_ts"),
-        col("s.event_id").as("b_eid"), col("s.item").as("b_item"))
-    val pS = struct(col("p_ts").as("ts"), col("p_eid").as("eid"), col("p_item").as("it"))
-    val bS = struct(col("b_ts").as("ts"), col("b_eid").as("eid"), col("b_item").as("it"))
-    val last = priorLast(spark).join(bLast, Seq("user_id"), "full_outer")
-      .select(col("user_id"),
-        when(col("b_ts").isNull, pS)
-          .when(col("p_ts").isNull, bS)
-          .when(struct(col("b_ts"), col("b_eid")) >= struct(col("p_ts"), col("p_eid")), bS)
-          .otherwise(pS).as("s"))
-      .select(col("user_id"), col("s.ts").as("p_ts"),
-        col("s.eid").as("p_eid"), col("s.it").as("p_item"))
-    StreamUtil.inParallel(
-      () => StreamUtil.writeGrid(edges, state.at(batchId, "edges")),
-      () => StreamUtil.writeGrid(items, state.at(batchId, "items")),
-      () => StreamUtil.writeSharded(last, state.at(batchId, "last"), Seq("user_id")))
+      .select(col("last.item").as("a"), col("item").as("b"))
+    Map("edges" -> inBatch.unionByName(boundary).distinct(),
+      "items" -> b.select(col("item")).distinct(),
+      "last" -> b.groupBy(col("user_id"))
+        .agg(max(struct(col("ts"), col("event_id"), col("item"))).as("last")))
   }
 
   def report(spark: SparkSession): DataFrame =
     graft.operators.Graph.sccFromEdges(spark,
-      priorItems(spark), priorEdges(spark))
+      state.read(spark, "items"), state.read(spark, "edges"))
 }
 
 object TransitionStream {

@@ -1239,6 +1239,14 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     assert(resumed == rows("session_type_affinity"))
   }
 
+  test("transition state resumes from checkpoint across a restart, exactly once") {
+    import graft.streaming.TransitionState
+    val stateDir = resumeAcrossRestart("trans", timeOrdered = true,
+      sd => new TransitionState(sd).merge)
+    val resumed = new TransitionState(stateDir).report(spark).collect().toSeq
+    assert(resumed == rows("event_transitions"))
+  }
+
   test("graph presence state resumes from checkpoint across a restart, exactly once") {
     import graft.streaming.UserItemState
     val stateDir = resumeAcrossRestart("graph", timeOrdered = false,
@@ -1690,9 +1698,9 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
         // only the batch's own rows
         def next(df: org.apache.spark.sql.DataFrame, s: String) =
           if (delta) df else st.prior(spark, ddl, s).unionByName(df)
-        StreamUtil.writeGrid(next(part(b), "a"), st.at(b, "a"))
-        StreamUtil.writeGrid(
-          next(part(b).select(col("k"), (col("n") * 2).as("n")), "b"), st.at(b, "b"))
+        next(part(b), "a").coalesce(1).write.parquet(st.at(b, "a"))
+        next(part(b).select(col("k"), (col("n") * 2).as("n")), "b")
+          .coalesce(1).write.parquet(st.at(b, "b"))
       }
       def report: Seq[(Long, Long)] = Seq("a", "b").flatMap(s =>
         st.prior(spark, ddl, s).orderBy("k").as[(Long, Long)].collect().toSeq)
@@ -1708,7 +1716,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
       // batch 2 dies mid-commit: the write of `a` lands, then the
       // body fails — the helper names the state dir and batch
       val err = intercept[java.io.IOException](st.st.commit(2) {
-        StreamUtil.writeGrid(part(2), st.st.at(2, "a"))
+        part(2).coalesce(1).write.parquet(st.st.at(2, "a"))
         throw new IllegalStateException("executor lost")
       })
       assert(err.getMessage.contains(dir) && err.getMessage.contains("batch 2"), err.getMessage)
@@ -1728,8 +1736,8 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     // a rewrite-layout `v<N>` holding data files but no marker
     val single = s"$work/single"
     def sum(st: StreamUtil.VersionedState, b: Long): Unit = st.commit(b) {
-      StreamUtil.writeGrid(st.prior(spark, ddl).unionByName(part(b))
-        .groupBy("k").sum("n").toDF("k", "n"), st.at(b))
+      st.prior(spark, ddl).unionByName(part(b))
+        .groupBy("k").sum("n").toDF("k", "n").coalesce(1).write.parquet(st.at(b))
     }
     val ref = new StreamUtil.VersionedState(s"$work/single_ref")
     (0L to 2L).foreach(sum(ref, _))
@@ -1947,5 +1955,94 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
         assert(fold.contains("MomentsState Long overflow for event_type=x"), fold)
       }
     } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+  }
+
+  // --- multi-store additive state: one version over several stores ---
+
+  /** Per-key sums and the distinct key set, two stores of one state. */
+  private def twoStore(dir: String) = {
+    import graft.streaming.StreamUtil
+    new StreamUtil.AdditiveState(dir, Seq(
+      StreamUtil.AdditiveState.Store("sums", "k BIGINT, n BIGINT", Seq("k"), StreamUtil.sums("n")),
+      StreamUtil.AdditiveState.Store("keys", "k BIGINT", Seq("k"), Nil)))
+  }
+
+  private def twoStoreMerge(st: graft.streaming.StreamUtil.AdditiveState, b: Long): Unit =
+    st.mergeStores(b) {
+      val p = additiveBatch(b)
+      Map("sums" -> p.select("k", "n"), "keys" -> p.select("k"))
+    }
+
+  private def twoStoreRows(st: graft.streaming.StreamUtil.AdditiveState) =
+    Seq("sums", "keys").map(s => st.read(spark, s).orderBy("k").collect().toSeq)
+
+  test("multi-store additive state: a batch landed in one store only is dropped in both and replays") {
+    val work = GraftCaches.trackTempDir("graft_crash_multi_")
+    val clean = twoStore(s"$work/clean")
+    (0L to 3L).foreach(twoStoreMerge(clean, _))
+    val want = twoStoreRows(clean)
+    val st = twoStore(s"$work/crash")
+    (0L to 1L).foreach(twoStoreMerge(st, _))
+    // batch 2: `sums` landed with its marker, `keys` holds only `_temporary/`
+    copyVersion(s"$work/clean/sums/batch=2", s"$work/crash/sums/batch=2", marker = true)
+    plantTemporaryOnly(s"$work/crash/keys/batch=2")
+    val restarted = twoStore(s"$work/crash")
+    assert(restarted.version == 1L)
+    Seq("sums", "keys").foreach(s =>
+      assert(deltaDirs(s"$work/crash/$s") == Set("batch=0", "batch=1"), s))
+    (2L to 3L).foreach(twoStoreMerge(restarted, _))
+    assert(twoStoreRows(restarted) == want)
+  }
+
+  test("multi-store additive state: a frontier committed without its pairs replays against the prior frontier") {
+    import org.apache.spark.sql.functions.{col, to_timestamp}
+    import graft.streaming.TransitionState
+    import spark.implicits._
+    val work = GraftCaches.trackTempDir("graft_crash_trans_")
+    def batch(rows: (Long, Long, String, String)*) =
+      rows.toSeq.toDF("user_id", "event_id", "tss", "event_type")
+        .withColumn("ts", to_timestamp(col("tss"))).drop("tss")
+    val batches = Seq(
+      batch((1L, 1L, "2024-01-01 10:00:00", "view"), (2L, 2L, "2024-01-01 10:01:00", "click")),
+      batch((1L, 3L, "2024-01-02 10:00:00", "click"), (2L, 4L, "2024-01-02 10:01:00", "purchase")),
+      batch((1L, 5L, "2024-01-03 10:00:00", "purchase"), (1L, 6L, "2024-01-03 10:05:00", "view"),
+        (2L, 7L, "2024-01-03 10:01:00", "view")))
+    def report(s: TransitionState) = s.report(spark).collect().map(_.toString).sorted.toSeq
+    val clean = new TransitionState(s"$work/clean")
+    batches.zipWithIndex.foreach { case (b, i) => clean.merge(b, i.toLong) }
+    val want = report(clean)
+    val st = new TransitionState(s"$work/crash")
+    batches.take(2).zipWithIndex.foreach { case (b, i) => st.merge(b, i.toLong) }
+    // batch 2: the frontier's delta committed, the pairs' landed unmarked
+    copyVersion(s"$work/clean/last/batch=2", s"$work/crash/last/batch=2", marker = true)
+    copyVersion(s"$work/clean/pairs/batch=2", s"$work/crash/pairs/batch=2")
+    val restarted = new TransitionState(s"$work/crash")
+    Seq("last", "pairs").foreach(s =>
+      assert(!new java.io.File(s"$work/crash/$s/batch=2").exists(), s))
+    // the replay stitches batch 2 against batch 1's frontier, not its own
+    restarted.merge(batches(2), 2L)
+    assert(report(restarted) == want)
+  }
+
+  test("multi-store additive state: more than the bound's worth of batches fold every store, read unchanged") {
+    import org.apache.spark.sql.functions.sum
+    import graft.streaming.StreamUtil
+    val dir = GraftCaches.trackTempDir("graft_multifold_") + "/state"
+    val n = StreamUtil.MaxAdditiveDeltas.toLong
+    def want(upTo: Long) = {
+      val all = (0L to upTo).map(additiveBatch).reduce(_ unionByName _)
+      Seq(all.groupBy("k").agg(sum("n").as("n")), all.select("k").distinct())
+        .map(_.orderBy("k").collect().toSeq)
+    }
+    val st = twoStore(dir)
+    (0L until n).foreach(twoStoreMerge(st, _))
+    Seq("sums", "keys").foreach(s => assert(deltaDirs(s"$dir/$s").size == n, s))
+    assert(twoStoreRows(st) == want(n - 1))
+    twoStoreMerge(st, n)
+    Seq("sums", "keys").foreach { s =>
+      assert(deltaDirs(s"$dir/$s") == Set(s"batch=$n"), s)
+      assert(marked(s"$dir/$s/batch=$n"), s)
+    }
+    assert(twoStoreRows(st) == want(n))
   }
 }

@@ -9,5 +9,5 @@ EVDIR=/tmp/graft_eventlog
 rm -rf "$EVDIR"; mkdir -p "$EVDIR"
 SPARK_EXTRA_JAVA_OPTS="-Dspark.eventLog.enabled=true -Dspark.eventLog.dir=file://$EVDIR -Dspark.eventLog.compress=false -Dspark.eventLog.rolling.enabled=false" \
 SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS="$CPUS" \
-  tools/run_main.sh graft.Bench "$Q" 2>/dev/null
-python3 tools/summarize_eventlog.py "$EVDIR"/local-*
+  "$(dirname "$0")/run_main.sh" graft.Bench "$Q" 2>/dev/null
+python3 "$(dirname "$0")/summarize_eventlog.py" "$EVDIR"/local-*

@@ -1,25 +1,15 @@
 #!/usr/bin/env bash
 # Scale-curve measurement harness: one fresh JVM per (query, scale dir),
-# same flags as build.sbt's forked run (the Bench.isolatedRun recipe),
-# 600 s cap per run. Usage:
+# launched through tools/run_main.sh (its heap and JVM flags, this
+# checkout's classes), 600 s cap per run. Usage:
 #   tools/scale_run.sh <sfDir> <cpus> <query> [query...]
 # Prints one "<query> <seconds|TIMEOUT|FAIL>" line per query.
 set -u
 SFDIR="$1"; CPUS="$2"; shift 2
-CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
-OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+RUN="$(dirname "$0")/run_main.sh"
 for q in "$@"; do
   out=$(SPARK_GRAFT_SF_DIR="$SFDIR" SPARK_GRAFT_CPUS="$CPUS" \
-    timeout 600 java $OPENS -Xmx24g -XX:ReservedCodeCacheSize=1g \
-      -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-      -cp "$CP" graft.Bench "$q" 2>/dev/null)
+    timeout 600 "$RUN" graft.Bench "$q" 2>/dev/null)
   rc=$?
   sec=$(printf '%s' "$out" | grep -oE "\"$q\":[0-9.eE+-]+" | tail -1 | cut -d: -f2)
   if [ $rc -eq 124 ]; then echo "$q TIMEOUT"
