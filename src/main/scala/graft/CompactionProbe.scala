@@ -1,13 +1,13 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Measurement harness for the delta-store compaction: the same
-  * phased tombstone ingest ([[graft.streaming.CorpusFilterStream
-  * .streamCorpusFilterCompacted]]'s staging — upserts, early
+  * phased retraction ingest ([[graft.streaming.StreamSources
+  * .replayCompacted]], the staging of [[graft.streaming
+  * .CorpusFilterStream.streamCorpusFilterCompacted]] — upserts, early
   * retractions, more upserts, late retractions) run twice over
   * identical inputs, once compacting after the retraction phase and
-  * once not. Prints ONE JSON line with per-phase wall times, the
+  * once not. Prints ONE JSON line with per-phase drain wall times
+  * (the four phases are staged upfront, outside the timings), the
   * state-store bytes after each phase, and the final report time —
   * the probe/read-volume numbers BASELINE.md's compaction entry
   * records. Not a queries entry: this is a harness, its output is a
@@ -38,27 +38,23 @@ object CompactionProbe {
     Seq(false, true).foreach { doCompact =>
       val mode = if (doCompact) "compact" else "nocompact"
       val work = GraftCaches.trackTempDir(s"graft_cprobe_${mode}_")
-      val docs = sources.Tables.documents(spark, sfDir)
-      val state = new streaming.CorpusFilterTombstoneState(s"$work/state", 0.5)
-      val earlyDel = col("doc_id") % 14 === 3 && col("doc_id") % 3 =!= 2
-      val phases = Seq(
-        ("A_upserts", docs.filter(col("doc_id") % 3 =!= 2).withColumn("op", lit("u")), 2),
-        ("B_deletes", docs.filter(earlyDel).withColumn("op", lit("d")), 1),
-        ("C_upserts", docs.filter(col("doc_id") % 3 === 2).withColumn("op", lit("u")), 2),
-        ("D_deletes", docs.filter(col("doc_id") % 7 === 3 && !earlyDel)
-          .withColumn("op", lit("d")), 1))
-      var off = 0L
-      val parts = phases.map { case (name, df, nFiles) =>
-        val (nextOff, sec) = timed {
-          streaming.StreamSources.replayPhase(df, s"$work/$name", nFiles, off, state.merge)
+      val (ups, dels) = streaming.StreamSources.docChangelog(sources.Tables.documents(spark, sfDir))
+      val state = new streaming.CorpusFilterState(s"$work/state", 0.5, retractions = true)
+      // (step, seconds, state bytes after it), in replay order
+      val steps = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Long)]
+      streaming.StreamSources.replayCompacted(work, ups, dels, state.merge,
+        () => if (doCompact) state.compact(spark),
+        (name, run) => {
+          val (_, sec) = timed(run())
+          steps += ((name, sec, dirBytes(s"$work/state")))
+        })
+      val compacted = steps.find(_._1 == "compact").filter(_ => doCompact)
+      val parts = steps.filter(_._1 != "compact").map { case (name, sec, bytes) =>
+        compacted.filter(_ => name == "B_deletes") match {
+          case Some((_, cSec, cBytes)) =>
+            s""""$name":{"sec":$sec,"compact_sec":$cSec,"bytes_after_compact":$cBytes,"state_bytes":$cBytes}"""
+          case None => s""""$name":{"sec":$sec,"state_bytes":$bytes}"""
         }
-        val compactLine =
-          if (doCompact && name == "B_deletes") {
-            val (_, cSec) = timed(state.compact(spark))
-            s""""compact_sec":$cSec,"bytes_after_compact":${dirBytes(s"$work/state")},"""
-          } else ""
-        off = nextOff
-        s""""$name":{"sec":$sec,$compactLine"state_bytes":${dirBytes(s"$work/state")}}"""
       }
       val (_, repSec) = timed {
         state.report(spark, 0.5, Seq("en")).write.format("noop").mode("overwrite").save()

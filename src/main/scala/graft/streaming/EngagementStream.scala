@@ -378,6 +378,60 @@ private[graft] object StreamUtil {
   def readDeltaAt(spark: SparkSession, path: String, ddl: String): DataFrame =
     spark.read.schema(StructType.fromDDL(ddl)).parquet(path)
 
+  /** The retractions of a corpus index on the delta-append layout —
+    * the CDC tombstone discipline ([[CdcCompact]] 10a' semantics) as
+    * one store, `tomb`, of retracted doc_ids. An index built WITH
+    * RETRACTIONS (`enabled`) reads changelog batches whose rows carry
+    * an `op` row-kind: 'u' rows are its upserts, 'd' rows append their
+    * doc_id to `tomb`, and every serving read drops the tombstoned
+    * docs. Built without, it adds no store, no write and no mask, and
+    * its batches carry no `op`. Delete-wins: a tombstone removes its
+    * doc whatever the arrival order, so the stores stay order-free. */
+  final class Tombstones(enabled: Boolean) {
+    /** The store it adds to the index's [[VersionedState]]. */
+    val stores: Seq[String] = if (enabled) Seq("tomb") else Nil
+
+    private def tomb(spark: SparkSession, state: VersionedState): DataFrame =
+      state.prior(spark, "doc_id BIGINT", "tomb")
+
+    /** A batch's upsert rows, `op` dropped. */
+    def upserts(batch: DataFrame): DataFrame =
+      if (enabled) batch.filter(col("op") === "u").drop("op") else batch
+
+    /** The write of batch `batchId`'s tombstones — the distinct doc_ids
+      * of its 'd' rows — as an [[inParallel]] action. */
+    def write(state: VersionedState, batchId: Long, batch: DataFrame): Seq[() => Unit] =
+      if (!enabled) Nil
+      else Seq(() => writeSharded(batch.filter(col("op") === "d").select(col("doc_id")).distinct(),
+        state.at(batchId, "tomb"), Seq("doc_id")))
+
+    /** `rows` minus every row whose `keys` columns name a tombstoned
+      * doc_id: one left-anti join per key column, so a pair-graph row
+      * (`Seq("doc_a", "doc_b")`) goes when EITHER endpoint is dead.
+      * The serving read of a retractable index, and so also what its
+      * compaction writes. */
+    def live(spark: SparkSession, state: VersionedState, rows: DataFrame,
+             keys: Seq[String]): DataFrame =
+      if (!enabled) rows
+      else {
+        val t = tomb(spark, state)
+        keys.foldLeft(rows)((r, k) => r.join(t.select(col("doc_id").as(k)), Seq(k), "left_anti"))
+      }
+
+    /** The `tomb` store truncated to an empty delta, as a
+      * [[VersionedState.compact]] store: compacting the serving reads
+      * has applied every tombstone. */
+    def truncated(spark: SparkSession, state: VersionedState): Seq[(String, DataFrame, Seq[String])] =
+      if (!enabled) Nil else Seq(("tomb", tomb(spark, state).limit(0), Seq("doc_id")))
+  }
+
+  /** Converged min-label tables of the pair-graph states, one per
+    * (session, state dir, version): the propagation core persists each
+    * one, and the memo puts its release under
+    * [[graft.GraftCaches.clearAll]]. */
+  private[streaming] val labelsCache =
+    graft.GraftCaches.memo[(SparkSession, String, Long), DataFrame](_.unpersist())
+
   /** Zero-byte file whose atomic create commits one store's write of
     * one version. `_`-prefixed, so Spark's readers skip it like
     * `_SUCCESS`. */
@@ -394,9 +448,9 @@ private[graft] object StreamUtil {
     *    deltas: a DFA fold ([[DfaState]]), a session multiset
     *    ([[PeakSessionState]]) and last-write-wins with deletes
     *    ([[CdcCompact]], [[CdcCompactDrift]], [[Scd2State]]);
-    *  - delta-append (`deltaStores` = the store names, `""` = `dir`
-    *    itself): each batch appends only its own partial as
-    *    `<store>/batch=<N>`, and readers union every delta with
+    *  - delta-append (`deltaStores` = the store names): each batch
+    *    appends only its own partial as `<dir>/<store>/batch=<N>`,
+    *    and readers union every delta with
     *    `batch <= version`. Corpus-scale accumulations use this (the
     *    rewrite layout would re-write the whole index every batch,
     *    quadratic write volume over the stream's lifetime), and so
@@ -425,7 +479,7 @@ private[graft] object StreamUtil {
   final class VersionedState(dir: String, deltaStores: Seq[String] = Nil) {
     private val delta = deltaStores.nonEmpty
 
-    private def storeDir(store: String) = if (store.isEmpty) dir else s"$dir/$store"
+    private def storeDir(store: String) = s"$dir/$store"
 
     /** Where version `v` of `store` is written (and read). */
     def at(v: Long, store: String = ""): String =
@@ -513,8 +567,9 @@ private[graft] object StreamUtil {
       *
       * `stores` = (name, masked-content, shard keys) per store; the
       * masked content MUST be exactly what the state's own report
-      * already reads (its serving masks), so the report is identical
-      * before and after by construction. Protocol, in the order the
+      * already reads (a retractable index passes its serving reads,
+      * [[Tombstones.live]]), so the report is identical before and
+      * after by construction. Protocol, in the order the
       * crash-safety argument needs:
       *
       *  1. REWRITE: each store's masked union is written, with its
@@ -546,10 +601,7 @@ private[graft] object StreamUtil {
   }
 
   /** The store a single-store [[AdditiveState]] commits its deltas
-    * to. Named, not `""`: [[installCompaction]] deletes
-    * `<dir>/<store>` before its rename, so installing a compacted `""`
-    * store would delete the state dir itself, `_compact` staging
-    * included. */
+    * to. */
   private val AdditiveStore = "delta"
 
   /** Committed deltas an [[AdditiveState]] keeps before it folds them

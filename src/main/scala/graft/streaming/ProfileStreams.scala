@@ -665,44 +665,27 @@ object ProfileStreams {
     }, new DsirGridState(_))(_.merge).report(spark)
 
   /** Queries entry (oracle: the dsir SQL over the live corpus): the
-    * retraction face — upserts for every doc plus a delete op for
-    * each `doc_id % 7 == 3`; the masked grid re-derives bucket LMs
-    * and every weight over the live corpus only. */
+    * retraction face over [[StreamSources.docChangelog]] — upserts for
+    * every doc plus a delete op for each `doc_id % 7 == 3`; the masked
+    * grid re-derives bucket LMs and every weight over the live corpus
+    * only. */
   def streamDsirTombstone(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame =
     StreamUtil.drained(spark, "graft_sdsirt_", dir, nFiles)({ work =>
       val docs = graft.sources.Tables.documents(spark, dir)
-      StreamSources.staged(docs.withColumn("op", lit("u"))
-        .unionByName(docs.filter(col("doc_id") % 7 === 3).withColumn("op", lit("d"))),
+      val (ups, dels) = StreamSources.docChangelog(docs)
+      StreamSources.staged(ups.unionByName(dels),
         StreamSources.stagingFiles(nFiles, docs.count()), work)
-    }, new DsirTombstoneState(_))(_.merge).report(spark)
+    }, new DsirGridState(_, retractions = true))(_.merge).report(spark)
 
   /** Queries entry (oracle: `stream_dsir_tombstone`'s — the dsir SQL
     * over the live corpus): the retraction face with a MID-STREAM
-    * COMPACTION ([[CorpusFilterStream.streamCorpusFilterCompacted]]'s
-    * phase discipline on the grid state): upserts for `% 3 != 2`,
-    * deletes for the already-ingested half-slice (`≡ 3 mod 14`,
-    * `% 3 != 2`), [[DsirTombstoneState.compact]], the remaining
-    * upserts, the remaining deletes, report. Deletes always FOLLOW
-    * their upserts — the truncated-tombstone horizon's one ordering
-    * requirement. */
+    * COMPACTION ([[StreamSources.replayCompacted]] over
+    * [[StreamSources.docChangelog]]) on the grid state. */
   def streamDsirCompacted(spark: SparkSession, dir: String): DataFrame = {
     val work = graft.GraftCaches.trackTempDir("graft_sdsirc_")
-    val docs = graft.sources.Tables.documents(spark, dir)
-    val state = new DsirTombstoneState(s"$work/state")
-    val earlyDel = col("doc_id") % 14 === 3 && col("doc_id") % 3 =!= 2
-    // stage all four phase inputs upfront, writes overlapped — only
-    // the drains are phase-ordered (StreamSources.stageAll)
-    StreamSources.stageAll(
-      (docs.filter(col("doc_id") % 3 =!= 2).withColumn("op", lit("u")), s"$work/a", 2),
-      (docs.filter(earlyDel).withColumn("op", lit("d")), s"$work/b", 1),
-      (docs.filter(col("doc_id") % 3 === 2).withColumn("op", lit("u")), s"$work/c", 2),
-      (docs.filter(col("doc_id") % 7 === 3 && !earlyDel).withColumn("op", lit("d")),
-        s"$work/d", 1))
-    var off = StreamSources.drainStaged(spark, s"$work/a", 0L, state.merge)
-    off = StreamSources.drainStaged(spark, s"$work/b", off, state.merge)
-    state.compact(spark)
-    off = StreamSources.drainStaged(spark, s"$work/c", off, state.merge)
-    StreamSources.drainStaged(spark, s"$work/d", off, state.merge)
+    val (ups, dels) = StreamSources.docChangelog(graft.sources.Tables.documents(spark, dir))
+    val state = new DsirGridState(s"$work/state", retractions = true)
+    StreamSources.replayCompacted(work, ups, dels, state.merge, () => state.compact(spark))
     state.report(spark)
   }
 
@@ -734,106 +717,78 @@ object ProfileStreams {
       StreamSources.staged(graft.sources.Tables.documents(spark, dir), nFiles, _),
       new SourceWordState(_))(_.merge).report(spark)
 
-  /** Queries entry (oracle: same SQL as `hybrid_rrf_topk`): documents
-    * FULL-OUTER joined with their embeddings (the batch operator
-    * consumes the two tables independently, so the staging must not
-    * drop a doc that lacks an embedding row or vice versa — an inner
-    * join here would silently break stream≡batch≡oracle parity on
-    * any id asymmetry; [[HybridIndexState.merge]] routes the two
-    * null-tolerant halves to their own delta stores), staged as 4
-    * files; the inverted index and the vector store accrue per
-    * micro-batch and serving re-derives everything from the final
-    * index. */
+  /** The hybrid index's changelog: documents FULL-OUTER joined with
+    * their embeddings as upserts (the batch operator consumes the two
+    * tables independently, so the staging must not drop a doc that
+    * lacks an embedding row or vice versa — an inner join here would
+    * silently break stream≡batch≡oracle parity on any id asymmetry;
+    * [[HybridIndexState.merge]] routes the two null-tolerant halves to
+    * their own delta stores), and a delete for each corpus doc with
+    * `doc_id % 7 == 3` (a deterministic retraction slice). The slice
+    * spans the UNION of both tables' id spaces: the oracle masks
+    * `NOT (b.vec_id % 7 = 3)` on the dense side unconditionally, so an
+    * embedding row whose vec_id has no document row must be tombstoned
+    * too — deriving deletes from documents alone would silently
+    * diverge stream from oracle on such a corpus. */
+  private def hybridChangelog(spark: SparkSession, dir: String,
+                              nQueries: Int): (DataFrame, DataFrame) = {
+    val docs = graft.sources.Tables.documents(spark, dir)
+    val embs = graft.sources.Tables.embeddings(spark, dir)
+    val ups = docs.select(col("doc_id"), col("text"))
+      .join(embs.select(col("vec_id").as("doc_id"), col("embedding")), Seq("doc_id"), "full_outer")
+    val dels = docs.select(col("doc_id"))
+      .unionByName(embs.select(col("vec_id").as("doc_id")))
+      .distinct()
+      .filter(col("doc_id") >= nQueries && col("doc_id") % 7 === 3)
+      .select(col("doc_id"),
+        lit(null).cast("string").as("text"),
+        lit(null).cast("array<float>").as("embedding"),
+        lit("d").as("op"))
+    (ups, dels)
+  }
+
+  /** Queries entry (oracle: same SQL as `hybrid_rrf_topk`): the
+    * upserts of [[hybridChangelog]] staged as 4 files; the inverted
+    * index and the vector store accrue per micro-batch and serving
+    * re-derives everything from the final index. */
   def streamHybridRrf(spark: SparkSession, dir: String, nQueries: Int = 3,
                       nFiles: Int = 4): DataFrame =
     StreamUtil.drained(spark, "graft_shyb_", dir, nQueries, nFiles)({ work =>
-      val corpus = graft.sources.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-        .join(graft.sources.Tables.embeddings(spark, dir)
-          .select(col("vec_id").as("doc_id"), col("embedding")), Seq("doc_id"), "full_outer")
+      val corpus = hybridChangelog(spark, dir, nQueries)._1
       StreamSources.staged(corpus, StreamSources.stagingFiles(nFiles, corpus.count()), work)
     }, new HybridIndexState(_, nQueries))(_.merge).report(spark)
 
   /** Queries entry (oracle: the hybrid fusion SQL over the tombstone-
     * compacted live corpus): the retraction face — the staged stream
-    * carries upserts for every doc AND a delete op for each corpus
-    * doc with `doc_id % 7 == 3` (a deterministic retraction slice);
-    * the serving index masks tombstoned docs, so the report equals
-    * the batch operator run on the corpus WITHOUT them. Delete-wins
-    * semantics keep the staging order-free (deletes land in their own
-    * trailing rows but would compact identically in any order). */
+    * carries all of [[hybridChangelog]]; the serving index masks
+    * tombstoned docs, so the report equals the batch operator run on
+    * the corpus WITHOUT them. Delete-wins semantics keep the staging
+    * order-free (deletes land in their own trailing rows but would
+    * compact identically in any order). */
   def streamHybridRrfTombstone(spark: SparkSession, dir: String, nQueries: Int = 3,
                                nFiles: Int = 4): DataFrame = {
     val work = graft.GraftCaches.trackTempDir("graft_shybt_")
-    val ups = graft.sources.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-      .join(graft.sources.Tables.embeddings(spark, dir)
-        .select(col("vec_id").as("doc_id"), col("embedding")), Seq("doc_id"), "full_outer")
-      .withColumn("op", lit("u"))
-    // Retraction slice over the UNION of both tables' id spaces: the
-    // oracle masks `NOT (b.vec_id % 7 = 3)` on the dense side
-    // unconditionally, so an embedding row whose vec_id has no
-    // document row (the id asymmetry the full-outer staging above
-    // defends against) must be tombstoned too — deriving dels from
-    // documents alone would silently diverge stream from oracle on
-    // such a corpus.
-    val dels = graft.sources.Tables.documents(spark, dir).select(col("doc_id"))
-      .unionByName(graft.sources.Tables.embeddings(spark, dir)
-        .select(col("vec_id").as("doc_id")))
-      .distinct()
-      .filter(col("doc_id") >= nQueries && col("doc_id") % 7 === 3)
-      .select(col("doc_id"),
-        lit(null).cast("string").as("text"),
-        lit(null).cast("array<float>").as("embedding"),
-        lit("d").as("op"))
-    ups.unionByName(dels)
-      .repartition(StreamSources.stagingFiles(nFiles, ups.count() + dels.count()))
-      .write.mode("overwrite").parquet(s"$work/input")
-    val state = new HybridTombstoneState(s"$work/state", nQueries)
-    StreamSources.runForeachBatch(
-      StreamSources.parquetStream(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
+    val (ups, dels) = hybridChangelog(spark, dir, nQueries)
+    val state = new HybridIndexState(s"$work/state", nQueries, retractions = true)
+    StreamSources.runForeachBatch(StreamSources.staged(
+      ups.withColumn("op", lit("u")).unionByName(dels),
+      StreamSources.stagingFiles(nFiles, ups.count() + dels.count()), work), state.merge)
     state.report(spark)
   }
 
   /** Queries entry (oracle: `stream_hybrid_rrf_tombstone`'s — the
     * fusion SQL over the live corpus): the serving index with a
-    * MID-STREAM COMPACTION
-    * ([[CorpusFilterStream.streamCorpusFilterCompacted]]'s phase
-    * discipline on the post/emb stores): upserts for `% 3 != 2`,
-    * deletes for the already-ingested half-slice, compact, the
-    * remaining upserts (the query docs' own rows may land here —
-    * serving reads them at report, arrival order is free), the
-    * remaining deletes, report. */
+    * MID-STREAM COMPACTION ([[StreamSources.replayCompacted]] over
+    * [[hybridChangelog]]) on the post/emb stores; the query docs'
+    * own rows may land in the late upserts — serving reads them at
+    * report, arrival order is free. */
   def streamHybridRrfCompacted(spark: SparkSession, dir: String,
                                nQueries: Int = 3): DataFrame = {
     val work = graft.GraftCaches.trackTempDir("graft_shybc_")
-    val ups = graft.sources.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-      .join(graft.sources.Tables.embeddings(spark, dir)
-        .select(col("vec_id").as("doc_id"), col("embedding")), Seq("doc_id"), "full_outer")
-      .withColumn("op", lit("u"))
-    // the union-id retraction slice (the streamHybridRrfTombstone rule)
-    val dels = graft.sources.Tables.documents(spark, dir).select(col("doc_id"))
-      .unionByName(graft.sources.Tables.embeddings(spark, dir)
-        .select(col("vec_id").as("doc_id")))
-      .distinct()
-      .filter(col("doc_id") >= nQueries && col("doc_id") % 7 === 3)
-      .select(col("doc_id"),
-        lit(null).cast("string").as("text"),
-        lit(null).cast("array<float>").as("embedding"),
-        lit("d").as("op"))
-    val state = new HybridTombstoneState(s"$work/state", nQueries)
-    val earlyDel = col("doc_id") % 14 === 3 && col("doc_id") % 3 =!= 2
-    // stage all four phase inputs upfront, writes overlapped — only
-    // the drains are phase-ordered (StreamSources.stageAll)
-    StreamSources.stageAll(
-      (ups.filter(col("doc_id") % 3 =!= 2), s"$work/a", 2),
-      (dels.filter(earlyDel), s"$work/b", 1),
-      (ups.filter(col("doc_id") % 3 === 2), s"$work/c", 2),
-      (dels.filter(!earlyDel), s"$work/d", 1))
-    var off = StreamSources.drainStaged(spark, s"$work/a", 0L, state.merge)
-    off = StreamSources.drainStaged(spark, s"$work/b", off, state.merge)
-    state.compact(spark)
-    off = StreamSources.drainStaged(spark, s"$work/c", off, state.merge)
-    StreamSources.drainStaged(spark, s"$work/d", off, state.merge)
+    val (ups, dels) = hybridChangelog(spark, dir, nQueries)
+    val state = new HybridIndexState(s"$work/state", nQueries, retractions = true)
+    StreamSources.replayCompacted(work, ups.withColumn("op", lit("u")), dels,
+      state.merge, () => state.compact(spark))
     state.report(spark)
   }
 
@@ -1006,20 +961,20 @@ final class PiiSourceState(stateDir: String) {
   * twin. Each corpus vector arrives in exactly one micro-batch and
   * its verdict depends only on the (broadcast) eval side, so each
   * batch APPENDS its own verdict delta (the delta-append layout of
-  * [[StreamUtil.VersionedState]] — the verdict table grows with the
-  * corpus; rewriting the accumulation per batch would be quadratic
-  * write volume). */
+  * [[StreamUtil.VersionedState]], one `verdicts` store — the verdict
+  * table grows with the corpus; rewriting the accumulation per batch
+  * would be quadratic write volume). */
 final class SemanticVerdictState(stateDir: String, dir: String, nEval: Int) {
-  private val state = new StreamUtil.VersionedState(stateDir, Seq(""))
+  private val state = new StreamUtil.VersionedState(stateDir, Seq("verdicts"))
 
   private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "vec_id BIGINT, nearest_eval_id BIGINT, max_cosine DOUBLE, is_kept BOOLEAN")
+    "vec_id BIGINT, nearest_eval_id BIGINT, max_cosine DOUBLE, is_kept BOOLEAN", "verdicts")
 
   def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val spark = batch.sparkSession
     val verdicts = graft.operators.VectorOps.decontaminateSemanticVerdicts(
       graft.operators.VectorOps.evalSide(spark, dir, nEval), batch.toDF())
-    StreamUtil.writeSharded(verdicts, state.at(batchId), Seq("vec_id"))
+    StreamUtil.writeSharded(verdicts, state.at(batchId, "verdicts"), Seq("vec_id"))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -1028,77 +983,49 @@ final class SemanticVerdictState(stateDir: String, dir: String, nEval: Int) {
 
 /** DSIR doc-bucket grid state —
   * [[graft.operators.CorpusQa.dsirDocBuckets]] delta-appended per
-  * micro-batch: docs are immutable and batches id-disjoint, so each
-  * batch's hashed-feature counts land once and are never rewritten
-  * (the corpus-scale append discipline — versioned rewrite would be
-  * quadratic write volume). CRUCIALLY both bucket LMs and every doc
-  * weight derive at REPORT time through the batch operator's own
-  * [[graft.operators.CorpusQa.dsirFromDocBuckets]]: a weight frozen
-  * at ingest would be scored against a stale target model (the same
-  * final-center argument as the conformal state). */
-final class DsirGridState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir, Seq(""))
+  * micro-batch to the `grid` store: docs are immutable and batches
+  * id-disjoint, so each batch's hashed-feature counts land once and
+  * are never rewritten (the corpus-scale append discipline —
+  * versioned rewrite would be quadratic write volume). CRUCIALLY both
+  * bucket LMs and every doc weight derive at REPORT time through the
+  * batch operator's own [[graft.operators.CorpusQa.dsirFromDocBuckets]]:
+  * a weight frozen at ingest would be scored against a stale target
+  * model (the same final-center argument as the conformal state).
+  *
+  * WITH RETRACTIONS (`retractions`) each batch row carries an `op`
+  * row-kind: 'u' rows delta-append their counts, 'd' rows delta-append
+  * the doc_id to a `tomb` store, and [[live]] masks the grid (doc_id
+  * anti-join) BEFORE the bucket LMs and weights derive — a retracted
+  * doc leaves both the output AND the target/proposal models (a
+  * weight scored against LMs that still count dead docs would
+  * silently bias the mixture). [[compact]] is
+  * [[CorpusFilterState.compact]]'s protocol on the grid, with the same
+  * delete-wins-within-horizon retention contract. */
+final class DsirGridState(stateDir: String, retractions: Boolean = false) {
+  private val tombs = new StreamUtil.Tombstones(retractions)
+  private val state = new StreamUtil.VersionedState(stateDir, "grid" +: tombs.stores)
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "doc_id BIGINT, lang STRING, bucket BIGINT, c BIGINT")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    StreamUtil.writeSharded(
-      graft.operators.CorpusQa.dsirDocBuckets(batch.toDF()), state.at(batchId),
-      Seq("doc_id"))
-  }
-
-  def report(spark: SparkSession): DataFrame =
-    graft.operators.CorpusQa.dsirFromDocBuckets(prior(spark))
-}
-
-/** [[DsirGridState]] WITH RETRACTIONS — the tombstone discipline on
-  * the importance-weight grid: 'u' rows delta-append their
-  * hashed-feature counts, 'd' rows delta-append the doc_id to a
-  * tombstone store; the report masks the grid (doc_id anti-join)
-  * BEFORE deriving bucket LMs and weights, so a retracted doc leaves
-  * both the output AND the target/proposal models — the same
-  * final-center argument as the append-only face, now also
-  * retraction-correct (a weight scored against LMs that still count
-  * dead docs would silently bias the mixture). */
-final class DsirTombstoneState(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir, Seq("grid", "tomb"))
+  /** The serving read of the grid: minus the tombstoned docs. */
+  private def live(spark: SparkSession): DataFrame = tombs.live(spark, state,
+    state.prior(spark, "doc_id BIGINT, lang STRING, bucket BIGINT, c BIGINT", "grid"), Seq("doc_id"))
 
   def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val df = batch.toDF()
     // grid ∥ tomb (guide §2.6): independent jobs, so they overlap.
     StreamUtil.inParallel(
-      () => StreamUtil.writeSharded(
-        graft.operators.CorpusQa.dsirDocBuckets(df.filter(col("op") === "u").drop("op")),
-        state.at(batchId, "grid"), Seq("doc_id")),
-      () => StreamUtil.writeSharded(
-        df.filter(col("op") === "d").select(col("doc_id")).distinct(),
-        state.at(batchId, "tomb"), Seq("doc_id")))
+      (() => StreamUtil.writeSharded(graft.operators.CorpusQa.dsirDocBuckets(tombs.upserts(df)),
+        state.at(batchId, "grid"), Seq("doc_id"))) +: tombs.write(state, batchId, df): _*)
   }
 
-  def report(spark: SparkSession): DataFrame = {
-    val tomb = state.prior(spark, "doc_id BIGINT", "tomb")
-    graft.operators.CorpusQa.dsirFromDocBuckets(
-      state.prior(spark, "doc_id BIGINT, lang STRING, bucket BIGINT, c BIGINT", "grid")
-        .join(tomb, Seq("doc_id"), "left_anti"))
-  }
+  def report(spark: SparkSession): DataFrame =
+    graft.operators.CorpusQa.dsirFromDocBuckets(live(spark))
 
-  /** Tombstone compaction — [[CorpusFilterTombstoneState.compact]]'s
-    * protocol on the two-store grid state: the masked grid (exactly
-    * [[report]]'s anti-join) becomes one delta at the version
-    * boundary, the tombstone store truncates. Same
-    * delete-wins-within-horizon retention contract. */
   def compact(spark: SparkSession): Unit =
     state.compact(compactionStores(spark))
 
   private[graft] def compactionStores(
-      spark: SparkSession): Seq[(String, DataFrame, Seq[String])] = {
-    val tomb = state.prior(spark, "doc_id BIGINT", "tomb")
-    Seq(
-      ("grid", state.prior(spark, "doc_id BIGINT, lang STRING, bucket BIGINT, c BIGINT", "grid")
-        .join(tomb, Seq("doc_id"), "left_anti"), Seq("doc_id")),
-      ("tomb", tomb.limit(0), Seq("doc_id")))
-  }
+      spark: SparkSession): Seq[(String, DataFrame, Seq[String])] =
+    ("grid", live(spark), Seq("doc_id")) +: tombs.truncated(spark, state)
 }
 
 /** Streaming BPE-training state — the word-frequency dict
@@ -1163,52 +1090,24 @@ final class SourceWordState(stateDir: String) {
 /** Streaming hybrid-retrieval index — the serve-while-ingesting
   * shape: each micro-batch of documents delta-appends its inverted-
   * index postings ([[graft.operators.VectorOps.hybridPostings]] —
-  * the index build does NOT know the queries) and its embedding
-  * rows; at report time queries, corpus stats, df, and both rankings
-  * derive from the accrued index through the batch operator's own
-  * fusion core ([[graft.operators.VectorOps.hybridFromIndex]]).
-  * Both stores are append-only because docs are immutable and
-  * batches id-disjoint (the corpus-scale append discipline). */
-final class HybridIndexState(stateDir: String, nQueries: Int) {
-  private val state = new StreamUtil.VersionedState(stateDir, Seq("post", "emb"))
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val df = batch.toDF()
-    // Null-tolerant halves: the staging full-outer-joins docs to
-    // embeddings, so a doc with no embedding (null embedding) still
-    // feeds the sparse index, and an embedding with no doc (null
-    // text) still feeds the vector store — matching the batch
-    // operator, which reads the two tables independently.
-    // post ∥ emb (guide §2.6): independent jobs, so they overlap.
-    StreamUtil.inParallel(
-      () => StreamUtil.writeSharded(
-        graft.operators.VectorOps.hybridPostings(
-          df.filter(col("text").isNotNull).select(col("doc_id"), col("text"))),
-        state.at(batchId, "post"), Seq("doc_id")),
-      () => StreamUtil.writeSharded(
-        df.filter(col("embedding").isNotNull)
-          .select(col("doc_id").as("vec_id"), col("embedding")),
-        state.at(batchId, "emb"), Seq("vec_id")))
-  }
-
-  def report(spark: SparkSession): DataFrame =
-    graft.operators.VectorOps.hybridFromIndex(
-      state.prior(spark, "doc_id BIGINT, dl BIGINT, term STRING, tf BIGINT", "post"),
-      state.prior(spark, "vec_id BIGINT, embedding ARRAY<FLOAT>", "emb"),
-      nQueries)
-}
-
-/** Streaming hybrid-retrieval index WITH RETRACTIONS — the
-  * [[HybridIndexState]] serve-while-ingesting shape extended with the
-  * CDC family's tombstone discipline ([[CdcCompact]] 10a' semantics
-  * — reference src/process.py:189's changelog-stream delete handling
-  * applied to a serving index instead of a sink): each
-  * micro-batch row carries an `op` column — 'u' rows delta-append
-  * their postings and embedding exactly as the append-only face
-  * does; 'd' rows delta-append the doc_id to a third, tombstone
-  * store. Serving masks both stores through a tombstone anti-join,
-  * so a retracted doc LEAVES the serving index; the batch oracle is
-  * the same fusion SQL over the tombstone-compacted live corpus.
+  * the index build does NOT know the queries) to the `post` store and
+  * its embedding rows to `emb`; at report time queries, corpus stats,
+  * df, and both rankings derive from the accrued index through the
+  * batch operator's own fusion core
+  * ([[graft.operators.VectorOps.hybridFromIndex]]). Both stores are
+  * append-only because docs are immutable and batches id-disjoint
+  * (the corpus-scale append discipline).
+  *
+  * WITH RETRACTIONS (`retractions`) — the CDC family's tombstone
+  * discipline ([[CdcCompact]] 10a' semantics — reference
+  * src/process.py:189's changelog-stream delete handling applied to a
+  * serving index instead of a sink): each micro-batch row carries an
+  * `op` column; 'u' rows delta-append their postings and embedding as
+  * above, 'd' rows delta-append the doc_id to a third, `tomb` store.
+  * Serving ([[live]]) masks both stores through a tombstone
+  * anti-join, so a retracted doc LEAVES the serving index; the batch
+  * oracle is the same fusion SQL over the tombstone-compacted live
+  * corpus.
   *
   * Semantics are delete-wins (tombstone-forever): a tombstone
   * removes the doc no matter the arrival order, which keeps every
@@ -1217,20 +1116,36 @@ final class HybridIndexState(stateDir: String, nQueries: Int) {
   * safe without sequence numbers.
   *
   * Scale shape: the tombstone set is retraction-scale (≪ corpus);
-  * the masks are doc_id equi-anti-joins against delta stores that
-  * are already hash-sharded on doc_id. [[compact]] is that promised
-  * periodic job: it rewrites the post/emb deltas minus the tombstone
-  * set and truncates the tombstone store — the serving read is
-  * unchanged either way. */
-final class HybridTombstoneState(stateDir: String, nQueries: Int) {
-  private val state = new StreamUtil.VersionedState(stateDir, Seq("post", "emb", "tomb"))
+  * the masks are equi-anti-joins against delta stores that are
+  * already hash-sharded on the doc id. [[compact]] is the periodic
+  * job ([[CorpusFilterState.compact]]'s protocol): it rewrites each
+  * store as its serving read and truncates the tombstone store — the
+  * serving read is unchanged either way, and later queries stop
+  * scoring dead postings. */
+final class HybridIndexState(stateDir: String, nQueries: Int, retractions: Boolean = false) {
+  private val stores = scala.collection.immutable.ListMap(
+    "post" -> ("doc_id BIGINT, dl BIGINT, term STRING, tf BIGINT", "doc_id"),
+    "emb" -> ("vec_id BIGINT, embedding ARRAY<FLOAT>", "vec_id"))
+  private val tombs = new StreamUtil.Tombstones(retractions)
+  private val state = new StreamUtil.VersionedState(stateDir, stores.keys.toSeq ++ tombs.stores)
+
+  /** The serving read of `store`: minus the tombstoned docs. */
+  private def live(spark: SparkSession, store: String): DataFrame = {
+    val (ddl, key) = stores(store)
+    tombs.live(spark, state, state.prior(spark, ddl, store), Seq(key))
+  }
 
   def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
     val df = batch.toDF()
-    val ups = df.filter(col("op") === "u")
+    val ups = tombs.upserts(df)
+    // Null-tolerant halves: the staging full-outer-joins docs to
+    // embeddings, so a doc with no embedding (null embedding) still
+    // feeds the sparse index, and an embedding with no doc (null
+    // text) still feeds the vector store — matching the batch
+    // operator, which reads the two tables independently.
     // post ∥ emb ∥ tomb (guide §2.6): independent jobs, so they
     // overlap.
-    StreamUtil.inParallel(
+    StreamUtil.inParallel(Seq(
       () => StreamUtil.writeSharded(
         graft.operators.VectorOps.hybridPostings(
           ups.filter(col("text").isNotNull).select(col("doc_id"), col("text"))),
@@ -1238,43 +1153,19 @@ final class HybridTombstoneState(stateDir: String, nQueries: Int) {
       () => StreamUtil.writeSharded(
         ups.filter(col("embedding").isNotNull)
           .select(col("doc_id").as("vec_id"), col("embedding")),
-        state.at(batchId, "emb"), Seq("vec_id")),
-      () => StreamUtil.writeSharded(
-        df.filter(col("op") === "d").select(col("doc_id")).distinct(),
-        state.at(batchId, "tomb"), Seq("doc_id")))
+        state.at(batchId, "emb"), Seq("vec_id"))) ++ tombs.write(state, batchId, df): _*)
   }
 
-  def report(spark: SparkSession): DataFrame = {
-    val tomb = state.prior(spark, "doc_id BIGINT", "tomb")
-    graft.operators.VectorOps.hybridFromIndex(
-      state.prior(spark, "doc_id BIGINT, dl BIGINT, term STRING, tf BIGINT", "post")
-        .join(tomb, Seq("doc_id"), "left_anti"),
-      state.prior(spark, "vec_id BIGINT, embedding ARRAY<FLOAT>", "emb")
-        .join(tomb.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_anti"),
-      nQueries)
-  }
+  def report(spark: SparkSession): DataFrame =
+    graft.operators.VectorOps.hybridFromIndex(live(spark, "post"), live(spark, "emb"), nQueries)
 
-  /** Tombstone compaction — [[CorpusFilterTombstoneState.compact]]'s
-    * protocol on the serving index: postings and embeddings minus the
-    * tombstone set become one delta each at the version boundary, the
-    * tombstone store truncates. The masks are exactly [[report]]'s
-    * serving masks, so serving is identical before and after; later
-    * queries stop scoring dead postings. Same
-    * delete-wins-within-horizon retention contract. */
   def compact(spark: SparkSession): Unit =
     state.compact(compactionStores(spark))
 
   private[graft] def compactionStores(
-      spark: SparkSession): Seq[(String, DataFrame, Seq[String])] = {
-    val tomb = state.prior(spark, "doc_id BIGINT", "tomb")
-    Seq(
-      ("post", state.prior(spark, "doc_id BIGINT, dl BIGINT, term STRING, tf BIGINT", "post")
-        .join(tomb, Seq("doc_id"), "left_anti"), Seq("doc_id")),
-      ("emb", state.prior(spark, "vec_id BIGINT, embedding ARRAY<FLOAT>", "emb")
-        .join(tomb.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_anti"),
-        Seq("vec_id")),
-      ("tomb", tomb.limit(0), Seq("doc_id")))
-  }
+      spark: SparkSession): Seq[(String, DataFrame, Seq[String])] =
+    stores.toSeq.map { case (n, (_, key)) => (n, live(spark, n), Seq(key)) } ++
+      tombs.truncated(spark, state)
 }
 
 /** Streaming semantic-dedup index — the serve-while-ingesting shape
@@ -1314,8 +1205,8 @@ final class SemanticIvfState(stateDir: String, cents: Array[Float],
 
   def report(spark: SparkSession): DataFrame = {
     // memo-registered so GraftCaches.clearAll releases the persisted
-    // label table (the CorpusFilterStream.labelsCache discipline)
-    val labels = SemanticIvfState.labelsCache
+    // label table
+    val labels = StreamUtil.labelsCache
       .getOrElseUpdate((spark, stateDir, state.version)) {
         graft.operators.Dedup.propagateMinLabels(spark,
           state.prior(spark, "vec_a BIGINT, vec_b BIGINT", "pairs")
@@ -1329,11 +1220,6 @@ final class SemanticIvfState(stateDir: String, cents: Array[Float],
       .withColumn("is_kept", col("cluster_rep") === col("vec_id"))
       .orderBy(col("vec_id"))
   }
-}
-
-object SemanticIvfState {
-  private[streaming] val labelsCache =
-    graft.GraftCaches.memo[(SparkSession, String, Long), DataFrame](_.unpersist())
 }
 
 /** Streaming Naive-Bayes training state —

@@ -129,39 +129,60 @@ object StreamSources {
       .map(dpb => math.min(math.max(1L, (rows + dpb - 1) / dpb), 100000L).toInt)
       .getOrElse(default)
 
-  /** Stage `df` as `nFiles` parquet files under `path` and replay it
-    * one file per micro-batch into `merge`, offsetting batch ids by
-    * `offset` so MULTI-PHASE replays into one state keep ids strictly
-    * monotonic (the CdcCompactDrift two-deploy pattern, generalized
-    * for the mid-stream-compaction entries). Returns the next phase's
-    * offset, derived from the batch ids actually delivered — not from
-    * `nFiles` — so an engine-inserted extra batch can never make a
-    * later phase collide with the state's replay guard. */
-  def replayPhase(df: DataFrame, path: String, nFiles: Int, offset: Long,
-                  merge: (Dataset[Row], Long) => Unit): Long = {
-    stageAll((df, path, nFiles))
-    drainStaged(df.sparkSession, path, offset, merge)
-  }
+  /** The corpus changelog a retraction face replays: an upsert ('u')
+    * for every row of `docs` and a delete ('d') for each row with
+    * `doc_id % 7 == 3`, the retraction slice. */
+  def docChangelog(docs: DataFrame): (DataFrame, DataFrame) =
+    (docs.withColumn("op", lit("u")),
+      docs.filter(col("doc_id") % 7 === 3).withColumn("op", lit("d")))
 
-  /** Stage every phase's input upfront, the writes OVERLAPPED from
-    * driver threads (guide §2.6): the phase inputs are pure
-    * functions of the source tables — none depends on any state the
-    * earlier phases build — so only the DRAINS need to run in phase
-    * order. Staging all four of a compacted face's phases as one
-    * overlapped group reclaims three write-job tails per entry. */
-  def stageAll(stages: (DataFrame, String, Int)*): Unit =
-    StreamUtil.inParallel(stages.map { case (df, path, nFiles) => () =>
-      df.repartition(nFiles).write.mode("overwrite").parquet(path)
+  /** A changelog replayed with a MID-STREAM COMPACTION, the one phase
+    * discipline of every `*_compacted` face: `ups` and `dels` (rows
+    * with an `op` row-kind and a `doc_id`) split into
+    *
+    *  - `A_upserts` (2 batches): upserts with `doc_id % 3 != 2`;
+    *  - `B_deletes` (1 batch): deletes of already-ingested docs
+    *    (`doc_id ≡ 3 mod 14` and `% 3 != 2`);
+    *  - `compact`: B's dead entries are physically dropped, the
+    *    tombstones truncated;
+    *  - `C_upserts` (2 batches): the remaining upserts — they probe
+    *    the COMPACTED index;
+    *  - `D_deletes` (1 batch): the remaining deletes — fresh
+    *    tombstones, masked at report.
+    *
+    * Deletes always FOLLOW their upserts and nothing re-upserts a
+    * deleted key after the compaction — the one ordering the
+    * truncated-tombstone horizon requires. The phase inputs are pure
+    * functions of the changelog, so all four are staged upfront under
+    * `work/<phase>`, their writes overlapped (guide §2.6); only the
+    * drains run in phase order. Each phase replays one file per
+    * micro-batch into `merge`, its batch ids offset past the previous
+    * phase's, so ids stay strictly monotonic across phases (derived
+    * from the ids actually delivered, so an engine-inserted extra
+    * batch never collides with the state's replay guard). `step` wraps
+    * each drain and the compaction, by name — a timing hook. */
+  def replayCompacted(work: String, ups: DataFrame, dels: DataFrame,
+                      merge: (Dataset[Row], Long) => Unit, compact: () => Unit,
+                      step: (String, () => Unit) => Unit = (_, run) => run()): Unit = {
+    val earlyDel = col("doc_id") % 14 === 3 && col("doc_id") % 3 =!= 2
+    val phases = Seq(
+      ("A_upserts", ups.filter(col("doc_id") % 3 =!= 2), 2),
+      ("B_deletes", dels.filter(earlyDel), 1),
+      ("C_upserts", ups.filter(col("doc_id") % 3 === 2), 2),
+      ("D_deletes", dels.filter(!earlyDel), 1))
+    StreamUtil.inParallel(phases.map { case (name, df, nFiles) => () =>
+      df.repartition(nFiles).write.mode("overwrite").parquet(s"$work/$name")
     }: _*)
-
-  /** Drain one PRE-STAGED phase dir into `merge` (the replay half of
-    * [[replayPhase]]); same batch-id offset discipline. */
-  def drainStaged(spark: SparkSession, path: String, offset: Long,
-                  merge: (Dataset[Row], Long) => Unit): Long = {
-    var maxId = -1L
-    runForeachBatch(parquetStream(spark, path, maxFilesPerTrigger = 1),
-      (b, id) => { maxId = math.max(maxId, id); merge(b, offset + id) })
-    offset + maxId + 1
+    var offset = 0L
+    phases.foreach { case (name, _, _) =>
+      step(name, () => {
+        var maxId = -1L
+        runForeachBatch(parquetStream(ups.sparkSession, s"$work/$name", maxFilesPerTrigger = 1),
+          (b, id) => { maxId = math.max(maxId, id); merge(b, offset + id) })
+        offset += maxId + 1
+      })
+      if (name == "B_deletes") step("compact", compact)
+    }
   }
 
   /** Shuffle/state partition count captured by a starting streaming

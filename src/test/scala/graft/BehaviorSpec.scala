@@ -12,8 +12,9 @@ import graft.operators.Behavior
   * DuckDB oracle exercises only statistically (lookback expiry,
   * carry-forward through intervening conversions, same-timestamp
   * ties, leakage-free frames). */
-class BehaviorSpec extends AnyFunSuite {
+class BehaviorSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   import TestSession._
+  override def afterAll(): Unit = GraftCaches.clearAll()
   import spark.implicits._
 
   private def ev(rows: Seq[(Long, String, Long, String, Double)]): DataFrame =
@@ -646,7 +647,7 @@ class BehaviorSpec extends AnyFunSuite {
   }
 
   test("temperature mix: sqrt weighting keeps small sources whole while tempering the head") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mixt_").toString
+    val dir = GraftCaches.trackTempDir("graft_mixt_")
     // srcA: 90 docs, srcB: 10 docs, budget 2/5 of 100 = 40.
     // wA=⌊√90e6⌋=9486, wB=⌊√10e6⌋=3162, w_tot=12648 →
     // target_A = 40·9486 div 12648 = 30, target_B = 40·3162 div 12648 = 10
@@ -664,7 +665,7 @@ class BehaviorSpec extends AnyFunSuite {
 
   test("nearest as-of: exact tie goes backward, forward-only and no-order users handled") {
     import org.apache.spark.sql.functions.to_timestamp
-    val dir = java.nio.file.Files.createTempDirectory("graft_asof_").toString
+    val dir = GraftCaches.trackTempDir("graft_asof_")
     Seq(
       (1L, "2024-01-01 12:00:00", 1L, "view", 0.0, "{}"),  // tie: orders 1h both sides
       (2L, "2024-01-01 12:00:00", 2L, "view", 0.0, "{}"),  // only a later order -> f

@@ -331,7 +331,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     def batch(rows: (Long, String, Long, String)*) =
       rows.toDF("user_id", "ts_s", "event_id", "event_type")
         .withColumn("ts", to_timestamp(col("ts_s"))).drop("ts_s")
-    val work = java.nio.file.Files.createTempDirectory("graft_seq_state_").toString
+    val work = GraftCaches.trackTempDir("graft_seq_state_")
     val st = new DfaState(s"$work/state",
       graft.operators.Sequences.seqDfaStep, 4, "n_sequences")
     // batch 0 ends mid-pattern: view, click
@@ -936,7 +936,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     import java.nio.file.{Files => JFiles, Paths, StandardCopyOption}
     import org.apache.spark.sql.streaming.Trigger
     import graft.streaming.{CdcCompact, StreamSources}
-    val work = JFiles.createTempDirectory("graft_resume_").toString
+    val work = GraftCaches.trackTempDir("graft_resume_")
     // stage the events table as 4 files, but reveal them in two phases
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.read.parquet(s"$sf/events.parquet").repartition(4)
@@ -991,7 +991,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     import graft.streaming.StreamSources
     import spark.implicits._
 
-    val work = JFiles.createTempDirectory("graft_hop_append_").toString
+    val work = GraftCaches.trackTempDir("graft_hop_append_")
     val base = 1577836800L // 2020-01-01 00:00 UTC
     def nanos(minute: Long): Long = (base + minute * 60) * 1000000000L
     def stage(sub: String, evs: Seq[(Long, Long)], modTime: Long): Unit = {
@@ -1148,7 +1148,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     import java.nio.file.{Files => JFiles, Paths, StandardCopyOption}
     import org.apache.spark.sql.streaming.Trigger
     import graft.streaming.{FunnelStream, StreamSources}
-    val work = JFiles.createTempDirectory(s"graft_resume_${prefix}_").toString
+    val work = GraftCaches.trackTempDir(s"graft_resume_${prefix}_")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if (timeOrdered)
       FunnelStream.stageTimeOrdered(spark, sf, s"$work/staged", 4)
@@ -1259,7 +1259,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     import org.apache.spark.sql.functions._
     import graft.streaming.HllDistinctState
     val events = graft.sources.Tables.events(spark, sf)
-    val work = java.nio.file.Files.createTempDirectory("graft_hll_spec_").toString
+    val work = GraftCaches.trackTempDir("graft_hll_spec_")
     val st = new HllDistinctState(s"$work/state")
     (0L to 2L).foreach(i => st.merge(events.filter(col("event_id") % 3 === i), i))
     // replayed batch id is a no-op (exactly-once guard)
@@ -1393,7 +1393,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   test("hybrid tombstone state: crash between delta writes replays; re-merge is a no-op") {
     import org.apache.spark.sql.functions.{col, lit}
-    import graft.streaming.HybridTombstoneState
+    import graft.streaming.HybridIndexState
     import spark.implicits._
     val work = GraftCaches.trackTempDir("graft_hybtomb_crash_")
     def docs(rows: (Long, String, Seq[Float], String)*) =
@@ -1409,13 +1409,13 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
         .select(col("doc_id"), lit(null).cast("string").as("text"),
           lit(null).cast("array<float>").as("embedding"), lit("d").as("op")))
     // Clean run → the reference result.
-    val clean = new HybridTombstoneState(s"$work/clean", nQueries = 2)
+    val clean = new HybridIndexState(s"$work/clean", nQueries = 2, retractions = true)
     clean.merge(b0, 0); clean.merge(b1, 1)
     val want = clean.report(spark).collect().toSeq
     assert(want.nonEmpty && !want.exists(_.getAs[Long]("doc_id") == 4L))
     // Crashed run: batch 0 commits; batch 1 dies after the FIRST
     // delta write (post) — emb and tomb never land.
-    val s1 = new HybridTombstoneState(s"$work/crash", nQueries = 2)
+    val s1 = new HybridIndexState(s"$work/crash", nQueries = 2, retractions = true)
     s1.merge(b0, 0)
     graft.operators.VectorOps.hybridPostings(
         b1.filter(col("op") === "u").select(col("doc_id"), col("text")))
@@ -1424,7 +1424,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     // Restart: the min-over-stores guard sees the orphan post delta
     // as uncommitted (emb/tomb still at 0), so batch 1 REPLAYS into
     // the idempotent overwrite dirs instead of being skipped.
-    val s2 = new HybridTombstoneState(s"$work/crash", nQueries = 2)
+    val s2 = new HybridIndexState(s"$work/crash", nQueries = 2, retractions = true)
     s2.merge(b1, 1)
     assert(s2.report(spark).collect().toSeq == want)
     // Replay guard: a second delivery of batch 1 is a no-op.
@@ -1434,7 +1434,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   test("corpus filter tombstone: retracting a bridge doc SPLITS its component") {
     import org.apache.spark.sql.functions.{col, lit}
-    import graft.streaming.CorpusFilterTombstoneState
+    import graft.streaming.CorpusFilterState
     import spark.implicits._
     val work = GraftCaches.trackTempDir("graft_cftomb_")
     // 3-word shingles: doc 1 {abc,bcd}, doc 5 {bcd,cde}, doc 9
@@ -1448,7 +1448,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     val b1 = docs((9L, "a b c d e", "u"))
     val del9 = docs((9L, "a b c d e", "d"))
     def kept(dir: String, batches: Seq[org.apache.spark.sql.DataFrame]): Map[Long, Boolean] = {
-      val st = new CorpusFilterTombstoneState(dir, threshold = 0.5)
+      val st = new CorpusFilterState(dir, threshold = 0.5, retractions = true)
       batches.zipWithIndex.foreach { case (b, i) => st.merge(b, i.toLong) }
       st.report(spark, minQuality = 0.0, langs = Seq("en", "und"))
         .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Boolean]("dedup_kept")).toMap
@@ -1483,7 +1483,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   test("compaction is report-identical and physically drops dead entries (all three tombstone states)") {
     import org.apache.spark.sql.functions.{col, lit}
-    import graft.streaming.{CorpusFilterTombstoneState, DsirTombstoneState, HybridTombstoneState}
+    import graft.streaming.{CorpusFilterState, DsirGridState, HybridIndexState}
     import spark.implicits._
     val work = GraftCaches.trackTempDir("graft_compact_")
 
@@ -1492,7 +1492,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
       rows.toSeq.toDF("doc_id", "text", "embedding", "op")
         .select(col("doc_id"), col("text"),
           col("embedding").cast("array<float>").as("embedding"), col("op"))
-    val hyb = new HybridTombstoneState(s"$work/hyb", nQueries = 2)
+    val hyb = new HybridIndexState(s"$work/hyb", nQueries = 2, retractions = true)
     hyb.merge(hdocs((0L, "alpha beta", Seq(1f, 0f), "u"), (1L, "beta gamma", Seq(0f, 1f), "u"),
       (2L, "alpha alpha", Seq(0.9f, 0.1f), "u"), (3L, "gamma gamma", Seq(0.1f, 0.9f), "u")), 0)
     hyb.merge(hdocs((4L, "alpha beta beta", Seq(0.7f, 0.7f), "u"),
@@ -1502,7 +1502,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     val hybBefore = hyb.report(spark).collect().toSeq
     hyb.compact(spark)
     // identical report through a FRESH instance (recovered version)
-    val hyb2 = new HybridTombstoneState(s"$work/hyb", nQueries = 2)
+    val hyb2 = new HybridIndexState(s"$work/hyb", nQueries = 2, retractions = true)
     assert(hyb2.report(spark).collect().toSeq == hybBefore)
     // physical drop: every store is ONE delta at the version boundary,
     // doc 4's postings/embedding are gone, tombstones truncated
@@ -1524,7 +1524,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
       rows.toSeq.toDF("doc_id", "text", "op")
         .select(col("doc_id"), col("text"), lit("en").as("lang"),
           lit("s").as("source"), lit(0L).as("n_chars"), col("op"))
-    val cf = new CorpusFilterTombstoneState(s"$work/cf", threshold = 0.5)
+    val cf = new CorpusFilterState(s"$work/cf", threshold = 0.5, retractions = true)
     cf.merge(cdocs((1L, "a b c d", "u"), (5L, "b c d e", "u")), 0)
     cf.merge(cdocs((9L, "a b c d e", "u"), (9L, "a b c d e", "d")), 1)
     val cfBefore = cf.report(spark, 0.0, Seq("en", "und")).collect().toSeq
@@ -1533,9 +1533,9 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     assert(cfBefore.map(r => r.getAs[Long]("doc_id") -> r.getAs[Boolean]("dedup_kept")).toMap
       == Map(1L -> true, 5L -> true))
     cf.compact(spark)
-    val cf2 = new CorpusFilterTombstoneState(s"$work/cf", threshold = 0.5)
+    val cf2 = new CorpusFilterState(s"$work/cf", threshold = 0.5, retractions = true)
     assert(cf2.report(spark, 0.0, Seq("en", "und")).collect().toSeq == cfBefore)
-    CorpusFilterTombstoneState.storeNames.foreach { s =>
+    cf2.storeNames.foreach { s =>
       assert(deltaDirs(s"$work/cf/$s") == Set("batch=1"), s"store $s")
     }
     // 9's bands/sets/meta and BOTH its pairs are physically gone
@@ -1544,28 +1544,64 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
       .parquet(s"$work/cf/pairs").count() == 0)
 
     // dsir: grid rows for the dead doc drop, tomb truncates
-    val ds = new DsirTombstoneState(s"$work/dsir")
+    val ds = new DsirGridState(s"$work/dsir", retractions = true)
     def ddocs(rows: (Long, String, String, String)*) =
       rows.toSeq.toDF("doc_id", "text", "lang", "op")
     ds.merge(ddocs((1L, "w x", "en", "u"), (2L, "x y", "fr", "u")), 0)
     ds.merge(ddocs((3L, "y z", "en", "u"), (2L, "x y", "fr", "d")), 1)
     val dsBefore = ds.report(spark).collect().toSeq
     ds.compact(spark)
-    val ds2 = new DsirTombstoneState(s"$work/dsir")
+    val ds2 = new DsirGridState(s"$work/dsir", retractions = true)
     assert(ds2.report(spark).collect().toSeq == dsBefore)
     assert(spark.read.parquet(s"$work/dsir/grid").filter(col("doc_id") === 2L).count() == 0)
     assert(deltaDirs(s"$work/dsir/tomb") == Set("batch=1"))
+
+    // built without retractions, each index keeps no `tomb` store, and
+    // its report equals the retraction face fed the same upserts and
+    // no deletes
+    def noTomb(dir: String) = assert(!new java.io.File(s"$dir/tomb").exists(), dir)
+    val hUps = Seq(
+      hdocs((0L, "alpha beta", Seq(1f, 0f), "u"), (1L, "beta gamma", Seq(0f, 1f), "u")),
+      hdocs((2L, "alpha alpha", Seq(0.9f, 0.1f), "u"), (3L, "gamma gamma", Seq(0.1f, 0.9f), "u")))
+    val hybPlain = new HybridIndexState(s"$work/hyb_plain", nQueries = 2)
+    val hybUps = new HybridIndexState(s"$work/hyb_ups", nQueries = 2, retractions = true)
+    hUps.zipWithIndex.foreach { case (b, i) =>
+      hybPlain.merge(b.drop("op"), i.toLong); hybUps.merge(b, i.toLong) }
+    noTomb(s"$work/hyb_plain")
+    assert(hybPlain.report(spark).collect().toSeq == hybUps.report(spark).collect().toSeq)
+
+    val cUps = Seq(cdocs((1L, "a b c d", "u"), (5L, "b c d e", "u")),
+      cdocs((9L, "a b c d e", "u")))
+    val cfPlain = new CorpusFilterState(s"$work/cf_plain", threshold = 0.5)
+    val cfUps = new CorpusFilterState(s"$work/cf_ups", threshold = 0.5, retractions = true)
+    cUps.zipWithIndex.foreach { case (b, i) =>
+      cfPlain.merge(b.drop("op"), i.toLong); cfUps.merge(b, i.toLong) }
+    noTomb(s"$work/cf_plain")
+    assert(cfPlain.storeNames == Seq("bands", "sets", "pairs", "meta"))
+    val cfPlainReport = cfPlain.report(spark, 0.0, Seq("en", "und")).collect().toSeq
+    assert(cfPlainReport == cfUps.report(spark, 0.0, Seq("en", "und")).collect().toSeq)
+    assert(cfPlainReport.map(r => r.getAs[Long]("doc_id") -> r.getAs[Boolean]("dedup_kept")).toMap
+      == Map(1L -> true, 5L -> false, 9L -> false))
+
+    val dUps = Seq(ddocs((1L, "w x", "en", "u"), (2L, "x y", "fr", "u")),
+      ddocs((3L, "y z", "en", "u")))
+    val dsPlain = new DsirGridState(s"$work/dsir_plain")
+    val dsUps = new DsirGridState(s"$work/dsir_ups", retractions = true)
+    dUps.zipWithIndex.foreach { case (b, i) =>
+      dsPlain.merge(b.drop("op"), i.toLong); dsUps.merge(b, i.toLong) }
+    noTomb(s"$work/dsir_plain")
+    assert(dsPlain.report(spark).collect().toSeq == dsUps.report(spark).collect().toSeq)
   }
 
   test("compaction crash-safety: pre-marker crash discards staging; post-marker crash redoes install") {
     import org.apache.spark.sql.functions.{col, lit}
-    import graft.streaming.{DsirTombstoneState, StreamUtil}
+    import graft.streaming.{DsirGridState, StreamUtil}
     import spark.implicits._
     val work = GraftCaches.trackTempDir("graft_compcrash_")
     def ddocs(rows: (Long, String, String, String)*) =
       rows.toSeq.toDF("doc_id", "text", "lang", "op")
-    def freshState(dir: String): DsirTombstoneState = {
-      val st = new DsirTombstoneState(dir)
+    def freshState(dir: String): DsirGridState = {
+      val st = new DsirGridState(dir, retractions = true)
       st.merge(ddocs((1L, "w x", "en", "u"), (2L, "x y", "fr", "u")), 0)
       st.merge(ddocs((3L, "y z", "en", "u"), (2L, "x y", "fr", "d")), 1)
       st
@@ -1578,7 +1614,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     val pre = freshState(s"$work/pre")
     StreamUtil.stageCompaction(s"$work/pre", 1L, pre.compactionStores(spark))
     assert(new java.io.File(s"$work/pre/_compact").exists())
-    val pre2 = new DsirTombstoneState(s"$work/pre") // "restart"
+    val pre2 = new DsirGridState(s"$work/pre", retractions = true) // "restart"
     assert(!new java.io.File(s"$work/pre/_compact").exists())
     assert(deltaDirs(s"$work/pre/grid") == Set("batch=0", "batch=1")) // untouched
     assert(pre2.report(spark).collect().toSeq == want)
@@ -1590,7 +1626,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     val post = freshState(s"$work/post")
     StreamUtil.stageCompaction(s"$work/post", 1L, post.compactionStores(spark))
     assert(new java.io.File(s"$work/post/_compact.COMMIT").createNewFile())
-    val post2 = new DsirTombstoneState(s"$work/post") // "restart"
+    val post2 = new DsirGridState(s"$work/post", retractions = true) // "restart"
     assert(!new java.io.File(s"$work/post/_compact").exists())
     assert(!new java.io.File(s"$work/post/_compact.COMMIT").exists())
     assert(deltaDirs(s"$work/post/grid") == Set("batch=1")) // installed
