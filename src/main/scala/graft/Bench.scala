@@ -439,7 +439,7 @@ object Bench {
       GraftCaches.clearAll()
       spark.catalog.clearCache()
       // Spark's ContextCleaner reclaims dead shuffle files / broadcast
-      // blocks only when the JVM garbage-collects — on a 24g heap that
+      // blocks only when the JVM garbage-collects — on a large heap that
       // can be never, so 49 queries' worth of shuffle state piles up on
       // /tmp and bleeds IO into later timings. Outside the timed
       // window by construction.

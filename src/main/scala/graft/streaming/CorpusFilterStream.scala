@@ -188,12 +188,9 @@ object CorpusFilterStream {
                          langs: Seq[String] = Seq("en")): DataFrame = {
     val work = graft.GraftCaches.trackTempDir("graft_scfilter_")
     val docs = graft.sources.Tables.documents(spark, dir)
-    docs.repartition(StreamSources.stagingFiles(nFiles, docs.count()))
-      .write.mode("overwrite").parquet(s"$work/input")
     val state = new CorpusFilterState(s"$work/state", threshold)
-    StreamSources.runForeachBatch(
-      StreamSources.parquetStream(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
+    StreamSources.runForeachBatch(StreamSources.staged(docs,
+      StreamSources.stagingFiles(nFiles, docs.count()), work), state.merge)
     state.report(spark, minQuality, langs)
   }
 
@@ -205,15 +202,14 @@ object CorpusFilterStream {
     * semantics keep the staging order-free. */
   def streamCorpusFilterTombstone(spark: SparkSession, dir: String, nFiles: Int = 4,
                                   minQuality: Double = 0.5, threshold: Double = 0.5,
-                                  langs: Seq[String] = Seq("en")): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_scftomb_")
-    val docs = graft.sources.Tables.documents(spark, dir)
-    val (ups, dels) = StreamSources.docChangelog(docs)
-    val state = new CorpusFilterState(s"$work/state", threshold, retractions = true)
-    StreamSources.runForeachBatch(StreamSources.staged(ups.unionByName(dels),
-      StreamSources.stagingFiles(nFiles, docs.count()), work), state.merge)
-    state.report(spark, minQuality, langs)
-  }
+                                  langs: Seq[String] = Seq("en")): DataFrame =
+    StreamUtil.drained(spark, "graft_scftomb_", dir, nFiles, threshold)({ work =>
+      val docs = graft.sources.Tables.documents(spark, dir)
+      val (ups, dels) = StreamSources.docChangelog(docs)
+      StreamSources.staged(ups.unionByName(dels),
+        StreamSources.stagingFiles(nFiles, docs.count()), work)
+    }, new CorpusFilterState(_, threshold, retractions = true))(_.merge)
+      .report(spark, minQuality, langs)
 
   /** Queries entry (oracle: `stream_corpus_filter_tombstone`'s — the
     * corpus_filter SQL over the live corpus): the retraction gate

@@ -442,12 +442,11 @@ private[graft] object StreamUtil {
     * for every state class. Two layouts:
     *
     *  - versioned rewrite (`deltaStores` empty): each batch rewrites
-    *    the whole state as `v<N>` (or sub-stores `v<N>/<store>`), and
-    *    the prior version is deleted once `v<N>` has committed — for
-    *    states whose merge is not a commutative per-key combine of
-    *    deltas: a DFA fold ([[DfaState]]), a session multiset
-    *    ([[PeakSessionState]]) and last-write-wins with deletes
-    *    ([[CdcCompact]], [[CdcCompactDrift]], [[Scd2State]]);
+    *    the whole state as one store, `v<N>`, and the prior version is
+    *    deleted once `v<N>` has committed — for states whose merge is
+    *    not a commutative per-key combine of deltas: a DFA fold
+    *    ([[DfaState]]) and last-write-wins with deletes
+    *    ([[CdcCompact]], [[Scd2State]]);
     *  - delta-append (`deltaStores` = the store names): each batch
     *    appends only its own partial as `<dir>/<store>/batch=<N>`,
     *    and readers union every delta with
@@ -475,17 +474,20 @@ private[graft] object StreamUtil {
     *
     * Versions are caller-supplied ids — the batch id, or any id
     * increasing across the state's lifetime
-    * ([[CdcCompactDrift]]'s `(epoch << 40) | batchId`). */
+    * ([[CdcCompact]]'s `(epoch << 40) | batchId`). */
   final class VersionedState(dir: String, deltaStores: Seq[String] = Nil) {
     private val delta = deltaStores.nonEmpty
 
     private def storeDir(store: String) = s"$dir/$store"
 
-    /** Where version `v` of `store` is written (and read). */
+    /** Where version `v` of `store` is written (and read); the
+      * rewrite layout has one unnamed store. */
     def at(v: Long, store: String = ""): String =
       if (delta) s"${storeDir(store)}/batch=$v"
-      else if (store.isEmpty) s"$dir/v$v"
-      else s"$dir/v$v/$store"
+      else {
+        require(store.isEmpty, s"state $dir: the rewrite layout has no store $store")
+        s"$dir/v$v"
+      }
 
     private def markers(v: Long): Seq[org.apache.hadoop.fs.Path] =
       (if (delta) deltaStores.map(at(v, _)) else Seq(at(v)))

@@ -94,7 +94,7 @@ object JdbcCdcPoll {
   private[graft] def pollInto(spark: SparkSession, url: String, stateDir: String,
                               total: Long, chunk: Long,
                               maxBatches: Int = Int.MaxValue): CdcCompact = {
-    val cdc = new CdcCompact(stateDir, extraCols = Seq("op"))
+    val cdc = new CdcCompact(stateDir)
     var batchId = cdc.committedVersion + 1
     var polled = 0
     while (batchId * chunk < total && polled < maxBatches) {
@@ -103,7 +103,7 @@ object JdbcCdcPoll {
       val part = Tables.dimJdbc(spark, url,
         s"""(SELECT * FROM ${q("changelog")}
            | WHERE ${q("version")} > $lo AND ${q("version")} <= $hi) c""".stripMargin)
-        .drop("version")
+        .select(Seq("user_id", "event_id", "ts", "event_type", "value", "op").map(col): _*)
       cdc.merge(part, batchId)
       batchId += 1
       polled += 1

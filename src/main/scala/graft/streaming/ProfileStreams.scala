@@ -766,15 +766,12 @@ object ProfileStreams {
     * order-free (deletes land in their own trailing rows but would
     * compact identically in any order). */
   def streamHybridRrfTombstone(spark: SparkSession, dir: String, nQueries: Int = 3,
-                               nFiles: Int = 4): DataFrame = {
-    val work = graft.GraftCaches.trackTempDir("graft_shybt_")
-    val (ups, dels) = hybridChangelog(spark, dir, nQueries)
-    val state = new HybridIndexState(s"$work/state", nQueries, retractions = true)
-    StreamSources.runForeachBatch(StreamSources.staged(
-      ups.withColumn("op", lit("u")).unionByName(dels),
-      StreamSources.stagingFiles(nFiles, ups.count() + dels.count()), work), state.merge)
-    state.report(spark)
-  }
+                               nFiles: Int = 4): DataFrame =
+    StreamUtil.drained(spark, "graft_shybt_", dir, nQueries, nFiles)({ work =>
+      val (ups, dels) = hybridChangelog(spark, dir, nQueries)
+      StreamSources.staged(ups.withColumn("op", lit("u")).unionByName(dels),
+        StreamSources.stagingFiles(nFiles, ups.count() + dels.count()), work)
+    }, new HybridIndexState(_, nQueries, retractions = true))(_.merge).report(spark)
 
   /** Queries entry (oracle: `stream_hybrid_rrf_tombstone`'s — the
     * fusion SQL over the live corpus): the serving index with a
@@ -1259,12 +1256,9 @@ object NbLangStream {
     * the same staged corpus through the shared scoring derivation. */
   def streamNbLang(spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
     val work = graft.GraftCaches.trackTempDir("graft_snb_")
-    graft.sources.Tables.documents(spark, dir).repartition(nFiles)
-      .write.mode("overwrite").parquet(s"$work/input")
     val state = new NbLangState(s"$work/state")
     StreamSources.runForeachBatch(
-      StreamSources.parquetStream(spark, s"$work/input", maxFilesPerTrigger = 1),
-      state.merge)
+      StreamSources.staged(graft.sources.Tables.documents(spark, dir), nFiles, work), state.merge)
     state.confusion(spark, s"$work/input")
   }
 }

@@ -28,31 +28,19 @@ import graft.sources.Tables
   */
 object StreamIncrementalDedup {
 
-  /** Stage the batch slice (`hv >= 100-batchPct`) of documents as
-    * `nFiles` parquet files so the file source delivers real
-    * incremental micro-batches. */
-  private def stageBatchDocs(spark: SparkSession, dir: String, out: String,
-                             nFiles: Int, batchPct: Int, salt: String): Unit = {
-    val hv = Sampling.splitHash(col("doc_id"), salt) % 100
-    Tables.documents(spark, dir)
-      .filter(hv >= 100 - batchPct)
-      .select(col("doc_id"), col("text"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(out)
-  }
-
-  /** Queries entry: drain the staged document stream through the
-    * screening core, then read back all verdicts (oracle: same SQL as
-    * `dedup_incremental`). */
+  /** Queries entry: the batch slice (`hv >= 100-batchPct`) of
+    * documents staged as `nFiles` files, drained one per micro-batch
+    * through the screening core, then all verdicts read back (oracle:
+    * same SQL as `dedup_incremental`). */
   def streamDedupIncremental(spark: SparkSession, dir: String, nFiles: Int = 4,
                              threshold: Double = 0.5, batchPct: Int = 20,
                              salt: String = "graft"): DataFrame = {
     val work = graft.GraftCaches.trackTempDir("graft_incdedup_")
-    stageBatchDocs(spark, dir, s"$work/input", nFiles, batchPct, salt)
-
-    StreamSources.runForeachBatch(
-      // micro-batch = one staged file
-      StreamSources.parquetStream(spark, s"$work/input", maxFilesPerTrigger = 1),
+    val hv = Sampling.splitHash(col("doc_id"), salt) % 100
+    val docs = Tables.documents(spark, dir)
+      .filter(hv >= 100 - batchPct)
+      .select(col("doc_id"), col("text"))
+    StreamSources.runForeachBatch(StreamSources.staged(docs, nFiles, work),
       (batch, batchId) =>
         // one partition dir per micro-batch, overwritten on replay —
         // a re-run batch replaces its own output instead of

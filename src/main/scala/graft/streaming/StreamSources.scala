@@ -36,8 +36,8 @@ object StreamSources {
     * same schema-adaptive ts normalization as
     * [[graft.sources.Tables.events]] (used by specs/queries that stage
     * multi-file or sentinel-augmented inputs). `extraCols` carries
-    * staged changelog columns (e.g. the CDC `op` row-kind) through the
-    * projection. */
+    * staged changelog columns (e.g. the CDC drift face's `plan`)
+    * through the projection. */
   def eventsFrom(spark: SparkSession, path: String, maxFilesPerTrigger: Int = 0,
                  extraCols: Seq[String] = Nil): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

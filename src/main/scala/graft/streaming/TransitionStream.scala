@@ -168,43 +168,45 @@ final class IntereventState(stateDir: String) {
 /** Peak session concurrency on an unbounded stream — the SESSION
   * member of the cross-batch family: a 30-minute-gap session can
   * stay open across ANY number of micro-batch boundaries, so the
-  * state is the append-only table of CLOSED `(s_ts, e_ts)` intervals
-  * plus a per-user OPEN-session frontier `(o_sts, o_lts)`. Each
-  * batch sessionizes through the batch operator's own
-  * gaps-and-islands tree ([[graft.operators.Retention
-  * .sessionIntervals]]); a user's first batch session merges into
-  * the frontier when the boundary gap is within the session gap,
-  * every non-final session closes, and the final one becomes the new
-  * frontier. The report derives the per-day peak over closed ∪ open
-  * through the shared `peakFromSessions` — stream ≡ batch by
-  * construction under time-ordered replay. State is |closed
-  * sessions| rows — the honest cost of exact session accounting (the
+  * state is the multiset of CLOSED `(s_ts, e_ts)` intervals plus a
+  * per-user OPEN-session frontier `(o_sts, o_lts)`. Each batch
+  * sessionizes through the batch operator's own gaps-and-islands
+  * tree ([[graft.operators.Retention.sessionIntervals]]); a user's
+  * first batch session merges into the frontier when the boundary
+  * gap is within the session gap, every non-final session closes,
+  * and the final one becomes the new frontier. The report derives
+  * the per-day peak over closed ∪ open through the shared
+  * `peakFromSessions` — stream ≡ batch by construction under
+  * time-ordered replay. State is |distinct closed intervals| rows —
+  * the honest cost of exact session accounting (the
   * DistinctDailyState class); a watermark would bound it by closing
   * frontiers past the horizon.
   *
-  * It stays on the rewrite layout, not an [[StreamUtil.AdditiveState]]:
-  * `closed` is a MULTISET — two users' equal intervals are two
-  * sessions — which no per-key combine keeps (a distinct key set
-  * would merge them), and the open frontier is replaced, not
-  * combined, when a session closes. */
+  * Both stores are one [[StreamUtil.AdditiveState]]: `closed` counts
+  * each interval (`n` sums, so two users' equal intervals stay two
+  * sessions), and `open` is latest-per-user, `max(struct(o_lts,
+  * o_sts))` — under the time-ordered replay a batch user's last
+  * session ends after its committed frontier. The frontier stitch is
+  * the one order-dependent step, and it lives in the batch's
+  * partial, which reads the committed `open`. */
 final class PeakSessionState(stateDir: String, gapMinutes: Int = 30) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir, Seq(
+    Store("closed", "s_ts TIMESTAMP, e_ts TIMESTAMP, n BIGINT",
+      Seq("s_ts", "e_ts"), StreamUtil.sums("n")),
+    Store("open", "user_id BIGINT, open STRUCT<o_lts: TIMESTAMP, o_sts: TIMESTAMP>",
+      Seq("user_id"), StreamUtil.maxes("open"))))
   private val gapUs = gapMinutes * 60L * 1000000L
 
-  private def priorClosed(spark: SparkSession): DataFrame = state.prior(spark,
-    "s_ts TIMESTAMP, e_ts TIMESTAMP", "closed")
+  private def open(spark: SparkSession): DataFrame = state.read(spark, "open")
+    .select(col("user_id"), col("open.o_sts").as("o_sts"), col("open.o_lts").as("o_lts"))
 
-  private def priorOpen(spark: SparkSession): DataFrame = state.prior(spark,
-    "user_id BIGINT, o_sts TIMESTAMP, o_lts TIMESTAMP", "open")
-
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.mergeStores(batchId) {
     val sess = graft.operators.Retention.sessionIntervals(batch, gapMinutes)
     val w = Window.partitionBy(col("user_id")).orderBy(col("s_ts"))
     val marked = sess
       .withColumn("rn", row_number().over(w))
       .withColumn("n", count(lit(1)).over(Window.partitionBy(col("user_id"))))
-      .join(priorOpen(spark), Seq("user_id"), "left")
+      .join(open(batch.sparkSession), Seq("user_id"), "left")
       .withColumn("merged", col("rn") === 1 && col("o_lts").isNotNull &&
         unix_micros(col("s_ts")) - unix_micros(col("o_lts")) <= gapUs)
       .withColumn("s_ts2", when(col("merged"), col("o_sts")).otherwise(col("s_ts")))
@@ -214,17 +216,12 @@ final class PeakSessionState(stateDir: String, gapMinutes: Int = 30) {
       .select(col("o_sts").as("s_ts"), col("o_lts").as("e_ts"))
     val inBatchClosed = marked.filter(col("rn") < col("n"))
       .select(col("s_ts2").as("s_ts"), col("e_ts"))
-    val closed = priorClosed(spark)
-      .unionByName(frontierClosed).unionByName(inBatchClosed)
-    // new frontier: each batch user's LAST session; untouched users keep theirs
-    val openBatch = marked.filter(col("rn") === col("n"))
-      .select(col("user_id"), col("s_ts2").as("o_sts"), col("e_ts").as("o_lts"))
-    val openKept = priorOpen(spark)
-      .join(sess.select(col("user_id")).distinct(), Seq("user_id"), "left_anti")
-    val open = openKept.unionByName(openBatch)
-    StreamUtil.inParallel(
-      () => StreamUtil.writeSharded(closed, state.at(batchId, "closed"), Seq("s_ts")),
-      () => StreamUtil.writeSharded(open, state.at(batchId, "open"), Seq("user_id")))
+    Map(
+      "closed" -> frontierClosed.unionByName(inBatchClosed)
+        .groupBy(col("s_ts"), col("e_ts")).agg(count(lit(1)).as("n")),
+      // each batch user's LAST session; untouched users keep theirs
+      "open" -> marked.filter(col("rn") === col("n"))
+        .select(col("user_id"), struct(col("e_ts").as("o_lts"), col("s_ts2").as("o_sts")).as("open")))
   }
 
   def report(spark: SparkSession): DataFrame =
@@ -235,9 +232,13 @@ final class PeakSessionState(stateDir: String, gapMinutes: Int = 30) {
   def reportDurations(spark: SparkSession): DataFrame =
     graft.operators.Retention.durationsFromSessions(allSessions(spark))
 
+  /** One row per session: each closed interval `n` times, then every
+    * open frontier. */
   private def allSessions(spark: SparkSession): DataFrame =
-    priorClosed(spark).unionByName(
-      priorOpen(spark).select(col("o_sts").as("s_ts"), col("o_lts").as("e_ts")))
+    state.read(spark, "closed")
+      .withColumn("k", explode(sequence(lit(1L), col("n"))))
+      .select(col("s_ts"), col("e_ts"))
+      .unionByName(open(spark).select(col("o_sts").as("s_ts"), col("o_lts").as("e_ts")))
 }
 
 /** Incremental item-transition EDGE SET — `scc_items`' twin: the

@@ -73,6 +73,34 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     assert(r2(0).getAs[Long]("n_sessions") == 3L, "over-gap boundary starts a new session")
   }
 
+  test("PeakSessionState: two users' identical closed intervals are two sessions") {
+    import spark.implicits._
+    val base = java.sql.Timestamp.valueOf("2024-01-01 10:00:00").getTime
+    val work = GraftCaches.trackTempDir("graft_peak_multi_")
+    val st = new streaming.PeakSessionState(s"$work/state")
+    def b(rows: Seq[(Long, Long, Long)]) = // (event_id, user, minute offset)
+      rows.map { case (e, u, m) =>
+        (e, new java.sql.Timestamp(base + m * 60000L), u, "view", 0.0, "{}") }
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    // batch 0: users 1 and 2 each close a [0, 10] session (their next
+    // event, at minute 50, is past the 30-min gap); user 3 leaves
+    // [5, 15] open. Batch 1: user 4 closes a third [0, 10], and user
+    // 3's event at minute 70 closes its frontier.
+    st.merge(b(Seq((1L, 1L, 0L), (2L, 1L, 10L), (3L, 1L, 50L),
+      (4L, 2L, 0L), (5L, 2L, 10L), (6L, 2L, 50L), (7L, 3L, 5L), (8L, 3L, 15L))), 0L)
+    st.merge(b(Seq((9L, 4L, 0L), (10L, 4L, 10L), (11L, 4L, 60L), (12L, 3L, 70L))), 1L)
+    // sessions: [0, 10] three times, [5, 15], and the open [50, 50]
+    // twice, [60, 60] and [70, 70]
+    val r = st.report(spark).collect()
+    assert(r.length == 1)
+    assert(r(0).getAs[Long]("n_sessions") == 8L)
+    assert(r(0).getAs[Long]("peak_concurrent") == 4L, "three [0, 10] and [5, 15] overlap")
+    val d = st.reportDurations(spark).collect()
+      .map(x => x.getAs[Long]("bucket") -> x.getAs[Long]("n_sessions")).toMap
+    // the four 600 s sessions land in bucket 9, the four one-event ones in bucket 0
+    assert(d == Map(0L -> 4L, 9L -> 4L), d)
+  }
+
   test("stream_router counts equal event_router; physical route partitions exist") {
     assert(rows("stream_router") == rows("event_router"))
     val out = EngagementStream.fanout(spark, sf).outDir
@@ -833,7 +861,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     import graft.streaming.CdcCompact
     import spark.implicits._
     val work = GraftCaches.trackTempDir("graft_cdcspec_")
-    val cdc = new CdcCompact(s"$work/state", extraCols = Seq("op"))
+    val cdc = new CdcCompact(s"$work/state")
     def batch(rows: (Long, Long, String, String, Double, String)*) =
       rows.toSeq.toDF("user_id", "event_id", "tss", "event_type", "value", "op")
         .withColumn("ts", to_timestamp(col("tss"))).drop("tss")
@@ -861,12 +889,31 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     assert(liveIds == Seq((1L, 5L), (2L, 10L)))
   }
 
+  test("cdc compaction of batches without an op column: live equals table") {
+    import org.apache.spark.sql.functions.{col, to_timestamp}
+    import graft.streaming.CdcCompact
+    import spark.implicits._
+    val work = GraftCaches.trackTempDir("graft_cdcnoop_")
+    val cdc = new CdcCompact(s"$work/state")
+    def batch(rows: (Long, Long, String, String, Double)*) =
+      rows.toSeq.toDF("user_id", "event_id", "tss", "event_type", "value")
+        .withColumn("ts", to_timestamp(col("tss"))).drop("tss")
+    // an `error` row is no delete without a row-kind column
+    cdc.merge(batch((1L, 1L, "2024-01-01 10:00:00", "view", 1.0),
+      (2L, 10L, "2024-01-01 10:00:00", "view", 2.0)), 0)
+    cdc.merge(batch((1L, 2L, "2024-01-01 11:00:00", "error", 0.0)), 1)
+    def sorted(df: org.apache.spark.sql.DataFrame) = df.orderBy(col("user_id")).collect().toSeq
+    assert(cdc.live(spark).columns.toSeq == cdc.table(spark).columns.toSeq)
+    assert(sorted(cdc.live(spark)) == sorted(cdc.table(spark)))
+    assert(sorted(cdc.live(spark)).map(r => r.getAs[Long]("event_id")) == Seq(2L, 10L))
+  }
+
   test("cdc schema drift: ADD COLUMN mid-stream back-fills NULL, union schema, epoch replay guard") {
     import org.apache.spark.sql.functions.{col, to_timestamp}
-    import graft.streaming.CdcCompactDrift
+    import graft.streaming.CdcCompact
     import spark.implicits._
     val work = GraftCaches.trackTempDir("graft_cdcdriftspec_")
-    val cdc = new CdcCompactDrift(s"$work/state")
+    val cdc = new CdcCompact(s"$work/state")
     def preBatch(rows: (Long, Long, String, String, Double)*) =
       rows.toSeq.toDF("user_id", "event_id", "tss", "event_type", "value")
         .withColumn("ts", to_timestamp(col("tss"))).drop("tss")
@@ -903,7 +950,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   test("cdc schema drift resumes across a restart: recovered version spans epochs") {
     import org.apache.spark.sql.functions.{col, to_timestamp}
-    import graft.streaming.CdcCompactDrift
+    import graft.streaming.CdcCompact
     import spark.implicits._
     val work = GraftCaches.trackTempDir("graft_cdcdriftres_")
     def preBatch(rows: (Long, Long, String, String, Double)*) =
@@ -912,12 +959,12 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     def postBatch(rows: (Long, Long, String, String, Double, String)*) =
       rows.toSeq.toDF("user_id", "event_id", "tss", "event_type", "value", "plan")
         .withColumn("ts", to_timestamp(col("tss"))).drop("tss")
-    val first = new CdcCompactDrift(s"$work/state")
+    val first = new CdcCompact(s"$work/state")
     first.merge(0)(preBatch((1L, 1L, "2024-01-01 10:00:00", "view", 1.0)), 0)
     first.merge(1)(postBatch((2L, 5L, "2024-01-01 12:00:00", "view", 2.0, "gold")), 0)
     // crash: fresh instance on the same state dir recovers the
     // epoch-encoded version — BOTH prior deploys' batches replay as no-ops
-    val resumed = new CdcCompactDrift(s"$work/state")
+    val resumed = new CdcCompact(s"$work/state")
     resumed.merge(0)(preBatch((1L, 99L, "2024-01-01 23:00:00", "view", 9.0)), 0)
     resumed.merge(1)(postBatch((2L, 99L, "2024-01-01 23:00:00", "view", 9.0, "late")), 0)
     val got = resumed.table(spark).orderBy(col("user_id"))
@@ -951,6 +998,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     }
     def drain(cdc: CdcCompact): Unit = {
       val q = StreamSources.eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1)
+        .select("user_id", "event_id", "ts", "event_type", "value")
         .writeStream
         .foreachBatch((b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) => cdc.merge(b, id))
         .option("checkpointLocation", s"$work/ckpt")
@@ -1725,50 +1773,57 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     val work = GraftCaches.trackTempDir("graft_crash_helper_")
     val ddl = "k BIGINT, n BIGINT"
     def part(b: Long) = Seq((b, b + 1), (b + 10, 2 * b + 1)).toDF("k", "n")
-    /** A two-store accumulation, in either layout: `a` holds each
-      * batch's rows, `b` their doubled counts. */
-    final class TwoStore(dir: String, delta: Boolean) {
-      val st = new StreamUtil.VersionedState(dir, if (delta) Seq("a", "b") else Nil)
+    /** An accumulation in either layout: `a` holds each batch's rows;
+      * the delta-append layout adds a second store, `b`, of their
+      * doubled counts (the rewrite layout has one store). */
+    final class Accum(dir: String, delta: Boolean) {
+      val stores = if (delta) Seq("a", "b") else Seq("a")
+      val st = new StreamUtil.VersionedState(dir, if (delta) stores else Nil)
+      def at(b: Long, s: String): String = if (delta) st.at(b, s) else st.at(b)
+      def prior(s: String) = if (delta) st.prior(spark, ddl, s) else st.prior(spark, ddl)
       def merge(b: Long): Unit = st.commit(b) {
         // a rewrite carries the prior version forward; a delta holds
         // only the batch's own rows
         def next(df: org.apache.spark.sql.DataFrame, s: String) =
-          if (delta) df else st.prior(spark, ddl, s).unionByName(df)
-        next(part(b), "a").coalesce(1).write.parquet(st.at(b, "a"))
-        next(part(b).select(col("k"), (col("n") * 2).as("n")), "b")
-          .coalesce(1).write.parquet(st.at(b, "b"))
+          if (delta) df else prior(s).unionByName(df)
+        next(part(b), "a").coalesce(1).write.parquet(at(b, "a"))
+        if (delta) part(b).select(col("k"), (col("n") * 2).as("n"))
+          .coalesce(1).write.parquet(at(b, "b"))
       }
-      def report: Seq[(Long, Long)] = Seq("a", "b").flatMap(s =>
-        st.prior(spark, ddl, s).orderBy("k").as[(Long, Long)].collect().toSeq)
+      def report: Seq[(Long, Long)] =
+        stores.flatMap(s => prior(s).orderBy("k").as[(Long, Long)].collect().toSeq)
     }
     for (delta <- Seq(false, true)) {
-      val clean = new TwoStore(s"$work/clean_$delta", delta)
+      val clean = new Accum(s"$work/clean_$delta", delta)
       (0L to 3L).foreach(clean.merge)
       val want = clean.report
-      assert(want.size == 16)
+      assert(want.size == 8 * clean.stores.size)
       val dir = s"$work/crash_$delta"
-      val st = new TwoStore(dir, delta)
+      val st = new Accum(dir, delta)
       st.merge(0); st.merge(1)
       // batch 2 dies mid-commit: the write of `a` lands, then the
       // body fails — the helper names the state dir and batch
       val err = intercept[java.io.IOException](st.st.commit(2) {
-        part(2).coalesce(1).write.parquet(st.st.at(2, "a"))
+        part(2).coalesce(1).write.parquet(st.at(2, "a"))
         throw new IllegalStateException("executor lost")
       })
       assert(err.getMessage.contains(dir) && err.getMessage.contains("batch 2"), err.getMessage)
       assert(err.getCause.getMessage == "executor lost")
       assert(st.st.version == 1L)
-      // and planted on top of it: a `_temporary`-only store dir of
-      // the same batch (rewrite: `v2/b`; delta: `b/batch=2`)
-      plantTemporaryOnly(st.st.at(2, "b"))
-      val restarted = new TwoStore(dir, delta)
+      // and planted on top of it: a `_temporary`-only dir (delta: the
+      // `b` store of the same batch; rewrite: the next version, `v3`)
+      val planted = if (delta) st.at(2, "b") else st.at(3, "a")
+      plantTemporaryOnly(planted)
+      val restarted = new Accum(dir, delta)
       assert(restarted.st.version == 1L)
-      Seq("a", "b").foreach(s => assert(!new java.io.File(restarted.st.at(2, s)).exists()))
+      (st.stores.map(st.at(2, _)) :+ planted).foreach(p => assert(!new java.io.File(p).exists()))
       (2L to 3L).foreach(restarted.merge)
       restarted.merge(1) // a replay at or below the commit is a no-op
       assert(restarted.report == want, s"delta=$delta")
       if (!delta) assert(new java.io.File(dir).list().sorted.toSeq == Seq("v3"))
     }
+    // a store named on the rewrite layout is refused, not ignored
+    intercept[IllegalArgumentException](new StreamUtil.VersionedState(s"$work/named").at(0, "a"))
     // a rewrite-layout `v<N>` holding data files but no marker
     val single = s"$work/single"
     def sum(st: StreamUtil.VersionedState, b: Long): Unit = st.commit(b) {
@@ -1822,16 +1877,16 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
       (3L, 5L, "2024-01-02 10:01:00", "purchase", 9.0, "upsert"),
       (4L, 6L, "2024-01-02 10:02:00", "view", 1.0, "upsert"))
     def live(c: CdcCompact) = c.live(spark).orderBy("user_id").collect().toSeq
-    val clean = new CdcCompact(s"$work/clean", extraCols = Seq("op"))
+    val clean = new CdcCompact(s"$work/clean")
     clean.merge(b0, 0); clean.merge(b1, 1)
     val want = live(clean)
     assert(want.map(_.getAs[Long]("user_id")) == Seq(1L, 3L, 4L))
-    val cdc = new CdcCompact(s"$work/crash", extraCols = Seq("op"))
+    val cdc = new CdcCompact(s"$work/crash")
     cdc.merge(b0, 0)
     // batch 1's v1 had its data files written — here the batch-0
     // table's, a well-formed but wrong version — and no marker
     copyVersion(s"$work/crash/v0", s"$work/crash/v1")
-    val restarted = new CdcCompact(s"$work/crash", extraCols = Seq("op"))
+    val restarted = new CdcCompact(s"$work/crash")
     assert(restarted.committedVersion == 0L)
     restarted.merge(b1, 1)
     assert(restarted.committedVersion == 1L)
