@@ -64,12 +64,13 @@ import org.apache.spark.sql.functions._
   * versioned-directory swaps, and tombstones age out after a
   * retention horizon.
   *
-  * It stays on the rewrite layout, not an [[StreamUtil
-  * .AdditiveState]]: last-write-wins WITH deletes is not a per-key
-  * combine of deltas the read could fold, and `engagement_stream`
-  * runs it — up to [[StreamUtil.MaxAdditiveDeltas]] deltas on disk
-  * would grow its state bytes past the one compacted version kept
-  * today.
+  * It is the one state left on the rewrite layout. Last-write-wins
+  * with retained tombstones IS a per-key struct max, but an
+  * [[StreamUtil.AdditiveState]] would cost two things: between folds
+  * up to [[StreamUtil.MaxAdditiveDeltas]] deltas of superseded
+  * upserts stay on disk where `engagement_stream` keeps one compacted
+  * table; and the additive schema drift above needs the table's
+  * inferred schema, which a store's fixed `ddl` cannot hold.
   */
 final class CdcCompact(stateDir: String) {
   /** Recovered on construction so a restarted job (new instance, same
@@ -212,27 +213,41 @@ object CdcCompact {
       .table(spark)
 }
 
-/** Versioned-parquet SCD2 dimension state: `merge` IS the batch
-  * incremental operator ([[graft.operators.Engagement
-  * .scd2ApplyTransform]]) applied per micro-batch — stream/batch
-  * parity by the strongest form of shared code (the stream twin has
-  * NO derivation of its own). Replay-guarded like [[CdcCompact]],
-  * and a versioned rewrite for the same reason: closing a version
-  * row replaces it, which no per-key additive combine expresses. */
+/** SCD2 dimension state: `merge` IS the batch incremental operator
+  * ([[graft.operators.Engagement.scd2ApplyTransform]]) applied per
+  * micro-batch — stream/batch parity by the strongest form of shared
+  * code (the stream twin has NO derivation of its own).
+  *
+  * Two [[StreamUtil.AdditiveState]] stores: `closed`, the distinct
+  * closed version rows, keyed `(user_id, version)`; and `open`, per
+  * user the current row, `max(struct(version, …))`. The partial
+  * applies the batch to the committed `open` rows of the batch's
+  * users only — closing a version appends it to `closed`, and the new
+  * current row supersedes the old by its higher version — so a batch
+  * writes what it touched, not the whole history. */
 final class Scd2State(stateDir: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir, Seq(
+    StreamUtil.AdditiveState.Store("closed", "user_id BIGINT, version BIGINT, state STRING, " +
+      "valid_from TIMESTAMP, valid_to TIMESTAMP, is_current BOOLEAN", Seq("user_id", "version"), Nil),
+    StreamUtil.AdditiveState.Store("open",
+      "user_id BIGINT, open STRUCT<version: BIGINT, state: STRING, valid_from: TIMESTAMP>",
+      Seq("user_id"), StreamUtil.maxes("open"))))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "user_id BIGINT, version BIGINT, state STRING, " +
-    "valid_from TIMESTAMP, valid_to TIMESTAMP, is_current BOOLEAN")
+  /** The current rows in the dimension's row shape. */
+  private def open(spark: SparkSession): DataFrame = state.read(spark, "open")
+    .select(col("user_id"), col("open.version").as("version"), col("open.state").as("state"),
+      col("open.valid_from").as("valid_from"), lit(null).cast("timestamp").as("valid_to"),
+      lit(true).as("is_current"))
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val next = graft.operators.Engagement.scd2ApplyTransform(
-      prior(spark), batch.toDF())
-    StreamUtil.writeSharded(next, state.at(batchId), Seq("user_id"))
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.mergeStores(batchId) {
+    val touched = open(batch.sparkSession)
+      .join(batch.select(col("user_id")).distinct(), Seq("user_id"), "left_semi")
+    val next = graft.operators.Engagement.scd2ApplyTransform(touched, batch.toDF())
+    Map("closed" -> next.filter(!col("is_current")),
+      "open" -> next.filter(col("is_current")).select(col("user_id"),
+        struct(col("version"), col("state"), col("valid_from")).as("open")))
   }
 
   def table(spark: SparkSession): DataFrame =
-    prior(spark).orderBy(col("user_id"), col("version"))
+    state.read(spark, "closed").unionByName(open(spark)).orderBy(col("user_id"), col("version"))
 }

@@ -443,10 +443,8 @@ private[graft] object StreamUtil {
     *
     *  - versioned rewrite (`deltaStores` empty): each batch rewrites
     *    the whole state as one store, `v<N>`, and the prior version is
-    *    deleted once `v<N>` has committed — for states whose merge is
-    *    not a commutative per-key combine of deltas: a DFA fold
-    *    ([[DfaState]]) and last-write-wins with deletes
-    *    ([[CdcCompact]], [[Scd2State]]);
+    *    deleted once `v<N>` has committed. Its one user is
+    *    [[CdcCompact]] (its scaladoc says why);
     *  - delta-append (`deltaStores` = the store names): each batch
     *    appends only its own partial as `<dir>/<store>/batch=<N>`,
     *    and readers union every delta with

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -120,31 +118,6 @@ object FunnelStream {
   private[streaming] def firstAfter(batch: DataFrame, tpe: String, name: String,
       gate: DataFrame): DataFrame =
     firstOf(batch.join(gate, Seq("user_id")).filter(col("ts") > col("gate")), tpe, name)
-
-  /** Stage events as `nFiles` time-range-partitioned parquet files
-    * with strictly increasing mod-times: micro-batch k contains only
-    * events later than every event of batch k-1, giving the ordered
-    * delivery the incremental funnel needs. */
-  private[graft] def stageTimeOrdered(spark: SparkSession, dir: String, out: String,
-                                      nFiles: Int): Unit = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/events.parquet")
-      .repartitionByRange(nFiles, col("ts"))
-      .sortWithinPartitions(col("ts"))
-      .write.mode("overwrite").parquet(out)
-    // part-0000k holds the k-th time range; pin mod-times to that order
-    val files = Files.list(Paths.get(out)).iterator()
-    val parts = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-    while (files.hasNext) {
-      val f = files.next()
-      if (f.getFileName.toString.endsWith(".parquet")) parts += f
-    }
-    val t0 = System.currentTimeMillis()
-    parts.sortBy(_.getFileName.toString).zipWithIndex.foreach { case (f, i) =>
-      Files.setLastModifiedTime(f,
-        java.nio.file.attribute.FileTime.fromMillis(t0 + i * 60000L))
-    }
-  }
 
   /** Queries entry: drain the time-ordered replay through the state
     * machine and emit the final funnel report (oracle: same SQL as

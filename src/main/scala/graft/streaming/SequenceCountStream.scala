@@ -18,39 +18,38 @@ import graft.operators.Sequences
   *
   * Like [[AttributionStream]]/[[FunnelStream]], correctness rests on
   * event-time-ordered replay (staged via
-  * [[FunnelStream.stageTimeOrdered]]): a later batch may not deliver
+  * [[StreamSources.timeOrdered]]): a later batch may not deliver
   * an earlier event, because a DFA mid-state cannot be rewound.
-  * State is |users| rows of two BIGINTs — the smallest state table
-  * in the streaming family; replay-guarded and versioned like every
-  * state here. It stays a versioned rewrite, not an
-  * [[StreamUtil.AdditiveState]]: a DFA fold is not commutative, so
-  * no combine of per-batch deltas can stand in for it.
+  *
+  * A single-store [[StreamUtil.AdditiveState]]: its one store,
+  * `delta`, holds per user the latest batch's accumulator,
+  * `max(struct(batch, acc))`. The fold is the one order-dependent
+  * step, and it lives in the batch's partial, which reads the
+  * committed `acc` of the batch's users only — so a batch writes
+  * |batch users| rows, not |users|.
   */
 final class DfaState(stateDir: String, step: (Column, Column) => Column,
                      shift: Int, outCol: String) {
-  private val state = new StreamUtil.VersionedState(stateDir)
+  private val state = new StreamUtil.AdditiveState(stateDir,
+    "user_id BIGINT, acc STRUCT<batch: BIGINT, acc: BIGINT>",
+    Seq("user_id"), StreamUtil.maxes("acc"))
 
-  private def prior(spark: SparkSession): DataFrame = state.prior(spark,
-    "user_id BIGINT, acc BIGINT")
+  private def accs(spark: SparkSession): DataFrame =
+    state.read(spark).select(col("user_id"), col("acc.acc").as("acc"))
 
-  def merge(batch: Dataset[Row], batchId: Long): Unit = state.commit(batchId) {
-    val spark = batch.sparkSession
-    val partial = Sequences.codedEvents(batch)
+  def merge(batch: Dataset[Row], batchId: Long): Unit = state.merge(batchId) {
+    Sequences.codedEvents(batch)
       .groupBy(col("user_id"))
       .agg(transform(array_sort(collect_list(struct(col("ts"), col("event_id"), col("code")))),
         s => s.getField("code")).as("codes"))
-    val merged = prior(spark).join(partial, Seq("user_id"), "full_outer")
-      .select(col("user_id"),
-        aggregate(
-          coalesce(col("codes"), lit(Array.empty[Long])),
-          coalesce(col("acc"), lit(0L)),
-          step).as("acc"))
-    StreamUtil.writeSharded(merged, state.at(batchId), Seq("user_id"))
+      .join(accs(batch.sparkSession), Seq("user_id"), "left")
+      .select(col("user_id"), struct(lit(batchId).as("batch"),
+        aggregate(col("codes"), coalesce(col("acc"), lit(0L)), step).as("acc")).as("acc"))
   }
 
   /** Same histogram shape (and oracle) as the batch twin. */
   def histogram(spark: SparkSession): DataFrame =
-    prior(spark)
+    accs(spark)
       .select((col("acc") / shift).cast("long").as(outCol))
       .groupBy(col(outCol)).agg(count(lit(1)).as("n_users"))
       .orderBy(col(outCol))

@@ -137,13 +137,8 @@ object Sessionize {
     // the sentinel file works and saves a Spark write job
     Files.copy(inputDir.resolve("001_sentinel.parquet"),
       inputDir.resolve("002_sentinel.parquet"))
-    // strictly increasing mod-times => deterministic batch order
-    val t0 = Files.getLastModifiedTime(inputDir.resolve("000_events.parquet")).toMillis
-    Seq("000_events.parquet", "001_sentinel.parquet", "002_sentinel.parquet").zipWithIndex
-      .foreach { case (f, i) =>
-        Files.setLastModifiedTime(inputDir.resolve(f),
-          java.nio.file.attribute.FileTime.fromMillis(t0 + i * 60000L))
-      }
+    StreamSources.stampInOrder(
+      Seq("000_events.parquet", "001_sentinel.parquet", "002_sentinel.parquet").map(inputDir.resolve))
   }
 
   /** Queries entry: full-parity streaming sessionization (oracle:

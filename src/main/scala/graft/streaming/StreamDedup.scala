@@ -40,10 +40,8 @@ object StreamDedup {
     val src = Paths.get(s"$dir/events.parquet")
     Files.copy(src, inputDir.resolve("000_events.parquet"))
     Files.copy(src, inputDir.resolve("001_events_replay.parquet"))
-    // strictly increasing mod-times => deterministic batch order
-    val t0 = Files.getLastModifiedTime(inputDir.resolve("000_events.parquet")).toMillis
-    Files.setLastModifiedTime(inputDir.resolve("001_events_replay.parquet"),
-      java.nio.file.attribute.FileTime.fromMillis(t0 + 60000L))
+    StreamSources.stampInOrder(
+      Seq("000_events.parquet", "001_events_replay.parquet").map(inputDir.resolve))
 
     val stream = StreamSources.eventsFrom(spark, inputDir.toString, maxFilesPerTrigger = 1)
     StreamSources.runToMemory(dedupTransform(stream, "3650 days"), OutputMode.Append())

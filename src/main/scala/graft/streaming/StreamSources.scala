@@ -106,12 +106,32 @@ object StreamSources {
     parquetStream(df.sparkSession, s"$work/input", maxFilesPerTrigger = 1)
   }
 
-  /** The events table staged time-ordered under `<work>/input`
-    * ([[FunnelStream.stageTimeOrdered]]) and replayed one file per
-    * micro-batch — the ordered delivery the frontier states need. */
+  /** The events table staged under `<work>/input` as `nFiles`
+    * time-range-partitioned parquet files and replayed one file per
+    * micro-batch — the ordered delivery the frontier states need:
+    * micro-batch k holds only events later than every event of batch
+    * k-1. */
   def timeOrdered(spark: SparkSession, dir: String, nFiles: Int, work: String): DataFrame = {
-    FunnelStream.stageTimeOrdered(spark, dir, s"$work/input", nFiles)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.read.parquet(s"$dir/events.parquet")
+      .repartitionByRange(nFiles, col("ts"))
+      .sortWithinPartitions(col("ts"))
+      .write.mode("overwrite").parquet(s"$work/input")
+    // part-0000k holds the k-th time range
+    stampInOrder(new java.io.File(s"$work/input").listFiles().toSeq
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).map(_.toPath))
     eventsFrom(spark, s"$work/input", maxFilesPerTrigger = 1)
+  }
+
+  /** Stamps `files` with strictly increasing mod-times, a minute apart
+    * in the given order. A file source replays its files in mod-time
+    * order, so this order becomes the micro-batch order. */
+  def stampInOrder(files: Seq[java.nio.file.Path]): Unit = {
+    val t0 = System.currentTimeMillis()
+    files.zipWithIndex.foreach { case (f, i) =>
+      java.nio.file.Files.setLastModifiedTime(f,
+        java.nio.file.attribute.FileTime.fromMillis(t0 + i * 60000L))
+    }
   }
 
   /** Staged-replay batch sizing for the delta-append corpus states:

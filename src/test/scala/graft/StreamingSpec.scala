@@ -376,6 +376,49 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     assert(out == Seq((2L, 1L)))
   }
 
+  test("DFA and SCD2 states: a batch writes only what it touched") {
+    import org.apache.spark.sql.functions.{col, to_timestamp}
+    import graft.streaming.{DfaState, Scd2State}
+    import spark.implicits._
+    def batch(rows: (Long, String, Long, String)*) =
+      rows.toDF("user_id", "ts_s", "event_id", "event_type")
+        .withColumn("ts", to_timestamp(col("ts_s"))).drop("ts_s")
+    // user 2 appears in batch 0 only; user 4 first appears in batch 2
+    val batches = Seq(
+      batch((1L, "2024-01-01 10:00:00", 1L, "view"), (2L, "2024-01-01 10:01:00", 2L, "click"),
+        (3L, "2024-01-01 10:02:00", 3L, "view")),
+      // user 1 changes state (closes version 1), user 3 re-asserts it
+      batch((1L, "2024-01-02 10:00:00", 4L, "click"), (3L, "2024-01-02 10:02:00", 5L, "view")),
+      // user 1 re-asserts, user 3 changes state (closes version 1)
+      batch((1L, "2024-01-03 10:00:00", 6L, "click"), (3L, "2024-01-03 10:02:00", 7L, "purchase"),
+        (4L, "2024-01-03 10:03:00", 8L, "view")))
+    val work = GraftCaches.trackTempDir("graft_touched_")
+    def delta(path: String, ddl: String) = spark.read.schema(ddl).parquet(path)
+      .collect().map(r => (0 until r.length).map(r.getLong)).toSeq.sortBy(_.mkString(","))
+    def users(path: String) = delta(path, "user_id BIGINT").map(_.head)
+
+    def dfa(sd: String) = new DfaState(sd, graft.operators.Sequences.seqDfaStep, 4, "n_sequences")
+    val seq = dfa(s"$work/dfa")
+    batches.zipWithIndex.foreach { case (b, i) => seq.merge(b, i.toLong) }
+    assert(users(s"$work/dfa/delta/batch=1") == Seq(1L, 3L))
+    assert(users(s"$work/dfa/delta/batch=2") == Seq(1L, 3L, 4L))
+    val oneShot = dfa(s"$work/dfa_one")
+    oneShot.merge(batches.reduce(_ unionByName _), 0)
+    assert(seq.histogram(spark).collect().toSeq == oneShot.histogram(spark).collect().toSeq)
+
+    val scd2 = new Scd2State(s"$work/scd2")
+    batches.zipWithIndex.foreach { case (b, i) => scd2.merge(b, i.toLong) }
+    assert(users(s"$work/scd2/open/batch=0") == Seq(1L, 2L, 3L))
+    assert(users(s"$work/scd2/open/batch=1") == Seq(1L, 3L))
+    assert(users(s"$work/scd2/open/batch=2") == Seq(1L, 3L, 4L))
+    def closed(b: Int) = delta(s"$work/scd2/closed/batch=$b", "user_id BIGINT, version BIGINT")
+    assert(closed(0).isEmpty)
+    assert(closed(1) == Seq(Seq(1L, 1L)))
+    assert(closed(2) == Seq(Seq(3L, 1L)))
+    assert(scd2.table(spark).collect().toSeq == graft.operators.Engagement
+      .cdcScd2Transform(batches.reduce(_ unionByName _)).collect().toSeq)
+  }
+
   test("attribution state: cross-batch touch carry, lookback expiry, replay guard") {
     import org.apache.spark.sql.functions.{col, to_timestamp}
     import graft.streaming.AttributionState
@@ -1195,15 +1238,16 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
       : String = {
     import java.nio.file.{Files => JFiles, Paths, StandardCopyOption}
     import org.apache.spark.sql.streaming.Trigger
-    import graft.streaming.{FunnelStream, StreamSources}
+    import graft.streaming.StreamSources
     val work = GraftCaches.trackTempDir(s"graft_resume_${prefix}_")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val staged = s"$work/stage/input"
     if (timeOrdered)
-      FunnelStream.stageTimeOrdered(spark, sf, s"$work/staged", 4)
+      StreamSources.timeOrdered(spark, sf, 4, s"$work/stage")
     else
       spark.read.parquet(s"$sf/events.parquet").repartition(4)
-        .write.mode("overwrite").parquet(s"$work/staged")
-    val parts = new java.io.File(s"$work/staged").listFiles()
+        .write.mode("overwrite").parquet(staged)
+    val parts = new java.io.File(staged).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.getName).sorted
     assert(parts.length == 4)
     JFiles.createDirectories(Paths.get(s"$work/input"))
@@ -1216,7 +1260,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     val mtimeBase = System.currentTimeMillis() - 10 * 60 * 1000L
     def reveal(names: Seq[String]): Unit = names.foreach { n =>
       val tgt = Paths.get(s"$work/input/$n")
-      JFiles.copy(Paths.get(s"$work/staged/$n"), tgt,
+      JFiles.copy(Paths.get(s"$staged/$n"), tgt,
         StandardCopyOption.REPLACE_EXISTING)
       JFiles.setLastModifiedTime(tgt,
         java.nio.file.attribute.FileTime.fromMillis(
@@ -1293,6 +1337,21 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
       sd => new TransitionState(sd).merge)
     val resumed = new TransitionState(stateDir).report(spark).collect().toSeq
     assert(resumed == rows("event_transitions"))
+  }
+
+  test("sequence-count DFA state resumes from checkpoint across a restart, exactly once") {
+    import graft.streaming.DfaState
+    import graft.operators.Sequences
+    def dfa(sd: String) = new DfaState(sd, Sequences.seqDfaStep, 4, "n_sequences")
+    val stateDir = resumeAcrossRestart("seqcnt", timeOrdered = true, dfa(_).merge)
+    assert(dfa(stateDir).histogram(spark).collect().toSeq == rows("sequence_count"))
+  }
+
+  test("SCD2 state resumes from checkpoint across a restart, exactly once") {
+    import graft.streaming.Scd2State
+    val stateDir = resumeAcrossRestart("scd2", timeOrdered = true, new Scd2State(_).merge)
+    assert(new Scd2State(stateDir).table(spark).collect().map(_.toString).sorted.toSeq ==
+      rows("cdc_scd2").map(_.toString).sorted)
   }
 
   test("graph presence state resumes from checkpoint across a restart, exactly once") {
@@ -2113,6 +2172,35 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     // the replay stitches batch 2 against batch 1's frontier, not its own
     restarted.merge(batches(2), 2L)
     assert(report(restarted) == want)
+  }
+
+  test("SCD2 state: an open delta committed without its closed delta replays against the prior open rows") {
+    import org.apache.spark.sql.functions.{col, to_timestamp}
+    import graft.streaming.Scd2State
+    import spark.implicits._
+    val work = GraftCaches.trackTempDir("graft_crash_scd2_")
+    def batch(rows: (Long, Long, String, String)*) =
+      rows.toSeq.toDF("user_id", "event_id", "tss", "event_type")
+        .withColumn("ts", to_timestamp(col("tss"))).drop("tss")
+    val batches = Seq(
+      batch((1L, 1L, "2024-01-01 10:00:00", "view"), (2L, 2L, "2024-01-01 10:01:00", "click")),
+      batch((1L, 3L, "2024-01-02 10:00:00", "click"), (2L, 4L, "2024-01-02 10:01:00", "click")),
+      batch((1L, 5L, "2024-01-03 10:00:00", "purchase"), (2L, 6L, "2024-01-03 10:01:00", "view")))
+    def table(s: Scd2State) = s.table(spark).collect().toSeq
+    val clean = new Scd2State(s"$work/clean")
+    batches.zipWithIndex.foreach { case (b, i) => clean.merge(b, i.toLong) }
+    val want = table(clean)
+    val st = new Scd2State(s"$work/crash")
+    batches.take(2).zipWithIndex.foreach { case (b, i) => st.merge(b, i.toLong) }
+    // batch 2: the open rows' delta committed, the closed rows' landed unmarked
+    copyVersion(s"$work/clean/open/batch=2", s"$work/crash/open/batch=2", marker = true)
+    copyVersion(s"$work/clean/closed/batch=2", s"$work/crash/closed/batch=2")
+    val restarted = new Scd2State(s"$work/crash")
+    Seq("open", "closed").foreach(s =>
+      assert(!new java.io.File(s"$work/crash/$s/batch=2").exists(), s))
+    // the replay stitches batch 2 against batch 1's open rows, not its own
+    restarted.merge(batches(2), 2L)
+    assert(table(restarted) == want)
   }
 
   test("multi-store additive state: more than the bound's worth of batches fold every store, read unchanged") {
